@@ -1,0 +1,1 @@
+"""Seeded benchmark of the spider_spark crawl engine (see README.md)."""
