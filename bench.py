@@ -315,9 +315,10 @@ def main():
 
     # benches opt into tmpfs local dirs (shared-disk spill serializes
     # multi-core scaling on this box); ordinary sessions stay on disk
+    os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm")
     probe_pre = cpu_drift_probe()
     loadavg_pre = _loadavg()
-    spark = get_spark("spider_spark_bench", cpus=args.cpus, tmpfs_local_dir=True)
+    spark = get_spark("spider_spark_bench", cpus=args.cpus)
     cpus = spark.sparkContext.defaultParallelism
     sf_dir = DEFAULT_SF_DIR
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

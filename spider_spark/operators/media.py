@@ -70,9 +70,10 @@ def sniff_media_type(content) -> "F.Column":
             F.lit("audio/wav"),
         )
         .when(
-            # UTF-16 BOMs before the frame-sync check (WHATWG sniffing
-            # checks BOMs first): FFFE is bit-wise a valid MPEG sync
-            # but overwhelmingly means UTF-16LE text on the web.
+            # UTF-16 BOMs, checked before the MPEG frame sync below:
+            # FFFE is bit-wise a valid sync but overwhelmingly means
+            # UTF-16LE text on the web. This arm exists only to keep
+            # UTF-16 text out of audio/mpeg; it does not label text.
             h.startswith("FFFE") | h.startswith("FEFF"),
             F.lit("application/octet-stream"),
         )

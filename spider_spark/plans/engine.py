@@ -7,6 +7,13 @@ one wave == one snapshot == one checkpoint, so a killed run resumes
 from the last committed wave with no duplicate admissions (the
 seen-set is committed atomically with the documents it admitted).
 
+Wave-0 seeding, recrawl injection and every loop wave commit through
+one path (:meth:`CrawlEngine._commit`): all of the wave's table writes
+run concurrently, the wave's counters (pending rows, next seq base,
+documents, fetched rows) are read from the parquet footers of the
+files just written, and only then does the manifest name the wave.
+Counters read from finished files cannot race the writes.
+
 Retry semantics: failed statuses from the reference's RETRY_HTTP_CODES
 requeue with ``attempt+1`` up to RETRY_TIMES (``settings.py:98-99``).
 Scrapy's RetryMiddleware re-submits with ``dont_filter=True`` (the
@@ -23,7 +30,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
@@ -34,32 +41,6 @@ from ..operators import politeness as P
 from ..operators import spans as S
 from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
-
-
-def observed_stats(obs: Observation, label: str, expected: tuple[str, ...]) -> dict:
-    """Resolve an :class:`Observation` and guard the observe()-metrics
-    invariant (see the wave-stats comment in :meth:`CrawlEngine.run`):
-    every observe node is attached ABOVE a persisted plan and consumed
-    by exactly ONE query, so the resolved row must carry ALL expected
-    metric columns. If a CollectMetrics node is ever moved UNDER a
-    shared cache, whichever consumer's query-end event reaches the JVM
-    listener first wins — and a consumer that merely reads the
-    populated cache (or scans it partially: a LIMIT consumer resolves
-    the count of ONE partition, measured in
-    ``test_engine.test_observe_under_shared_cache_is_hazardous``)
-    resolves an empty or partial row. Empty/missing-key rows fail
-    loudly here instead of committing wrong per-wave stats.
-    """
-    row = obs.get
-    missing = [k for k in expected if k not in row]
-    if not row or missing:
-        raise RuntimeError(
-            f"observe-metrics invariant violated for {label!r}: resolved "
-            f"metrics row {row!r} is missing {missing or 'all columns'} — "
-            "a CollectMetrics node was likely moved under a shared cache "
-            "(see the wave-stats comment in CrawlEngine.run)"
-        )
-    return row
 
 
 @dataclass
@@ -87,13 +68,9 @@ class CrawlConfig:
     #: default: plain crawls skip the (empty) per-wave revalidation
     #: write entirely.
     conditional_get: bool = False
-    use_bloom: bool = False  # exact anti-join by default; Bloom is opt-in
-    seen_backend: str | None = None  # None->use_bloom flag; "exact"|"bloom"|"cuckoo"
+    seen_backend: str = "exact"  # "exact" anti-join | "bloom" | "cuckoo"
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 1e-6
-    #: opt-in per-wave phase timing (adds one materializing count per
-    #: wave, so keep it off for benchmarks; totals gain a "profile" list)
-    profile: bool = False
     #: compact ``url_seen`` every N committed waves (None = never).
     #: The exact seen-backend re-reads url_seen every wave, so without
     #: compaction a long crawl reads hundreds of snapshot dirs ×
@@ -117,9 +94,6 @@ class CrawlConfig:
     #: seen-set row, or a politeness slot. Pure JVM fence at admission;
     #: off by default (the reference's finite listing sites need none).
     trap_filter: bool = False
-
-    def backend(self) -> str:
-        return self.seen_backend or ("bloom" if self.use_bloom else "exact")
 
 
 class CrawlEngine:
@@ -195,12 +169,13 @@ class CrawlEngine:
         self.web.unpersist()
 
     # -- admission ----------------------------------------------------------
-    def _admit(self, candidates: DataFrame, wave: int) -> tuple[DataFrame, DataFrame]:
+    def _admit(self, candidates: DataFrame, wave: int) -> tuple[DataFrame, dict]:
         """identity -> intra-batch dedup -> seen-set dedup.
 
-        Returns ``(admitted, recorded)`` — the caller writes
-        ``recorded`` to the ``url_seen`` table (run() overlaps that
-        write with the wave's other independent jobs).
+        Returns ``(admitted, writes)``: ``admitted`` is persisted, and
+        ``writes`` holds the wave's seen-set tables (``url_seen``, plus
+        ``url_seen_filters`` for the Bloom/cuckoo backends) for
+        :meth:`_commit` to write beside the wave's other tables.
         """
         if self.dust_rules is not None:
             # collapse known URL aliases (DUST, operators/dust.py) onto
@@ -233,7 +208,8 @@ class CrawlEngine:
                 .drop("_rank_host", "_rank_priority")
             )
         cand = D.dedup_intra_batch(cand)
-        backend = self.cfg.backend()
+        backend = self.cfg.seen_backend
+        writes = {}
         if backend in ("bloom", "cuckoo"):
             from ..operators import cuckoo as C
 
@@ -247,17 +223,17 @@ class CrawlEngine:
                 spec = C.CuckooSpec(self.cfg.bloom_capacity)
                 admitted = C.dedup_cuckoo(cand, filters, spec).persist()
                 new_filters = C.updated_cuckoo_filters(admitted, filters, spec, wave)
-            self.store.write_wave("url_seen_filters", wave, new_filters)
+            writes["url_seen_filters"] = new_filters
         else:
             seen = self.store.read_table("url_seen", "append", schema=schemas.URL_SEEN)
             admitted = D.dedup_exact(cand, seen).persist()
-        recorded = admitted.filter(~F.col("dont_filter")).select(
+        writes["url_seen"] = admitted.filter(~F.col("dont_filter")).select(
             "crawl_id",
             "fingerprint",
             "host_bucket",
             F.lit(wave).alias("wave"),
         )
-        return admitted, recorded
+        return admitted, writes
 
     # -- one wave -------------------------------------------------------------
     def run(self, seeds: DataFrame, resume: bool = False, inject: bool = False) -> dict:
@@ -279,14 +255,10 @@ class CrawlEngine:
             wave = max(manifest["committed_waves"]) + 1
             next_base = int(manifest["extra"]["next_seq_base"])
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
+            n_pending = self.store.wave_stats("frontier", wave - 1)[0]
             if inject and seeds is not None:
-                cand = _seed_candidates(seeds, cfg.crawl_id)
-                cand = S.assign_seq(
-                    cand, [F.asc("source"), F.asc("url")], next_base
-                ).drop("link_pos")
-                cand = cand.withColumn("wave", F.lit(wave))
-                admitted, recorded = self._admit(cand, wave)
-                self.store.write_wave("url_seen", wave, recorded)
+                cand = _seed_candidates(seeds, cfg.crawl_id, wave, next_base)
+                admitted, writes = self._admit(cand, wave)
                 # Injected rows carry dont_filter=True (recrawl
                 # semantics) so _admit's seen-set check waves them
                 # through — but a URL can be BOTH still pending (e.g.
@@ -298,18 +270,12 @@ class CrawlEngine:
                 fresh = admitted.join(
                     pending.select("fingerprint"), on="fingerprint", how="left_anti"
                 )
-                merged = pending.unionByName(
-                    fresh.select(*pending.columns)
-                ).persist()
-                next_base = max(next_base, _max_seq(merged))
-                self.store.write_wave("frontier", wave, merged)
-                self.store.commit_wave(wave, {"next_seq_base": next_base})
-                merged.unpersist()
+                writes["frontier"] = pending.unionByName(fresh.select(*pending.columns))
+                n_pending, next_base, _, _ = self._commit(wave, writes, next_base)
                 admitted.unpersist()
                 pending = self.store.read_table("frontier", "latest")
                 wave += 1
         else:
-            wave = 0
             if self.sitemaps is not None:
                 # pre-wave-0 sitemap expansion (SitemapSpider analog,
                 # athimmo_be.py:18-26): *.xml seeds -> one seed per <loc>
@@ -323,22 +289,14 @@ class CrawlEngine:
                 from ..sources.feeds import expand_feed_seeds
 
                 seeds = expand_feed_seeds(seeds, self.feeds)
-            # seed rows: deterministic order by (source, url) — documented
-            # analog of start_urls list order (readme.md:33-55)
-            cand = _seed_candidates(seeds, cfg.crawl_id)
-            cand = S.assign_seq(cand, [F.asc("source"), F.asc("url")], 0).drop("link_pos")
-            cand = cand.withColumn("wave", F.lit(0))
-            pending, recorded0 = self._admit(cand, 0)
-            self.store.write_wave("url_seen", 0, recorded0)
-            next_base = _max_seq(pending)
-            self.store.write_wave("frontier", 0, pending.drop("crawl_delay_s"))
-            self.store.commit_wave(0, {"next_seq_base": next_base})
+            admitted, writes = self._admit(_seed_candidates(seeds, cfg.crawl_id, 0, 0), 0)
+            writes["frontier"] = admitted.drop("crawl_delay_s")
+            n_pending, next_base, _, _ = self._commit(0, writes, 0)
+            admitted.unpersist()
             pending = self.store.read_table("frontier", "latest")
             wave = 1
 
         totals = {"fetched": 0, "docs": 0, "waves": 0}
-        if cfg.profile:
-            totals["profile"] = []
         # static redirect gate: a web with no (3xx, Location) row can
         # never produce a redirect, so skip building the redirect arm
         # of the candidate plan entirely — the arm costs real per-wave
@@ -354,10 +312,7 @@ class CrawlEngine:
             .limit(1)
             .count()
         )
-        n_pending = pending.count()  # parquet count: metadata-only, cheap
-        while wave <= cfg.max_waves:
-            if n_pending == 0:
-                break
+        while wave <= cfg.max_waves and n_pending:
             t0 = time.monotonic()
             dispatch, deferred = P.schedule_wave(
                 pending,
@@ -387,17 +342,8 @@ class CrawlEngine:
                 )
             else:
                 fetched = fetched.withColumn("_parse_ok", F.col("status") == 200)
-            # per-wave stats ride the write jobs via observe() metrics,
-            # so the wave runs ZERO dedicated stat actions (round-4:
-            # the unioned stats job was the longest per-wave pole,
-            # ~2.7 s of pure task-scheduling overhead at bench scale).
-            # Every observe node is attached ABOVE a persisted plan and
-            # referenced by exactly ONE write query: a CollectMetrics
-            # node placed UNDER a cache appears in every consumer's
-            # plan, and a consumer that merely reads the populated
-            # cache completes with an EMPTY metrics row — whichever
-            # query-end event reaches the Observation listener first
-            # wins that race (observed empirically on the bloom path).
+            # persisted: the documents, frontier, metrics (and links /
+            # revalidations) writes all read the fetched rows
             fetched = fetched.persist()
 
             ok = fetched.filter(F.col("_parse_ok")).drop("_parse_ok")
@@ -485,198 +431,98 @@ class CrawlEngine:
                         F.lit(wave).alias("wave"), "src_host", "dst_host", "n"
                     )
                 )
-            admitted, recorded = self._admit(new_links, wave)
-            # admitted count/max-seq observed ABOVE admitted's cache:
-            # the CollectMetrics node executes when the frontier write
-            # materializes next_pending (a cache scan the union pays
-            # anyway), never as its own job
-            obs_admitted = Observation()
-            admitted_obs = admitted.observe(
-                obs_admitted,
-                F.count(F.lit(1)).alias("n"),
-                F.max("discovered_seq").alias("x"),
+            admitted, seen_writes = self._admit(new_links, wave)
+            reval = None
+            if cfg.conditional_get:
+                # 304-revalidated rows: confirmed unchanged without
+                # a body — record the observation for the
+                # change-rate estimator (fetch_history unions this)
+                reval = fetched.filter(F.col("status") == 304).select(
+                    "crawl_id",
+                    "url",
+                    F.col("wave"),
+                    F.element_at(
+                        F.coalesce(F.col("meta"), F.create_map()),
+                        "if_none_match",
+                    ).alias("content_digest"),
+                    "source",
+                    F.col("meta"),
+                )
+            # the per-bucket metrics rows come from the one query that
+            # scans all fetched rows anyway; the global docs_emitted
+            # column is derived IN-PLAN by re-aggregating the tiny
+            # grouped output, and `candidates` likewise from admitted's
+            # cache (a broadcast join) — no driver literal, so the
+            # metrics write submits concurrently with the frontier
+            # write (round 5, BENCH/CRAWL_LOOP.md: serializing it
+            # behind the frontier write was the r4 regression). If the
+            # metrics job reaches admitted before the frontier write
+            # has populated its cache, it may compute the admission
+            # lineage a second time — correct, only duplicate work.
+            is_doc = (
+                F.col("_parse_ok")
+                & ~F.col("is_listing_page")
+                & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
             )
-
-            # persisted: the frontier write AND the pending-count
-            # observation share one materialization (deferred
-            # re-derives the politeness window otherwise)
-            obs_pending = Observation()
-            next_pending = (
-                deferred.unionByName(admitted_obs.select(*deferred.columns))
-                .unionByName(retry.select(*deferred.columns))
-                .observe(obs_pending, F.count(F.lit(1)).alias("n"))
-                .persist()
+            grouped = fetched.groupBy("crawl_id", "host_bucket").agg(
+                F.count("*").alias("fetched"),
+                F.sum(
+                    (
+                        ~F.col("_parse_ok")
+                        & (F.col("status") != 304)  # revalidation, not failure
+                    ).cast("long")
+                ).alias("retried"),
+                F.sum(is_doc.cast("long")).alias("_docs_part"),
             )
-            prof: dict[str, float] = {}
-            if cfg.profile:
-                t_f = time.monotonic()
-                fetched.count()  # materialize schedule+fetch in isolation
-                prof["fetch_s"] = round(time.monotonic() - t_f, 3)
-            # the docs / frontier / url_seen writes are independent jobs
-            # over persisted inputs — submit them concurrently from
-            # driver threads (Spark schedules them in one pool) so their
-            # fixed per-job latencies overlap instead of summing. The
-            # per-wave stats arrive as observe() metrics riding those
-            # same writes (no dedicated stat job); the metrics write
-            # needs the stat literals, so it launches as soon as the
-            # observations resolve while other writes may still be in
-            # flight. The manifest commit stays strictly after ALL
-            # writes, so crash atomicity is unchanged.
-            with ThreadPoolExecutor(max_workers=6) as pool:
-                docs_fut = pool.submit(self.store.write_wave, "documents", wave, docs)
-                frontier_fut = pool.submit(
-                    self.store.write_wave, "frontier", wave, next_pending
+            # global docs_emitted via a per-crawl window over the
+            # GROUPED output — bounded by n_buckets (a config
+            # constant, not data size), so the one-partition-per-
+            # crawl window is safe at any scale
+            cand_counts = admitted.groupBy("crawl_id").agg(
+                F.count(F.lit(1)).alias("_cand_n")
+            )
+            metrics = (
+                grouped.withColumn(
+                    "_docs_all",
+                    F.sum("_docs_part").over(
+                        Window.partitionBy("crawl_id").rowsBetween(
+                            Window.unboundedPreceding,
+                            Window.unboundedFollowing,
+                        )
+                    ),
                 )
-                seen_fut = pool.submit(
-                    self.store.write_wave, "url_seen", wave, recorded
+                .join(F.broadcast(cand_counts), "crawl_id", "left")
+                .withColumn("wave", F.lit(wave))
+                .withColumn(
+                    "candidates",
+                    F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
                 )
-                links_fut = (
-                    pool.submit(self.store.write_wave, "links", wave, link_edges)
-                    if link_edges is not None
-                    else None
+                .drop("_cand_n")
+                .withColumn("deduped_dropped", F.lit(0).cast("long"))
+                .withColumn("robots_dropped", F.lit(0).cast("long"))
+                .withColumn("scheduled", F.col("fetched"))
+                .withColumn(
+                    "docs_emitted",
+                    F.coalesce(F.col("_docs_all"), F.lit(0)).cast("long"),
                 )
-                reval_fut = None
-                if cfg.conditional_get:
-                    # 304-revalidated rows: confirmed unchanged without
-                    # a body — record the observation for the
-                    # change-rate estimator (fetch_history unions this)
-                    reval = fetched.filter(F.col("status") == 304).select(
-                        "crawl_id",
-                        "url",
-                        F.col("wave"),
-                        F.element_at(
-                            F.coalesce(F.col("meta"), F.create_map()),
-                            "if_none_match",
-                        ).alias("content_digest"),
-                        "source",
-                        F.col("meta"),
-                    )
-                    reval_fut = pool.submit(
-                        self.store.write_wave, "revalidations", wave, reval
-                    )
-                t_p = time.monotonic()
-                # fetched-side stats ride the METRICS write (the one
-                # query that scans all fetched rows anyway); the global
-                # docs_emitted column is derived IN-PLAN by
-                # re-aggregating the tiny grouped output and broadcast
-                # cross-joining it back — no driver literal, no extra
-                # action. `candidates` is likewise derived IN-PLAN from
-                # admitted's cache (round-5 recovery of the r4 ~3-6%
-                # crawl-loop residual, BENCH/CRAWL_LOOP.md: the r4 shape
-                # needed obs_admitted's driver literal, which resolves
-                # only when the FRONTIER write completes — serializing
-                # the metrics write behind it; in-plan, all six wave
-                # writes submit concurrently). The count scans a cached
-                # plan WITHOUT the CollectMetrics node (that node lives
-                # only in admitted_obs/the frontier write), so the
-                # observe invariant is untouched.
-                obs_fetched = Observation()
-                grouped = (
-                    fetched.observe(
-                        obs_fetched,
-                        F.count(F.lit(1)).alias("n"),
-                        F.sum(
-                            (
-                                F.col("_parse_ok")
-                                & ~F.col("is_listing_page")
-                                & (
-                                    F.size(F.coalesce(F.col("spans"), F.array()))
-                                    > 0
-                                )
-                            ).cast("long")
-                        ).alias("docs"),
-                    )
-                    .groupBy("crawl_id", "host_bucket")
-                    .agg(
-                        F.count("*").alias("fetched"),
-                        F.sum(
-                            (
-                                ~F.col("_parse_ok")
-                                & (F.col("status") != 304)  # revalidation, not failure
-                            ).cast("long")
-                        ).alias("retried"),
-                        F.sum(
-                            (
-                                F.col("_parse_ok")
-                                & ~F.col("is_listing_page")
-                                & (
-                                    F.size(F.coalesce(F.col("spans"), F.array()))
-                                    > 0
-                                )
-                            ).cast("long")
-                        ).alias("_docs_part"),
-                    )
+                .withColumn(
+                    "wall_ms",
+                    F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
                 )
-                # global docs_emitted via a per-crawl window over the
-                # GROUPED output — bounded by n_buckets (a config
-                # constant, not data size), so the one-partition-per-
-                # crawl window is safe at any scale; a broadcast
-                # self-join would duplicate the CollectMetrics node in
-                # one query
-                cand_counts = admitted.groupBy("crawl_id").agg(
-                    F.count(F.lit(1)).alias("_cand_n")
-                )
-                metrics = (
-                    grouped.withColumn(
-                        "_docs_all",
-                        F.sum("_docs_part").over(
-                            Window.partitionBy("crawl_id").rowsBetween(
-                                Window.unboundedPreceding,
-                                Window.unboundedFollowing,
-                            )
-                        ),
-                    )
-                    .join(F.broadcast(cand_counts), "crawl_id", "left")
-                    .withColumn("wave", F.lit(wave))
-                    .withColumn(
-                        "candidates",
-                        F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
-                    )
-                    .drop("_cand_n")
-                    .withColumn("deduped_dropped", F.lit(0).cast("long"))
-                    .withColumn("robots_dropped", F.lit(0).cast("long"))
-                    .withColumn("scheduled", F.col("fetched"))
-                    .withColumn(
-                        "docs_emitted",
-                        F.coalesce(F.col("_docs_all"), F.lit(0)).cast("long"),
-                    )
-                    .withColumn(
-                        "wall_ms",
-                        F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
-                    )
-                    .select([f.name for f in schemas.METRICS.fields])
-                )
-                metrics_fut = pool.submit(
-                    self.store.write_wave, "metrics", wave, metrics
-                )
-                docs_fut.result()
-                frontier_fut.result()
-                seen_fut.result()
-                if links_fut is not None:
-                    links_fut.result()
-                if reval_fut is not None:
-                    reval_fut.result()
-                metrics_fut.result()
-                prof["writes_s"] = round(time.monotonic() - t_p, 3)
-            t_s = time.monotonic()
-            # both observations resolved by now (their owning writes
-            # completed above) — these are instant reads, no wave
-            # critical-path wait
-            a_row = observed_stats(obs_admitted, "admitted", ("n", "x"))
-            # fired by the metrics write
-            f_row = observed_stats(obs_fetched, "fetched", ("n", "docs"))
-            prof["stats_s"] = round(time.monotonic() - t_s, 3)
-            next_base = max(next_base, int(a_row["x"] or 0)) + 1
-            n_fetched = int(f_row["n"])
-            n_docs = int(f_row["docs"] or 0)
-            t_c = time.monotonic()
-            self.store.commit_wave(wave, {"next_seq_base": next_base})
+                .select([f.name for f in schemas.METRICS.fields])
+            )
+            writes = {
+                "documents": docs,
+                "frontier": deferred.unionByName(admitted.select(*deferred.columns))
+                .unionByName(retry.select(*deferred.columns)),
+                **seen_writes,
+                "links": link_edges,
+                "revalidations": reval,
+                "metrics": metrics,
+            }
+            n_pending, next_base, n_docs, n_fetched = self._commit(wave, writes, next_base)
             if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
                 self.store.compact("url_seen", cfg.compact_partitions)
-            if cfg.profile:
-                prof["commit_s"] = round(time.monotonic() - t_c, 3)
-                prof["wave_s"] = round(time.monotonic() - t0, 3)
-                totals["profile"].append(prof)
 
             if cfg.autothrottle:
                 # fold this wave's latency into the policy dim (per-host
@@ -701,15 +547,44 @@ class CrawlEngine:
             totals["waves"] += 1
             fetched.unpersist()
             admitted.unpersist()
-            next_pending.unpersist()
             # re-read pending from the committed snapshot: truncates lineage
-            # (the iterative-loop analog of checkpointing); its count came
-            # back as an observation on the frontier write — no extra
-            # per-wave action
+            # (the iterative-loop analog of checkpointing)
             pending = self.store.read_table("frontier", "latest")
-            n_pending = int(observed_stats(obs_pending, "pending", ("n",))["n"])
             wave += 1
         return totals
+
+    def _commit(self, wave: int, writes: dict, next_base: int) -> tuple[int, int, int, int]:
+        """Write one wave's tables and commit it — the one commit path
+        of seeding, injection and the crawl loop.
+
+        ``writes`` maps table -> DataFrame (``None``: not written this
+        wave). The writes are independent jobs over persisted inputs,
+        submitted at once from driver threads so Spark schedules them
+        in one pool and their fixed per-job latencies overlap; a write
+        that hangs shows up here, in its future. Once all are written,
+        the wave's counters are read back from the staged files'
+        parquet footers (:meth:`SnapshotStore.wave_stats`) — files that
+        are already complete cannot race the queries that wrote them.
+        The manifest commit comes last, so a wave is durable iff all of
+        its writes are.
+
+        Returns ``(n_pending, next_base, n_docs, n_fetched)``.
+        ``assign_seq`` numbers rows strictly above its base, so the next
+        base is the largest committed frontier seq.
+        """
+        writes = {t: df for t, df in writes.items() if df is not None}
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = [pool.submit(self.store.write_wave, t, wave, df) for t, df in writes.items()]
+            for fut in futures:
+                fut.result()
+        n_pending, max_seq = self.store.wave_stats("frontier", wave, "discovered_seq")
+        next_base = max(next_base, max_seq or 0)
+        n_docs = self.store.wave_stats("documents", wave)[0] if "documents" in writes else 0
+        n_fetched = 0
+        if "metrics" in writes:  # at most n_buckets rows
+            n_fetched = self.store.wave_stats("metrics", wave, "fetched", "sum")[1] or 0
+        self.store.commit_wave(wave, {"next_seq_base": next_base})
+        return n_pending, next_base, n_docs, n_fetched
 
     # -- outputs ------------------------------------------------------------
     def documents(self, latest_only: bool = False) -> DataFrame:
@@ -931,8 +806,10 @@ class CrawlEngine:
         )
 
 
-def _seed_candidates(seeds: DataFrame, crawl_id: str) -> DataFrame:
-    """Seed rows -> pre-identity frontier candidates. An optional
+def _seed_candidates(seeds: DataFrame, crawl_id: str, wave: int, base: int) -> DataFrame:
+    """Seed rows -> pre-identity frontier candidates of ``wave``,
+    numbered above ``base`` in (source, url) order — the documented
+    analog of start_urls list order (readme.md:33-55). An optional
     ``dont_filter`` column passes through (recrawl seeds set it True to
     bypass the seen set, Scrapy Request(dont_filter=True) semantics);
     plain seed tables default to False."""
@@ -941,7 +818,7 @@ def _seed_candidates(seeds: DataFrame, crawl_id: str) -> DataFrame:
         if "dont_filter" in seeds.columns
         else F.lit(False)
     )
-    return seeds.select(
+    cand = seeds.select(
         F.lit(crawl_id).alias("crawl_id"),
         "url",
         F.lit("GET").alias("method"),
@@ -954,12 +831,10 @@ def _seed_candidates(seeds: DataFrame, crawl_id: str) -> DataFrame:
         F.lit(0).cast("long").alias("parent_seq"),
         F.lit(0).alias("link_pos"),
     )
+    cand = S.assign_seq(cand, [F.asc("source"), F.asc("url")], base).drop("link_pos")
+    return cand.withColumn("wave", F.lit(wave))
 
 
 def schemas_frontier_cols(df: DataFrame) -> list[str]:
     return [f.name for f in schemas.FRONTIER.fields if f.name in df.columns]
 
-
-def _max_seq(df: DataFrame) -> int:
-    row = df.agg(F.max("discovered_seq").alias("m")).collect()[0]
-    return int(row["m"]) if row["m"] is not None else 0

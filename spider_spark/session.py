@@ -26,17 +26,22 @@ def get_spark(
     app_name: str = "spider_spark",
     cpus: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    tmpfs_local_dir: bool = False,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all
-    local cores. In a real deployment this module is bypassed and the
-    session comes from spark-submit; every config here is also valid
-    cluster-side.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or the
+    CPUs this process may run on; the driver heap defaults to
+    ``$SPARK_GRAFT_DRIVER_MEM`` or a quarter of physical RAM. In a real
+    deployment this module is bypassed and the session comes from
+    spark-submit; every config here is also valid cluster-side.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    # local mode: the driver JVM also runs every task, and its RSS grows
+    # past the heap (off-heap Arrow buffers, metaspace) with the Python
+    # workers beside it — a quarter of RAM keeps all of it on the machine
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{ram_mb // 4}m"
     # explicit override: on a real cluster shuffle partitions are sized
     # by DATA (so each partition's sort fits in task memory), not by
     # core count — the scaling study pins this equal across its two
@@ -46,7 +51,7 @@ def get_spark(
     if shuffle_env:
         shuffle_parts = int(shuffle_env)
     else:
-        shuffle_parts = max(8, cpus * SHUFFLE_PARTITIONS_PER_CORE)
+        shuffle_parts = cpus * SHUFFLE_PARTITIONS_PER_CORE
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -59,20 +64,17 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Shuffle/spill files on tmpfs are OPT-IN (bench entrypoints pass
-    # tmpfs_local_dir=True, or set $SPARK_GRAFT_LOCAL_DIR explicitly):
-    # on this single box the disk is shared by all cores, so spill
-    # bandwidth is a SERIAL fraction that caps multi-core scaling and
-    # tmpfs restores the per-core bandwidth a cluster would have — but
-    # a RAM-backed dir turns a big spill into ENOSPC/OOM, so ordinary
-    # sessions keep the disk-backed default.
+    # Shuffle/spill files on tmpfs are OPT-IN (bench entrypoints set
+    # $SPARK_GRAFT_LOCAL_DIR=/dev/shm): on a single box the disk is
+    # shared by all cores, so spill bandwidth is a SERIAL fraction that
+    # caps multi-core scaling and tmpfs restores the per-core bandwidth
+    # a cluster would have — but a RAM-backed dir turns a big spill
+    # into ENOSPC/OOM, so ordinary sessions keep the disk-backed default.
     shm = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if shm is None and tmpfs_local_dir:
-        shm = "/dev/shm"
     if shm and os.path.isdir(shm) and os.access(shm, os.W_OK):
         local_dir = os.path.join(shm, "spark-local")
         os.makedirs(local_dir, exist_ok=True)

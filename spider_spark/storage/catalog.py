@@ -2,15 +2,12 @@
 
 The north rule wants "frontier checkpointed to Iceberg snapshots so a
 killed run resumes from the last committed wave". The sandbox image has
-no Iceberg jars (guide: "Delta/Iceberg/Hudi need their jars — stub
-behind an import-try"), so this module:
-
-* tries the real Iceberg catalog first (``try_iceberg``), and otherwise
-* provides :class:`SnapshotStore` — per-table parquet snapshot dirs +
-  one atomically-renamed ``manifest.json`` that is the single source of
-  truth for what is committed. A wave is durable iff the manifest names
-  it; partially-written parquet from a killed run is simply never
-  referenced (the exact mechanism Iceberg's metadata pointer uses).
+no Iceberg jars, so this module provides :class:`SnapshotStore` —
+per-table parquet snapshot dirs + one atomically-renamed
+``manifest.json`` that is the single source of truth for what is
+committed. A wave is durable iff the manifest names it;
+partially-written parquet from a killed run is simply never referenced
+(the exact mechanism Iceberg's metadata pointer uses).
 
 Layout::
 
@@ -43,22 +40,15 @@ never a wrong read).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
 import tempfile
 from typing import Literal
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-
-
-def try_iceberg(spark: SparkSession) -> bool:
-    """True if an Iceberg catalog is usable in this session."""
-    try:
-        spark.sql("CREATE NAMESPACE IF NOT EXISTS spark_catalog.spider_ns")
-        return True
-    except Exception:
-        return False
 
 
 APPEND_TABLES = ("documents", "url_seen", "metrics", "links")
@@ -103,6 +93,38 @@ class SnapshotStore:
             manifest["committed_waves"].append(wave)
         manifest["extra"].update(extra or {})
         self._write_manifest(manifest)
+
+    def wave_stats(
+        self, table: str, wave: int, column: str | None = None, agg: str = "max"
+    ) -> tuple[int, int | None]:
+        """``(rows, value)`` of one written wave dir, read on the driver
+        with pyarrow — no Spark job. ``rows`` and ``agg="max"`` come
+        from the parquet footers alone (row-group row counts and column
+        statistics); ``agg="sum"`` reads ``column`` itself, so keep it
+        to small tables such as ``metrics``. The files are already
+        written, so the numbers cannot race the query that wrote them.
+        An empty wave (one 0-row file without statistics) gives
+        ``(0, None)``."""
+        rows, values = 0, []
+        for path in sorted(glob.glob(os.path.join(self._wave_dir(table, wave), "*.parquet"))):
+            meta = pq.read_metadata(path)
+            rows += meta.num_rows
+            if column is None or meta.num_rows == 0:
+                continue
+            stats = [
+                rg.column(j).statistics
+                for rg in map(meta.row_group, range(meta.num_row_groups))
+                for j in range(rg.num_columns)
+                if rg.column(j).path_in_schema == column
+            ]
+            if agg == "max" and all(st is not None and st.has_min_max for st in stats):
+                values += [st.max for st in stats]
+            else:  # a sum, or a writer that skipped statistics
+                values += pq.read_table(path, columns=[column])[column].to_pylist()
+        values = [v for v in values if v is not None]
+        if not values:
+            return rows, None
+        return rows, (max(values) if agg == "max" else sum(values))
 
     # -- reads -------------------------------------------------------------
     def committed_waves(self) -> list[int]:

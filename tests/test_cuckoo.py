@@ -53,12 +53,12 @@ def test_full_table_raises():
         cuckoo_insert(spec.empty(), fps(2000), spec)
 
 
-def test_engine_cuckoo_equals_exact(spark, tmp_path):
+def test_engine_cuckoo_equals_exact(spark, tmp_path, reference_crawl):
     from tests.test_engine import run_engine
     from spider_spark.synth import WebSpec
 
     spec = WebSpec(seed=11, n_hosts=4, pages_per_host=2, details_per_page=3)
-    _e1, _t1, s_exact = run_engine(spark, tmp_path / "exact", spec, seen_backend="exact")
+    _e1, _t1, s_exact = reference_crawl(spec)
     _e2, _t2, s_ck = run_engine(spark, tmp_path / "cuckoo", spec, seen_backend="cuckoo")
     seen_exact = {r["fingerprint"] for r in s_exact.read_table("url_seen", "append").collect()}
     seen_ck = {r["fingerprint"] for r in s_ck.read_table("url_seen", "append").collect()}

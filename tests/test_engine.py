@@ -277,10 +277,10 @@ def test_resume_from_checkpoint(spark, tmp_path):
     assert full_seen == res_seen
 
 
-def test_bloom_path_equals_exact_path(spark, tmp_path):
+def test_bloom_path_equals_exact_path(spark, tmp_path, reference_crawl):
     spec = WebSpec(seed=11, n_hosts=4, pages_per_host=2, details_per_page=3)
-    _e1, _t1, s_exact = run_engine(spark, tmp_path / "exact", spec, use_bloom=False)
-    _e2, _t2, s_bloom = run_engine(spark, tmp_path / "bloom", spec, use_bloom=True)
+    _e1, _t1, s_exact = reference_crawl(spec)
+    _e2, _t2, s_bloom = run_engine(spark, tmp_path / "bloom", spec, seen_backend="bloom")
     seen_exact = {r["fingerprint"] for r in s_exact.read_table("url_seen", "append").collect()}
     seen_bloom = {r["fingerprint"] for r in s_bloom.read_table("url_seen", "append").collect()}
     assert seen_exact == seen_bloom
@@ -296,21 +296,6 @@ def test_metrics_lineage_recorded(engine_run):
     fetched_sum = m.agg(F.sum("fetched")).collect()[0][0]
     assert fetched_sum == totals["fetched"]
     assert m.filter(F.col("host_bucket").isNull()).count() == 0
-
-
-def test_profile_flag_records_per_wave_phases(spark, tmp_path):
-    """CrawlConfig(profile=True) appends a per-wave phase-timing dict
-    (fetch/stats/writes/commit/wave) to totals; off by default."""
-    spec = WebSpec(seed=7, n_hosts=2, pages_per_host=1, details_per_page=2)
-    _eng, totals, _store = run_engine(spark, tmp_path, spec=spec, profile=True)
-    prof = totals["profile"]
-    assert len(prof) == totals["waves"] > 0
-    for p in prof:
-        assert set(p) == {"fetch_s", "stats_s", "writes_s", "commit_s", "wave_s"}
-        assert p["wave_s"] >= p["fetch_s"] >= 0
-    # default path has no profile key (bench totals stay unchanged)
-    _eng2, totals2, _s2 = run_engine(spark, tmp_path / "p2", spec=spec)
-    assert "profile" not in totals2
 
 
 def test_sitemap_seed_expansion_unit(spark):
@@ -463,12 +448,12 @@ def test_snapshot_compaction_preserves_reads(spark, tmp_path):
     assert store2.read_table("url_seen", "append").count() == 3
 
 
-def test_crawl_with_compaction_equals_without(spark, tmp_path):
+def test_crawl_with_compaction_equals_without(spark, tmp_path, reference_crawl):
     """CrawlConfig(compact_every=2): same crawl results and URL-seen
     set as the uncompacted run — compaction is invisible to semantics,
     it only collapses the snapshot read set (small-file problem)."""
     spec = WebSpec(seed=13, n_hosts=4, pages_per_host=2, details_per_page=3)
-    _e1, t1, s1 = run_engine(spark, tmp_path / "plain", spec)
+    _e1, t1, s1 = reference_crawl(spec)
     _e2, t2, s2 = run_engine(
         spark, tmp_path / "compacted", spec, compact_every=2, compact_partitions=4
     )
@@ -971,13 +956,13 @@ def test_conditional_recrawl_fetches_changed_page(spark, tmp_path):
     eng.close(); eng2.close()
 
 
-def test_trap_filter_preserves_clean_crawl(spark, tmp_path):
+def test_trap_filter_preserves_clean_crawl(spark, tmp_path, reference_crawl):
     """CrawlConfig(trap_filter=True): the synthetic web's URLs are not
     trap-shaped, so the fenced crawl is bit-identical to the plain one
     (totals, URL-seen set, document ids) — the fence only ever REMOVES
     trap-shaped candidates, it never perturbs a clean frontier."""
     spec = WebSpec(seed=13, n_hosts=4, pages_per_host=2, details_per_page=3)
-    _e1, t1, s1 = run_engine(spark, tmp_path / "plain", spec)
+    _e1, t1, s1 = reference_crawl(spec)
     _e2, t2, s2 = run_engine(spark, tmp_path / "fenced", spec, trap_filter=True)
     assert t1 == t2
     seen1 = {r["fingerprint"] for r in s1.read_table("url_seen", "append").collect()}
@@ -1214,64 +1199,46 @@ def test_documents_delta_incremental_export(spark, tmp_path):
     eng.close(); eng2.close()
 
 
-# -- observe()-metrics invariant (VERDICT r4 ask #3) ------------------------
+# -- wave counters read from the committed files -----------------------------
 
 
-def test_observed_stats_guard_raises_on_empty_row():
-    """engine.observed_stats fails loudly when an Observation resolves
-    to an empty or key-missing metrics row — the signature of a
-    CollectMetrics node moved under a shared cache, where a pure
-    cache-read consumer's query-end wins the JVM listener race."""
-    from spider_spark.plans.engine import observed_stats
-
-    class FakeObs:
-        def __init__(self, row):
-            self._row = row
-
-        @property
-        def get(self):
-            return self._row
-
-    assert observed_stats(FakeObs({"n": 3, "x": 9}), "ok", ("n", "x"))["n"] == 3
-    with pytest.raises(RuntimeError, match="observe-metrics invariant"):
-        observed_stats(FakeObs({}), "empty", ("n",))
-    with pytest.raises(RuntimeError, match="missing \\['docs'\\]"):
-        observed_stats(FakeObs({"n": 5}), "partial", ("n", "docs"))
-
-
-def test_observe_under_shared_cache_is_hazardous(spark):
-    """Pins WHY every engine observe node sits ABOVE its persist with
-    exactly one consuming write query: an Observation whose
-    CollectMetrics node ends up under a cache is resolved by whichever
-    consumer's action finishes FIRST, and a partial-scan consumer
-    (here a LIMIT) resolves a count far below the full row count. If
-    an engine refactor moves a wave observation under a shared cache,
-    this measured hazard is what observed_stats' guard converts from
-    silently-wrong stats into a hard error."""
-    from pyspark.sql import Observation
-
-    df = spark.range(0, 2000, 1, 4)
-    obs = Observation()
-    cached = df.observe(obs, F.count(F.lit(1)).alias("n")).persist()
-    try:
-        cached.limit(1).collect()  # first action: partial scan wins
-        first = int(obs.get["n"])
-        assert first < 2000  # NOT the full count — the hazard is real
-        # subsequent full-scan actions cannot repair it: first wins
-        assert cached.count() == 2000
-        assert int(obs.get["n"]) == first
-    finally:
-        cached.unpersist()
+def test_wave_stats_reads_footers(spark, tmp_store):
+    """SnapshotStore.wave_stats: row count and column max from the
+    parquet footers of one written wave dir (a nested map column sits
+    before the stats column), a column sum read from the data, and an
+    empty write — one 0-row file without statistics — as (0, None)."""
+    df = spark.range(0, 1000, 1, 3).select(
+        F.create_map(F.lit("k"), F.col("id").cast("string")).alias("meta"),
+        F.col("id").alias("discovered_seq"),
+        (F.col("id") % 7).alias("fetched"),
+    )
+    tmp_store.write_wave("frontier", 0, df)
+    assert tmp_store.wave_stats("frontier", 0, "discovered_seq") == (1000, 999)
+    assert tmp_store.wave_stats("frontier", 0) == (1000, None)
+    assert tmp_store.wave_stats("frontier", 0, "fetched", "sum") == (
+        1000,
+        sum(i % 7 for i in range(1000)),
+    )
+    tmp_store.write_wave("frontier", 1, df.filter(F.col("discovered_seq") < 0))
+    assert tmp_store.wave_stats("frontier", 1, "discovered_seq") == (0, None)
+    assert tmp_store.wave_stats("frontier", 1, "fetched", "sum") == (0, None)
 
 
 def test_wave_metrics_match_stored_tables(engine_run):
-    """Per-wave observed stats vs independent truth recomputed from the
-    stored tables: candidates(w) must equal the url_seen rows recorded
-    at wave w (plain crawl: every admitted row is recorded) and
+    """Per-wave metrics and run totals vs independent truth recomputed
+    from the stored tables: candidates(w) must equal the url_seen rows
+    recorded at wave w (plain crawl: every admitted row is recorded),
     docs_emitted(w) must equal the documents-table rows written at
-    wave w. An empty observed row raises in observed_stats; a PARTIAL
-    row (the shared-cache race above) would mismatch here."""
+    wave w, totals["fetched"]/totals["docs"] (read from the committed
+    files' footers) must equal the metrics fetched sum and the
+    documents row count, and the manifest's next_seq_base must be at
+    least every committed frontier discovered_seq — assign_seq numbers
+    the next wave strictly above it, so seqs never collide."""
     eng, totals, store, _log = engine_run
+    assert totals["fetched"] == eng.metrics().agg(F.sum("fetched")).first()[0]
+    assert totals["docs"] == store.read_table("documents", "append").count()
+    max_seq = store.read_table("frontier", "append").agg(F.max("discovered_seq")).first()[0]
+    assert store.extra()["next_seq_base"] >= max_seq > 0
     m = (
         eng.metrics()
         .groupBy("wave")

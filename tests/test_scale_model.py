@@ -86,6 +86,13 @@ def test_amdahl_fit_recovers_known_parameters():
     assert s0 == 0.0
 
 
+def test_amdahl_fit_rejects_equal_core_counts():
+    """One core count twice (MODEL_CPUS=1 gives cpus_lo == cpus_hi)
+    has no fit: a clear ValueError, not a ZeroDivisionError."""
+    with pytest.raises(ValueError, match="two different core counts"):
+        amdahl_fit(10.0, 10.0, 1, 1)
+
+
 def _meas(cpu_core_s=1887.1, shw=9_856_112_329, shr=9_856_112_329,
           stages=9, tasks=262):
     return {

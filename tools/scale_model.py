@@ -69,8 +69,9 @@ import sys, time, json
 sys.path.insert(0, {str(REPO)!r})
 import os
 os.environ["SPARK_GRAFT_SHUFFLE_PARTITIONS"] = "{shuffle}"
+os.environ.setdefault("SPARK_GRAFT_LOCAL_DIR", "/dev/shm")
 from spider_spark.session import get_spark
-spark = get_spark("scale-model", cpus={cpus}, tmpfs_local_dir=True,
+spark = get_spark("scale-model", cpus={cpus},
                   extra_conf={{"spark.eventLog.enabled": "true",
                               "spark.eventLog.dir": {log_dir!r},
                               "spark.eventLog.rolling.enabled": "false",
@@ -175,6 +176,11 @@ def parse_event_log(path: str) -> dict:
 
 def amdahl_fit(t_lo: float, t_hi: float, c_lo: int, c_hi: int) -> tuple:
     """Solve T(c) = S + W/c from two measured points: W in core-s, S in s."""
+    if c_lo == c_hi:
+        raise ValueError(
+            f"amdahl_fit needs two different core counts, got {c_lo} twice "
+            "(MODEL_CPUS must be at least 4 so MODEL_CPUS/4 differs from it)"
+        )
     w = (t_lo - t_hi) / (1.0 / c_lo - 1.0 / c_hi)
     s = t_hi - w / c_hi
     return max(0.0, s), w
@@ -196,7 +202,9 @@ def model_cluster(meas: dict, n_urls_meas: int, fixed_driver_s: float) -> dict:
       Task count scales with DATA (AQE ~128 MB partitions, floored at
       one wavefront = cores per stage), so quadrupling executors
       raises the floor — this is the term that genuinely does not
-      scale, and the model keeps it visible.
+      scale, and the model keeps it visible. It counts shuffle-stage
+      tasks only: the input-scan (map) stage's tasks are left out, so
+      the floor is a lower bound on dispatch time.
     - Fixed driver planning: the measured driver-gap seconds (equal at
       lo and hi occupancy in the instrumented pair -> per-RUN planning
       cost, independent of data size and cluster size).
@@ -342,7 +350,10 @@ wall = fixed_driver + max(t_cpu, t_net, t_dispatch):
   THROUGHPUT floor because dispatch overlaps execution. Tasks =
   per-stage shuffle bytes / {TARGET_PARTITION_BYTES // (1024 * 1024)} MB (AQE target), floored at one
   wavefront (= cores) per stage x {m['n_shuffle_stages']} shuffle stages — the term that
-  scales with DATA and cluster size, i.e. the honest scale limit.
+  scales with DATA and cluster size, i.e. the honest scale limit. Only
+  shuffle-stage tasks are counted: the input-scan (map) stage's tasks
+  are left out, so t_dispatch is a lower bound and the efficiency
+  below is optimistic by whatever that stage adds.
 
 | config | executors | cores | tasks | t_cpu (s) | t_net (s) | t_dispatch (s) | binding | wall (s) |
 |---|---|---|---|---|---|---|---|---|
