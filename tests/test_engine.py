@@ -1205,8 +1205,9 @@ def test_documents_delta_incremental_export(spark, tmp_path):
 def test_wave_stats_reads_footers(spark, tmp_store):
     """SnapshotStore.wave_stats: row count and column max from the
     parquet footers of one written wave dir (a nested map column sits
-    before the stats column), a column sum read from the data, and an
-    empty write — one 0-row file without statistics — as (0, None)."""
+    before the stats column), a column sum read from the data, an
+    empty write — one 0-row file without statistics — as (0, None),
+    and a file without statistics read from its data."""
     df = spark.range(0, 1000, 1, 3).select(
         F.create_map(F.lit("k"), F.col("id").cast("string")).alias("meta"),
         F.col("id").alias("discovered_seq"),
@@ -1222,6 +1223,19 @@ def test_wave_stats_reads_footers(spark, tmp_store):
     tmp_store.write_wave("frontier", 1, df.filter(F.col("discovered_seq") < 0))
     assert tmp_store.wave_stats("frontier", 1, "discovered_seq") == (0, None)
     assert tmp_store.wave_stats("frontier", 1, "fetched", "sum") == (0, None)
+    # a file written without column statistics falls back to its data
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(tmp_store._wave_dir("frontier", 2))
+    pq.write_table(
+        pa.table({"discovered_seq": [4, 17, 9]}),
+        os.path.join(tmp_store._wave_dir("frontier", 2), "part-0.parquet"),
+        write_statistics=False,
+    )
+    assert tmp_store.wave_stats("frontier", 2, "discovered_seq") == (3, 17)
 
 
 def test_wave_metrics_match_stored_tables(engine_run):
