@@ -280,14 +280,23 @@ def host_bucket_col(host: Column, n_buckets: int) -> Column:
 
 
 def with_url_identity(df, n_buckets: int, url_col: str = "url"):
-    """Attach canonical_url, host, host_bucket, fingerprint columns."""
+    """Attach canonical_url, host, host_bucket, fingerprint columns.
+
+    Two projections: the canonicalize UDF, then every column derived
+    from its output (the host expression appears twice and is
+    evaluated once by subexpression elimination)."""
+    cols = df.columns
     df = df.withColumn("canonical_url", canonicalize_udf(F.col(url_col)))
-    df = df.withColumn("host", host_col(F.col("canonical_url")))
-    df = df.withColumn("host_bucket", host_bucket_col(F.col("host"), n_buckets))
-    method = F.col("method") if "method" in df.columns else F.lit("GET")
-    body = F.col("body") if "body" in df.columns else F.lit(None).cast("string")
-    df = df.withColumn("fingerprint", fingerprint_col(method, F.col("canonical_url"), body))
-    return df
+    canonical = F.col("canonical_url")
+    method = F.col("method") if "method" in cols else F.lit("GET")
+    body = F.col("body") if "body" in cols else F.lit(None).cast("string")
+    return df.withColumns(
+        {
+            "host": host_col(canonical),
+            "host_bucket": host_bucket_col(host_col(canonical), n_buckets),
+            "fingerprint": fingerprint_col(method, canonical, body),
+        }
+    )
 
 # ---------------------------------------------------------------------------
 # Crawler-trap fence (round 4; beyond the reference — SURVEY.md §8).

@@ -114,6 +114,18 @@ def robots_filter(frontier: DataFrame, host_policy: DataFrame, obey: bool) -> Da
 ROW_KEY = ["crawl_id", "fingerprint", "dont_filter", "discovered_seq"]
 
 
+def deferred_rows(pending: DataFrame, dispatched: DataFrame) -> DataFrame:
+    """``pending`` without the rows of ``dispatched``: a left-anti join
+    on ``ROW_KEY`` with the dispatched keys broadcast. A wave's
+    dispatch set is bounded by the sum of its host budgets, and only
+    the key columns cross, so the broadcast side stays small whatever
+    the frontier's size (SIGMOD'21 *To Partition, or Not to
+    Partition*)."""
+    return pending.join(
+        F.broadcast(dispatched.select(*ROW_KEY)), on=ROW_KEY, how="left_anti"
+    )
+
+
 def schedule_wave(
     pending: DataFrame,
     host_policy: DataFrame,
@@ -121,24 +133,17 @@ def schedule_wave(
     n_salts: int = 16,
     obey_robots: bool = False,
     global_cap: int | None = None,
-    broadcast_dispatch: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Select this wave's dispatch set from the pending frontier.
 
     Returns ``(dispatch, deferred)``. ``host_policy`` is broadcast (a
-    per-host dim — thousands of rows, not billions).
-
-    Shuffle shape: the default ranks the full rows directly — ONE pass
-    over ``pending``, with the salted window bounding any single
-    partition. ``broadcast_dispatch=True`` instead ranks a NARROW
-    projection (key + host + priority) and broadcast-joins the winners
-    (``sum(host budgets)`` rows) back onto ``pending`` — the wide rows
-    never shuffle, at the cost of 3 scans of ``pending``. Measured
-    locally: the narrow path wins when ``pending`` is a lazy pipeline
-    (scan is fused, shuffle dominates); the wide path wins when
-    ``pending`` is already materialized (scan ≈ free, passes dominate).
-    Flip it on for frontiers with fat meta/body columns on a real
-    cluster where shuffle I/O is the bottleneck.
+    per-host dim — thousands of rows, not billions). The full rows are
+    ranked directly: one pass over ``pending``, with the salted window
+    bounding any single partition. ``deferred`` is
+    :func:`deferred_rows` of the robots-filtered ``pending`` and
+    ``dispatch``; it evaluates the ranking a second time, so a caller
+    that materializes the dispatch rows (the crawl engine's fetched
+    cache) should apply :func:`deferred_rows` to those rows instead.
 
     ``global_cap`` applies the reference's fleet-wide in-flight bound
     (CONCURRENT_REQUESTS=320, ``settings.py:24``) AFTER per-host
@@ -149,25 +154,14 @@ def schedule_wave(
     pending = robots_filter(pending, host_policy, obey_robots)
     policy = host_policy.select("host", "crawl_delay_s", "max_concurrency")
 
-    base = pending.select(*ROW_KEY, "host", "priority") if broadcast_dispatch else pending
-    enriched = base.join(F.broadcast(policy), on="host", how="left")
+    enriched = pending.join(F.broadcast(policy), on="host", how="left")
     enriched = enriched.withColumn("_budget", host_budget_col(wave_seconds))
 
     winners = topk_per_key_salted(enriched, key="host", k_col="_budget", n_salts=n_salts)
     winners = winners.drop("crawl_delay_s", "max_concurrency", "_budget")
     if global_cap is not None:
         winners = winners.orderBy(*dispatch_order()).limit(global_cap)
-
-    if broadcast_dispatch:
-        keys = winners.select(*ROW_KEY, "dispatch_rank")
-        dispatch = pending.join(F.broadcast(keys), on=ROW_KEY, how="inner")
-        deferred = pending.join(
-            F.broadcast(keys.select(*ROW_KEY)), on=ROW_KEY, how="left_anti"
-        )
-    else:
-        dispatch = winners
-        deferred = pending.join(winners.select(*ROW_KEY), on=ROW_KEY, how="left_anti")
-    return dispatch, deferred
+    return winners, deferred_rows(pending, winners)
 
 
 def budget_by_registered_domain(

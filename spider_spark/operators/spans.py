@@ -221,19 +221,15 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
     added seconds of per-wave overhead at bench scale (each consumer
     evaluation of the candidate plan pays every UDF node's Python
     round trip for all partitions, even when the redirect side holds
-    zero rows)."""
+    zero rows).
+
+    Every other column passes through, ``discovered_seq`` included: the
+    engine numbers the raw rows with :func:`assign_seq` first, so the
+    range sort's sampling job never re-runs this UDF."""
     return raw.select(
         "crawl_id",
         resolve_udf(F.col("base_url"), F.col("href")).alias("url"),
-        "method",
-        "body",
-        "source",
-        "meta",
-        "priority",
-        "attempt",
-        "dont_filter",
-        "parent_seq",
-        "link_pos",
+        *[c for c in raw.columns if c not in ("crawl_id", "base_url", "href")],
     )
 
 
@@ -530,9 +526,15 @@ def assign_seq(df: DataFrame, order_cols: list, base: int) -> DataFrame:
     Distributed total sort (range shuffle) + ``monotonically_increasing_id``:
     after ``orderBy`` the partitions are range-ordered and sorted within,
     so the id (partitionId << 33 | offset) is order-consistent with the
-    sort — sparse, but the scheduler only needs a total order, not dense
-    ranks. No single-partition window, no driver collect: holds at
+    sort. No single-partition window, no driver collect: holds at
     10^10 rows. ``base`` keeps later waves strictly after earlier ones.
+
+    Seqs are sparse: partitions leave jumps, and the engine numbers a
+    wave's links before its link-rule, offsite and trap filters, so a
+    link dropped after numbering leaves a gap. The scheduler and the
+    golden checks need only the order, never dense ranks. The range
+    shuffle samples its input with an extra job, so number rows before
+    any Python UDF, which that job would otherwise run a second time.
     """
     ordered = df.orderBy(*order_cols)
     return ordered.withColumn(

@@ -14,6 +14,15 @@ documents, fetched rows) are read from the parquet footers of the
 files just written, and only then does the manifest name the wave.
 Counters read from finished files cannot race the writes.
 
+A wave ranks politeness once: the fetched rows are cached (filled from
+a second driver thread while the plan is built), and the frontier write
+defers the pending rows missing from that cache
+(:func:`~spider_spark.operators.politeness.deferred_rows`). New links
+are numbered on their raw rows, before the resolve UDF and the link
+filters, so seqs have gaps where links were dropped. Snapshot reads
+pass their schema, and the wave-invariant Column expressions are built
+once per crawl (:meth:`CrawlEngine._wave_exprs`).
+
 Retry semantics: failed statuses from the reference's RETRY_HTTP_CODES
 requeue with ``attempt+1`` up to RETRY_TIMES (``settings.py:98-99``).
 Scrapy's RetryMiddleware re-submits with ``dont_filter=True`` (the
@@ -41,6 +50,9 @@ from ..operators import politeness as P
 from ..operators import spans as S
 from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
+
+FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
+METRICS_COLS = [f.name for f in schemas.METRICS.fields]
 
 
 @dataclass
@@ -90,9 +102,10 @@ class CrawlConfig:
     #: drop trap-shaped out-links (path depth / pathological segment
     #: repetition / query-param count / URL length — Mercator WWW'99,
     #: IRLbot WWW'08, Heritrix decide-rule defaults; thresholds in
-    #: ``functions.urls``) BEFORE they cost a seq, a Bloom probe, a
-    #: seen-set row, or a politeness slot. Pure JVM fence at admission;
-    #: off by default (the reference's finite listing sites need none).
+    #: ``functions.urls``) BEFORE they cost a Bloom probe, a seen-set
+    #: row, or a politeness slot (a fenced link still consumes a seq
+    #: number). Pure JVM fence at admission; off by default (the
+    #: reference's finite listing sites need none).
     trap_filter: bool = False
 
 
@@ -273,7 +286,7 @@ class CrawlEngine:
                 writes["frontier"] = pending.unionByName(fresh.select(*pending.columns))
                 n_pending, next_base, _, _ = self._commit(wave, writes, next_base)
                 admitted.unpersist()
-                pending = self.store.read_table("frontier", "latest")
+                pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
                 wave += 1
         else:
             if self.sitemaps is not None:
@@ -293,7 +306,7 @@ class CrawlEngine:
             writes["frontier"] = admitted.drop("crawl_delay_s")
             n_pending, next_base, _, _ = self._commit(0, writes, 0)
             admitted.unpersist()
-            pending = self.store.read_table("frontier", "latest")
+            pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave = 1
 
         totals = {"fetched": 0, "docs": 0, "waves": 0}
@@ -312,51 +325,41 @@ class CrawlEngine:
             .limit(1)
             .count()
         )
+        exprs = self._wave_exprs()
         while wave <= cfg.max_waves and n_pending:
             t0 = time.monotonic()
-            dispatch, deferred = P.schedule_wave(
-                pending,
-                self.policy,
-                wave_seconds=cfg.wave_seconds,
-                n_salts=cfg.n_salts,
-                obey_robots=cfg.obey_robots,
+            # the robots fence drops rows from the frontier for good, so
+            # it filters pending once, here, for dispatch and deferral
+            pending = P.robots_filter(pending, self.policy, cfg.obey_robots)
+            dispatch, _ = P.schedule_wave(
+                pending, self.policy, wave_seconds=cfg.wave_seconds, n_salts=cfg.n_salts
             )
-            dispatch = dispatch.withColumn("wave", F.lit(wave))
-            fetched = fetch_synthetic(dispatch, self.web)
-            # parse gate: 200, or a status the source's
-            # handle_httpstatus_list explicitly admits (Scrapy analog,
-            # 17 reference spiders e.g. alexandergreens_co_uk.py:31
-            # [401]); admitted statuses are terminal — never retried.
+            fetched = fetch_synthetic(dispatch.withColumn("wave", F.lit(wave)), self.web)
             if self.status_rules is not None:
                 fetched = fetched.join(
                     F.broadcast(self.status_rules), on="source", how="left"
                 )
-                parse_ok = (F.col("status") == 200) | F.array_contains(
-                    F.coalesce(
-                        F.col("handle_httpstatus"), F.array().cast("array<int>")
-                    ),
-                    F.col("status"),
-                )
-                fetched = fetched.withColumn("_parse_ok", parse_ok).drop(
-                    "handle_httpstatus"
-                )
-            else:
-                fetched = fetched.withColumn("_parse_ok", F.col("status") == 200)
             # persisted: the documents, frontier, metrics (and links /
             # revalidations) writes all read the fetched rows
-            fetched = fetched.persist()
-
-            ok = fetched.filter(F.col("_parse_ok")).drop("_parse_ok")
-            retry = (
-                fetched.filter(
-                    F.col("status").isin(schemas.RETRY_HTTP_CODES)
-                    & ~F.col("_parse_ok")
-                    & (F.col("attempt") < cfg.retry_times)
-                )
-                .select(*schemas_frontier_cols(fetched))
-                .withColumn("attempt", F.col("attempt") + 1)
-                .withColumn("dont_filter", F.lit(True))  # RetryMiddleware semantics
+            fetched = (
+                fetched.withColumn("_parse_ok", exprs["parse_ok"])
+                .drop("handle_httpstatus")
+                .persist()
             )
+            # fill the cache from a second driver thread while this one
+            # builds the rest of the wave's plan: the politeness windows
+            # and the web join run during plan building, and the writes
+            # read the cached rows instead of each computing them
+            fill = ThreadPoolExecutor(max_workers=1)
+            filled = fill.submit(fetched.count)
+            fill.shutdown(wait=False)
+            # the politeness ranking runs once per wave: the rows it
+            # dispatched are in the fetched cache, and the frontier
+            # write defers every pending row that is not
+            deferred = P.deferred_rows(pending, fetched)
+
+            ok = fetched.filter(F.col("_parse_ok"))
+            retry = fetched.filter(exprs["retry_due"]).select(*exprs["retry_row"])
 
             docs = S.extract_documents(ok)
             if follow_redirects:
@@ -384,25 +387,25 @@ class CrawlEngine:
                 )
             else:
                 raw_links = S.extract_links_raw(ok)
-            is_redirect = F.col("link_pos") < 0
-            new_links = S.resolve_candidates(raw_links)
+            # numbered before the resolve UDF, so the range sort's
+            # sampling job re-runs only the JVM explode; a link the
+            # filters below drop leaves a gap in the seqs
+            new_links = S.resolve_candidates(
+                S.assign_seq(raw_links, exprs["link_order"], next_base)
+            )
             new_links = S.apply_link_rules(
-                new_links, self.link_rules, bypass=is_redirect
+                new_links, self.link_rules, bypass=exprs["is_redirect"]
             )
             new_links = S.offsite_filter(
-                new_links, self.offsite_rules, bypass=is_redirect
+                new_links, self.offsite_rules, bypass=exprs["is_redirect"]
             )
             if cfg.trap_filter:
-                # Fence BEFORE assign_seq: a fenced link never gets a
-                # seq, never reaches dedup/politeness, and (unlike a
-                # post-dedup drop) never occupies seen-set state. The
-                # resolved absolute URL carries the same depth/repeat/
-                # param/length signals as its canonical form.
+                # A fenced link consumes a seq number but never reaches
+                # dedup, politeness or seen-set state. The resolved
+                # absolute URL carries the same depth/repeat/param/length
+                # signals as its canonical form.
                 new_links = new_links.filter(~is_trap_col(F.col("url")))
-            new_links = S.assign_seq(
-                new_links, [F.asc("parent_seq"), F.asc("link_pos")], next_base
-            ).drop("link_pos")
-            new_links = new_links.withColumn("wave", F.lit(wave))
+            new_links = new_links.drop("link_pos").withColumn("wave", F.lit(wave))
             link_edges = None
             if cfg.record_links:
                 # host-level edges from ALL out-links this wave (pre-
@@ -459,68 +462,31 @@ class CrawlEngine:
             # metrics job reaches admitted before the frontier write
             # has populated its cache, it may compute the admission
             # lineage a second time — correct, only duplicate work.
-            is_doc = (
-                F.col("_parse_ok")
-                & ~F.col("is_listing_page")
-                & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
-            )
-            grouped = fetched.groupBy("crawl_id", "host_bucket").agg(
-                F.count("*").alias("fetched"),
-                F.sum(
-                    (
-                        ~F.col("_parse_ok")
-                        & (F.col("status") != 304)  # revalidation, not failure
-                    ).cast("long")
-                ).alias("retried"),
-                F.sum(is_doc.cast("long")).alias("_docs_part"),
-            )
-            # global docs_emitted via a per-crawl window over the
-            # GROUPED output — bounded by n_buckets (a config
-            # constant, not data size), so the one-partition-per-
-            # crawl window is safe at any scale
             cand_counts = admitted.groupBy("crawl_id").agg(
                 F.count(F.lit(1)).alias("_cand_n")
             )
+            row = {
+                **exprs["metrics_row"],
+                "wave": F.lit(wave),
+                "wall_ms": F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
+            }
             metrics = (
-                grouped.withColumn(
-                    "_docs_all",
-                    F.sum("_docs_part").over(
-                        Window.partitionBy("crawl_id").rowsBetween(
-                            Window.unboundedPreceding,
-                            Window.unboundedFollowing,
-                        )
-                    ),
-                )
+                fetched.groupBy("crawl_id", "host_bucket")
+                .agg(*exprs["bucket_aggs"])
                 .join(F.broadcast(cand_counts), "crawl_id", "left")
-                .withColumn("wave", F.lit(wave))
-                .withColumn(
-                    "candidates",
-                    F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
-                )
-                .drop("_cand_n")
-                .withColumn("deduped_dropped", F.lit(0).cast("long"))
-                .withColumn("robots_dropped", F.lit(0).cast("long"))
-                .withColumn("scheduled", F.col("fetched"))
-                .withColumn(
-                    "docs_emitted",
-                    F.coalesce(F.col("_docs_all"), F.lit(0)).cast("long"),
-                )
-                .withColumn(
-                    "wall_ms",
-                    F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
-                )
-                .select([f.name for f in schemas.METRICS.fields])
+                .select(*[row.get(c, F.col(c)).alias(c) for c in METRICS_COLS])
             )
             writes = {
                 "documents": docs,
-                "frontier": deferred.unionByName(admitted.select(*deferred.columns))
-                .unionByName(retry.select(*deferred.columns)),
+                "frontier": deferred.unionByName(admitted.select(*FRONTIER_COLS))
+                .unionByName(retry),
                 **seen_writes,
                 "links": link_edges,
                 "revalidations": reval,
                 "metrics": metrics,
             }
             n_pending, next_base, n_docs, n_fetched = self._commit(wave, writes, next_base)
+            filled.result()
             if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
                 self.store.compact("url_seen", cfg.compact_partitions)
 
@@ -549,9 +515,69 @@ class CrawlEngine:
             admitted.unpersist()
             # re-read pending from the committed snapshot: truncates lineage
             # (the iterative-loop analog of checkpointing)
-            pending = self.store.read_table("frontier", "latest")
+            pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave += 1
         return totals
+
+    def _wave_exprs(self) -> dict:
+        """The wave-invariant Column expressions of the loop body,
+        built once per crawl rather than once per wave."""
+        cfg = self.cfg
+        # parse gate: 200, or a status the source's
+        # handle_httpstatus_list explicitly admits (Scrapy analog,
+        # 17 reference spiders e.g. alexandergreens_co_uk.py:31
+        # [401]); admitted statuses are terminal — never retried.
+        parse_ok = F.col("status") == 200
+        if self.status_rules is not None:
+            parse_ok = parse_ok | F.array_contains(
+                F.coalesce(F.col("handle_httpstatus"), F.array().cast("array<int>")),
+                F.col("status"),
+            )
+        is_doc = (
+            F.col("_parse_ok")
+            & ~F.col("is_listing_page")
+            & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
+        )
+        # a retried row re-enters the frontier with attempt+1 and
+        # dont_filter (RetryMiddleware semantics)
+        bumped = {"attempt": F.col("attempt") + 1, "dont_filter": F.lit(True)}
+        # global docs_emitted via a per-crawl window over the GROUPED
+        # output — bounded by n_buckets (a config constant, not data
+        # size), so the one-partition-per-crawl window is safe at any
+        # scale
+        whole_crawl = Window.partitionBy("crawl_id").rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        return {
+            "parse_ok": parse_ok,
+            "retry_due": F.col("status").isin(schemas.RETRY_HTTP_CODES)
+            & ~F.col("_parse_ok")
+            & (F.col("attempt") < cfg.retry_times),
+            "retry_row": [bumped.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS],
+            "link_order": [F.asc("parent_seq"), F.asc("link_pos")],
+            "is_redirect": F.col("link_pos") < 0,
+            "bucket_aggs": [
+                F.count("*").alias("fetched"),
+                F.sum(
+                    (
+                        ~F.col("_parse_ok")
+                        & (F.col("status") != 304)  # revalidation, not failure
+                    ).cast("long")
+                ).alias("retried"),
+                F.sum(is_doc.cast("long")).alias("_docs_part"),
+            ],
+            # the METRICS columns that are not bucket aggregates (the
+            # loop adds the per-wave wave and wall_ms)
+            "metrics_row": {
+                "candidates": F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
+                "deduped_dropped": F.lit(0).cast("long"),
+                "robots_dropped": F.lit(0).cast("long"),
+                "scheduled": F.col("fetched"),
+                "docs_emitted": F.coalesce(
+                    F.sum("_docs_part").over(whole_crawl), F.lit(0)
+                ).cast("long"),
+            },
+        }
 
     def _commit(self, wave: int, writes: dict, next_base: int) -> tuple[int, int, int, int]:
         """Write one wave's tables and commit it — the one commit path
@@ -834,7 +860,4 @@ def _seed_candidates(seeds: DataFrame, crawl_id: str, wave: int, base: int) -> D
     cand = S.assign_seq(cand, [F.asc("source"), F.asc("url")], base).drop("link_pos")
     return cand.withColumn("wave", F.lit(wave))
 
-
-def schemas_frontier_cols(df: DataFrame) -> list[str]:
-    return [f.name for f in schemas.FRONTIER.fields if f.name in df.columns]
 

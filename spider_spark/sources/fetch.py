@@ -101,25 +101,26 @@ def fetch_synthetic(dispatch: DataFrame, web_canonical: DataFrame) -> DataFrame:
         not_modified = (
             inm.isNotNull() & (F.col("status") == 200) & (inm == page_etag())
         )
-        fetched = (
-            fetched.withColumn(
-                "status", F.when(not_modified, F.lit(304)).otherwise(F.col("status"))
-            )
-            .withColumn(
-                "spans",
-                F.when(not_modified, F.lit(None).cast(fetched.schema["spans"].dataType))
-                .otherwise(F.col("spans")),
-            )
-            .withColumn(
-                "out_links",
-                F.when(not_modified, F.array().cast("array<string>"))
-                .otherwise(F.col("out_links")),
-            )
+        # one projection: every expression reads the joined row, so
+        # ``not_modified`` sees the page's own status
+        return fetched.withColumns(
+            {
+                "status": F.when(not_modified, F.lit(304)).otherwise(
+                    F.coalesce(F.col("status"), F.lit(404))
+                ),
+                "spans": F.when(~not_modified, F.col("spans")),
+                "out_links": F.when(not_modified, F.array().cast("array<string>")).otherwise(
+                    F.coalesce(F.col("out_links"), F.array().cast("array<string>"))
+                ),
+                "is_listing_page": F.coalesce(F.col("is_listing_page"), F.lit(False)),
+            }
         )
-    return (
-        fetched.withColumn("status", F.coalesce(F.col("status"), F.lit(404)))
-        .withColumn("out_links", F.coalesce(F.col("out_links"), F.array().cast("array<string>")))
-        .withColumn("is_listing_page", F.coalesce(F.col("is_listing_page"), F.lit(False)))
+    return fetched.withColumns(
+        {
+            "status": F.coalesce(F.col("status"), F.lit(404)),
+            "out_links": F.coalesce(F.col("out_links"), F.array().cast("array<string>")),
+            "is_listing_page": F.coalesce(F.col("is_listing_page"), F.lit(False)),
+        }
     )
 
 

@@ -156,6 +156,11 @@ class SnapshotStore:
         mode: Literal["append", "latest"],
         schema=None,
     ) -> DataFrame | None:
+        """The committed read set of ``table`` (``None`` if there is none
+        and no ``schema``). ``schema`` is the read schema: given, it is
+        applied to the files as they are read, so Spark skips the
+        one-task job that infers a schema from the parquet footers, and
+        an empty read set yields an empty DataFrame of that schema."""
         dirs = self._read_dirs(table, mode)
         if not dirs:
             return (
@@ -163,7 +168,8 @@ class SnapshotStore:
             )
         if mode == "latest":
             dirs = dirs[-1:]
-        return self.spark.read.parquet(*dirs)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     # -- compaction ---------------------------------------------------------
     def compact(self, table: str, target_partitions: int | None = None) -> int:

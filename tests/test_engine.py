@@ -168,6 +168,41 @@ def test_link_extractor_allow_deny(spark, tmp_path):
     d2 = {r["doc_id"] for r in e2.documents().select("doc_id").collect()}
     assert d1 == d2  # documents unaffected (dead links 404 anyway)
 
+    # links are numbered before the rules run, so every denied link
+    # leaves a gap in the seqs; the committed ones still follow
+    # (parent_seq, link_pos) within each discovery wave, and none
+    # passes the manifest's next_seq_base
+    import pandas as pd
+
+    from spider_spark.functions.urls import resolve_series
+    from spider_spark.sources.fetch import canonical_web
+
+    rows = {
+        r["discovered_seq"]: r
+        for r in s1.read_table("frontier", "append", schema=schemas.FRONTIER)
+        .filter(F.col("attempt") == 0)
+        .collect()
+    }
+    assert max(rows) <= s1.extra()["next_seq_base"]
+    out_links = {
+        r["canonical_url"]: r["out_links"]
+        for r in canonical_web(web_df(spark, spec)).collect()
+    }
+    by_wave, denied = {}, 0
+    for seq, r in rows.items():
+        if r["parent_seq"] == 0:
+            continue  # a seed
+        parent = rows[r["parent_seq"]]
+        hrefs = out_links[parent["canonical_url"]]
+        urls = list(resolve_series(pd.Series([parent["url"]] * len(hrefs)), pd.Series(hrefs)))
+        denied += sum("/missing/" in u for u in urls)
+        by_wave.setdefault(r["wave"], []).append((r["parent_seq"], urls.index(r["url"]), seq))
+    assert denied > 0
+    assert not any("/missing/" in r["url"] for r in rows.values())
+    assert by_wave
+    for links in by_wave.values():
+        assert sorted(links) == sorted(links, key=lambda t: t[2])
+
 
 def test_offsite_filter(spark, tmp_path):
     """OffsiteMiddleware analog (allowed_domains, 1,249 reference
@@ -1236,6 +1271,43 @@ def test_wave_stats_reads_footers(spark, tmp_store):
         write_statistics=False,
     )
     assert tmp_store.wave_stats("frontier", 2, "discovered_seq") == (3, 17)
+
+
+def test_read_table_pins_schema_without_a_job(spark, tmp_store):
+    """A non-empty ``read_table(..., schema=S)`` returns S's columns
+    and types, in S's order, without launching a Spark job: the schema
+    is applied to the files instead of inferred from their footers. A
+    read without a schema does infer, which is a job."""
+    from pyspark.sql import types as T
+
+    df = spark.range(3).select(
+        F.col("id").alias("discovered_seq"), F.lit("x").alias("url")
+    )
+    tmp_store.write_wave("frontier", 0, df)
+    tmp_store.commit_wave(0)
+    pinned = T.StructType(
+        [
+            T.StructField("url", T.StringType()),
+            T.StructField("discovered_seq", T.LongType()),
+        ]
+    )
+    sc = spark.sparkContext
+
+    def jobs_of(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            schema = tmp_store.read_table("frontier", "latest", **kw).schema
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return schema, sc.statusTracker().getJobIdsForGroup(group)
+
+    schema, jobs = jobs_of("read_table.pinned", schema=pinned)
+    assert [(f.name, f.dataType) for f in schema.fields] == [
+        (f.name, f.dataType) for f in pinned.fields
+    ]
+    assert jobs == []
+    _schema, jobs = jobs_of("read_table.inferred")
+    assert jobs
 
 
 def test_wave_metrics_match_stored_tables(engine_run):

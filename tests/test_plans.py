@@ -47,6 +47,35 @@ def test_schedule_has_no_nested_loop_join(spark):
         assert "CartesianProduct" not in plan
 
 
+def test_dispatch_and_deferred_split_pending(spark):
+    """The scheduler's own ``deferred`` and ``deferred_rows`` over the
+    dispatched rows (the engine's path: it defers against its fetched
+    cache) both split ``pending`` exactly: disjoint from the dispatch
+    set on ROW_KEY, and together equal to ``pending`` — with per-host
+    budgets alone and under a global cap."""
+    pending = _frontier(spark).persist()
+
+    def keys(df):
+        rows = [tuple(r) for r in df.select(*P.ROW_KEY).collect()]
+        assert len(rows) == len(set(rows))
+        return set(rows)
+
+    everything = keys(pending)
+    for cap in (None, 25):
+        dispatch, deferred = P.schedule_wave(pending, _policy(spark), global_cap=cap)
+        dispatch = dispatch.persist()
+        sent = keys(dispatch)
+        assert 0 < len(sent) < len(everything)
+        if cap is not None:
+            assert len(sent) == cap
+        for rest in (deferred, P.deferred_rows(pending, dispatch)):
+            left = keys(rest)
+            assert not sent & left
+            assert sent | left == everything
+        dispatch.unpersist()
+    pending.unpersist()
+
+
 def test_policy_join_is_broadcast(spark):
     dispatch, _ = P.schedule_wave(_frontier(spark), _policy(spark))
     assert "BroadcastHashJoin" in physical(dispatch)
