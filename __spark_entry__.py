@@ -237,7 +237,7 @@ def q_politeness_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(16).alias("max_concurrency"),
         F.array().cast("array<string>").alias("robots_disallow"),
     )
-    dispatch, _deferred = P.schedule_wave(fr, policy, wave_seconds=1.0, n_salts=4)
+    dispatch = P.schedule_wave(fr, policy, wave_seconds=1.0, n_salts=4)
     return dispatch.select("host", "seq", "priority", "dispatch_rank")
 
 
@@ -254,7 +254,7 @@ def q_global_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(16).alias("max_concurrency"),
         F.array().cast("array<string>").alias("robots_disallow"),
     )
-    dispatch, _deferred = P.schedule_wave(
+    dispatch = P.schedule_wave(
         fr, policy, wave_seconds=1.0, n_salts=4, global_cap=200
     )
     return dispatch.select("host", "seq", "priority")

@@ -65,7 +65,7 @@ def frontier_pipeline(spark, n_urls: int):
         F.lit(16).alias("max_concurrency"),
         F.array().cast("array<string>").alias("robots_disallow"),
     )
-    dispatch, _deferred = P.schedule_wave(admitted, policy, wave_seconds=2.0, n_salts=16)
+    dispatch = P.schedule_wave(admitted, policy, wave_seconds=2.0, n_salts=16)
     n = dispatch.count()
     admitted.unpersist()
     return n, n_urls

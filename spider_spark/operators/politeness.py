@@ -13,8 +13,10 @@ Reference semantics being reproduced (observable contract, SURVEY.md §2.2):
   reproducible across a cluster, so discovery order is the documented
   contract, cf. SURVEY.md §4 "deterministic ordering reproduction");
 * robots.txt prefix rules (engine feature; the reference disables it via
-  ``ROBOTSTXT_OBEY=False``, ``settings.py:21`` — so ``obey_robots``
-  defaults False and the rules table is empty unless enabled).
+  ``ROBOTSTXT_OBEY=False``, ``settings.py:21`` — so the engine's
+  ``obey_robots`` defaults False and the rules table is empty unless
+  enabled). :func:`robots_filter` applies them to the frontier before
+  :func:`schedule_wave` ranks it.
 
 Scale design — the two-phase salted top-k:
 
@@ -131,19 +133,19 @@ def schedule_wave(
     host_policy: DataFrame,
     wave_seconds: float = 1.0,
     n_salts: int = 16,
-    obey_robots: bool = False,
     global_cap: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> DataFrame:
     """Select this wave's dispatch set from the pending frontier.
 
-    Returns ``(dispatch, deferred)``. ``host_policy`` is broadcast (a
-    per-host dim — thousands of rows, not billions). The full rows are
-    ranked directly: one pass over ``pending``, with the salted window
-    bounding any single partition. ``deferred`` is
-    :func:`deferred_rows` of the robots-filtered ``pending`` and
-    ``dispatch``; it evaluates the ranking a second time, so a caller
+    Returns the dispatch rows. ``host_policy`` is broadcast (a per-host
+    dim — thousands of rows, not billions). The full rows are ranked
+    directly: one pass over ``pending``, with the salted window bounding
+    any single partition. The rows that wait for a later wave are
+    :func:`deferred_rows` of ``pending`` and the dispatch rows; a caller
     that materializes the dispatch rows (the crawl engine's fetched
-    cache) should apply :func:`deferred_rows` to those rows instead.
+    cache) passes those, so the ranking runs once per wave. Apply
+    :func:`robots_filter` to ``pending`` first: a blocked row is
+    neither dispatched nor deferred.
 
     ``global_cap`` applies the reference's fleet-wide in-flight bound
     (CONCURRENT_REQUESTS=320, ``settings.py:24``) AFTER per-host
@@ -151,7 +153,6 @@ def schedule_wave(
     sort+limit plans as TakeOrderedAndProject (per-partition top-k +
     merge — no global sort).
     """
-    pending = robots_filter(pending, host_policy, obey_robots)
     policy = host_policy.select("host", "crawl_delay_s", "max_concurrency")
 
     enriched = pending.join(F.broadcast(policy), on="host", how="left")
@@ -161,7 +162,7 @@ def schedule_wave(
     winners = winners.drop("crawl_delay_s", "max_concurrency", "_budget")
     if global_cap is not None:
         winners = winners.orderBy(*dispatch_order()).limit(global_cap)
-    return winners, deferred_rows(pending, winners)
+    return winners
 
 
 def budget_by_registered_domain(

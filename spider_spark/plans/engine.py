@@ -14,14 +14,13 @@ documents, fetched rows) are read from the parquet footers of the
 files just written, and only then does the manifest name the wave.
 Counters read from finished files cannot race the writes.
 
-A wave ranks politeness once: the fetched rows are cached (filled from
-a second driver thread while the plan is built), and the frontier write
-defers the pending rows missing from that cache
+A wave ranks politeness once: the fetched rows are cached, and the
+frontier write defers the pending rows missing from that cache
 (:func:`~spider_spark.operators.politeness.deferred_rows`). New links
 are numbered on their raw rows, before the resolve UDF and the link
 filters, so seqs have gaps where links were dropped. Snapshot reads
 pass their schema, and the wave-invariant Column expressions are built
-once per crawl (:meth:`CrawlEngine._wave_exprs`).
+once per crawl, before the loop.
 
 Retry semantics: failed statuses from the reference's RETRY_HTTP_CODES
 requeue with ``attempt+1`` up to RETRY_TIMES (``settings.py:98-99``).
@@ -325,13 +324,68 @@ class CrawlEngine:
             .limit(1)
             .count()
         )
-        exprs = self._wave_exprs()
+        # the wave-invariant Column expressions, built once per crawl.
+        # Parse gate: 200, or a status the source's
+        # handle_httpstatus_list explicitly admits (Scrapy analog,
+        # 17 reference spiders e.g. alexandergreens_co_uk.py:31
+        # [401]); admitted statuses are terminal — never retried.
+        parse_ok = F.col("status") == 200
+        if self.status_rules is not None:
+            parse_ok = parse_ok | F.array_contains(
+                F.coalesce(F.col("handle_httpstatus"), F.array().cast("array<int>")),
+                F.col("status"),
+            )
+        retry_due = (
+            F.col("status").isin(schemas.RETRY_HTTP_CODES)
+            & ~F.col("_parse_ok")
+            & (F.col("attempt") < cfg.retry_times)
+        )
+        # a retried row re-enters the frontier with attempt+1 and
+        # dont_filter (RetryMiddleware semantics)
+        bumped = {"attempt": F.col("attempt") + 1, "dont_filter": F.lit(True)}
+        retry_row = [bumped.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS]
+        link_order = [F.asc("parent_seq"), F.asc("link_pos")]
+        is_redirect = F.col("link_pos") < 0
+        is_doc = (
+            F.col("_parse_ok")
+            & ~F.col("is_listing_page")
+            & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
+        )
+        bucket_aggs = [
+            F.count("*").alias("fetched"),
+            F.sum(
+                (
+                    ~F.col("_parse_ok")
+                    & (F.col("status") != 304)  # revalidation, not failure
+                ).cast("long")
+            ).alias("retried"),
+            F.sum(is_doc.cast("long")).alias("_docs_part"),
+        ]
+        # the METRICS columns that are not bucket aggregates, over the
+        # bucket rows joined with the wave's candidate count (_cand_n);
+        # the loop sets wave and wall_ms. Global docs_emitted via a
+        # per-crawl window over the GROUPED output — bounded by
+        # n_buckets (a config constant, not data size), so the
+        # one-partition-per-crawl window is safe at any scale
+        whole_crawl = Window.partitionBy("crawl_id").rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        metrics_row = {
+            "candidates": F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
+            "deduped_dropped": F.lit(0).cast("long"),
+            "robots_dropped": F.lit(0).cast("long"),
+            "scheduled": F.col("fetched"),
+            "docs_emitted": F.coalesce(
+                F.sum("_docs_part").over(whole_crawl), F.lit(0)
+            ).cast("long"),
+        }
+        metrics_cols = {c: metrics_row.get(c, F.col(c)).alias(c) for c in METRICS_COLS}
         while wave <= cfg.max_waves and n_pending:
             t0 = time.monotonic()
             # the robots fence drops rows from the frontier for good, so
             # it filters pending once, here, for dispatch and deferral
             pending = P.robots_filter(pending, self.policy, cfg.obey_robots)
-            dispatch, _ = P.schedule_wave(
+            dispatch = P.schedule_wave(
                 pending, self.policy, wave_seconds=cfg.wave_seconds, n_salts=cfg.n_salts
             )
             fetched = fetch_synthetic(dispatch.withColumn("wave", F.lit(wave)), self.web)
@@ -342,24 +396,17 @@ class CrawlEngine:
             # persisted: the documents, frontier, metrics (and links /
             # revalidations) writes all read the fetched rows
             fetched = (
-                fetched.withColumn("_parse_ok", exprs["parse_ok"])
+                fetched.withColumn("_parse_ok", parse_ok)
                 .drop("handle_httpstatus")
                 .persist()
             )
-            # fill the cache from a second driver thread while this one
-            # builds the rest of the wave's plan: the politeness windows
-            # and the web join run during plan building, and the writes
-            # read the cached rows instead of each computing them
-            fill = ThreadPoolExecutor(max_workers=1)
-            filled = fill.submit(fetched.count)
-            fill.shutdown(wait=False)
             # the politeness ranking runs once per wave: the rows it
             # dispatched are in the fetched cache, and the frontier
             # write defers every pending row that is not
             deferred = P.deferred_rows(pending, fetched)
 
             ok = fetched.filter(F.col("_parse_ok"))
-            retry = fetched.filter(exprs["retry_due"]).select(*exprs["retry_row"])
+            retry = fetched.filter(retry_due).select(*retry_row)
 
             docs = S.extract_documents(ok)
             if follow_redirects:
@@ -391,13 +438,13 @@ class CrawlEngine:
             # sampling job re-runs only the JVM explode; a link the
             # filters below drop leaves a gap in the seqs
             new_links = S.resolve_candidates(
-                S.assign_seq(raw_links, exprs["link_order"], next_base)
+                S.assign_seq(raw_links, link_order, next_base)
             )
             new_links = S.apply_link_rules(
-                new_links, self.link_rules, bypass=exprs["is_redirect"]
+                new_links, self.link_rules, bypass=is_redirect
             )
             new_links = S.offsite_filter(
-                new_links, self.offsite_rules, bypass=exprs["is_redirect"]
+                new_links, self.offsite_rules, bypass=is_redirect
             )
             if cfg.trap_filter:
                 # A fenced link consumes a seq number but never reaches
@@ -465,16 +512,17 @@ class CrawlEngine:
             cand_counts = admitted.groupBy("crawl_id").agg(
                 F.count(F.lit(1)).alias("_cand_n")
             )
+            # the overridden keys keep their place: METRICS column order
             row = {
-                **exprs["metrics_row"],
-                "wave": F.lit(wave),
-                "wall_ms": F.lit(int((time.monotonic() - t0) * 1000)).cast("long"),
+                **metrics_cols,
+                "wave": F.lit(wave).alias("wave"),
+                "wall_ms": F.lit(int((time.monotonic() - t0) * 1000)).cast("long").alias("wall_ms"),
             }
             metrics = (
                 fetched.groupBy("crawl_id", "host_bucket")
-                .agg(*exprs["bucket_aggs"])
+                .agg(*bucket_aggs)
                 .join(F.broadcast(cand_counts), "crawl_id", "left")
-                .select(*[row.get(c, F.col(c)).alias(c) for c in METRICS_COLS])
+                .select(*row.values())
             )
             writes = {
                 "documents": docs,
@@ -486,7 +534,6 @@ class CrawlEngine:
                 "metrics": metrics,
             }
             n_pending, next_base, n_docs, n_fetched = self._commit(wave, writes, next_base)
-            filled.result()
             if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
                 self.store.compact("url_seen", cfg.compact_partitions)
 
@@ -518,66 +565,6 @@ class CrawlEngine:
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave += 1
         return totals
-
-    def _wave_exprs(self) -> dict:
-        """The wave-invariant Column expressions of the loop body,
-        built once per crawl rather than once per wave."""
-        cfg = self.cfg
-        # parse gate: 200, or a status the source's
-        # handle_httpstatus_list explicitly admits (Scrapy analog,
-        # 17 reference spiders e.g. alexandergreens_co_uk.py:31
-        # [401]); admitted statuses are terminal — never retried.
-        parse_ok = F.col("status") == 200
-        if self.status_rules is not None:
-            parse_ok = parse_ok | F.array_contains(
-                F.coalesce(F.col("handle_httpstatus"), F.array().cast("array<int>")),
-                F.col("status"),
-            )
-        is_doc = (
-            F.col("_parse_ok")
-            & ~F.col("is_listing_page")
-            & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
-        )
-        # a retried row re-enters the frontier with attempt+1 and
-        # dont_filter (RetryMiddleware semantics)
-        bumped = {"attempt": F.col("attempt") + 1, "dont_filter": F.lit(True)}
-        # global docs_emitted via a per-crawl window over the GROUPED
-        # output — bounded by n_buckets (a config constant, not data
-        # size), so the one-partition-per-crawl window is safe at any
-        # scale
-        whole_crawl = Window.partitionBy("crawl_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        return {
-            "parse_ok": parse_ok,
-            "retry_due": F.col("status").isin(schemas.RETRY_HTTP_CODES)
-            & ~F.col("_parse_ok")
-            & (F.col("attempt") < cfg.retry_times),
-            "retry_row": [bumped.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS],
-            "link_order": [F.asc("parent_seq"), F.asc("link_pos")],
-            "is_redirect": F.col("link_pos") < 0,
-            "bucket_aggs": [
-                F.count("*").alias("fetched"),
-                F.sum(
-                    (
-                        ~F.col("_parse_ok")
-                        & (F.col("status") != 304)  # revalidation, not failure
-                    ).cast("long")
-                ).alias("retried"),
-                F.sum(is_doc.cast("long")).alias("_docs_part"),
-            ],
-            # the METRICS columns that are not bucket aggregates (the
-            # loop adds the per-wave wave and wall_ms)
-            "metrics_row": {
-                "candidates": F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
-                "deduped_dropped": F.lit(0).cast("long"),
-                "robots_dropped": F.lit(0).cast("long"),
-                "scheduled": F.col("fetched"),
-                "docs_emitted": F.coalesce(
-                    F.sum("_docs_part").over(whole_crawl), F.lit(0)
-                ).cast("long"),
-            },
-        }
 
     def _commit(self, wave: int, writes: dict, next_base: int) -> tuple[int, int, int, int]:
         """Write one wave's tables and commit it — the one commit path

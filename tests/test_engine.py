@@ -991,6 +991,38 @@ def test_conditional_recrawl_fetches_changed_page(spark, tmp_path):
     eng.close(); eng2.close()
 
 
+def test_fetch_synthetic_not_modified_drops_body(spark):
+    """A request whose If-None-Match equals the page's etag comes back
+    304 with null spans and no out_links; a request with a stale
+    validator gets the 200 page with its spans and out_links."""
+    from spider_spark.operators.spans import page_etag
+    from spider_spark.sources.fetch import canonical_web, fetch_synthetic
+
+    spec = WebSpec(seed=7, n_hosts=1, pages_per_host=1, details_per_page=2, retry_rate=0.0)
+    web = canonical_web(web_df(spark, spec))
+    pages = (
+        web.filter(F.col("status") == 200)
+        .select("canonical_url", page_etag().alias("etag"), "spans", "out_links")
+        .collect()
+    )
+    assert any(p["spans"] for p in pages) and any(p["out_links"] for p in pages)
+    dispatch = spark.createDataFrame(
+        [
+            (p["canonical_url"], f"{i}-{tag}", {"if_none_match": etag})
+            for i, p in enumerate(pages)
+            for tag, etag in (("fresh", p["etag"]), ("stale", "0" * 40))
+        ],
+        "canonical_url string, fingerprint string, meta map<string,string>",
+    )
+    got = {r["fingerprint"]: r for r in fetch_synthetic(dispatch, web).collect()}
+    for i, p in enumerate(pages):
+        fresh, stale = got[f"{i}-fresh"], got[f"{i}-stale"]
+        assert (fresh["status"], fresh["spans"], fresh["out_links"]) == (304, None, [])
+        assert (stale["status"], stale["spans"], stale["out_links"]) == (
+            200, p["spans"], p["out_links"]
+        )
+
+
 def test_trap_filter_preserves_clean_crawl(spark, tmp_path, reference_crawl):
     """CrawlConfig(trap_filter=True): the synthetic web's URLs are not
     trap-shaped, so the fenced crawl is bit-identical to the plain one

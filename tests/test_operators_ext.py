@@ -355,9 +355,10 @@ def test_schedule_global_cap(spark):
         [(f"h{h}.example", 0.125, 16, []) for h in range(6)],
         "host string, crawl_delay_s double, max_concurrency int, robots_disallow array<string>",
     )
-    d_uncapped, _ = P.schedule_wave(pending, policy, wave_seconds=1.0)
+    d_uncapped = P.schedule_wave(pending, policy, wave_seconds=1.0)
     assert d_uncapped.count() == 6 * 8  # budget 8/host
-    d_capped, deferred = P.schedule_wave(pending, policy, wave_seconds=1.0, global_cap=10)
+    d_capped = P.schedule_wave(pending, policy, wave_seconds=1.0, global_cap=10)
+    deferred = P.deferred_rows(pending, d_capped)
     got = d_capped.collect()
     assert len(got) == 10
     assert all(r["priority"] == 2 for r in got)  # highest priority first

@@ -40,19 +40,19 @@ def _policy(spark):
 
 
 def test_schedule_has_no_nested_loop_join(spark):
-    dispatch, deferred = P.schedule_wave(_frontier(spark), _policy(spark))
-    for df in (dispatch, deferred):
+    pending = _frontier(spark)
+    dispatch = P.schedule_wave(pending, _policy(spark))
+    for df in (dispatch, P.deferred_rows(pending, dispatch)):
         plan = physical(df)
         assert "BroadcastNestedLoopJoin" not in plan
         assert "CartesianProduct" not in plan
 
 
 def test_dispatch_and_deferred_split_pending(spark):
-    """The scheduler's own ``deferred`` and ``deferred_rows`` over the
-    dispatched rows (the engine's path: it defers against its fetched
-    cache) both split ``pending`` exactly: disjoint from the dispatch
-    set on ROW_KEY, and together equal to ``pending`` — with per-host
-    budgets alone and under a global cap."""
+    """``deferred_rows`` over the dispatched rows (the engine defers
+    against its fetched cache) splits ``pending`` exactly: disjoint from
+    the dispatch set on ROW_KEY, and together equal to ``pending`` —
+    with per-host budgets alone and under a global cap."""
     pending = _frontier(spark).persist()
 
     def keys(df):
@@ -62,22 +62,20 @@ def test_dispatch_and_deferred_split_pending(spark):
 
     everything = keys(pending)
     for cap in (None, 25):
-        dispatch, deferred = P.schedule_wave(pending, _policy(spark), global_cap=cap)
-        dispatch = dispatch.persist()
+        dispatch = P.schedule_wave(pending, _policy(spark), global_cap=cap).persist()
         sent = keys(dispatch)
         assert 0 < len(sent) < len(everything)
         if cap is not None:
             assert len(sent) == cap
-        for rest in (deferred, P.deferred_rows(pending, dispatch)):
-            left = keys(rest)
-            assert not sent & left
-            assert sent | left == everything
+        left = keys(P.deferred_rows(pending, dispatch))
+        assert not sent & left
+        assert sent | left == everything
         dispatch.unpersist()
     pending.unpersist()
 
 
 def test_policy_join_is_broadcast(spark):
-    dispatch, _ = P.schedule_wave(_frontier(spark), _policy(spark))
+    dispatch = P.schedule_wave(_frontier(spark), _policy(spark))
     assert "BroadcastHashJoin" in physical(dispatch)
 
 
