@@ -86,12 +86,12 @@ def bench_seen_set(spark, n_urls: int = 1_000_000):
         [], "crawl_id string, host_bucket int, wave int, filter_bytes binary"
     )
     t0 = time.monotonic()
-    admitted = D.dedup_bloom(cand, empty, spec).persist()
+    admitted = D.dedup_filter(cand, empty, spec).persist()
     n1 = admitted.count()
     filters = D.updated_filters(admitted, empty, spec, 1).persist()
     filters.count()
     t1 = time.monotonic()
-    n2 = D.dedup_bloom(cand, filters, spec).count()
+    n2 = D.dedup_filter(cand, filters, spec).count()
     t2 = time.monotonic()
     cand.unpersist(), admitted.unpersist(), filters.unpersist()
     return {

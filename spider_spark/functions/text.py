@@ -121,31 +121,6 @@ def word_shingles_from(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """n-word shingles as strings; empty array when fewer than n tokens.
-
-    Convenience form for single-use sites; hot paths should materialize
-    tokens first and use :func:`word_shingles_from`.
-    """
-    return word_shingles_from(tokens(text), n)
-
-
-def minhash_signature(text: Column, n_hashes: int, shingle_n: int = 3) -> list[Column]:
-    """MinHash signature via lexicographic min over seeded md5 of shingles.
-
-    ``min(md5(seed || ':' || shingle))`` over fixed-width lowercase hex
-    is a min over the 128-bit hash value — a valid permutation-min, and
-    bit-identical in any engine with md5 (DuckDB oracle parity).
-    Returns one column per hash seed.
-    """
-    sh = word_shingles(text, shingle_n)
-    out = []
-    for j in range(n_hashes):
-        hashed = F.transform(sh, lambda s: F.md5(F.concat(F.lit(f"{j}:"), s)))
-        out.append(F.array_min(hashed).alias(f"mh{j}"))
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Gopher-style repetition & quality signals (Rae et al. 2021, "Scaling
 # Language Models: ... Gopher", Appendix A — public filter recipe).

@@ -1,24 +1,28 @@
-"""Cuckoo-filter seen-set: the deletable alternative to the Bloom path.
+"""Cuckoo-filter seen-set: the deletable alternative to the Bloom filter.
 
-Same contract as :mod:`spider_spark.operators.dedup`'s Bloom functions
-(per-``host_bucket`` filter bytes cogrouped with candidates in
-``applyInPandas``), but a cuckoo filter (Fan et al., CoNEXT'14 — public
-algorithm) stores 16-bit fingerprints in 4-slot buckets, so it supports
-DELETE (needed when a crawl retracts admissions, e.g. robots rules
-arriving late) and beats Bloom on space below ~3% FPR.
+:class:`CuckooSpec` is a filter layout for
+:mod:`spider_spark.operators.dedup`'s filter path (the same
+per-``host_bucket`` admission cogroup and fold as
+:class:`~spider_spark.operators.dedup.BloomSpec`). A cuckoo filter
+(Fan et al., CoNEXT'14 — public algorithm) stores 16-bit fingerprints
+in 4-slot buckets, so it supports DELETE (needed when a crawl retracts
+admissions, e.g. robots rules arriving late) and beats Bloom on space
+below ~3% FPR.
 
 Layout: ``m`` buckets x 4 slots x uint16, as raw little-endian bytes.
 Slot value 0 = empty (fingerprints are forced nonzero). Candidate
-lookup is fully vectorized (two gathers + compare); insert falls back
-to a Python loop ONLY for items whose two buckets are full (eviction
-chains — rare below ~90% load).
+lookup is fully vectorized (two gathers + compare). Insert is a Python
+loop over the items: each takes the first free slot of its two
+buckets, and only an item whose two buckets are full starts an
+eviction chain (rare below ~90% load).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+
+from .dedup import _hex_u64
 
 SLOTS = 4
 MAX_KICKS = 500
@@ -32,6 +36,12 @@ class CuckooSpec:
 
     def empty(self) -> bytes:
         return bytes(self.m * SLOTS * 2)
+
+    def contains(self, filter_bytes: bytes, fingerprints: pd.Series) -> np.ndarray:
+        return cuckoo_contains(filter_bytes, fingerprints, self)
+
+    def insert(self, filter_bytes: bytes, fingerprints: pd.Series) -> bytes:
+        return cuckoo_insert(filter_bytes, fingerprints, self)
 
 
 def _parts(fingerprints: pd.Series, m: int):
@@ -49,9 +59,9 @@ def _parts(fingerprints: pd.Series, m: int):
             f"got length {len(fps[0])}"
         )
     lo = 32 if (fps and len(fps[0]) >= 36) else 16
-    tag = np.array([int(fp[lo : lo + 4], 16) for fp in fps], dtype=np.uint64)
+    tag = _hex_u64(fps, lo, 4)
     tag = np.where(tag == 0, np.uint64(1), tag).astype(np.uint64)
-    h1 = np.array([int(fp[:16], 16) for fp in fingerprints], dtype=np.uint64)
+    h1 = _hex_u64(fps, 0)
     i1 = (h1 % np.uint64(m)).astype(np.int64)
     # tag-hash via the 64-bit FNV-ish mix used by the reference paper's
     # "i2 = i1 xor hash(tag)" construction
@@ -126,69 +136,3 @@ def cuckoo_delete(filter_bytes: bytes, fingerprints: pd.Series, spec: CuckooSpec
                 t[idx, hit[0]] = 0
                 break
     return t.tobytes()
-
-
-def dedup_cuckoo(candidates: DataFrame, filters: DataFrame, spec: CuckooSpec) -> DataFrame:
-    """Cuckoo-filtered admission per host_bucket — drop-in for
-    dedup.dedup_bloom (same cogroup shape, same dont_filter exemption)."""
-    cand_cols = candidates.columns
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
-    )
-    m = spec.m
-    empty = spec.empty()
-
-    def check(key, cand, filt):
-        if cand.empty:
-            return cand
-        local = CuckooSpec.__new__(CuckooSpec)
-        local.m = m
-        fb = bytes(filt["filter_bytes"].iloc[0]) if len(filt) else empty
-        nf = ~cand["dont_filter"].astype(bool)
-        keep = np.ones(len(cand), dtype=bool)
-        if nf.any():
-            present = cuckoo_contains(fb, cand.loc[nf, "fingerprint"], local)
-            keep[np.where(nf)[0]] = ~present
-        return cand.loc[keep]
-
-    return (
-        candidates.groupBy("crawl_id", "host_bucket")
-        .cogroup(filters.groupBy("crawl_id", "host_bucket"))
-        .applyInPandas(check, schema=out_schema)
-        .select(*cand_cols)
-    )
-
-
-def updated_cuckoo_filters(
-    admitted: DataFrame, filters: DataFrame, spec: CuckooSpec, wave: int
-) -> DataFrame:
-    """Fold admitted (recorded) fingerprints into the bucket filters —
-    drop-in for dedup.updated_filters."""
-    m = spec.m
-    empty = spec.empty()
-
-    def fold(key, adm, filt):
-        crawl_id, bucket = key
-        recorded = adm.loc[~adm["dont_filter"].astype(bool), "fingerprint"]
-        fb = bytes(filt["filter_bytes"].iloc[0]) if len(filt) else empty
-        local = CuckooSpec.__new__(CuckooSpec)
-        local.m = m
-        out = cuckoo_insert(fb, recorded, local) if len(recorded) else fb
-        return pd.DataFrame(
-            {
-                "crawl_id": [crawl_id],
-                "host_bucket": [int(bucket)],
-                "wave": [wave],
-                "filter_bytes": [out],
-            }
-        )
-
-    # single full-outer cogroup: updated + untouched buckets in one
-    # pass (see dedup.updated_filters)
-    schema = "crawl_id string, host_bucket int, wave int, filter_bytes binary"
-    return (
-        admitted.select("crawl_id", "host_bucket", "fingerprint", "dont_filter")
-        .groupBy("crawl_id", "host_bucket")
-        .cogroup(filters.groupBy("crawl_id", "host_bucket"))
-        .applyInPandas(fold, schema=schema)
-    )

@@ -13,18 +13,26 @@ sets no ``DUPEFILTER_CLASS`` override in ``python_spiders/settings.py``):
 * the seen set is scoped per crawl run (scrapyd starts one process per
   spider run — ``docker/scrapyd.conf:12-13``), hence keyed by crawl_id.
 
-Two implementations, same contract:
+Two admission paths, same contract:
 
 * :func:`dedup_exact` — ``left_anti`` join against the ``url_seen``
   state table. Exact; the shuffle is on ``fingerprint`` and AQE handles
-  size. This is the correctness oracle for the Bloom path.
-* :class:`BloomSeenSet` — per-``host_bucket`` Bloom filters stored as
-  binary rows. Membership + insert run inside one ``applyInPandas``
-  cogroup over (candidates-by-bucket, filter-bytes-by-bucket): at
-  10^10 URLs the exact table is ~0.5 TB of SHA1s, while 1024 Bloom
-  buckets at 1e-4 FPR are ~30 GB total and each wave touches only the
-  buckets that have candidates. False positives DROP urls, so the FPR
-  budget is part of the API and tests cross-validate vs dedup_exact.
+  size. This is the correctness oracle for the filter path.
+* :func:`dedup_filter` / :func:`updated_filters` — per-``host_bucket``
+  filters stored as binary rows. Membership runs inside one
+  ``applyInPandas`` cogroup over (candidates-by-bucket,
+  filter-bytes-by-bucket), and the admitted fingerprints fold into the
+  filters in a second one. At 10^10 URLs the exact table is ~0.5 TB of
+  SHA1s, while 1024 Bloom buckets at 1e-4 FPR are ~30 GB total and each
+  wave touches only the buckets that have candidates. False positives
+  DROP urls, so the FPR budget is part of the API and tests
+  cross-validate vs dedup_exact.
+
+The filter layout is a spec object with ``empty()``,
+``contains(filter_bytes, fingerprints)`` and ``insert(filter_bytes,
+fingerprints)``: :class:`BloomSpec` here, or
+:class:`~spider_spark.operators.cuckoo.CuckooSpec` (deletable). The
+cogroup and the fold are the same for both; only those kernels differ.
 
 Intra-batch dedup keeps the FIRST occurrence by ``discovered_seq``
 (Scrapy admits whichever request reaches the scheduler first; our
@@ -83,12 +91,29 @@ def dedup_exact(candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bloom path
+# filter path: one admission cogroup and one fold for every filter layout
 # ---------------------------------------------------------------------------
 
 
+def _hex_u64(fingerprints, start: int, width: int = 16) -> np.ndarray:
+    """``width`` (<= 16) hex chars starting at ``start`` -> uint64, fully
+    vectorized (one ASCII buffer view + ``width`` shift-or steps; ~30x
+    the per-row ``int(fp[a:b], 16)`` loop that dominated the insert
+    stage at 10^6 fingerprints/bucket). Assumes uniform-length
+    lowercase hex."""
+    joined = "".join(fingerprints)
+    n = len(fingerprints)
+    a = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).reshape(n, -1)
+    seg = a[:, start : start + width]
+    vals = np.where(seg >= 97, seg - 87, seg - 48).astype(np.uint64)
+    out = np.zeros(n, dtype=np.uint64)
+    for i in range(width):
+        out = (out << np.uint64(4)) | vals[:, i]
+    return out
+
+
 class BloomSpec:
-    """Sizing for one bucket's Bloom filter.
+    """One bucket's Bloom filter: ``m_bits`` bits, ``k`` hashes.
 
     m bits / k hashes chosen for target fpr at ``capacity`` inserts:
     m = -n ln p / (ln 2)^2, k = m/n ln 2.
@@ -104,133 +129,87 @@ class BloomSpec:
     def empty(self) -> bytes:
         return bytes(self.m_bits // 8)
 
+    def _bits(self, fingerprints: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+        """(n, k) byte indices and bit masks per fingerprint.
 
-def _hex_u64(fingerprints, start: int) -> np.ndarray:
-    """16 hex chars starting at ``start`` -> uint64, fully vectorized
-    (one ASCII buffer view + 16 shift-or steps; ~30x the per-row
-    ``int(fp[a:b], 16)`` loop that dominated the insert stage at 10^6
-    fingerprints/bucket). Assumes uniform-length lowercase hex."""
-    joined = "".join(fingerprints)
-    n = len(fingerprints)
-    a = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).reshape(n, -1)
-    seg = a[:, start : start + 16]
-    vals = np.where(seg >= 97, seg - 87, seg - 48).astype(np.uint64)
-    out = np.zeros(n, dtype=np.uint64)
-    for i in range(16):
-        out = (out << np.uint64(4)) | vals[:, i]
-    return out
+        The fingerprint is already a SHA1 hex string; we derive k positions
+        from two independent 64-bit halves (Kirsch–Mitzenmacher double
+        hashing: pos_i = h1 + i*h2 mod m).
+        """
+        fps = list(fingerprints)
+        h1 = _hex_u64(fps, 0)
+        h2 = _hex_u64(fps, 16) | np.uint64(1)
+        i = np.arange(self.k, dtype=np.uint64)
+        pos = (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(self.m_bits)
+        return (pos >> 3).astype(np.int64), (1 << (pos & 7)).astype(np.uint8)
 
+    def contains(self, filter_bytes: bytes, fingerprints: pd.Series) -> np.ndarray:
+        bits = np.frombuffer(filter_bytes, dtype=np.uint8)
+        byte_idx, bit_mask = self._bits(fingerprints)
+        return ((bits[byte_idx] & bit_mask) == bit_mask).all(axis=1)
 
-def _hash_positions(fingerprints: pd.Series, k: int, m_bits: int) -> np.ndarray:
-    """(n, k) bit positions per fingerprint — vectorized via numpy.
-
-    The fingerprint is already a SHA1 hex string; we derive k positions
-    from two independent 64-bit halves (Kirsch–Mitzenmacher double
-    hashing: pos_i = h1 + i*h2 mod m).
-    """
-    fps = list(fingerprints)
-    if not fps:
-        return np.zeros((0, k), dtype=np.uint64)
-    h1 = _hex_u64(fps, 0)
-    h2 = _hex_u64(fps, 16) | np.uint64(1)
-    i = np.arange(k, dtype=np.uint64)
-    return (h1[:, None] + i[None, :] * h2[:, None]) % np.uint64(m_bits)
+    def insert(self, filter_bytes: bytes, fingerprints: pd.Series) -> bytes:
+        bits = np.frombuffer(filter_bytes, dtype=np.uint8).copy()
+        byte_idx, bit_mask = self._bits(fingerprints)
+        np.bitwise_or.at(bits, byte_idx.ravel(), bit_mask.ravel())
+        return bits.tobytes()
 
 
-def bloom_contains(filter_bytes: bytes, fingerprints: pd.Series, spec: BloomSpec) -> np.ndarray:
-    bits = np.frombuffer(filter_bytes, dtype=np.uint8)
-    pos = _hash_positions(fingerprints, spec.k, spec.m_bits)
-    byte_idx = (pos >> 3).astype(np.int64)
-    bit_mask = (1 << (pos & 7)).astype(np.uint8)
-    present = (bits[byte_idx] & bit_mask) == bit_mask
-    return present.all(axis=1)
-
-
-def bloom_insert(filter_bytes: bytes, fingerprints: pd.Series, spec: BloomSpec) -> bytes:
-    bits = np.frombuffer(filter_bytes, dtype=np.uint8).copy()
-    if len(fingerprints):
-        pos = _hash_positions(fingerprints, spec.k, spec.m_bits).ravel()
-        byte_idx = (pos >> 3).astype(np.int64)
-        bit_mask = (1 << (pos & 7)).astype(np.uint8)
-        np.bitwise_or.at(bits, byte_idx, bit_mask)
-    return bits.tobytes()
-
-
-def dedup_bloom(
-    candidates: DataFrame,
-    filters: DataFrame,
-    spec: BloomSpec,
-) -> DataFrame:
-    """Bloom-filtered admission, partitioned by host_bucket.
+def dedup_filter(candidates: DataFrame, filters: DataFrame, spec) -> DataFrame:
+    """Filter-checked admission, partitioned by host_bucket.
 
     Parameters
     ----------
     candidates : frontier-shaped rows (already intra-batch deduped)
     filters    : rows (crawl_id, host_bucket, filter_bytes) — current state
+    spec       : the filter layout (:class:`BloomSpec` or
+                 :class:`~spider_spark.operators.cuckoo.CuckooSpec`)
 
-    Returns the admitted rows; fold them into the filter state with
-    :func:`updated_filters` after admission.
+    Returns the admitted rows: ``dont_filter`` rows, and the rest whose
+    fingerprint the bucket's filter does not contain. Fold them into
+    the filter state with :func:`updated_filters` after admission.
 
     Scale shape: one cogroup task per (crawl_id, host_bucket); the hot
-    path is numpy bit math over the whole Arrow batch. Filter bytes
-    never travel through the driver.
+    path is numpy math over the whole Arrow batch. Filter bytes never
+    travel through the driver.
     """
-    cand_cols = candidates.columns
     out_schema = ", ".join(
         f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
     )
-    spec_k, spec_m = spec.k, spec.m_bits
     empty = spec.empty()
 
-    def check(key, cand_iter_pdf, filt_pdf):
-        cand = cand_iter_pdf
+    def check(key, cand, filt):
         if cand.empty:
             return cand
-        fb = filt_pdf["filter_bytes"].iloc[0] if len(filt_pdf) else empty
-        local = BloomSpec.__new__(BloomSpec)
-        local.k, local.m_bits = spec_k, spec_m
+        fb = bytes(filt["filter_bytes"].iloc[0]) if len(filt) else empty
         nf = ~cand["dont_filter"].astype(bool)
         keep = np.ones(len(cand), dtype=bool)
         if nf.any():
-            present = bloom_contains(bytes(fb), cand.loc[nf, "fingerprint"], local)
-            keep[np.where(nf)[0]] = ~present
+            keep[np.where(nf)[0]] = ~spec.contains(fb, cand.loc[nf, "fingerprint"])
         return cand.loc[keep]
 
-    admitted = (
+    return (
         candidates.groupBy("crawl_id", "host_bucket")
         .cogroup(filters.groupBy("crawl_id", "host_bucket"))
-        .applyInPandas(lambda k, l, r: check(k, l, r), schema=out_schema)
-        .select(*cand_cols)
+        .applyInPandas(check, schema=out_schema)
+        .select(*candidates.columns)
     )
-    return admitted
 
 
-def updated_filters(
-    admitted: DataFrame,
-    filters: DataFrame,
-    spec: BloomSpec,
-    wave: int,
-) -> DataFrame:
+def updated_filters(admitted: DataFrame, filters: DataFrame, spec, wave: int) -> DataFrame:
     """Fold the admitted (recorded) fingerprints into the bucket filters."""
-    spec_k, spec_m = spec.k, spec.m_bits
     empty = spec.empty()
 
-    def fold(key, adm_pdf, filt_pdf):
+    def fold(key, adm, filt):
         crawl_id, bucket = key
-        recorded = adm_pdf.loc[~adm_pdf["dont_filter"].astype(bool), "fingerprint"]
-        fb = bytes(filt_pdf["filter_bytes"].iloc[0]) if len(filt_pdf) else empty
-        if len(recorded) == 0 and len(filt_pdf):
-            out = fb
-        else:
-            local = BloomSpec.__new__(BloomSpec)
-            local.k, local.m_bits = spec_k, spec_m
-            out = bloom_insert(fb, recorded, local)
+        recorded = adm.loc[~adm["dont_filter"].astype(bool), "fingerprint"]
+        fb = bytes(filt["filter_bytes"].iloc[0]) if len(filt) else empty
         return pd.DataFrame(
             {
                 "crawl_id": [crawl_id],
                 "host_bucket": [int(bucket)],
                 "wave": [wave],
-                "filter_bytes": [out],
+                "filter_bytes": [spec.insert(fb, recorded) if len(recorded) else fb],
             }
         )
 

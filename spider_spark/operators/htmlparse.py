@@ -204,7 +204,6 @@ def main_content_pages(
 # FormRequest.from_response analog
 # ---------------------------------------------------------------------------
 
-_FORM_VALUE_TAGS = {"input", "textarea", "select", "option", "button"}
 #: input types that only submit when clicked — from_response(clickdata=
 #: None) submits NO button, matching both reference call sites
 #: (immobiliarefaro_it.py:36, immobiliaretafy_com.py:40 pass only

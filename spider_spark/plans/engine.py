@@ -47,6 +47,7 @@ from ..operators import autothrottle as AT
 from ..operators import dedup as D
 from ..operators import politeness as P
 from ..operators import spans as S
+from ..operators.cuckoo import CuckooSpec
 from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
 
@@ -79,7 +80,9 @@ class CrawlConfig:
     #: default: plain crawls skip the (empty) per-wave revalidation
     #: write entirely.
     conditional_get: bool = False
-    seen_backend: str = "exact"  # "exact" anti-join | "bloom" | "cuckoo"
+    #: "exact" anti-join | "bloom" | "cuckoo" filter; ``bloom_capacity``
+    #: sizes the Bloom and the cuckoo filter alike, ``bloom_fpr`` only Bloom
+    seen_backend: str = "exact"
     bloom_capacity: int = 1 << 20
     bloom_fpr: float = 1e-6
     #: compact ``url_seen`` every N committed waves (None = never).
@@ -129,6 +132,17 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.cfg = config or CrawlConfig()
+        #: the seen-set filter layout, chosen once per engine; None is the
+        #: exact anti-join against ``url_seen``
+        backend = self.cfg.seen_backend
+        if backend == "bloom":
+            self.seen_filter = D.BloomSpec(self.cfg.bloom_capacity, self.cfg.bloom_fpr)
+        elif backend == "cuckoo":
+            self.seen_filter = CuckooSpec(self.cfg.bloom_capacity)
+        elif backend == "exact":
+            self.seen_filter = None
+        else:
+            raise ValueError(f"seen_backend must be exact, bloom or cuckoo: {backend!r}")
         self.web = canonical_web(web_pages).persist()
         self.policy = host_policy
         self.store = store
@@ -170,7 +184,6 @@ class CrawlEngine:
             self.policy = R.merge_into_policy(
                 self.policy, R.parse_robots_texts(robots_texts)
             )
-        self.bloom_spec = D.BloomSpec(self.cfg.bloom_capacity, self.cfg.bloom_fpr)
 
     def close(self) -> None:
         """Release the canonical-web cache. Engines are cheap to build
@@ -220,22 +233,15 @@ class CrawlEngine:
                 .drop("_rank_host", "_rank_priority")
             )
         cand = D.dedup_intra_batch(cand)
-        backend = self.cfg.seen_backend
         writes = {}
-        if backend in ("bloom", "cuckoo"):
-            from ..operators import cuckoo as C
-
+        if self.seen_filter is not None:
             filters = self.store.read_table(
                 "url_seen_filters", "latest", schema=schemas.URL_SEEN_FILTERS
             )
-            if backend == "bloom":
-                admitted = D.dedup_bloom(cand, filters, self.bloom_spec).persist()
-                new_filters = D.updated_filters(admitted, filters, self.bloom_spec, wave)
-            else:
-                spec = C.CuckooSpec(self.cfg.bloom_capacity)
-                admitted = C.dedup_cuckoo(cand, filters, spec).persist()
-                new_filters = C.updated_cuckoo_filters(admitted, filters, spec, wave)
-            writes["url_seen_filters"] = new_filters
+            admitted = D.dedup_filter(cand, filters, self.seen_filter).persist()
+            writes["url_seen_filters"] = D.updated_filters(
+                admitted, filters, self.seen_filter, wave
+            )
         else:
             seen = self.store.read_table("url_seen", "append", schema=schemas.URL_SEEN)
             admitted = D.dedup_exact(cand, seen).persist()

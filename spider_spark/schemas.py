@@ -174,7 +174,6 @@ LINKS = T.StructType(
 DEFAULT_MAX_CONCURRENCY = 16  # CONCURRENT_REQUESTS_PER_DOMAIN
 DEFAULT_CRAWL_DELAY_S = 0.1  # AUTOTHROTTLE_START_DELAY
 MAX_CRAWL_DELAY_S = 2.0  # AUTOTHROTTLE_MAX_DELAY
-GLOBAL_CONCURRENCY = 320  # CONCURRENT_REQUESTS
 RETRY_TIMES = 3  # RETRY_TIMES
 RETRY_HTTP_CODES = [500, 503, 504, 400, 401, 403, 404, 405, 407, 408, 416, 456, 502, 429]
 #: RedirectMiddleware envelope (Scrapy 2.3 defaults, implicit in every

@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 APPEND_TABLES = ("documents", "url_seen", "metrics", "links")
-LATEST_TABLES = ("frontier", "url_seen_filters")
 
 
 class SnapshotStore:

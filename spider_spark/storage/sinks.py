@@ -80,9 +80,6 @@ def rest_forwarder(
     documents.foreachPartition(send)
 
 
-REQUIRED_SPAN_FIELDS = ("kind", "offset")
-
-
 def validate_documents(documents: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Local validate-API analog: returns (summary, error_details).
 

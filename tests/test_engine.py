@@ -8,6 +8,7 @@ order).
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -312,16 +313,58 @@ def test_resume_from_checkpoint(spark, tmp_path):
     assert full_seen == res_seen
 
 
+def check_seen_filters(eng, store) -> dict:
+    """A filter that misses a recorded fingerprint re-admits its URL, so
+    url_seen must hold each fingerprint once and every bucket's latest
+    filter must contain all of that bucket's url_seen fingerprints.
+    Returns {host_bucket: (filter_bytes, fingerprints)}."""
+    seen = store.read_table("url_seen", "append").select("host_bucket", "fingerprint").collect()
+    fps = [r["fingerprint"] for r in seen]
+    assert len(fps) == len(set(fps))
+    filters = {
+        r["host_bucket"]: bytes(r["filter_bytes"])
+        for r in store.read_table("url_seen_filters", "latest").collect()
+    }
+    buckets = {}
+    for r in seen:
+        buckets.setdefault(r["host_bucket"], []).append(r["fingerprint"])
+    out = {}
+    for bucket, bucket_fps in buckets.items():
+        bucket_fps = pd.Series(bucket_fps)
+        assert eng.seen_filter.contains(filters[bucket], bucket_fps).all()
+        out[bucket] = (filters[bucket], bucket_fps)
+    return out
+
+
+def test_unknown_seen_backend_raises(spark, tmp_path):
+    spec = WebSpec(seed=11, n_hosts=2, pages_per_host=1, details_per_page=1)
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    for backend in ("Bloom", "anti-join", ""):
+        with pytest.raises(ValueError, match="seen_backend"):
+            CrawlEngine(
+                spark,
+                web_df(spark, spec),
+                host_policy_df(spark, spec),
+                store,
+                CrawlConfig(seen_backend=backend),
+            )
+
+
 def test_bloom_path_equals_exact_path(spark, tmp_path, reference_crawl):
     spec = WebSpec(seed=11, n_hosts=4, pages_per_host=2, details_per_page=3)
     _e1, _t1, s_exact = reference_crawl(spec)
-    _e2, _t2, s_bloom = run_engine(spark, tmp_path / "bloom", spec, seen_backend="bloom")
+    e_bloom, _t2, s_bloom = run_engine(spark, tmp_path / "bloom", spec, seen_backend="bloom")
     seen_exact = {r["fingerprint"] for r in s_exact.read_table("url_seen", "append").collect()}
     seen_bloom = {r["fingerprint"] for r in s_bloom.read_table("url_seen", "append").collect()}
     assert seen_exact == seen_bloom
     d1 = {r["doc_id"] for r in s_exact.read_table("documents", "append").collect()}
     d2 = {r["doc_id"] for r in s_bloom.read_table("documents", "append").collect()}
     assert d1 == d2
+    # Bloom insertion is order-free: each blob is the bucket's
+    # fingerprints inserted into an empty filter at once
+    bloom = e_bloom.seen_filter
+    for filter_bytes, bucket_fps in check_seen_filters(e_bloom, s_bloom).values():
+        assert filter_bytes == bloom.insert(bloom.empty(), bucket_fps)
 
 
 def test_metrics_lineage_recorded(engine_run):
