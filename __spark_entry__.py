@@ -1377,8 +1377,7 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-hour aggregate per event_type (the batch twin of the
-    Structured Streaming path in spider_spark/streaming)."""
+    """Tumbling-hour aggregate per event_type."""
     ev = _t(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_format(F.date_trunc("hour", F.col("ts")), "yyyy-MM-dd HH:mm:ss").alias(
@@ -1896,9 +1895,9 @@ def q_css_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fetch_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-host per-minute fetch rates (batch twin of the streaming
-    host_fetch_rates — identical plan runs under readStream)."""
-    from spider_spark.streaming.events import host_fetch_rates
+    """Per-host per-minute fetch rates over a synthetic fetch log
+    (``autothrottle.host_fetch_rates``)."""
+    from spider_spark.operators.autothrottle import host_fetch_rates
 
     ev = _t(spark, sf_dir, "events")
     log = ev.select(

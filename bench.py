@@ -213,9 +213,6 @@ def bench_queries(spark, sf_dir: str):
     def q_simhash():
         return TD.simhash_bits(docs, n_bits=32).count()
 
-    def q_simhash_fast():
-        return TD.simhash_bits_fast(docs, n_bits=32).count()
-
     def q_ann_topk():
         queries = emb.filter(F.col("vec_id") % 200 == 0)
         return ANN.brute_force_topk(emb, queries, k=5).count()
@@ -261,7 +258,6 @@ def bench_queries(spark, sf_dir: str):
         ("minhash_lsh", q_minhash_lsh),
         ("substring_dedup", q_substring_dedup),
         ("simhash", q_simhash),
-        ("simhash_fast", q_simhash_fast),
         ("ann_topk", q_ann_topk),
         ("ann_lsh", q_ann_lsh),
         ("ann_ivf", q_ann_ivf),

@@ -11,8 +11,8 @@ default ports, normalizes the path, and sorts query parameters
 Design notes (scale):
 
 * ``canonicalize_urls`` is a **pandas UDF** — one Arrow batch in, one
-  out; the per-batch work is C-backed pandas ``str`` ops plus a tight
-  loop only over the query-string tail. No row-at-a-time Spark UDFs.
+  out; the per-batch work is pyarrow.compute kernels plus a Python
+  loop only over the distinct query strings. No row-at-a-time Spark UDFs.
 * ``fingerprint_col`` is **pure JVM** (``sha1(concat_ws(...))``) so the
   hot dedup path stays inside whole-stage codegen.
 * ``host_bucket_col`` = ``pmod(xxhash64(host), n_buckets)`` — the crawl
@@ -34,8 +34,7 @@ from pyspark.sql import types as T
 
 DEFAULT_PORTS = {"http": "80", "https": "443", "ftp": "21"}
 
-_SPLIT_RE = r"^(?:([a-zA-Z][a-zA-Z0-9+.-]*):)?(?://([^/?#]*))?([^?#]*)(?:\?([^#]*))?(?:#.*)?$"
-#: RE2 named-group twin of _SPLIT_RE for pyarrow's extract_regex
+#: URL split (RE2, for pyarrow's extract_regex); matches any string
 _SPLIT_RE_NAMED = (
     r"^(?:(?P<scheme>[a-zA-Z][a-zA-Z0-9+.-]*):)?(?://(?P<netloc>[^/?#]*))?"
     r"(?P<path>[^?#]*)(?:\?(?P<query>[^#]*))?(?:#.*)?$"
@@ -53,27 +52,6 @@ def _canon_query(q: str) -> str:
         keyed.append((k, v))
     keyed.sort()
     return "&".join(f"{k}={v}" for k, v in keyed)
-
-
-def canonicalize_series(urls: pd.Series, pin: bool = False) -> pd.Series:
-    """Vectorized canonicalization of absolute URLs.
-
-    Hot path is pyarrow.compute (RE2 + C++ kernels — ~20x the
-    pandas-str throughput, which matters because this UDF is the single
-    biggest cost of a frontier wave); only the canonicalization of
-    DISTINCT query strings runs in Python, which amortizes because
-    frontiers repeat the same query shapes (pagination params) heavily.
-    Falls back to the pandas implementation if the pyarrow kernels are
-    unavailable.
-
-    ``pin=True`` (set by the UDF wrapper, i.e. inside Spark Python
-    workers only) caps pyarrow's process-wide thread pool at 1; driver-
-    side callers keep their default pool.
-    """
-    try:
-        return _canonicalize_arrow(urls, pin)
-    except (ImportError, AttributeError, pa_lib.ArrowNotImplementedError):
-        return _canonicalize_pandas(urls)
 
 
 _ARROW_POOL_PINNED = False
@@ -97,7 +75,19 @@ def _pin_arrow_pool() -> None:
         _ARROW_POOL_PINNED = True
 
 
-def _canonicalize_arrow(urls: pd.Series, pin: bool = False) -> pd.Series:
+def canonicalize_series(urls: pd.Series, pin: bool = False) -> pd.Series:
+    """Vectorized canonicalization of absolute URLs.
+
+    Runs on pyarrow.compute (RE2 + C++ kernels — ~20x the pandas-str
+    throughput, which matters because this UDF is the single biggest
+    cost of a frontier wave); only the canonicalization of DISTINCT
+    query strings runs in Python, which amortizes because frontiers
+    repeat the same query shapes (pagination params) heavily.
+
+    ``pin=True`` (set by the UDF wrapper, i.e. inside Spark Python
+    workers only) caps pyarrow's process-wide thread pool at 1; driver-
+    side callers keep their default pool.
+    """
     if pin:
         _pin_arrow_pool()
     arr = pa_lib.array(urls.fillna("").astype(str), type=pa_lib.string())
@@ -124,36 +114,6 @@ def _canonicalize_arrow(urls: pd.Series, pin: bool = False) -> pd.Series:
     tail = pa_lib.array(("?" + qs).where(has_q, ""), type=pa_lib.string())
     out = pc.binary_join_element_wise(scheme, "://", netloc, path, tail, "")
     return out.to_pandas()
-
-
-def _canonicalize_pandas(urls: pd.Series) -> pd.Series:
-    urls = urls.fillna("").astype(str)
-    parts = urls.str.extract(_SPLIT_RE)
-    scheme = parts[0].fillna("http").str.lower()
-    scheme = scheme.mask(scheme == "", "http")
-    netloc = parts[1].fillna("").str.lower()
-    path = parts[2].fillna("")
-    query = parts[3].fillna("")
-
-    # strip default port (vectorized per scheme)
-    for sch, port in DEFAULT_PORTS.items():
-        suffix = ":" + port
-        mask = (scheme == sch) & netloc.str.endswith(suffix)
-        if mask.any():
-            netloc = netloc.mask(mask, netloc.str.slice(0, -len(suffix)))
-
-    path = path.mask(path == "", "/")
-    # collapse duplicate slashes inside the path (common relative-join artifact)
-    path = path.str.replace(r"/{2,}", "/", regex=True)
-
-    has_q = query != ""
-    if has_q.any():
-        # Python work only per UNIQUE query string
-        uniq = {q: _canon_query(q) for q in query[has_q].unique()}
-        query = query.where(~has_q, query[has_q].map(uniq))
-    out = scheme + "://" + netloc + path
-    out = out.where(~has_q, out + "?" + query)
-    return out
 
 
 @F.pandas_udf(T.StringType())

@@ -70,6 +70,24 @@ def updated_policy(
     )
 
 
+def host_fetch_rates(fetch_log: DataFrame, window: str = "1 minute") -> DataFrame:
+    """Per-host fetch rate + error ratio over tumbling windows of a
+    fetch log (ts, host, status, latency_ms) — the time-windowed view of
+    the per-wave metrics table that feeds AutoThrottle."""
+    ts = F.col("ts").cast("timestamp")
+    return fetch_log.groupBy(F.window(ts, window).alias("win"), F.col("host")).agg(
+        F.count("*").alias("fetched"),
+        F.avg(F.col("latency_ms")).alias("avg_latency_ms"),
+        F.sum((F.col("status") != 200).cast("long")).alias("errors"),
+    ).select(
+        F.col("win.start").alias("window_start"),
+        "host",
+        "fetched",
+        F.round("avg_latency_ms", 2).alias("avg_latency_ms"),
+        "errors",
+    )
+
+
 def with_latency(fetched: DataFrame, seed: int = 42) -> DataFrame:
     """The latency frame the policy fold should adapt to: pass the
     fetch backend's MEASURED ``latency_ms`` through untouched when

@@ -1,13 +1,11 @@
-"""Cuckoo-filter seen-set: the deletable alternative to the Bloom filter.
+"""Cuckoo-filter seen-set: the cuckoo layout of the Bloom/cuckoo URL-seen set.
 
 :class:`CuckooSpec` is a filter layout for
 :mod:`spider_spark.operators.dedup`'s filter path (the same
 per-``host_bucket`` admission cogroup and fold as
 :class:`~spider_spark.operators.dedup.BloomSpec`). A cuckoo filter
 (Fan et al., CoNEXT'14 — public algorithm) stores 16-bit fingerprints
-in 4-slot buckets, so it supports DELETE (needed when a crawl retracts
-admissions, e.g. robots rules arriving late) and beats Bloom on space
-below ~3% FPR.
+in 4-slot buckets and beats Bloom on space below ~3% FPR.
 
 Layout: ``m`` buckets x 4 slots x uint16, as raw little-endian bytes.
 Slot value 0 = empty (fingerprints are forced nonzero). Candidate
@@ -119,20 +117,4 @@ def cuckoo_insert(filter_bytes: bytes, fingerprints: pd.Series, spec: CuckooSpec
                 break
         else:
             raise RuntimeError("cuckoo filter full; raise capacity for this bucket")
-    return t.tobytes()
-
-
-def cuckoo_delete(filter_bytes: bytes, fingerprints: pd.Series, spec: CuckooSpec) -> bytes:
-    """Remove one stored copy of each fingerprint (cuckoo's advantage
-    over Bloom: retraction without rebuilding)."""
-    t = _table(filter_bytes, spec.m).copy()
-    if len(fingerprints) == 0:
-        return t.tobytes()
-    tag, i1, i2 = _parts(fingerprints, spec.m)
-    for k in range(len(tag)):
-        for idx in (int(i1[k]), int(i2[k])):
-            hit = np.where(t[idx] == tag[k])[0]
-            if len(hit):
-                t[idx, hit[0]] = 0
-                break
     return t.tobytes()

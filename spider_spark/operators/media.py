@@ -7,10 +7,10 @@ the fetched bytes. Model:
 * media rows: ``(media_ref string, content binary, media_type string,
   meta map<string,string>)`` — binary is opaque to Spark; typed
   metadata travels beside it;
-* decode / feature-extract / resize / frame-sample run as
-  ``mapInPandas`` stages so each Arrow batch crosses the Python
-  boundary once. The image/audio codecs are NOT in this container, so
-  the decode core is stubbed: ``decoder=None`` uses a deterministic
+* decode runs as a ``mapInPandas`` stage so each Arrow batch crosses
+  the Python boundary once; frame sampling is a relational explode.
+  The image/audio codecs are NOT in this container, so the decode
+  core is stubbed: ``decoder=None`` uses a deterministic
   fake (sha256-derived dimensions) and a real deployment injects the
   PIL/ffmpeg-backed callable. The Spark-side plumbing — schema,
   partitioning, UDF signature, batch shape — is real and tested.
@@ -133,26 +133,6 @@ def decode_media(
             yield fn(pdf)
 
     return media.repartition(F.col("media_ref")).mapInPandas(run, DECODED_SCHEMA)
-
-
-def media_features(
-    decoded: DataFrame,
-    embed_dim: int = 16,
-) -> DataFrame:
-    """Deterministic per-media feature vector (the embedding-extraction
-    slot). Stub embedding = scaled bytes of md5(media_ref); a real
-    deployment swaps in a vision-model pandas UDF with the same
-    signature (array<float> out, one Arrow batch per call)."""
-
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def embed(refs: pd.Series) -> pd.Series:
-        out = []
-        for r in refs:
-            h = hashlib.md5(str(r).encode()).digest()
-            out.append([((h[i % 16] / 255.0) * 2 - 1) for i in range(embed_dim)])
-        return pd.Series(out)
-
-    return decoded.withColumn("embedding", embed(F.col("media_ref")))
 
 
 def sample_frames(decoded: DataFrame, every_n: int = 24) -> DataFrame:

@@ -193,21 +193,3 @@ def temperature_rates(
             * F.lit(float(target_fraction_of_max))
         ).alias("rate"),
     )
-
-
-def temperature_sample(
-    df: DataFrame,
-    alpha: float,
-    stratum_col: str = "source",
-    key_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """:func:`temperature_rates` composed with
-    :func:`deterministic_sample` — one corpus pass to count, one to
-    gate; same hash determinism guarantees as the underlying sampler."""
-    rates = temperature_rates(df, alpha, stratum_col=stratum_col).select(
-        stratum_col, "rate"
-    )
-    return deterministic_sample(
-        df, rates, stratum_col=stratum_col, key_col=key_col, salt=salt
-    )

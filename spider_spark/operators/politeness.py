@@ -39,7 +39,7 @@ from ..schemas import (
     DEFAULT_CRAWL_DELAY_S,
     DEFAULT_MAX_CONCURRENCY,
 )
-from ..functions.domains import with_registered_domain
+
 
 def dispatch_order():
     """Ordering contract within a host: priority DESC, discovery ASC."""
@@ -163,36 +163,3 @@ def schedule_wave(
     if global_cap is not None:
         winners = winners.orderBy(*dispatch_order()).limit(global_cap)
     return winners
-
-
-def budget_by_registered_domain(
-    frontier: DataFrame,
-    psl: DataFrame,
-    domain_budget: int,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Per-REGISTERED-DOMAIN dispatch budget on top of the per-host
-    scheduler: one site operator typically owns every subdomain
-    (``a.example.co.uk``, ``b.example.co.uk``, …), so per-host budgets
-    undercount them — the standard crawl-budget key is eTLD+1 (the
-    publicsuffix.org registered domain; IRLbot WWW'08 budgets per
-    "domain" for exactly this reason). Composes the PSL extraction
-    (``functions/domains.with_registered_domain`` — only the DISTINCT
-    host dim explodes) with the same lossless two-phase salted top-k
-    the per-host scheduler uses, keyed on the registered domain.
-
-    Hosts on a public suffix itself (or matching no rule) have no
-    registered domain; they fall back to their own host as the budget
-    key — each is its own operator, the conservative reading. Emits
-    ``dispatch_rank`` within the registered domain; rows past
-    ``domain_budget`` are deferred exactly like per-host overflow.
-    """
-    fr = with_registered_domain(frontier, psl, host_col="host")
-    fr = fr.withColumn(
-        "_budget_key", F.coalesce(F.col("reg_domain"), F.col("host"))
-    ).withColumn("_k", F.lit(int(domain_budget)))
-    return (
-        topk_per_key_salted(fr, key="_budget_key", k_col="_k", n_salts=n_salts)
-        .drop("_k", "reg_domain")
-        .withColumnRenamed("_budget_key", "budget_domain")
-    )

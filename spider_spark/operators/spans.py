@@ -162,7 +162,7 @@ def extract_links_raw(fetched_ok: DataFrame) -> DataFrame:
     """Pages with out_links -> PRE-RESOLUTION child request rows
     (``base_url``/``href`` instead of an absolute ``url`` — pure JVM,
     no UDF; :func:`resolve_candidates` applies the one vectorized
-    resolve pass after redirect candidates union in).
+    resolve pass).
 
     Children inherit source/meta/priority from the parent (the
     reference threads these via ``meta=`` — ``aands_org_uk.py:30-49``).
@@ -214,10 +214,11 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
     """(base_url, href) candidate rows -> absolute-URL request rows.
 
     The ONE Arrow/Python crossing of the link path. Link extraction and
-    redirect following both emit the raw (base, href) shape and union
-    BEFORE this resolve, so adding the redirect branch costs two cheap
-    JVM projections over the fetched cache instead of a second
-    vectorized-UDF plan node — one extra UDF node here measurably
+    redirect following both emit the raw (base, href) shape
+    (:func:`extract_candidates_raw` emits both from one scan) BEFORE
+    this resolve, so the redirect side costs JVM projections over the
+    fetched cache instead of a second vectorized-UDF plan node — one
+    extra UDF node here measurably
     added seconds of per-wave overhead at bench scale (each consumer
     evaluation of the candidate plan pays every UDF node's Python
     round trip for all partitions, even when the redirect side holds
@@ -233,25 +234,21 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
     )
 
 
-def extract_links(fetched_ok: DataFrame) -> DataFrame:
-    """Resolved child request rows — :func:`extract_links_raw` +
-    :func:`resolve_candidates` (kept as the single-call surface for
-    tests and non-engine callers; the engine unions redirect
-    candidates between the two stages)."""
-    return resolve_candidates(extract_links_raw(fetched_ok))
-
-
-def redirect_candidates_raw(
+def extract_candidates_raw(
     fetched: DataFrame,
     max_times: int = schemas.REDIRECT_MAX_TIMES,
     priority_adjust: int = schemas.REDIRECT_PRIORITY_ADJUST,
 ) -> DataFrame:
-    """RedirectMiddleware analog (Scrapy 2.3 defaults — implicit in all
-    3,788 reference spiders; ``aryes_be.py:80`` opts out per-request
-    with ``meta={'dont_redirect': True}``): 3xx responses with a
-    Location become NEW frontier candidates in link shape.
+    """Links AND redirect targets from ONE scan of the fetched wave —
+    no union (requires a ``location`` column; use
+    :func:`extract_links_raw` otherwise).
 
-    Faithful semantics:
+    A parse-ok page yields the rows :func:`extract_links_raw` gives. The
+    redirect side is the RedirectMiddleware analog (Scrapy 2.3 defaults
+    — implicit in all 3,788 reference spiders; ``aryes_be.py:80`` opts
+    out per-request with ``meta={'dont_redirect': True}``): 3xx
+    responses with a Location become NEW frontier candidates in link
+    shape, with these semantics:
 
     * 301/307/308 (and any HEAD request) keep method+body; 302/303
       downgrade to GET with no body (browser behavior, Scrapy
@@ -267,98 +264,19 @@ def redirect_candidates_raw(
       redirect TARGET therefore still passes the RFPDupeFilter, which
       is also what kills redirect loops (a->b->a: the second 'a' is
       already seen).
+    * ``link_pos = -1``, so redirect targets order deterministically
+      BEFORE the page's extracted links under the (parent_seq,
+      link_pos) sort — the engine also uses ``link_pos < 0`` as the
+      redirect marker that bypasses LinkExtractor rules and the
+      offsite filter per-row.
 
-    Scale shape: one filter + projection over the already-persisted
-    fetched wave — no shuffle, no Python (PRE-RESOLUTION shape: the
-    Location rides as ``href`` and the shared
-    :func:`resolve_candidates` pass makes it absolute AFTER the union
-    with extracted links, so the redirect branch adds no second UDF
-    node to the wave plan). Emits ``link_pos = -1`` so redirect
-    targets order deterministically BEFORE the page's extracted links
-    under the (parent_seq, link_pos) sort — the engine also uses
-    ``link_pos < 0`` as the redirect marker that bypasses
-    LinkExtractor rules and the offsite filter per-row.
-    """
-    base_meta = F.coalesce(F.col("meta"), F.create_map())
-    dont_redirect = ~F.lower(
-        F.coalesce(F.element_at(base_meta, "dont_redirect"), F.lit(""))
-    ).isin("", "0", "false")
-    times = F.coalesce(
-        F.element_at(base_meta, "redirect_times").cast("int"), F.lit(0)
-    )
-    parse_ok = (
-        F.col("_parse_ok") if "_parse_ok" in fetched.columns
-        else F.col("status") == 200
-    )
-    redirs = fetched.filter(
-        F.col("status").isin(schemas.REDIRECT_HTTP_CODES)
-        & F.col("location").isNotNull()
-        & ~parse_ok
-        & ~dont_redirect
-        & (times < F.lit(max_times))
-    )
-    keep_method = F.col("status").isin(301, 307, 308) | (
-        F.upper(F.col("method")) == "HEAD"
-    )
-    trail = F.element_at(base_meta, "redirect_urls")
-    new_meta = F.map_concat(
-        F.map_filter(
-            base_meta, lambda k, _: ~k.isin("redirect_times", "redirect_urls")
-        ),
-        F.create_map(
-            F.lit("redirect_times"), (times + 1).cast("string"),
-            F.lit("redirect_urls"),
-            F.when(trail.isNull(), F.col("url")).otherwise(
-                F.concat(trail, F.lit("|"), F.col("url"))
-            ),
-        ),
-    )
-    return redirs.select(
-        "crawl_id",
-        F.col("url").alias("base_url"),
-        F.col("location").alias("href"),
-        F.when(keep_method, F.col("method")).otherwise(F.lit("GET")).alias("method"),
-        F.when(keep_method, F.col("body")).otherwise(F.lit(None).cast("string")).alias("body"),
-        "source",
-        new_meta.alias("meta"),
-        (F.col("priority") + F.lit(priority_adjust)).alias("priority"),
-        F.lit(0).alias("attempt"),
-        F.col("dont_filter"),
-        F.col("discovered_seq").alias("parent_seq"),
-        F.lit(-1).alias("link_pos"),
-    )
-
-
-def redirect_candidates(
-    fetched: DataFrame,
-    max_times: int = schemas.REDIRECT_MAX_TIMES,
-    priority_adjust: int = schemas.REDIRECT_PRIORITY_ADJUST,
-) -> DataFrame:
-    """Resolved redirect candidates — :func:`redirect_candidates_raw`
-    + :func:`resolve_candidates` (single-call surface for tests; the
-    engine uses :func:`extract_candidates_raw`, which fuses links and
-    redirects into one scan)."""
-    return resolve_candidates(
-        redirect_candidates_raw(fetched, max_times, priority_adjust)
-    )
-
-
-def extract_candidates_raw(
-    fetched: DataFrame,
-    max_times: int = schemas.REDIRECT_MAX_TIMES,
-    priority_adjust: int = schemas.REDIRECT_PRIORITY_ADJUST,
-) -> DataFrame:
-    """Links AND redirect targets from ONE scan of the fetched wave —
-    no union (requires a ``location`` column; use
-    :func:`extract_links_raw` otherwise).
-
-    Semantically identical to
-    ``extract_links_raw(ok) ∪ redirect_candidates_raw(fetched)`` but
-    structurally one linear plan: a 3xx row explodes
-    ``array(location)`` where a parsed page explodes ``out_links``,
-    and every redirect-specific transform (method/body downgrade, hop
-    counter + trail meta, priority adjust, dont_filter inheritance,
-    ``link_pos = -1``) is a per-row ``CASE``. Measured motivation
+    The Location rides as ``href`` (PRE-RESOLUTION shape), and
+    :func:`resolve_candidates` makes it absolute together with the
+    extracted links. Structurally the whole thing is one linear plan:
+    a 3xx row explodes ``array(location)`` where a parsed page explodes
+    ``out_links``, and every redirect-specific transform (method/body
+    downgrade, hop counter + trail meta, priority adjust, dont_filter
+    inheritance, ``link_pos = -1``) is a per-row ``CASE``. Measured motivation
     (round 4): a union of the two branches made every AQE evaluation
     of the candidate plan materialize extra shuffle query stages —
     +10 jobs/+46 stages PER WAVE on the bench crawl, ~3.5 s/wave of

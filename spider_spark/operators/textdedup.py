@@ -253,95 +253,6 @@ def winnow_fingerprints(
     )
 
 
-def simhash_bits_fast(
-    documents: DataFrame,
-    n_bits: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """SimHash twin of :func:`simhash_bits` — one ``mapInPandas`` pass,
-    numpy bit accumulation, no row explosion.
-
-    Honest measurement (sf0.1, 32 cores, BENCH): the relational form is
-    NOT actually shuffle-bound — Catalyst's map-side partial aggregate
-    combines the tokens x n_bits explosion before the exchange, so the
-    shuffle is ~docs x n_bits rows and the relational form stays
-    slightly faster at local bench scale (0.41s vs 0.57s @ 64 bits).
-    This twin exists as (a) an independent cross-validation of the
-    relational/oracle formulation (bit-identical, pytest-pinned) and
-    (b) the variant to prefer when the 64x row expansion becomes
-    CPU-bound (very long documents, wide signatures, or executors where
-    codegen'd md5-per-(token,bit-explode) dominates). Semantics:
-    bit p = (hex_digit(p/4) >> (p%4)) & 1 of md5(token), majority with
-    ties -> '0', docs with zero tokens omitted.
-    """
-    import re
-
-    import numpy as np
-    import pandas as pd
-
-    id_type = documents.schema[id_col].dataType.simpleString()
-    out_schema = f"`{id_col}` {id_type}, simhash string"
-    n_digits = (n_bits + 3) // 4
-
-    def run(batches):
-        import hashlib
-
-        tok_re = re.compile(r"[a-z0-9]+")
-        shifts = np.arange(4, dtype=np.uint8)
-        cache: dict[str, np.ndarray] = {}
-
-        def contrib(tok: str) -> np.ndarray:
-            v = cache.get(tok)
-            if v is None:
-                h = hashlib.md5(tok.encode()).hexdigest()[:n_digits]
-                raw = np.frombuffer(
-                    bytes.fromhex(h if len(h) % 2 == 0 else h + "0"), dtype=np.uint8
-                )
-                dig = np.empty(len(raw) * 2, dtype=np.uint8)
-                dig[0::2] = raw >> 4
-                dig[1::2] = raw & 15
-                bits = ((dig[:n_digits, None] >> shifts) & 1).reshape(-1)[:n_bits]
-                v = (2 * bits.astype(np.int32)) - 1
-                cache[tok] = v
-            return v
-
-        for pdf in batches:
-            # flatten the batch: unique-token contrib matrix + (doc_no,
-            # tok_idx) index arrays, then ONE chunked np.add.at — the
-            # per-token python loop was the previous bottleneck
-            keep_ids: list = []
-            uniq: dict[str, int] = {}
-            tok_idx: list[int] = []
-            doc_no: list[int] = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = tok_re.findall((t or "").lower())
-                if not toks:
-                    continue  # relational twin emits no row either
-                d = len(keep_ids)
-                keep_ids.append(i)
-                for tk in toks:
-                    tok_idx.append(uniq.setdefault(tk, len(uniq)))
-                    doc_no.append(d)
-            if not keep_ids:
-                yield pd.DataFrame({id_col: [], "simhash": []})
-                continue
-            cmat = np.empty((len(uniq), n_bits), dtype=np.int32)
-            for tk, j in uniq.items():
-                cmat[j] = contrib(tk)
-            acc = np.zeros((len(keep_ids), n_bits), dtype=np.int64)
-            ti = np.asarray(tok_idx, dtype=np.int64)
-            dn = np.asarray(doc_no, dtype=np.int64)
-            chunk = 1 << 18  # bound the (tokens, n_bits) temp to ~64 MB
-            for s in range(0, len(ti), chunk):
-                np.add.at(acc, dn[s : s + chunk], cmat[ti[s : s + chunk]])
-            zo = np.where(acc > 0, "1", "0")
-            sigs = ["".join(row) for row in zo]
-            yield pd.DataFrame({id_col: keep_ids, "simhash": sigs})
-
-    return documents.select(id_col, text_col).mapInPandas(run, out_schema)
-
-
 def simhash_neardup_pairs(
     documents: DataFrame,
     max_hamming: int = 3,
@@ -406,70 +317,6 @@ def simhash_neardup_pairs(
         cand.withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
-    )
-
-
-def line_dedup(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Corpus-level repeated-line removal (the C4 / CCNet "discard any
-    line seen before" pass — public recipe: Raffel et al. 2020 §2.2
-    keeps one occurrence of each three-sentence span; CCNet dedups
-    paragraph hashes across shards).
-
-    A line survives only at its FIRST corpus occurrence — earliest
-    (doc_id, position), lexicographic doc order for determinism.
-    Returns (doc_id, text_deduped, n_lines, n_dropped); documents whose
-    every line was seen before come back with empty text (the caller
-    filters).
-
-    Scale shape: posexplode -> ONE shuffle on the 16-byte line digest
-    (never the line text) with a map-side-combinable min_by -> one
-    equi-join back on the digest. No window over the whole corpus, no
-    driver state; skew on boilerplate lines ("all rights reserved")
-    caps at one group per distinct digest, and AQE splits oversized
-    groups.
-    """
-    lines = documents.select(
-        F.col(id_col),
-        F.posexplode(TX.doc_lines(F.col(text_col))).alias("pos", "line"),
-    ).select(
-        id_col, "pos", "line", F.md5(F.lower(F.col("line"))).alias("line_fp")
-    )
-    first = lines.groupBy("line_fp").agg(
-        F.min(F.struct(id_col, "pos")).alias("first_at")
-    )
-    kept = (
-        lines.join(first, "line_fp")
-        .where(
-            (F.col(id_col) == F.col("first_at." + id_col))
-            & (F.col("pos") == F.col("first_at.pos"))
-        )
-        .groupBy(id_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                    lambda s: s["line"],
-                ),
-                "\n",
-            ).alias("text_deduped"),
-            F.count("*").alias("n_kept"),
-        )
-    )
-    totals = documents.select(
-        F.col(id_col), F.size(TX.doc_lines(F.col(text_col))).alias("n_lines")
-    )
-    return (
-        totals.join(kept, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce(F.col("text_deduped"), F.lit("")).alias("text_deduped"),
-            "n_lines",
-            (F.col("n_lines") - F.coalesce(F.col("n_kept"), F.lit(0))).alias(
-                "n_dropped"
-            ),
-        )
     )
 
 

@@ -1,4 +1,4 @@
-"""Cuckoo-filter seen-set tests: the insert/contains/delete kernels on
+"""Cuckoo-filter seen-set tests: the insert/contains kernels on
 their own, and a cuckoo-backed crawl against the exact seen-set."""
 
 from __future__ import annotations
@@ -11,7 +11,6 @@ import pytest
 from spider_spark.operators.cuckoo import (
     CuckooSpec,
     cuckoo_contains,
-    cuckoo_delete,
     cuckoo_insert,
 )
 from spider_spark.operators.dedup import _hex_u64
@@ -44,18 +43,6 @@ def test_false_positive_rate_small():
     other = fps(5000, salt="other")
     fpr = cuckoo_contains(fb, other, spec).mean()
     assert fpr < 0.02  # 16-bit tags, 2 buckets x 4 slots -> ~8/2^16
-
-
-def test_delete_restores_absence():
-    spec = CuckooSpec(capacity=1000)
-    f = fps(500)
-    fb = cuckoo_insert(spec.empty(), f, spec)
-    fb2 = cuckoo_delete(fb, f.iloc[:100], spec)
-    still = cuckoo_contains(fb2, f.iloc[100:], spec)
-    gone = cuckoo_contains(fb2, f.iloc[:100], spec)
-    assert still.all()
-    assert gone.mean() < 0.02  # only residual FPs remain
-    assert isinstance(fb2, bytes) and len(fb2) == len(fb)
 
 
 def test_full_table_raises():

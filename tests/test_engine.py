@@ -892,11 +892,13 @@ def test_redirect_chain_cap(spark, tmp_path):
 
 
 def test_redirect_candidates_unit(spark):
-    """Column-level Scrapy semantics of spans.redirect_candidates:
-    301/307/308 + HEAD keep method/body, 302/303 downgrade to GET;
-    dont_redirect meta and handled statuses (_parse_ok) suppress;
-    redirect_times increments and the url trail accumulates."""
-    from spider_spark.operators.spans import redirect_candidates
+    """Column-level Scrapy redirect semantics of the engine's fused
+    candidate scan (spans.extract_candidates_raw, then
+    resolve_candidates): 301/307/308 + HEAD keep method/body, 302/303
+    downgrade to GET; dont_redirect meta and handled statuses
+    (_parse_ok) suppress; redirect_times increments and the url trail
+    accumulates. No row has out_links, so every candidate is a redirect."""
+    from spider_spark.operators.spans import extract_candidates_raw, resolve_candidates
 
     cols = (
         "crawl_id string, url string, method string, body string, "
@@ -904,6 +906,7 @@ def test_redirect_candidates_unit(spark):
         "attempt int, dont_filter boolean, discovered_seq long, "
         "status int, location string, _parse_ok boolean"
     )
+    page_cols = ", out_links array<string>, is_listing_page boolean, canonical_url string"
     rows = [
         # POST + 307 keeps method and body
         ("c", "http://h/a", "POST", "x=1", "s", {}, 0, 0, False, 1, 307, "/t1", False),
@@ -919,9 +922,12 @@ def test_redirect_candidates_unit(spark):
         # plain 200 never redirects
         ("c", "http://h/f", "GET", None, "s", {}, 0, 0, False, 6, 200, None, True),
     ]
+    fetched = spark.createDataFrame(
+        [r + ([], True, r[1]) for r in rows], cols + page_cols
+    )
     out = {
         r["parent_seq"]: r
-        for r in redirect_candidates(spark.createDataFrame(rows, cols)).collect()
+        for r in resolve_candidates(extract_candidates_raw(fetched)).collect()
     }
     assert set(out) == {1, 2, 5}
     assert (out[1]["method"], out[1]["body"]) == ("POST", "x=1")

@@ -62,8 +62,9 @@ def test_fingerprint_deterministic_and_method_sensitive(batch):
 
 
 def test_arrow_and_pandas_paths_agree():
-    from spider_spark.functions.urls import _canonicalize_arrow, _canonicalize_pandas
-
+    """The Arrow canonicalization against the golden model's independent
+    one on the edge cases (the name predates the removal of the pandas
+    fallback it was first compared with)."""
     cases = pd.Series(
         [
             "HTTP://Host.Example:80/a//b?z=1&a=2#frag",
@@ -75,7 +76,7 @@ def test_arrow_and_pandas_paths_agree():
             "http://h.example/p?a=1&a=0#x",
         ]
     )
-    assert _canonicalize_arrow(cases).tolist() == _canonicalize_pandas(cases).tolist()
+    assert canonicalize_series(cases).tolist() == [G.canonicalize(u) for u in cases]
 
 
 # ---------------------------------------------------------------------------
