@@ -491,8 +491,8 @@ def q_span_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import spider_spark.operators.spans as SP
 
-    deduped = arr.select(
-        "doc_id", SP.dedup_media_spans(spans_struct).alias("spans")
+    deduped = arr.select("doc_id", spans_struct.alias("spans")).selectExpr(
+        "doc_id", f"{SP.dedup_media_spans('spans')} AS spans"
     )
     return deduped.select(
         "doc_id", F.explode("spans").alias("s")

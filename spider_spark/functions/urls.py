@@ -13,9 +13,9 @@ Design notes (scale):
 * ``canonicalize_urls`` is a **pandas UDF** — one Arrow batch in, one
   out; the per-batch work is pyarrow.compute kernels plus a Python
   loop only over the distinct query strings. No row-at-a-time Spark UDFs.
-* ``fingerprint_col`` is **pure JVM** (``sha1(concat_ws(...))``) so the
+* ``fingerprint_sql`` is **pure JVM** (``sha1(concat_ws(...))``) so the
   hot dedup path stays inside whole-stage codegen.
-* ``host_bucket_col`` = ``pmod(xxhash64(host), n_buckets)`` — the crawl
+* ``host_bucket_sql`` = ``pmod(xxhash64(host), n_buckets)`` — the crawl
   state (seen-set, Bloom sidecars, politeness windows) is partitioned by
   this bucket; at 10^10 URLs each bucket holds ~10^10/n_buckets
   fingerprints and buckets are the unit of shuffle + checkpoint lineage.
@@ -213,50 +213,47 @@ def resolve_udf(base: pd.Series, href: pd.Series) -> pd.Series:
     return resolve_series(base, href)
 
 
-def host_col(canonical_url: Column) -> Column:
-    """Host (netloc without userinfo/port) from a canonical URL — JVM regex."""
-    return F.regexp_extract(canonical_url, r"^[a-z0-9+.-]+://(?:[^/@]*@)?([^/:?#]*)", 1)
+def host_sql(canonical_url: str) -> str:
+    """SQL expression: host (netloc without userinfo/port) of a
+    canonical URL — JVM regex."""
+    return f"regexp_extract({canonical_url}, '^[a-z0-9+.-]+://(?:[^/@]*@)?([^/:?#]*)', 1)"
 
 
-def fingerprint_col(method: Column, canonical_url: Column, body: Column) -> Column:
-    """sha1(method + canonical_url + body) — the RFPDupeFilter analog.
+def fingerprint_sql(method: str, canonical_url: str, body: str) -> str:
+    """SQL expression: sha1(method + canonical_url + body) — the
+    RFPDupeFilter analog.
 
     Stays JVM-side (codegen'd) so deduping 10^10 rows never crosses the
     Python boundary. NUL separators prevent ambiguity between fields.
     """
-    return F.sha1(
-        F.concat_ws(
-            "\x00",
-            F.upper(F.coalesce(method, F.lit("GET"))),
-            F.coalesce(canonical_url, F.lit("")),
-            F.coalesce(body, F.lit("")),
-        )
+    return (
+        f"sha1(concat_ws(char(0), upper(coalesce({method}, 'GET')), "
+        f"coalesce({canonical_url}, ''), coalesce({body}, '')))"
     )
 
 
-def host_bucket_col(host: Column, n_buckets: int) -> Column:
-    """Stable bucket id for crawl-state partitioning."""
-    return F.pmod(F.xxhash64(host), F.lit(n_buckets)).cast("int")
+def host_bucket_sql(host: str, n_buckets: int) -> str:
+    """SQL expression: stable bucket id for crawl-state partitioning."""
+    return f"CAST(pmod(xxhash64({host}), {n_buckets}) AS INT)"
 
 
 def with_url_identity(df, n_buckets: int, url_col: str = "url"):
     """Attach canonical_url, host, host_bucket, fingerprint columns.
 
     Two projections: the canonicalize UDF, then every column derived
-    from its output (the host expression appears twice and is
-    evaluated once by subexpression elimination)."""
+    from its output as SQL text (the host expression appears twice and
+    is evaluated once by subexpression elimination)."""
     cols = df.columns
-    df = df.withColumn("canonical_url", canonicalize_udf(F.col(url_col)))
-    canonical = F.col("canonical_url")
-    method = F.col("method") if "method" in cols else F.lit("GET")
-    body = F.col("body") if "body" in cols else F.lit(None).cast("string")
-    return df.withColumns(
-        {
-            "host": host_col(canonical),
-            "host_bucket": host_bucket_col(host_col(canonical), n_buckets),
-            "fingerprint": fingerprint_col(method, canonical, body),
-        }
-    )
+    method = "method" if "method" in cols else "'GET'"
+    body = "body" if "body" in cols else "CAST(NULL AS STRING)"
+    host = host_sql("canonical_url")
+    derived = {
+        "host": host,
+        "host_bucket": host_bucket_sql(host, n_buckets),
+        "fingerprint": fingerprint_sql(method, "canonical_url", body),
+    }
+    df = df.withColumn("canonical_url", canonicalize_udf(url_col))
+    return df.withColumns({c: F.expr(sql) for c, sql in derived.items()})
 
 # ---------------------------------------------------------------------------
 # Crawler-trap fence (round 4; beyond the reference — SURVEY.md §8).

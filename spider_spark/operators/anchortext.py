@@ -142,7 +142,7 @@ def anchor_profiles(edges: DataFrame, k: int = 10, n_salts: int = 16) -> DataFra
         key="dst",
         k_col="_k",
         n_salts=n_salts,
-        order=[F.desc("n_links"), F.asc("anchor")],
+        order="n_links DESC, anchor ASC",
         salt_source="anchor",
     )
     return top.select(

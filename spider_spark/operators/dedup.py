@@ -43,8 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # ---------------------------------------------------------------------------
 # exact path
@@ -58,20 +57,17 @@ def dedup_intra_batch(candidates: DataFrame) -> DataFrame:
     The window partitions by fingerprint — the same shuffle key the
     anti-join uses, so AQE can reuse exchange.
     """
-    filt = candidates.filter(~F.col("dont_filter"))
     keep = (
-        filt.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("fingerprint").orderBy(
-                    F.asc("discovered_seq"), F.asc("canonical_url")
-                )
-            ),
+        candidates.filter("NOT dont_filter")
+        .selectExpr(
+            "*",
+            "row_number() OVER (PARTITION BY fingerprint"
+            " ORDER BY discovered_seq, canonical_url) AS _rn",
         )
-        .filter(F.col("_rn") == 1)
+        .filter("_rn = 1")
         .drop("_rn")
     )
-    return keep.unionByName(candidates.filter(F.col("dont_filter")))
+    return keep.unionByName(candidates.filter("dont_filter"))
 
 
 def dedup_exact(candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
@@ -81,13 +77,12 @@ def dedup_exact(candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
     both keys; Catalyst plans a shuffled hash anti-join, AQE converts to
     broadcast when the seen slice is small (early waves).
     """
-    filt = candidates.filter(~F.col("dont_filter"))
-    fresh = filt.join(
-        url_seen.select("crawl_id", "fingerprint"),
+    fresh = candidates.filter("NOT dont_filter").join(
+        url_seen.selectExpr("crawl_id", "fingerprint"),
         on=["crawl_id", "fingerprint"],
         how="left_anti",
     )
-    return fresh.unionByName(candidates.filter(F.col("dont_filter")))
+    return fresh.unionByName(candidates.filter("dont_filter"))
 
 
 # ---------------------------------------------------------------------------

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urls import host_col, url_path_col
+from ..functions.urls import host_sql, url_path_col
 
 
 def _query_col(url: Column) -> Column:
@@ -86,10 +86,10 @@ def mine_rules(pairs: DataFrame, min_support: int = 2) -> DataFrame:
     """
     a, c = F.col("alias_url"), F.col("canonical_url")
     parsed = pairs.select(
-        host_col(a).alias("a_host"),
+        F.expr(host_sql("alias_url")).alias("a_host"),
         url_path_col(a).alias("a_path"),
         _params_col(a).alias("a_params"),
-        host_col(c).alias("c_host"),
+        F.expr(host_sql("canonical_url")).alias("c_host"),
         url_path_col(c).alias("c_path"),
         _params_col(c).alias("c_params"),
     )
@@ -178,7 +178,7 @@ def apply_rules(
     )
     out = (
         out.join(
-            F.broadcast(ha), host_col(u) == F.col("_ha_from"), "left"
+            F.broadcast(ha), F.expr(host_sql("_dust")) == F.col("_ha_from"), "left"
         )
         .withColumn(
             "_dust",
@@ -213,7 +213,7 @@ def apply_rules(
         F.when(kept_q == "", F.lit("")).otherwise(F.concat(F.lit("?"), kept_q)),
     )
     out = (
-        out.join(F.broadcast(sp), host_col(u) == F.col("_sp_host"), "left")
+        out.join(F.broadcast(sp), F.expr(host_sql("_dust")) == F.col("_sp_host"), "left")
         .withColumn(
             "_dust",
             F.when(
@@ -230,7 +230,7 @@ def apply_rules(
     )
     path = url_path_col(u)
     out = (
-        out.join(F.broadcast(sx), host_col(u) == F.col("_sx_host"), "left")
+        out.join(F.broadcast(sx), F.expr(host_sql("_dust")) == F.col("_sx_host"), "left")
         .withColumn(
             "_dust",
             F.when(

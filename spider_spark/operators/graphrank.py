@@ -8,7 +8,7 @@ crawls its own site with FIFO/priority ordering, SURVEY.md §2.2), but
 a 10^10-URL frontier needs a global importance signal to spend its
 politeness budget well; this module supplies it and
 :func:`rank_priorities` converts ranks into the engine's integer
-``priority`` column (``operators/politeness.dispatch_order`` sorts on
+``priority`` column (``operators/politeness.DISPATCH_ORDER`` sorts on
 it DESC).
 
 Scale shape (per power iteration):

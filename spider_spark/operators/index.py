@@ -1,4 +1,4 @@
-"""Inverted index + TF-IDF over the documents table.
+"""Inverted index over the documents table.
 
 The retrieval-side complement of the corpus-curation operators: a
 web-scale pipeline that crawls and curates text almost always also
@@ -45,31 +45,6 @@ def doc_frequencies(post: DataFrame) -> DataFrame:
     """(term, df) — number of documents containing the term. Map-side
     combinable count over the postings (one shuffle on term)."""
     return post.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-
-
-def tfidf(
-    documents: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(doc_id, term, tf, df, tfidf) with the standard smooth idf
-    ``ln((1+N)/(1+df)) + 1``. Float-valued — for oracle-checked
-    surfaces prefer :func:`top_terms`' integer ordering."""
-    post = postings(documents, text_col=text_col, id_col=id_col)
-    dfs = doc_frequencies(post)
-    n = documents.select(F.count("*").alias("_n"))
-    return (
-        post.join(dfs, "term")
-        .crossJoin(F.broadcast(n))
-        .select(
-            "doc_id",
-            "term",
-            "tf",
-            "df",
-            (
-                F.col("tf")
-                * (F.log((1 + F.col("_n")) / (1 + F.col("df"))) + F.lit(1.0))
-            ).alias("tfidf"),
-        )
-    )
 
 
 def top_terms(

@@ -32,7 +32,7 @@ touches a bounded set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import (
@@ -41,17 +41,18 @@ from ..schemas import (
 )
 
 
-def dispatch_order():
-    """Ordering contract within a host: priority DESC, discovery ASC."""
-    return [F.desc("priority"), F.asc("discovered_seq")]
+#: Ordering contract within a host: priority DESC, discovery ASC (SQL
+#: ORDER BY text; the ranking windows are SQL, parsed in one JVM call)
+DISPATCH_ORDER = "priority DESC, discovered_seq ASC"
 
 
-def host_budget_col(wave_seconds: float) -> F.Column:
-    """Per-host dispatch budget for one wave (columns from host_policy)."""
-    delay = F.coalesce(F.col("crawl_delay_s"), F.lit(DEFAULT_CRAWL_DELAY_S))
-    conc = F.coalesce(F.col("max_concurrency"), F.lit(DEFAULT_MAX_CONCURRENCY))
-    by_delay = F.floor(F.lit(float(wave_seconds)) / delay).cast("int")
-    return F.greatest(F.lit(1), F.least(conc, by_delay))
+def host_budget_sql(wave_seconds: float) -> str:
+    """SQL expression: per-host dispatch budget for one wave (columns
+    from host_policy)."""
+    return (
+        f"greatest(1, least(coalesce(max_concurrency, {DEFAULT_MAX_CONCURRENCY}), CAST(floor("
+        f"{float(wave_seconds)!r}D / coalesce(crawl_delay_s, {DEFAULT_CRAWL_DELAY_S!r}D)) AS INT)))"
+    )
 
 
 def topk_per_key_salted(
@@ -59,31 +60,29 @@ def topk_per_key_salted(
     key: str,
     k_col: str,
     n_salts: int = 16,
-    order=None,
+    order: str = DISPATCH_ORDER,
     salt_source: str = "fingerprint",
 ) -> DataFrame:
     """Exact per-key top-k with bounded skew.
 
     ``k_col`` is a per-row column holding that key's k (the politeness
-    budget), constant within a key. Lossless two-phase reduction as
-    described in the module docstring. Emits ``dispatch_rank`` (1-based
-    dispatch order within the key).
+    budget), constant within a key; ``order`` is SQL ORDER BY text.
+    Lossless two-phase reduction as described in the module docstring.
+    Emits ``dispatch_rank`` (1-based dispatch order within the key).
     """
-    order = order or dispatch_order()
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(salt_source)), F.lit(n_salts)).cast("int")
+        "_salt", F.expr(f"CAST(pmod(xxhash64({salt_source}), {n_salts}) AS INT)")
     )
-    w1 = Window.partitionBy(key, "_salt").orderBy(*order)
     pre = (
-        salted.withColumn("_rn1", F.row_number().over(w1))
-        .filter(F.col("_rn1") <= F.col(k_col))
+        salted.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {key}, _salt ORDER BY {order}) AS _rn1"
+        )
+        .filter(f"_rn1 <= {k_col}")
         .drop("_rn1", "_salt")
     )
-    w2 = Window.partitionBy(key).orderBy(*order)
-    return (
-        pre.withColumn("dispatch_rank", F.row_number().over(w2))
-        .filter(F.col("dispatch_rank") <= F.col(k_col))
-    )
+    return pre.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {key} ORDER BY {order}) AS dispatch_rank"
+    ).filter(f"dispatch_rank <= {k_col}")
 
 
 def robots_filter(frontier: DataFrame, host_policy: DataFrame, obey: bool) -> DataFrame:
@@ -124,7 +123,7 @@ def deferred_rows(pending: DataFrame, dispatched: DataFrame) -> DataFrame:
     the frontier's size (SIGMOD'21 *To Partition, or Not to
     Partition*)."""
     return pending.join(
-        F.broadcast(dispatched.select(*ROW_KEY)), on=ROW_KEY, how="left_anti"
+        F.broadcast(dispatched.selectExpr(*ROW_KEY)), on=ROW_KEY, how="left_anti"
     )
 
 
@@ -153,13 +152,15 @@ def schedule_wave(
     sort+limit plans as TakeOrderedAndProject (per-partition top-k +
     merge — no global sort).
     """
-    policy = host_policy.select("host", "crawl_delay_s", "max_concurrency")
-
-    enriched = pending.join(F.broadcast(policy), on="host", how="left")
-    enriched = enriched.withColumn("_budget", host_budget_col(wave_seconds))
-
+    policy = host_policy.selectExpr("host", "crawl_delay_s", "max_concurrency")
+    enriched = pending.join(F.broadcast(policy), on="host", how="left").withColumn(
+        "_budget", F.expr(host_budget_sql(wave_seconds))
+    )
     winners = topk_per_key_salted(enriched, key="host", k_col="_budget", n_salts=n_salts)
     winners = winners.drop("crawl_delay_s", "max_concurrency", "_budget")
     if global_cap is not None:
-        winners = winners.orderBy(*dispatch_order()).limit(global_cap)
+        winners = winners.sparkSession.sql(
+            f"SELECT * FROM {{w}} ORDER BY {DISPATCH_ORDER} LIMIT {int(global_cap)}",
+            w=winners,
+        )
     return winners

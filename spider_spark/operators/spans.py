@@ -30,35 +30,70 @@ from .. import schemas
 from ..functions.urls import resolve_udf
 
 
-def dedup_media_spans(spans_col: F.Column) -> F.Column:
-    """Drop media spans whose media_ref already appeared earlier in the array."""
-    return F.filter(
-        spans_col,
-        lambda s, i: (s["kind"] != F.lit("media"))
-        | ~F.exists(
-            F.slice(spans_col, F.lit(1), i),
-            lambda t: (t["kind"] == F.lit("media")) & (t["media_ref"] == s["media_ref"]),
-        ),
+def dedup_media_spans(spans: str) -> str:
+    """SQL expression: the spans array ``spans`` without the media
+    spans whose media_ref already appeared earlier in the array."""
+    return (
+        f"filter({spans}, (s, i) -> s.kind != 'media' OR NOT exists("
+        f"slice({spans}, 1, i), t -> t.kind = 'media' AND t.media_ref = s.media_ref))"
     )
 
 
-def _doc_key() -> F.Column:
-    """Effective document id: a meta-carried ``doc_id`` (fragment of a
-    multi-page item — the parent threaded it, ``15walmer.py:112``) wins
-    over the page's own canonical-url-derived id."""
-    return F.coalesce(
-        F.element_at(F.coalesce(F.col("meta"), F.create_map()), "doc_id"),
-        F.regexp_replace(F.col("canonical_url"), r"^[a-z0-9+.-]+://", ""),
-    )
+#: Effective document id: a meta-carried ``doc_id`` (fragment of a
+#: multi-page item — the parent threaded it, ``15walmer.py:112``) wins
+#: over the page's own canonical-url-derived id.
+DOC_KEY = (
+    "coalesce(element_at(coalesce(meta, map()), 'doc_id'), "
+    "regexp_replace(canonical_url, '^[a-z0-9+.-]+://', ''))"
+)
 
+#: Deterministic content validator (the ETag analog): sha1 of the RAW
+#: page spans' JSON. The synthetic fetch computes the same expression
+#: server-side, so ``If-None-Match == PAGE_ETAG`` is the conditional-GET
+#: revalidation check; a span change implies a new etag by construction.
+PAGE_ETAG = "sha1(to_json(struct(spans)))"
 
-def page_etag(spans_col: str = "spans") -> F.Column:
-    """Deterministic content validator (the ETag analog): sha1 of the
-    RAW page spans' JSON. The synthetic fetch computes the same
-    expression server-side, so ``If-None-Match == page_etag`` is the
-    conditional-GET revalidation check; a span change implies a new
-    etag by construction."""
-    return F.sha1(F.to_json(F.struct(spans_col)))
+# The wave-invariant projections below are SQL text: the JVM parses
+# each string in one call, where the equivalent ``F.*`` Column tree
+# costs a py4j round trip per node on every wave.
+_HAS_LINKS = "size(coalesce(out_links, array())) > 0"
+
+_DOCUMENT_COLS = [
+    f"{DOC_KEY} AS doc_id",
+    f"{dedup_media_spans('spans')} AS spans",
+    "source",
+    "host",
+    "wave",
+    "discovered_seq AS position",
+    "map_concat(map_filter(coalesce(meta, map()), "
+    "(k, v) -> k NOT IN ('__etag', 'if_none_match')), "
+    f"map('__etag', {PAGE_ETAG})) AS attrs",
+    f"{_HAS_LINKS} AS has_continuation",
+]
+
+# child requests never inherit the parent's conditional-GET validator
+# (If-None-Match is per-resource); children of a detail page thread the
+# parent's doc key (multi-page assembly)
+_LINK_META = "map_filter(coalesce(meta, map()), (k, v) -> k != 'if_none_match')"
+_CHILD_META = (
+    f"CASE WHEN is_listing_page THEN {_LINK_META} ELSE map_concat("
+    f"map_filter({_LINK_META}, (k, v) -> k != 'doc_id'), map('doc_id', {DOC_KEY})) END"
+)
+
+#: the pre-resolution candidate row after the explode, up to ``link_pos``
+_RAW_LINK_COLS = [
+    "crawl_id",
+    "base_url",
+    "href",
+    "method",
+    "body",
+    "source",
+    "meta",
+    "priority",
+    "0 AS attempt",
+    "dont_filter",
+    "parent_seq",
+]
 
 
 def extract_documents(fetched_ok: DataFrame) -> DataFrame:
@@ -72,28 +107,9 @@ def extract_documents(fetched_ok: DataFrame) -> DataFrame:
     validator so a later incremental recrawl can send it back as
     If-None-Match (engine.recrawl_candidates(conditional=True)).
     """
-    details = fetched_ok.filter(
-        (~F.col("is_listing_page")) & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
-    )
-    attrs = F.map_concat(
-        F.map_filter(
-            F.coalesce(F.col("meta"), F.create_map()),
-            lambda k, _: ~k.isin("__etag", "if_none_match"),
-        ),
-        F.create_map(F.lit("__etag"), page_etag()),
-    )
-    return details.select(
-        _doc_key().alias("doc_id"),
-        dedup_media_spans(F.col("spans")).alias("spans"),
-        F.col("source"),
-        F.col("host"),
-        F.col("wave"),
-        F.col("discovered_seq").alias("position"),
-        attrs.alias("attrs"),
-        (F.size(F.coalesce(F.col("out_links"), F.array())) > 0).alias(
-            "has_continuation"
-        ),
-    )
+    return fetched_ok.filter(
+        "NOT is_listing_page AND size(coalesce(spans, array())) > 0"
+    ).selectExpr(*_DOCUMENT_COLS)
 
 
 def renumber_spans(spans_col: F.Column) -> F.Column:
@@ -152,7 +168,7 @@ def merge_document_fragments(raw: DataFrame) -> DataFrame:
     )
     merged = merged.select(
         "doc_id",
-        renumber_spans(dedup_media_spans(F.col("spans_raw"))).alias("spans"),
+        renumber_spans(F.expr(dedup_media_spans("spans_raw"))).alias("spans"),
         "source", "host", "wave", "position", "attrs",
     )
     return plain.select(out_cols).unionByName(merged.select(out_cols))
@@ -170,43 +186,21 @@ def extract_links_raw(fetched_ok: DataFrame) -> DataFrame:
     doc_id in meta, so their spans merge back into the parent's
     document (multi-page item assembly, ``15walmer.py:112``).
     """
-    listings = fetched_ok.filter(F.size(F.coalesce(F.col("out_links"), F.array())) > 0)
-    # child requests never inherit the parent's conditional-GET
-    # validator — If-None-Match is per-resource
-    base_meta = F.map_filter(
-        F.coalesce(F.col("meta"), F.create_map()),
-        lambda k, _: k != F.lit("if_none_match"),
-    )
-    child_meta = F.when(
-        F.col("is_listing_page"), base_meta
-    ).otherwise(
-        F.map_concat(
-            F.map_filter(base_meta, lambda k, v: k != F.lit("doc_id")),
-            F.create_map(F.lit("doc_id"), _doc_key()),
+    return (
+        fetched_ok.filter(_HAS_LINKS)
+        .selectExpr(
+            "crawl_id",
+            "url AS base_url",
+            "source",
+            f"{_CHILD_META} AS meta",
+            "priority",
+            "discovered_seq AS parent_seq",
+            "posexplode(out_links) AS (link_pos, href)",
+            "'GET' AS method",
+            "CAST(NULL AS STRING) AS body",
+            "false AS dont_filter",
         )
-    )
-    exploded = listings.select(
-        F.col("crawl_id"),
-        F.col("url").alias("base_url"),
-        F.col("source"),
-        child_meta.alias("meta"),
-        F.col("priority"),
-        F.col("discovered_seq").alias("parent_seq"),
-        F.posexplode(F.col("out_links")).alias("link_pos", "href"),
-    )
-    return exploded.select(
-        "crawl_id",
-        "base_url",
-        "href",
-        F.lit("GET").alias("method"),
-        F.lit(None).cast("string").alias("body"),
-        "source",
-        "meta",
-        "priority",
-        F.lit(0).alias("attempt"),
-        F.lit(False).alias("dont_filter"),
-        "parent_seq",
-        "link_pos",
+        .selectExpr(*_RAW_LINK_COLS, "link_pos")
     )
 
 
@@ -227,10 +221,9 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
     Every other column passes through, ``discovered_seq`` included: the
     engine numbers the raw rows with :func:`assign_seq` first, so the
     range sort's sampling job never re-runs this UDF."""
-    return raw.select(
-        "crawl_id",
-        resolve_udf(F.col("base_url"), F.col("href")).alias("url"),
-        *[c for c in raw.columns if c not in ("crawl_id", "base_url", "href")],
+    rest = [c for c in raw.columns if c not in ("crawl_id", "base_url", "href")]
+    return raw.withColumn("url", resolve_udf("base_url", "href")).selectExpr(
+        "crawl_id", "url", *rest
     )
 
 
@@ -284,94 +277,42 @@ def extract_candidates_raw(
     scan restores the pre-redirect job count; redirect support now
     costs one CASE per column instead of a plan branch.
     """
-    parse_ok = (
-        F.col("_parse_ok") if "_parse_ok" in fetched.columns
-        else F.col("status") == 200
-    )
-    base_meta = F.coalesce(F.col("meta"), F.create_map())
-    dont_redirect = ~F.lower(
-        F.coalesce(F.element_at(base_meta, "dont_redirect"), F.lit(""))
-    ).isin("", "0", "false")
-    times = F.coalesce(
-        F.element_at(base_meta, "redirect_times").cast("int"), F.lit(0)
-    )
+    parse_ok = "_parse_ok" if "_parse_ok" in fetched.columns else "status = 200"
+    base_meta = "coalesce(meta, map())"
+    times = f"coalesce(CAST(element_at({base_meta}, 'redirect_times') AS INT), 0)"
+    codes = ", ".join(map(str, schemas.REDIRECT_HTTP_CODES))
     is_redir = (
-        F.col("status").isin(schemas.REDIRECT_HTTP_CODES)
-        & F.col("location").isNotNull()
-        & ~parse_ok
-        & ~dont_redirect
-        & (times < F.lit(max_times))
-    )
-    has_links = parse_ok & (
-        F.size(F.coalesce(F.col("out_links"), F.array())) > 0
-    )
-    # link-side meta: never inherit the conditional-GET validator;
-    # detail pages thread the parent's doc key (multi-page assembly)
-    link_meta_base = F.map_filter(
-        base_meta, lambda k, _: k != F.lit("if_none_match")
-    )
-    child_meta = F.when(F.col("is_listing_page"), link_meta_base).otherwise(
-        F.map_concat(
-            F.map_filter(link_meta_base, lambda k, v: k != F.lit("doc_id")),
-            F.create_map(F.lit("doc_id"), _doc_key()),
-        )
+        f"(status IN ({codes}) AND location IS NOT NULL AND NOT ({parse_ok})"
+        f" AND lower(coalesce(element_at({base_meta}, 'dont_redirect'), ''))"
+        f" IN ('', '0', 'false') AND {times} < {max_times})"
     )
     # redirect-side meta: hop counter + '|'-joined trail
-    trail = F.element_at(base_meta, "redirect_urls")
-    redirect_meta = F.map_concat(
-        F.map_filter(
-            base_meta, lambda k, _: ~k.isin("redirect_times", "redirect_urls")
-        ),
-        F.create_map(
-            F.lit("redirect_times"), (times + 1).cast("string"),
-            F.lit("redirect_urls"),
-            F.when(trail.isNull(), F.col("url")).otherwise(
-                F.concat(trail, F.lit("|"), F.col("url"))
-            ),
-        ),
+    trail = f"element_at({base_meta}, 'redirect_urls')"
+    redirect_meta = (
+        f"map_concat(map_filter({base_meta}, "
+        "(k, v) -> k NOT IN ('redirect_times', 'redirect_urls')), "
+        f"map('redirect_times', CAST({times} + 1 AS STRING), 'redirect_urls', "
+        f"CASE WHEN {trail} IS NULL THEN url ELSE concat({trail}, '|', url) END))"
     )
-    keep_method = F.col("status").isin(301, 307, 308) | (
-        F.upper(F.col("method")) == "HEAD"
-    )
-    hrefs = F.when(is_redir, F.array(F.col("location"))).otherwise(
-        F.col("out_links")
-    )
-    exploded = fetched.filter(has_links | is_redir).select(
-        "crawl_id",
-        F.col("url").alias("base_url"),
-        "source",
-        F.when(is_redir, redirect_meta).otherwise(child_meta).alias("meta"),
-        F.when(is_redir, F.col("priority") + F.lit(priority_adjust))
-        .otherwise(F.col("priority"))
-        .alias("priority"),
-        F.when(is_redir & keep_method, F.col("method"))
-        .otherwise(F.lit("GET"))
-        .alias("method"),
-        F.when(is_redir & keep_method, F.col("body"))
-        .otherwise(F.lit(None).cast("string"))
-        .alias("body"),
-        F.when(is_redir, F.col("dont_filter"))
-        .otherwise(F.lit(False))
-        .alias("dont_filter"),
-        is_redir.alias("_redir"),
-        F.col("discovered_seq").alias("parent_seq"),
-        F.posexplode(hrefs).alias("pos", "href"),
-    )
-    return exploded.select(
-        "crawl_id",
-        "base_url",
-        "href",
-        "method",
-        "body",
-        "source",
-        "meta",
-        "priority",
-        F.lit(0).alias("attempt"),
-        "dont_filter",
-        "parent_seq",
-        F.when(F.col("_redir"), F.lit(-1))
-        .otherwise(F.col("pos"))
-        .alias("link_pos"),
+    keep_method = f"{is_redir} AND (status IN (301, 307, 308) OR upper(method) = 'HEAD')"
+    return (
+        fetched.filter(f"(({parse_ok}) AND {_HAS_LINKS}) OR {is_redir}")
+        .selectExpr(
+            "crawl_id",
+            "url AS base_url",
+            "source",
+            f"CASE WHEN {is_redir} THEN {redirect_meta} ELSE {_CHILD_META} END AS meta",
+            f"CASE WHEN {is_redir} THEN priority + {priority_adjust} ELSE priority END"
+            " AS priority",
+            f"CASE WHEN {keep_method} THEN method ELSE 'GET' END AS method",
+            f"CASE WHEN {keep_method} THEN body ELSE CAST(NULL AS STRING) END AS body",
+            f"CASE WHEN {is_redir} THEN dont_filter ELSE false END AS dont_filter",
+            f"{is_redir} AS _redir",
+            "discovered_seq AS parent_seq",
+            f"posexplode(CASE WHEN {is_redir} THEN array(location) ELSE out_links END)"
+            " AS (pos, href)",
+        )
+        .selectExpr(*_RAW_LINK_COLS, "CASE WHEN _redir THEN -1 ELSE pos END AS link_pos")
     )
 
 
@@ -456,5 +397,5 @@ def assign_seq(df: DataFrame, order_cols: list, base: int) -> DataFrame:
     """
     ordered = df.orderBy(*order_cols)
     return ordered.withColumn(
-        "discovered_seq", F.lit(base) + F.monotonically_increasing_id() + F.lit(1)
+        "discovered_seq", F.expr(f"{base} + monotonically_increasing_id() + 1")
     )

@@ -14,13 +14,19 @@ documents, fetched rows) are read from the parquet footers of the
 files just written, and only then does the manifest name the wave.
 Counters read from finished files cannot race the writes.
 
-A wave ranks politeness once: the fetched rows are cached, and the
-frontier write defers the pending rows missing from that cache
+Each wave cuts its lineage twice with an eager local checkpoint: once
+at the fetched rows and once at the admitted rows. The wave's schedule,
+fetch, parse and admission therefore run once, before the writes, and
+every write plans over a one-node scan; the nondeterministic
+``assign_seq`` ids are computed exactly once. The politeness ranking
+runs once too: the frontier write defers the pending rows missing from
+the fetched checkpoint
 (:func:`~spider_spark.operators.politeness.deferred_rows`). New links
 are numbered on their raw rows, before the resolve UDF and the link
 filters, so seqs have gaps where links were dropped. Snapshot reads
-pass their schema, and the wave-invariant Column expressions are built
-once per crawl, before the loop.
+pass their schema. The engine's wave-invariant Column expressions are
+built once per crawl, before the loop, and the operators it calls write
+theirs as SQL text, so a wave's plan costs few py4j round trips.
 
 Retry semantics: failed statuses from the reference's RETRY_HTTP_CODES
 requeue with ``attempt+1`` up to RETRY_TIMES (``settings.py:98-99``).
@@ -197,7 +203,8 @@ class CrawlEngine:
     def _admit(self, candidates: DataFrame, wave: int) -> tuple[DataFrame, dict]:
         """identity -> intra-batch dedup -> seen-set dedup.
 
-        Returns ``(admitted, writes)``: ``admitted`` is persisted, and
+        Returns ``(admitted, writes)``: ``admitted`` is an eager local
+        checkpoint (admission runs once, whatever reads it), and
         ``writes`` holds the wave's seen-set tables (``url_seen``, plus
         ``url_seen_filters`` for the Bloom/cuckoo backends) for
         :meth:`_commit` to write beside the wave's other tables.
@@ -238,18 +245,15 @@ class CrawlEngine:
             filters = self.store.read_table(
                 "url_seen_filters", "latest", schema=schemas.URL_SEEN_FILTERS
             )
-            admitted = D.dedup_filter(cand, filters, self.seen_filter).persist()
+            admitted = D.dedup_filter(cand, filters, self.seen_filter).localCheckpoint()
             writes["url_seen_filters"] = D.updated_filters(
                 admitted, filters, self.seen_filter, wave
             )
         else:
             seen = self.store.read_table("url_seen", "append", schema=schemas.URL_SEEN)
-            admitted = D.dedup_exact(cand, seen).persist()
-        writes["url_seen"] = admitted.filter(~F.col("dont_filter")).select(
-            "crawl_id",
-            "fingerprint",
-            "host_bucket",
-            F.lit(wave).alias("wave"),
+            admitted = D.dedup_exact(cand, seen).localCheckpoint()
+        writes["url_seen"] = admitted.filter("NOT dont_filter").selectExpr(
+            "crawl_id", "fingerprint", "host_bucket", f"{wave} AS wave"
         )
         return admitted, writes
 
@@ -290,7 +294,6 @@ class CrawlEngine:
                 )
                 writes["frontier"] = pending.unionByName(fresh.select(*pending.columns))
                 n_pending, next_base, _, _ = self._commit(wave, writes, next_base)
-                admitted.unpersist()
                 pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
                 wave += 1
         else:
@@ -310,7 +313,6 @@ class CrawlEngine:
             admitted, writes = self._admit(_seed_candidates(seeds, cfg.crawl_id, 0, 0), 0)
             writes["frontier"] = admitted.drop("crawl_delay_s")
             n_pending, next_base, _, _ = self._commit(0, writes, 0)
-            admitted.unpersist()
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave = 1
 
@@ -365,25 +367,19 @@ class CrawlEngine:
                     & (F.col("status") != 304)  # revalidation, not failure
                 ).cast("long")
             ).alias("retried"),
-            F.sum(is_doc.cast("long")).alias("_docs_part"),
         ]
-        # the METRICS columns that are not bucket aggregates, over the
-        # bucket rows joined with the wave's candidate count (_cand_n);
-        # the loop sets wave and wall_ms. Global docs_emitted via a
-        # per-crawl window over the GROUPED output — bounded by
-        # n_buckets (a config constant, not data size), so the
-        # one-partition-per-crawl window is safe at any scale
-        whole_crawl = Window.partitionBy("crawl_id").rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
+        # the wave-global counters, one row per crawl, broadcast onto
+        # the bucket rows: candidates admitted and documents emitted
+        cand_n = F.count(F.lit(1)).alias("_cand_n")
+        docs_n = F.sum(is_doc.cast("long")).alias("_docs_n")
+        # the METRICS columns that are not bucket aggregates; the loop
+        # sets wave and wall_ms
         metrics_row = {
             "candidates": F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
             "deduped_dropped": F.lit(0).cast("long"),
             "robots_dropped": F.lit(0).cast("long"),
             "scheduled": F.col("fetched"),
-            "docs_emitted": F.coalesce(
-                F.sum("_docs_part").over(whole_crawl), F.lit(0)
-            ).cast("long"),
+            "docs_emitted": F.coalesce(F.col("_docs_n"), F.lit(0)).cast("long"),
         }
         metrics_cols = {c: metrics_row.get(c, F.col(c)).alias(c) for c in METRICS_COLS}
         while wave <= cfg.max_waves and n_pending:
@@ -399,19 +395,20 @@ class CrawlEngine:
                 fetched = fetched.join(
                     F.broadcast(self.status_rules), on="source", how="left"
                 )
-            # persisted: the documents, frontier, metrics (and links /
-            # revalidations) writes all read the fetched rows
+            # checkpointed: the documents, frontier, metrics (and links /
+            # revalidations) writes all read the fetched rows, and each
+            # plans over a scan of them instead of the schedule and fetch
             fetched = (
                 fetched.withColumn("_parse_ok", parse_ok)
                 .drop("handle_httpstatus")
-                .persist()
+                .localCheckpoint()
             )
             # the politeness ranking runs once per wave: the rows it
-            # dispatched are in the fetched cache, and the frontier
+            # dispatched are in the fetched checkpoint, and the frontier
             # write defers every pending row that is not
             deferred = P.deferred_rows(pending, fetched)
 
-            ok = fetched.filter(F.col("_parse_ok"))
+            ok = fetched.filter("_parse_ok")
             retry = fetched.filter(retry_due).select(*retry_row)
 
             docs = S.extract_documents(ok)
@@ -504,35 +501,29 @@ class CrawlEngine:
                     "source",
                     F.col("meta"),
                 )
-            # the per-bucket metrics rows come from the one query that
-            # scans all fetched rows anyway; the global docs_emitted
-            # column is derived IN-PLAN by re-aggregating the tiny
-            # grouped output, and `candidates` likewise from admitted's
-            # cache (a broadcast join) — no driver literal, so the
-            # metrics write submits concurrently with the frontier
-            # write (round 5, BENCH/CRAWL_LOOP.md: serializing it
-            # behind the frontier write was the r4 regression). If the
-            # metrics job reaches admitted before the frontier write
-            # has populated its cache, it may compute the admission
-            # lineage a second time — correct, only duplicate work.
-            cand_counts = admitted.groupBy("crawl_id").agg(
-                F.count(F.lit(1)).alias("_cand_n")
-            )
             # the overridden keys keep their place: METRICS column order
+            wall_ms = int((time.monotonic() - t0) * 1000)
             row = {
                 **metrics_cols,
-                "wave": F.lit(wave).alias("wave"),
-                "wall_ms": F.lit(int((time.monotonic() - t0) * 1000)).cast("long").alias("wall_ms"),
+                "wave": F.expr(f"{wave} AS wave"),
+                "wall_ms": F.expr(f"CAST({wall_ms} AS BIGINT) AS wall_ms"),
             }
+            # the per-bucket metrics rows, with the wave-global
+            # counters derived IN-PLAN from the fetched and admitted
+            # checkpoints (broadcast joins) — no driver literal, so the
+            # metrics write submits concurrently with the frontier
+            # write (round 5, BENCH/CRAWL_LOOP.md: serializing it
+            # behind the frontier write was the r4 regression).
             metrics = (
                 fetched.groupBy("crawl_id", "host_bucket")
                 .agg(*bucket_aggs)
-                .join(F.broadcast(cand_counts), "crawl_id", "left")
+                .join(F.broadcast(admitted.groupBy("crawl_id").agg(cand_n)), "crawl_id", "left")
+                .join(F.broadcast(fetched.groupBy("crawl_id").agg(docs_n)), "crawl_id", "left")
                 .select(*row.values())
             )
             writes = {
                 "documents": docs,
-                "frontier": deferred.unionByName(admitted.select(*FRONTIER_COLS))
+                "frontier": deferred.unionByName(admitted.selectExpr(*FRONTIER_COLS))
                 .unionByName(retry),
                 **seen_writes,
                 "links": link_edges,
@@ -564,8 +555,6 @@ class CrawlEngine:
             totals["fetched"] += n_fetched
             totals["docs"] += n_docs
             totals["waves"] += 1
-            fetched.unpersist()
-            admitted.unpersist()
             # re-read pending from the committed snapshot: truncates lineage
             # (the iterative-loop analog of checkpointing)
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
@@ -577,9 +566,10 @@ class CrawlEngine:
         of seeding, injection and the crawl loop.
 
         ``writes`` maps table -> DataFrame (``None``: not written this
-        wave). The writes are independent jobs over persisted inputs,
-        submitted at once from driver threads so Spark schedules them
-        in one pool and their fixed per-job latencies overlap; a write
+        wave). The writes are independent jobs over checkpointed
+        inputs, each a scan, a narrow step and the write, submitted at
+        once from driver threads so Spark schedules them in one pool
+        and their fixed per-job latencies overlap; a write
         that hangs shows up here, in its future. Once all are written,
         the wave's counters are read back from the staged files'
         parquet footers (:meth:`SnapshotStore.wave_stats`) — files that
@@ -625,8 +615,6 @@ class CrawlEngine:
         )
         merged = S.merge_document_fragments(raw)
         if latest_only:
-            from pyspark.sql import Window
-
             w = Window.partitionBy("doc_id").orderBy(
                 F.desc("wave"), F.desc("position")
             )
@@ -657,8 +645,6 @@ class CrawlEngine:
         docs = self.documents().withColumn(
             "_digest", F.sha1(F.to_json(F.col("spans")))
         )
-        from pyspark.sql import Window
-
         w = Window.partitionBy("doc_id").orderBy(F.desc("wave"), F.desc("position"))
         latest = (
             docs.withColumn("_gen", F.row_number().over(w))

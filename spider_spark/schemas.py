@@ -136,11 +136,14 @@ URL_SEEN_FILTERS = T.StructType(
 )
 
 #: Per-(wave, host_bucket) lineage/metrics rows. ``wall_ms`` measures
-#: wave start -> metrics-plan build; since round 5 the metrics write is
-#: submitted CONCURRENTLY with the other wave writes (candidates is
-#: derived in-plan), so wall_ms covers schedule+fetch+parse but NOT the
-#: write phase — do not compare against pre-round-5 values, which
-#: included the frontier write (they blocked on its observation first).
+#: wave start -> metrics-plan build. The fetched and admitted rows are
+#: eager checkpoints made before that point, so wall_ms covers running
+#: schedule, fetch, parse and admission as well as building the plan,
+#: but NOT the write phase: the metrics write is submitted concurrently
+#: with the other wave writes (candidates is derived in-plan). Do not
+#: compare against earlier values: before round 5 they included the
+#: frontier write, and until the checkpoints they timed plan building
+#: only.
 METRICS = T.StructType(
     [
         T.StructField("crawl_id", T.StringType(), False),

@@ -37,7 +37,7 @@ N_USER_AGENTS = 63  # pool size, reference user_agents.py:3-69
 def with_user_agent(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "user_agent",
-        F.concat(F.lit("ua-"), F.pmod(F.xxhash64("fingerprint"), F.lit(N_USER_AGENTS)).cast("string")),
+        F.expr(f"concat('ua-', CAST(pmod(xxhash64(fingerprint), {N_USER_AGENTS}) AS STRING))"),
     )
 
 
@@ -85,43 +85,33 @@ def fetch_synthetic(dispatch: DataFrame, web_canonical: DataFrame) -> DataFrame:
     """Left join the dispatch set to the web; missing page => 404.
 
     Conditional GET: a request whose ``meta['if_none_match']`` equals
-    the page's current content validator (``spans.page_etag`` — the
+    the page's current content validator (``spans.PAGE_ETAG`` — the
     server computes the same expression) gets **304 Not Modified** with
     no body: spans nulled, no out_links. Only successful (200) pages
     evaluate the conditional, like a real origin server."""
     fetched = with_user_agent(dispatch).join(
         web_canonical, on="canonical_url", how="left"
     )
+    no_links = "CAST(array() AS array<string>)"
+    cols = {
+        "status": "coalesce(status, 404)",
+        "out_links": f"coalesce(out_links, {no_links})",
+        "is_listing_page": "coalesce(is_listing_page, false)",
+    }
     if "meta" in dispatch.columns:
-        from ..operators.spans import page_etag
+        from ..operators.spans import PAGE_ETAG
 
-        inm = F.element_at(
-            F.coalesce(F.col("meta"), F.create_map()), "if_none_match"
-        )
-        not_modified = (
-            inm.isNotNull() & (F.col("status") == 200) & (inm == page_etag())
-        )
+        inm = "element_at(coalesce(meta, map()), 'if_none_match')"
+        not_modified = f"({inm} IS NOT NULL AND status = 200 AND {inm} = {PAGE_ETAG})"
         # one projection: every expression reads the joined row, so
         # ``not_modified`` sees the page's own status
-        return fetched.withColumns(
-            {
-                "status": F.when(not_modified, F.lit(304)).otherwise(
-                    F.coalesce(F.col("status"), F.lit(404))
-                ),
-                "spans": F.when(~not_modified, F.col("spans")),
-                "out_links": F.when(not_modified, F.array().cast("array<string>")).otherwise(
-                    F.coalesce(F.col("out_links"), F.array().cast("array<string>"))
-                ),
-                "is_listing_page": F.coalesce(F.col("is_listing_page"), F.lit(False)),
-            }
-        )
-    return fetched.withColumns(
-        {
-            "status": F.coalesce(F.col("status"), F.lit(404)),
-            "out_links": F.coalesce(F.col("out_links"), F.array().cast("array<string>")),
-            "is_listing_page": F.coalesce(F.col("is_listing_page"), F.lit(False)),
+        cols = {
+            "status": f"CASE WHEN {not_modified} THEN 304 ELSE {cols['status']} END",
+            "spans": f"CASE WHEN NOT {not_modified} THEN spans END",
+            "out_links": f"CASE WHEN {not_modified} THEN {no_links} ELSE {cols['out_links']} END",
+            "is_listing_page": cols["is_listing_page"],
         }
-    )
+    return fetched.withColumns({c: F.expr(sql) for c, sql in cols.items()})
 
 
 def fetch_http(

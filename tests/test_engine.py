@@ -1044,14 +1044,14 @@ def test_fetch_synthetic_not_modified_drops_body(spark):
     """A request whose If-None-Match equals the page's etag comes back
     304 with null spans and no out_links; a request with a stale
     validator gets the 200 page with its spans and out_links."""
-    from spider_spark.operators.spans import page_etag
+    from spider_spark.operators.spans import PAGE_ETAG
     from spider_spark.sources.fetch import canonical_web, fetch_synthetic
 
     spec = WebSpec(seed=7, n_hosts=1, pages_per_host=1, details_per_page=2, retry_rate=0.0)
     web = canonical_web(web_df(spark, spec))
     pages = (
         web.filter(F.col("status") == 200)
-        .select("canonical_url", page_etag().alias("etag"), "spans", "out_links")
+        .select("canonical_url", F.expr(PAGE_ETAG).alias("etag"), "spans", "out_links")
         .collect()
     )
     assert any(p["spans"] for p in pages) and any(p["out_links"] for p in pages)
@@ -1432,6 +1432,62 @@ def test_wave_metrics_match_stored_tables(engine_run):
         assert r["candidates"] == seen_by_wave.get(w, 0), f"wave {w} candidates"
         assert r["docs_emitted"] == docs_by_wave.get(w, 0), f"wave {w} docs"
         assert r["fetched"] > 0, f"wave {w} fetched"
+
+
+def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monkeypatch):
+    """Each wave's lineage is cut at the fetched and admitted rows, so
+    every table write plans over checkpoint scans: no write plan holds
+    the politeness or dedup windows, a Python UDF (ArrowEvalPython) or
+    the assign_seq range sort. And the driver builds a loop wave's plan
+    in at most 600 main-thread py4j round trips: the operators write
+    their wave-invariant expressions as SQL text, and the engine builds
+    its own once per crawl."""
+    import threading
+
+    import py4j.clientserver as CS
+
+    plans = []
+
+    class PlanRecordingStore(SnapshotStore):
+        def write_wave(self, table, wave, df):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            plans.append((table, wave, plan))
+            super().write_wave(table, wave, df)
+
+    main = threading.main_thread()
+    n_calls = [0]
+    after_commit = []  # main-thread calls so far, after each wave commit
+    send, commit = CS.ClientServerConnection.send_command, CrawlEngine._commit
+
+    def counting_send(self, *args, **kwargs):
+        n_calls[0] += threading.current_thread() is main
+        return send(self, *args, **kwargs)
+
+    def marking_commit(self, *args, **kwargs):
+        out = commit(self, *args, **kwargs)
+        after_commit.append(n_calls[0])
+        return out
+
+    monkeypatch.setattr(CS.ClientServerConnection, "send_command", counting_send)
+    monkeypatch.setattr(CrawlEngine, "_commit", marking_commit)
+    spec = WebSpec(seed=7, n_hosts=3, pages_per_host=2, details_per_page=3)
+    store = PlanRecordingStore(spark, str(tmp_path / "store"))
+    eng = CrawlEngine(
+        spark, web_df(spark, spec), host_policy_df(spark, spec), store, CrawlConfig(max_waves=3)
+    )
+    totals = eng.run(seeds_df(spark, spec))
+    eng.close()
+    assert totals["waves"] == 3 and totals["fetched"] > 0
+
+    assert {t for t, _, _ in plans} >= {"documents", "frontier", "metrics", "url_seen"}
+    for table, wave, plan in plans:
+        for node in ("Window", "ArrowEvalPython", "rangepartitioning"):
+            assert node not in plan, f"wave {wave} {table} write plans a {node}:\n{plan}"
+    # wave 1 also builds the crawl's once-per-crawl expressions; waves
+    # 2 and 3 are plain loop waves
+    per_wave = [b - a for a, b in zip(after_commit[1:], after_commit[2:])]
+    assert len(per_wave) == 2
+    assert max(per_wave) <= 600, per_wave
 
 
 def test_crawl_to_warc_cdx_replay_end_to_end(spark, tmp_path):

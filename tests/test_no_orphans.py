@@ -32,7 +32,6 @@ KEPT = {
     "xpath_re": "the .re() analog of the xpath selector column",
     "sitemaps_df": "synthetic sitemap input of a sitemap-seeded crawl",
     "sitemap_seeds_df": "synthetic seeds matching sitemaps_df",
-    "tfidf": "float TF-IDF weights of the inverted index beside top_terms",
 }
 
 

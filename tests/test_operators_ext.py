@@ -1887,12 +1887,6 @@ def test_inverted_index_postings_and_top_terms(spark):
     assert top[3] == ("date", 1, 1)
     assert 4 not in top
 
-    tf = {(r["doc_id"], r["term"]): r["tfidf"] for r in IX.tfidf(docs).collect()}
-    # smooth idf: ln((1+N)/(1+df)) + 1, N=4
-    import math
-    assert abs(tf[(1, "apple")] - 2 * (math.log(5 / 2) + 1)) < 1e-9
-    assert abs(tf[(3, "cherry")] - 1 * (math.log(5 / 4) + 1)) < 1e-9
-
 
 def test_registered_domain_psl_algorithm(spark):
     """publicsuffix.org algorithm over the builtin PSL: normal and

@@ -7,8 +7,8 @@ from pyspark.sql import functions as F
 
 from spider_spark.functions.urls import (
     canonicalize_series,
-    fingerprint_col,
-    host_col,
+    fingerprint_sql,
+    host_sql,
     resolve_series,
     with_url_identity,
 )
@@ -62,7 +62,7 @@ def test_fingerprint_matches_golden(spark):
         "method string, canonical_url string, body string",
     )
     rows = df.select(
-        fingerprint_col(F.col("method"), F.col("canonical_url"), F.col("body")).alias("fp")
+        F.expr(fingerprint_sql("method", "canonical_url", "body")).alias("fp")
     ).collect()
     assert rows[0]["fp"] == G.fingerprint("GET", "http://h.example/a", None)
     assert rows[1]["fp"] == G.fingerprint("POST", "http://h.example/a", "x=1")
@@ -83,7 +83,7 @@ def test_host_col_strips_port_and_userinfo(spark):
     df = spark.createDataFrame(
         [("http://user@h.example:8080/p",)], "canonical_url string"
     )
-    assert df.select(host_col(F.col("canonical_url")).alias("h")).collect()[0]["h"] == "h.example"
+    assert df.select(F.expr(host_sql("canonical_url")).alias("h")).collect()[0]["h"] == "h.example"
 
 
 def test_trap_fence_signals(spark):
