@@ -14,4 +14,6 @@ Everything is DataFrame/SQL-first; row-level logic runs in vectorized
 pandas/Arrow UDFs only (no per-row Python UDFs).
 """
 
+from . import _zipcache  # noqa: F401  (lazy zip refresh per Python task; see module)
+
 __version__ = "0.1.0"

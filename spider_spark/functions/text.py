@@ -111,6 +111,13 @@ def word_shingles_from(toks: Column, n: int = 3) -> Column:
     shingle (O(tokens²) regex work per row — observed 60x slowdown in
     the LSH bench). Callers materialize tokens with one ``select`` step
     first; CollapseProject keeps non-cheap aliases unshared.
+
+    A filter on a column derived from the shingles (a MinHash value, the
+    shingle count) undoes that: predicate pushdown moves it below the
+    projections and substitutes the aliases, so the filter's own copy of
+    this lambda slices ``tokens(text)`` again per shingle. Filter on the
+    token count instead (``size(tokens) >= n`` keeps exactly the rows
+    with shingles), as ``textdedup.minhash_lsh_pairs`` does.
     """
     k = F.size(toks) - F.lit(n - 1)
     return F.when(k <= 0, F.array().cast("array<string>")).otherwise(

@@ -5,7 +5,7 @@ The scale-path toolbox a 100 TB training-data pipeline needs:
 * :func:`exact_dedup` — md5-of-normalized-text groupBy; keep min doc_id.
   One shuffle on the 16-byte digest (never on the text itself).
 * :func:`minhash_lsh_pairs` — shingle -> seeded-md5 MinHash signature ->
-  band buckets -> self-join within buckets. The self-join key is
+  band buckets -> pairs within each bucket. The bucket key is
   (band_idx, band_hash): uniform by construction, so no skew salting
   needed; candidate pairs ~ O(similar pairs), not O(n^2).
 * :func:`ngram_jaccard_pairs` — exact Jaccard via shingle inverted
@@ -19,8 +19,8 @@ The scale-path toolbox a 100 TB training-data pipeline needs:
   (see operators/ann.py) or brute-force for verification.
 
 All hashing is md5-based (not xxhash) purely so the DuckDB oracle can
-reproduce values bit-for-bit; swap HASH_FN for xxhash64 in production
-for ~3x hash throughput.
+reproduce values bit-for-bit; a production pipeline would hash with
+xxhash64, about 3x the throughput.
 """
 
 from __future__ import annotations
@@ -89,36 +89,36 @@ def minhash_lsh_pairs(
 
     rows_per_band = n_hashes / bands; band hash = md5 of the
     concatenated signature slice. Docs with no shingles (shorter than
-    the shingle width) produce no bands.
+    the shingle width) produce no bands. Pairs are emitted per
+    (band, band hash) bucket from its sorted distinct ids, so the
+    signatures are computed once (a self-join of the banded rows
+    computes them on both sides).
     """
     assert n_hashes % bands == 0
     r = n_hashes // bands
-    sigs = minhash_signatures(documents, n_hashes, shingle_n, text_col, id_col)
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * r + i}") for i in range(r)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *parts)).alias("bh"))
+    # drop docs without shingles BEFORE shingling: they would all share
+    # the band hash of md5(''); a filter on the signature instead is
+    # pushed below the projections and re-inlines the token split into
+    # every shingle (see word_shingles_from)
+    shingled = documents.filter(F.size(TX.tokens(F.col(text_col))) >= shingle_n)
+    sigs = minhash_signatures(shingled, n_hashes, shingle_n, text_col, id_col)
+    bands_sql = ", ".join(
+        f"named_struct('band', {b}, 'bh', md5(concat_ws('|', "
+        + ", ".join(f"mh{b * r + i}" for i in range(r))
+        + ")))"
+        for b in range(bands)
+    )
+    return (
+        sigs.selectExpr(f"{id_col} AS id", f"inline(array({bands_sql}))")
+        .groupBy("band", "bh")
+        .agg(F.expr("array_sort(collect_set(id)) AS ids"))
+        .filter("size(ids) > 1")
+        .selectExpr(
+            "inline(flatten(transform(ids, (a, i) -> transform("
+            "slice(ids, i + 2, size(ids)), b -> named_struct('id_a', a, 'id_b', b)))))"
         )
-    # docs with zero shingles have NULL mins -> concat_ws('') of nulls is
-    # '' which would bucket all empties together; drop them first
-    non_empty = sigs.filter(F.col("mh0").isNotNull())
-    banded = non_empty.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("b")
-    ).select(id_col, F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b"))
         .distinct()
     )
-    return pairs
 
 
 def ngram_jaccard_pairs(

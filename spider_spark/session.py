@@ -9,6 +9,7 @@ bit-for-bit against the DuckDB oracle.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -97,11 +98,27 @@ def ship_package(spark: SparkSession) -> None:
     """
     if getattr(spark, "_spider_spark_shipped", False):
         return
-    pkg_dir = Path(__file__).resolve().parent
-    zpath = Path(tempfile.gettempdir()) / f"spider_spark_pyfiles_{os.getpid()}.zip"
-    if not zpath.exists():
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for py in sorted(pkg_dir.rglob("*.py")):
-                zf.write(py, arcname=str(Path("spider_spark") / py.relative_to(pkg_dir)))
-    spark.sparkContext.addPyFile(str(zpath))
+    spark.sparkContext.addPyFile(str(package_zip(Path(__file__).resolve().parent)))
     spark._spider_spark_shipped = True
+
+
+def package_zip(pkg_dir: Path) -> Path:
+    """Zip of the ``.py`` files under ``pkg_dir`` as package
+    ``spider_spark``, in the temp dir and named by a digest of their
+    paths and bytes: a zip is reused only by a process shipping the same
+    code (a pid-named zip left by an earlier process shipped stale code)."""
+    files = [
+        (str(Path("spider_spark") / py.relative_to(pkg_dir)), py.read_bytes())
+        for py in sorted(pkg_dir.rglob("*.py"))
+    ]
+    digest = hashlib.sha1()
+    for name, data in files:
+        digest.update(b"%d:%s%d:%s" % (len(name), name.encode(), len(data), data))
+    zpath = Path(tempfile.gettempdir()) / f"spider_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
+    if not zpath.exists():
+        part = zpath.with_name(f"{zpath.name}.{os.getpid()}.part")
+        with zipfile.ZipFile(part, "w") as zf:
+            for name, data in files:
+                zf.writestr(name, data)
+        os.replace(part, zpath)  # atomic: a concurrent session never ships a half zip
+    return zpath

@@ -8,6 +8,8 @@ be 100x slower at 10^10 rows.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from spider_spark.functions.urls import with_url_identity
@@ -111,6 +113,19 @@ def test_lsh_join_is_equi_hash(spark):
     plan = physical(TD.minhash_lsh_pairs(docs, n_hashes=8, bands=4, shingle_n=5))
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_lsh_signatures_computed_once(spark):
+    """A filter on a signature column is pushed below the projections
+    and inlines the token split into every shingle lambda (O(tokens²)
+    regex work per row); a self-join of the banded rows computes the
+    signatures on both sides. Every ``slice(`` must take a materialized
+    attribute, and the physical plan must hold one signature projection."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    pairs = TD.minhash_lsh_pairs(docs, 8, 4, 5)
+    slices = re.findall(r"slice\(([^,]*),", optimized(pairs))
+    assert slices and all(re.fullmatch(r"\w+#\d+", arg) for arg in slices), slices
+    assert physical(pairs).count("concat(0:, ") == 1
 
 
 def test_fingerprint_stays_jvm_side(spark):

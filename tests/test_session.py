@@ -1,0 +1,66 @@
+"""Shipping the package to Python workers (no Spark session): the
+``--py-files`` zip and the zip-directory refresh every worker task runs."""
+
+from __future__ import annotations
+
+import importlib
+import sys
+import tempfile
+import zipfile
+import zipimport
+
+import spider_spark  # noqa: F401  (installs the lazy zip refresh on Python < 3.13)
+from spider_spark.session import package_zip
+
+
+def _write_zip(path, modules: dict[str, str]) -> None:
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_invalidate_caches_rereads_a_zip_only_when_it_changed(tmp_path, monkeypatch):
+    """pyspark's worker calls ``importlib.invalidate_caches()`` before
+    every task; an unchanged archive must not be read again, and a
+    rewritten one must be."""
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"zipcache_mod_a": "X = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("zipcache_mod_a", "zipcache_mod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("zipcache_mod_a").X == 1
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(path):
+        reads.append(path)
+        return read_directory(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting)
+    importlib.invalidate_caches()
+    importlib.invalidate_caches()
+    assert archive not in reads
+
+    _write_zip(archive, {"zipcache_mod_a": "X = 1\n", "zipcache_mod_b": "Y = 2\n"})
+    importlib.invalidate_caches()
+    assert archive in reads
+    assert importlib.import_module("zipcache_mod_b").Y == 2
+    sys.path_importer_cache.pop(archive, None)
+
+
+def test_package_zip_is_named_by_its_sources(tmp_path, monkeypatch):
+    """A zip left by an earlier process is reused only if it holds the
+    same code."""
+    (tmp_path / "tmp").mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    trees = []
+    for i, body in enumerate(("X = 1\n", "X = 2\n")):
+        pkg = tmp_path / f"src{i}"
+        pkg.mkdir()
+        (pkg / "__init__.py").write_text(body)
+        trees.append(pkg)
+    first, second = (package_zip(pkg) for pkg in trees)
+    assert first != second
+    assert package_zip(trees[0]) == first
+    assert zipfile.ZipFile(second).read("spider_spark/__init__.py") == b"X = 2\n"

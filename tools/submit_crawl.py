@@ -20,18 +20,17 @@ Build the --py-files zip with::
 from __future__ import annotations
 
 import argparse
+import shutil
 import sys
-import zipfile
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def make_pyfiles(out: str) -> str:
-    pkg = Path(__file__).resolve().parents[1] / "spider_spark"
-    with zipfile.ZipFile(out, "w") as zf:
-        for py in sorted(pkg.rglob("*.py")):
-            zf.write(py, arcname=str(Path("spider_spark") / py.relative_to(pkg)))
+    from spider_spark.session import package_zip
+
+    shutil.copyfile(package_zip(Path(__file__).resolve().parents[1] / "spider_spark"), out)
     return out
 
 
