@@ -105,8 +105,8 @@ def ship_package(spark: SparkSession) -> None:
 def package_zip(pkg_dir: Path) -> Path:
     """Zip of the ``.py`` files under ``pkg_dir`` as package
     ``spider_spark``, in the temp dir and named by a digest of their
-    paths and bytes: a zip is reused only by a process shipping the same
-    code (a pid-named zip left by an earlier process shipped stale code)."""
+    paths and bytes, so a zip left in the temp dir by an earlier process
+    is reused only if it holds the same code."""
     files = [
         (str(Path("spider_spark") / py.relative_to(pkg_dir)), py.read_bytes())
         for py in sorted(pkg_dir.rglob("*.py"))
