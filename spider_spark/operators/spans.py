@@ -228,9 +228,7 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
 
 
 def extract_candidates_raw(
-    fetched: DataFrame,
-    max_times: int = schemas.REDIRECT_MAX_TIMES,
-    priority_adjust: int = schemas.REDIRECT_PRIORITY_ADJUST,
+    fetched: DataFrame, max_times: int = schemas.REDIRECT_MAX_TIMES
 ) -> DataFrame:
     """Links AND redirect targets from ONE scan of the fetched wave —
     no union (requires a ``location`` column; use
@@ -302,7 +300,7 @@ def extract_candidates_raw(
             "url AS base_url",
             "source",
             f"CASE WHEN {is_redir} THEN {redirect_meta} ELSE {_CHILD_META} END AS meta",
-            f"CASE WHEN {is_redir} THEN priority + {priority_adjust} ELSE priority END"
+            f"CASE WHEN {is_redir} THEN priority + {schemas.REDIRECT_PRIORITY_ADJUST} ELSE priority END"
             " AS priority",
             f"CASE WHEN {keep_method} THEN method ELSE 'GET' END AS method",
             f"CASE WHEN {keep_method} THEN body ELSE CAST(NULL AS STRING) END AS body",

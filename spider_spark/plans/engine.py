@@ -9,10 +9,12 @@ seen-set is committed atomically with the documents it admitted).
 
 Wave-0 seeding, recrawl injection and every loop wave commit through
 one path (:meth:`CrawlEngine._commit`): all of the wave's table writes
-run concurrently, the wave's counters (pending rows, next seq base,
-documents, fetched rows) are read from the parquet footers of the
-files just written, and only then does the manifest name the wave.
-Counters read from finished files cannot race the writes.
+run concurrently, the wave's crawl-wide counters are read from the
+parquet footers of the files just written, and only then does the
+manifest name the wave, with those counters as its record. Counters
+read from finished files cannot race the writes. The ``metrics`` table
+keeps only per-host-bucket counts (fetched and retried rows); the
+record holds the counts of the whole wave.
 
 Each wave cuts its lineage twice with an eager local checkpoint: once
 at the fetched rows and once at the admitted rows. The wave's schedule,
@@ -58,7 +60,6 @@ from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
 
 FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
-METRICS_COLS = [f.name for f in schemas.METRICS.fields]
 
 
 @dataclass
@@ -71,12 +72,10 @@ class CrawlConfig:
     obey_robots: bool = False  # reference: ROBOTSTXT_OBEY=False (settings.py:21)
     autothrottle: bool = False  # adaptive delay (settings.py:74-78); off = static policy
     retry_times: int = schemas.RETRY_TIMES
-    #: RedirectMiddleware knobs (Scrapy REDIRECT_MAX_TIMES /
-    #: REDIRECT_PRIORITY_ADJUST defaults); redirect following itself
-    #: has no off switch, matching Scrapy — per-request opt-out is
-    #: meta={'dont_redirect': true}
+    #: RedirectMiddleware chain cap (Scrapy REDIRECT_MAX_TIMES default);
+    #: redirect following itself has no off switch, matching Scrapy —
+    #: per-request opt-out is meta={'dont_redirect': true}
     redirect_max_times: int = schemas.REDIRECT_MAX_TIMES
-    redirect_priority_adjust: int = schemas.REDIRECT_PRIORITY_ADJUST
     #: conditional-GET recrawls: recrawl_candidates sends the stored
     #: content validator as meta['if_none_match']; unchanged pages come
     #: back 304 (no body, no re-parse, no document row) and land in a
@@ -273,13 +272,13 @@ class CrawlEngine:
         """
         cfg = self.cfg
         manifest = self.store.read_manifest() if resume else None
-        if manifest and manifest["committed_waves"]:
-            wave = max(manifest["committed_waves"]) + 1
-            next_base = int(manifest["extra"]["next_seq_base"])
+        if manifest and manifest["waves"]:
+            wave = max(map(int, manifest["waves"])) + 1
+            record = manifest["waves"][str(wave - 1)]
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
-            n_pending = self.store.wave_stats("frontier", wave - 1)[0]
             if inject and seeds is not None:
-                cand = _seed_candidates(seeds, cfg.crawl_id, wave, next_base)
+                t0 = time.monotonic()
+                cand = _seed_candidates(seeds, cfg.crawl_id, wave, record["next_seq_base"])
                 admitted, writes = self._admit(cand, wave)
                 # Injected rows carry dont_filter=True (recrawl
                 # semantics) so _admit's seen-set check waves them
@@ -293,10 +292,11 @@ class CrawlEngine:
                     pending.select("fingerprint"), on="fingerprint", how="left_anti"
                 )
                 writes["frontier"] = pending.unionByName(fresh.select(*pending.columns))
-                n_pending, next_base, _, _ = self._commit(wave, writes, next_base)
+                record = self._commit(wave, writes, admitted, t0, record["next_seq_base"])
                 pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
                 wave += 1
         else:
+            t0 = time.monotonic()
             if self.sitemaps is not None:
                 # pre-wave-0 sitemap expansion (SitemapSpider analog,
                 # athimmo_be.py:18-26): *.xml seeds -> one seed per <loc>
@@ -312,7 +312,7 @@ class CrawlEngine:
                 seeds = expand_feed_seeds(seeds, self.feeds)
             admitted, writes = self._admit(_seed_candidates(seeds, cfg.crawl_id, 0, 0), 0)
             writes["frontier"] = admitted.drop("crawl_delay_s")
-            n_pending, next_base, _, _ = self._commit(0, writes, 0)
+            record = self._commit(0, writes, admitted, t0, 0)
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave = 1
 
@@ -354,11 +354,6 @@ class CrawlEngine:
         retry_row = [bumped.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS]
         link_order = [F.asc("parent_seq"), F.asc("link_pos")]
         is_redirect = F.col("link_pos") < 0
-        is_doc = (
-            F.col("_parse_ok")
-            & ~F.col("is_listing_page")
-            & (F.size(F.coalesce(F.col("spans"), F.array())) > 0)
-        )
         bucket_aggs = [
             F.count("*").alias("fetched"),
             F.sum(
@@ -368,21 +363,7 @@ class CrawlEngine:
                 ).cast("long")
             ).alias("retried"),
         ]
-        # the wave-global counters, one row per crawl, broadcast onto
-        # the bucket rows: candidates admitted and documents emitted
-        cand_n = F.count(F.lit(1)).alias("_cand_n")
-        docs_n = F.sum(is_doc.cast("long")).alias("_docs_n")
-        # the METRICS columns that are not bucket aggregates; the loop
-        # sets wave and wall_ms
-        metrics_row = {
-            "candidates": F.coalesce(F.col("_cand_n"), F.lit(0)).cast("long"),
-            "deduped_dropped": F.lit(0).cast("long"),
-            "robots_dropped": F.lit(0).cast("long"),
-            "scheduled": F.col("fetched"),
-            "docs_emitted": F.coalesce(F.col("_docs_n"), F.lit(0)).cast("long"),
-        }
-        metrics_cols = {c: metrics_row.get(c, F.col(c)).alias(c) for c in METRICS_COLS}
-        while wave <= cfg.max_waves and n_pending:
+        while wave <= cfg.max_waves and record["pending"]:
             t0 = time.monotonic()
             # the robots fence drops rows from the frontier for good, so
             # it filters pending once, here, for dispatch and deferral
@@ -430,18 +411,14 @@ class CrawlEngine:
                 # post-dates the reference. They DO pass the dupe
                 # filter via the shared _admit below — which is also
                 # what terminates redirect loops.
-                raw_links = S.extract_candidates_raw(
-                    fetched,
-                    self.cfg.redirect_max_times,
-                    self.cfg.redirect_priority_adjust,
-                )
+                raw_links = S.extract_candidates_raw(fetched, self.cfg.redirect_max_times)
             else:
                 raw_links = S.extract_links_raw(ok)
             # numbered before the resolve UDF, so the range sort's
             # sampling job re-runs only the JVM explode; a link the
             # filters below drop leaves a gap in the seqs
             new_links = S.resolve_candidates(
-                S.assign_seq(raw_links, link_order, next_base)
+                S.assign_seq(raw_links, link_order, record["next_seq_base"])
             )
             new_links = S.apply_link_rules(
                 new_links, self.link_rules, bypass=is_redirect
@@ -501,26 +478,6 @@ class CrawlEngine:
                     "source",
                     F.col("meta"),
                 )
-            # the overridden keys keep their place: METRICS column order
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            row = {
-                **metrics_cols,
-                "wave": F.expr(f"{wave} AS wave"),
-                "wall_ms": F.expr(f"CAST({wall_ms} AS BIGINT) AS wall_ms"),
-            }
-            # the per-bucket metrics rows, with the wave-global
-            # counters derived IN-PLAN from the fetched and admitted
-            # checkpoints (broadcast joins) — no driver literal, so the
-            # metrics write submits concurrently with the frontier
-            # write (round 5, BENCH/CRAWL_LOOP.md: serializing it
-            # behind the frontier write was the r4 regression).
-            metrics = (
-                fetched.groupBy("crawl_id", "host_bucket")
-                .agg(*bucket_aggs)
-                .join(F.broadcast(admitted.groupBy("crawl_id").agg(cand_n)), "crawl_id", "left")
-                .join(F.broadcast(fetched.groupBy("crawl_id").agg(docs_n)), "crawl_id", "left")
-                .select(*row.values())
-            )
             writes = {
                 "documents": docs,
                 "frontier": deferred.unionByName(admitted.selectExpr(*FRONTIER_COLS))
@@ -528,9 +485,13 @@ class CrawlEngine:
                 **seen_writes,
                 "links": link_edges,
                 "revalidations": reval,
-                "metrics": metrics,
+                # the per-bucket rows, one aggregate over the fetched
+                # checkpoint
+                "metrics": fetched.groupBy("crawl_id", "host_bucket")
+                .agg(*bucket_aggs)
+                .selectExpr("crawl_id", f"{wave} AS wave", "host_bucket", "fetched", "retried"),
             }
-            n_pending, next_base, n_docs, n_fetched = self._commit(wave, writes, next_base)
+            record = self._commit(wave, writes, admitted, t0, record["next_seq_base"])
             if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
                 self.store.compact("url_seen", cfg.compact_partitions)
 
@@ -552,8 +513,8 @@ class CrawlEngine:
                     *[f.name for f in schemas.HOST_POLICY.fields]
                 ).localCheckpoint()
 
-            totals["fetched"] += n_fetched
-            totals["docs"] += n_docs
+            totals["fetched"] += record["fetched"]
+            totals["docs"] += record["docs_emitted"]
             totals["waves"] += 1
             # re-read pending from the committed snapshot: truncates lineage
             # (the iterative-loop analog of checkpointing)
@@ -561,39 +522,56 @@ class CrawlEngine:
             wave += 1
         return totals
 
-    def _commit(self, wave: int, writes: dict, next_base: int) -> tuple[int, int, int, int]:
-        """Write one wave's tables and commit it — the one commit path
-        of seeding, injection and the crawl loop.
+    def _commit(
+        self, wave: int, writes: dict, admitted: DataFrame, t0: float, next_base: int
+    ) -> dict:
+        """Write one wave's tables and commit it with its record — the
+        one commit path of seeding, injection and the crawl loop.
 
         ``writes`` maps table -> DataFrame (``None``: not written this
         wave). The writes are independent jobs over checkpointed
         inputs, each a scan, a narrow step and the write, submitted at
         once from driver threads so Spark schedules them in one pool
         and their fixed per-job latencies overlap; a write
-        that hangs shows up here, in its future. Once all are written,
+        that hangs shows up here, in its future. The count of the
+        admitted checkpoint runs in the same pool. Once all are written,
         the wave's counters are read back from the staged files'
         parquet footers (:meth:`SnapshotStore.wave_stats`) — files that
         are already complete cannot race the queries that wrote them.
-        The manifest commit comes last, so a wave is durable iff all of
-        its writes are.
+        The manifest commit comes last and holds the wave's record, so
+        a wave is durable iff all of its writes are, and its counters
+        are durable with it.
 
-        Returns ``(n_pending, next_base, n_docs, n_fetched)``.
-        ``assign_seq`` numbers rows strictly above its base, so the next
-        base is the largest committed frontier seq.
+        Returns the record: ``candidates`` (admitted rows),
+        ``docs_emitted`` (documents rows: the parse-ok detail pages with
+        spans), ``fetched`` (the sum of the per-bucket metrics rows),
+        ``pending`` (frontier rows), ``wall_ms`` (``t0`` to just before
+        the manifest swap, so it counts the writes) and
+        ``next_seq_base``: ``assign_seq`` numbers rows strictly above
+        its base, so the next base is the largest committed frontier
+        seq.
         """
         writes = {t: df for t, df in writes.items() if df is not None}
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+        with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
+            candidates = pool.submit(admitted.count)
             futures = [pool.submit(self.store.write_wave, t, wave, df) for t, df in writes.items()]
             for fut in futures:
                 fut.result()
-        n_pending, max_seq = self.store.wave_stats("frontier", wave, "discovered_seq")
-        next_base = max(next_base, max_seq or 0)
-        n_docs = self.store.wave_stats("documents", wave)[0] if "documents" in writes else 0
-        n_fetched = 0
+        pending, max_seq = self.store.wave_stats("frontier", wave, "discovered_seq")
+        docs = self.store.wave_stats("documents", wave)[0] if "documents" in writes else 0
+        fetched = 0
         if "metrics" in writes:  # at most n_buckets rows
-            n_fetched = self.store.wave_stats("metrics", wave, "fetched", "sum")[1] or 0
-        self.store.commit_wave(wave, {"next_seq_base": next_base})
-        return n_pending, next_base, n_docs, n_fetched
+            fetched = self.store.wave_stats("metrics", wave, "fetched", "sum")[1] or 0
+        record = {
+            "candidates": candidates.result(),
+            "docs_emitted": docs,
+            "fetched": fetched,
+            "pending": pending,
+            "next_seq_base": max(next_base, max_seq or 0),
+        }
+        record["wall_ms"] = int((time.monotonic() - t0) * 1000)
+        self.store.commit_wave(wave, record)
+        return record
 
     # -- outputs ------------------------------------------------------------
     def documents(self, latest_only: bool = False) -> DataFrame:

@@ -135,28 +135,17 @@ URL_SEEN_FILTERS = T.StructType(
     ]
 )
 
-#: Per-(wave, host_bucket) lineage/metrics rows. ``wall_ms`` measures
-#: wave start -> metrics-plan build. The fetched and admitted rows are
-#: eager checkpoints made before that point, so wall_ms covers running
-#: schedule, fetch, parse and admission as well as building the plan,
-#: but NOT the write phase: the metrics write is submitted concurrently
-#: with the other wave writes (candidates is derived in-plan). Do not
-#: compare against earlier values: before round 5 they included the
-#: frontier write, and until the checkpoints they timed plan building
-#: only.
+#: Per-(wave, host_bucket) lineage/metrics rows: only counts that sum
+#: over buckets. A wave's crawl-wide counters (candidates, documents,
+#: fetched and pending rows, wall time) are one record per wave in the
+#: manifest (:meth:`~spider_spark.plans.engine.CrawlEngine._commit`).
 METRICS = T.StructType(
     [
         T.StructField("crawl_id", T.StringType(), False),
         T.StructField("wave", T.IntegerType(), False),
         T.StructField("host_bucket", T.IntegerType(), False),
-        T.StructField("candidates", T.LongType(), False),
-        T.StructField("deduped_dropped", T.LongType(), False),
-        T.StructField("robots_dropped", T.LongType(), False),
-        T.StructField("scheduled", T.LongType(), False),
         T.StructField("fetched", T.LongType(), False),
         T.StructField("retried", T.LongType(), False),
-        T.StructField("docs_emitted", T.LongType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
     ]
 )
 

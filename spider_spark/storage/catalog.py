@@ -7,12 +7,14 @@ per-table parquet snapshot dirs + one atomically-renamed
 ``manifest.json`` that is the single source of truth for what is
 committed. A wave is durable iff the manifest names it;
 partially-written parquet from a killed run is simply never referenced
-(the exact mechanism Iceberg's metadata pointer uses).
+(the exact mechanism Iceberg's metadata pointer uses). The manifest
+names each committed wave together with its record, the wave's
+counters, so a wave and its counters become durable in one swap.
 
 Layout::
 
     root/
-      manifest.json                  <- atomic pointer {waves: N, ...}
+      manifest.json                  <- atomic pointer {waves: {N: record}, ...}
       documents/wave=0003/*.parquet  <- appended per wave
       url_seen/wave=0003/*.parquet   <- appended per wave
       frontier/wave=0003/*.parquet   <- pending set AFTER wave 3 (overwrite-next)
@@ -85,12 +87,11 @@ class SnapshotStore:
         """Stage one table's data for a wave (not yet visible)."""
         df.write.mode("overwrite").parquet(self._wave_dir(table, wave))
 
-    def commit_wave(self, wave: int, extra: dict | None = None) -> None:
-        """Make wave ``wave`` durable. Everything staged becomes visible."""
-        manifest = self.read_manifest() or {"committed_waves": [], "extra": {}}
-        if wave not in manifest["committed_waves"]:
-            manifest["committed_waves"].append(wave)
-        manifest["extra"].update(extra or {})
+    def commit_wave(self, wave: int, record: dict | None = None) -> None:
+        """Make wave ``wave`` durable. Everything staged becomes visible,
+        and the manifest holds ``record`` as the wave's record."""
+        manifest = self.read_manifest() or {"waves": {}}
+        manifest["waves"][str(wave)] = record or {}
         self._write_manifest(manifest)
 
     def wave_stats(
@@ -128,7 +129,7 @@ class SnapshotStore:
     # -- reads -------------------------------------------------------------
     def committed_waves(self) -> list[int]:
         m = self.read_manifest()
-        return sorted(m["committed_waves"]) if m else []
+        return sorted(map(int, m["waves"])) if m else []
 
     def _read_dirs(self, table: str, mode: str) -> list[str]:
         """The committed read set for a table: compacted base (if the
@@ -191,7 +192,7 @@ class SnapshotStore:
         base_name = f"base={upto:04d}"
         base_dir = os.path.join(self.root, table, base_name)
         df.write.mode("overwrite").parquet(base_dir)  # staged, not visible
-        manifest = self.read_manifest() or {"committed_waves": [], "extra": {}}
+        manifest = self.read_manifest()
         manifest.setdefault("compacted", {})[table] = {
             "dir": base_name,
             "upto": upto,
@@ -200,7 +201,3 @@ class SnapshotStore:
         for d in old_dirs:  # superseded only after the pointer swap
             shutil.rmtree(d, ignore_errors=True)
         return len(old_dirs)
-
-    def extra(self) -> dict:
-        m = self.read_manifest()
-        return m["extra"] if m else {}

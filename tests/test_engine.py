@@ -29,6 +29,11 @@ def run_engine(spark, tmp_path, spec=SPEC, **cfg_kw):
     return eng, totals, store
 
 
+def wave_records(store) -> dict:
+    """{wave: record} of every committed wave, from the manifest."""
+    return {int(w): r for w, r in store.read_manifest()["waves"].items()}
+
+
 def golden(spec=SPEC, **kw):
     g = GoldenCrawl(spec, wave_seconds=1.0, max_waves=40, **kw)
     g.run()
@@ -184,7 +189,7 @@ def test_link_extractor_allow_deny(spark, tmp_path):
         .filter(F.col("attempt") == 0)
         .collect()
     }
-    assert max(rows) <= s1.extra()["next_seq_base"]
+    assert max(rows) <= wave_records(s1)[max(s1.committed_waves())]["next_seq_base"]
     out_links = {
         r["canonical_url"]: r["out_links"]
         for r in canonical_web(web_df(spark, spec)).collect()
@@ -288,10 +293,18 @@ def test_resume_from_checkpoint(spark, tmp_path):
     store = SnapshotStore(spark, str(tmp_path / "resume" / "store"))
     eng1 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec), store, cfg_short)
     eng1.run(seeds_df(spark, spec))
+    first = wave_records(store)
+    assert sorted(first) == [0, 1, 2]
 
     cfg_full = CrawlConfig(crawl_id="t", n_buckets=8, wave_seconds=1.0, max_waves=40)
     eng2 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec), store, cfg_full)
     eng2.run(seeds_df(spark, spec), resume=True)
+    # the resumed run leaves the first run's records alone and commits
+    # every later wave with a record of its own
+    records = wave_records(store)
+    assert {w: records[w] for w in first} == first
+    assert sorted(records) == list(range(len(records))) and len(records) > 3
+    assert all(set(r) == set(first[0]) for r in records.values())
 
     full_docs = {
         (r["doc_id"], tuple((s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]))
@@ -1392,46 +1405,43 @@ def test_read_table_pins_schema_without_a_job(spark, tmp_store):
 
 
 def test_wave_metrics_match_stored_tables(engine_run):
-    """Per-wave metrics and run totals vs independent truth recomputed
-    from the stored tables: candidates(w) must equal the url_seen rows
-    recorded at wave w (plain crawl: every admitted row is recorded),
-    docs_emitted(w) must equal the documents-table rows written at
-    wave w, totals["fetched"]/totals["docs"] (read from the committed
-    files' footers) must equal the metrics fetched sum and the
-    documents row count, and the manifest's next_seq_base must be at
-    least every committed frontier discovered_seq — assign_seq numbers
-    the next wave strictly above it, so seqs never collide."""
+    """Each committed wave's record and the run totals vs independent
+    truth recomputed from the stored tables. Every committed wave,
+    wave 0 included, has exactly one record; its candidates must equal
+    the url_seen rows recorded at that wave (plain crawl: every
+    admitted row is recorded), docs_emitted the documents rows written
+    at it, fetched the sum of its per-bucket metrics rows and pending
+    its frontier rows. totals["fetched"]/totals["docs"] must equal the
+    metrics fetched sum and the documents row count, and the last
+    record's next_seq_base must be at least every committed frontier
+    discovered_seq — assign_seq numbers the next wave strictly above
+    it, so seqs never collide. The metrics rows hold only per-bucket
+    counts."""
     eng, totals, store, _log = engine_run
-    assert totals["fetched"] == eng.metrics().agg(F.sum("fetched")).first()[0]
+    metrics = eng.metrics()
+    assert metrics.columns == ["crawl_id", "wave", "host_bucket", "fetched", "retried"]
+    assert totals["fetched"] == metrics.agg(F.sum("fetched")).first()[0]
     assert totals["docs"] == store.read_table("documents", "append").count()
+    records = wave_records(store)
+    assert sorted(records) == store.committed_waves() == list(range(totals["waves"] + 1))
     max_seq = store.read_table("frontier", "append").agg(F.max("discovered_seq")).first()[0]
-    assert store.extra()["next_seq_base"] >= max_seq > 0
-    m = (
-        eng.metrics()
-        .groupBy("wave")
-        .agg(
-            F.first("candidates").alias("candidates"),
-            F.first("docs_emitted").alias("docs_emitted"),
-            F.sum("fetched").alias("fetched"),
-        )
-    )
-    seen_by_wave = {
-        r["wave"]: r["n"]
-        for r in store.read_table("url_seen", "append")
-        .groupBy("wave").agg(F.count("*").alias("n")).collect()
-    }
-    docs_by_wave = {
-        r["wave"]: r["n"]
-        for r in store.read_table("documents", "append")
-        .groupBy("wave").agg(F.count("*").alias("n")).collect()
-    }
-    rows = m.collect()
-    assert rows, "no metrics rows recorded"
-    for r in rows:
-        w = r["wave"]
+    assert records[max(records)]["next_seq_base"] >= max_seq > 0
+
+    def by_wave(df, agg=F.count("*")):
+        return {r["wave"]: r["n"] for r in df.groupBy("wave").agg(agg.alias("n")).collect()}
+
+    seen_by_wave = by_wave(store.read_table("url_seen", "append"))
+    docs_by_wave = by_wave(store.read_table("documents", "append"))
+    fetched_by_wave = by_wave(metrics, F.sum("fetched"))
+    for w, r in records.items():
+        assert set(r) == {
+            "candidates", "docs_emitted", "fetched", "pending", "wall_ms", "next_seq_base"
+        }, f"wave {w} record"
         assert r["candidates"] == seen_by_wave.get(w, 0), f"wave {w} candidates"
         assert r["docs_emitted"] == docs_by_wave.get(w, 0), f"wave {w} docs"
-        assert r["fetched"] > 0, f"wave {w} fetched"
+        assert r["fetched"] == fetched_by_wave.get(w, 0), f"wave {w} fetched"
+        assert r["pending"] == store.wave_stats("frontier", w)[0], f"wave {w} pending"
+        assert r["fetched"] > 0 or w == 0, f"wave {w} fetched"
 
 
 def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monkeypatch):
@@ -1483,6 +1493,9 @@ def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monke
     for table, wave, plan in plans:
         for node in ("Window", "ArrowEvalPython", "rangepartitioning"):
             assert node not in plan, f"wave {wave} {table} write plans a {node}:\n{plan}"
+        if table == "metrics":  # one aggregate over the fetched checkpoint
+            for node in ("BroadcastExchange", "Join"):
+                assert node not in plan, f"wave {wave} metrics write plans a {node}:\n{plan}"
     # wave 1 also builds the crawl's once-per-crawl expressions; waves
     # 2 and 3 are plain loop waves
     per_wave = [b - a for a, b in zip(after_commit[1:], after_commit[2:])]
