@@ -9,9 +9,9 @@ query-independent ranking, and training-data labeling.
 
 Pipeline (all stages DataFrame-native):
 
-* :func:`extract_anchors` — stdlib ``HTMLParser`` pulls ``(href, text)``
-  pairs from each page in ONE Arrow crossing (``mapInPandas``, the same
-  batch shape as ``htmlparse.parse_html_pages``);
+* :func:`extract_anchors` — ``(href, text)`` pairs from each page's
+  ``htmlparse.tokens`` in ONE Arrow crossing (``htmlparse.map_pages``,
+  the batch loop of ``htmlparse.parse_html_pages``);
 * :func:`anchor_edges` — hrefs resolve against the source URL with the
   vectorized ``functions.urls.resolve_udf`` (absolute/relative/protocol
   forms), producing ``(src, dst, anchor)`` edge rows;
@@ -29,82 +29,46 @@ needs (cited shapes: python_spiders/*.py LinkExtractor usage).
 
 from __future__ import annotations
 
-from html.parser import HTMLParser
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.urls import canonicalize_udf, resolve_udf
+from .htmlparse import START, TEXT, map_pages, tokens
 from .politeness import topk_per_key_salted
 
 
-class _AnchorParser(HTMLParser):
-    """Collect ``(href, anchor_text)`` for every ``<a href=...>``.
+def parse_anchors(html: str) -> list[tuple[str, str]]:
+    """``(href, anchor_text)`` of every ``<a href=...>``.
 
     Nested anchors (invalid but common in the wild) are handled with a
     stack: text lands in the innermost open anchor; an unclosed anchor
     is finalized at EOF. Whitespace is collapsed the same way the span
     parser collapses it."""
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self._stack: list[list] = []  # [href, [text chunks]]
-        self.anchors: list[tuple[str, str]] = []
-
-    def handle_starttag(self, tag, attrs):
-        if tag == "a":
-            href = next((v for k, v in attrs if k == "href" and v), None)
-            self._stack.append([href, []])
-
-    def handle_endtag(self, tag):
-        if tag == "a" and self._stack:
-            href, chunks = self._stack.pop()
-            if href:
-                self.anchors.append((href, " ".join(" ".join(chunks).split())))
-
-    def handle_data(self, data):
-        if self._stack:
-            self._stack[-1][1].append(data)
-
-    def close(self):
-        super().close()
-        while self._stack:
-            self.handle_endtag("a")
-
-
-def parse_anchors(html: str) -> list[tuple[str, str]]:
-    p = _AnchorParser()
-    p.feed(html or "")
-    p.close()
-    return p.anchors
-
-
-_ANCHOR_SCHEMA = T.StructType(
-    [
-        T.StructField("src", T.StringType()),
-        T.StructField("href", T.StringType()),
-        T.StructField("anchor", T.StringType()),
-    ]
-)
+    stack: list[tuple] = []  # open anchors: (href, [text chunks])
+    done: list[tuple] = []
+    for kind, tag, val in tokens(html):
+        if kind == TEXT:
+            if stack:
+                stack[-1][1].append(val)
+        elif tag == "a" and kind == START:
+            stack.append((val.get("href"), []))
+        elif tag == "a" and stack:
+            done.append(stack.pop())
+    done += reversed(stack)
+    return [(href, " ".join(" ".join(chunks).split())) for href, chunks in done if href]
 
 
 def extract_anchors(
     pages: DataFrame, html_col: str = "html", url_col: str = "url"
 ) -> DataFrame:
     """(url, html) -> one row per ``<a href>``: (src, href, anchor)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                for href, anchor in parse_anchors(html):
-                    rows.append((url, href, anchor))
-            yield pd.DataFrame(rows, columns=["src", "href", "anchor"])
-
-    return pages.mapInPandas(run, _ANCHOR_SCHEMA)
+    return map_pages(
+        pages,
+        lambda url, html: [(url, href, anchor) for href, anchor in parse_anchors(html)],
+        "src string, href string, anchor string",
+        html_col,
+        url_col,
+    )
 
 
 def anchor_edges(

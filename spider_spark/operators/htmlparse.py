@@ -1,13 +1,16 @@
-"""HTML parse stage: raw page bytes -> (links, interleaved spans).
+"""HTML parse stage: raw page bytes -> links, spans, main text, forms
+and link directives.
 
-The reference extracts with lxml xpath/css (3,035 / 896 spiders —
-``der_immo_tip.py:32-47``). This container has no lxml, so the parser
-is stdlib ``html.parser`` driven inside ``mapInPandas`` — one Arrow
-batch of pages per call, one Python pass per page (the page bytes are
-the irreducible per-row work; what matters at scale is that batches
-cross the Python boundary once and partitions are independent).
+The reference parses a response once into the lxml tree its selectors
+read (``der_immo_tip.py:32-47``). This container has no lxml, so
+:func:`tokens` is the package's one HTML tokenizer (stdlib
+``html.parser``; a duplicated attribute keeps its first value, as in
+HTML5 and libxml2). Every extractor here, ``anchortext.parse_anchors``
+and ``selectors.parse_tree`` are loops over its tokens, and
+:func:`map_pages` runs one over a DataFrame of pages: one Arrow batch
+per ``mapInPandas`` call, one Python pass per page.
 
-Produces exactly the reference's observable outputs:
+:func:`parse_page` produces the reference's observable outputs:
 
 * out_links: href of every <a>, in document order (``response.xpath
   ('//a/@href')`` analog);
@@ -20,77 +23,105 @@ Produces exactly the reference's observable outputs:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 PARSED_SCHEMA = (
     "url string, out_links array<string>, "
     "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )
 
+#: token kinds of :func:`tokens`
+START, END, TEXT = 0, 1, 2
+
 _SKIP_TEXT_IN = {"script", "style", "head", "title"}
 
 
-class _PageParser(HTMLParser):
+class _Tokenizer(HTMLParser):
     def __init__(self):
         super().__init__(convert_charrefs=True)
-        self.links: list[str] = []
-        self.spans: list[tuple] = []
-        self._skip_depth = 0
+        self.out: list[tuple] = []
 
     def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_TEXT_IN:
-            self._skip_depth += 1
-        a = dict(attrs)
-        if tag == "a" and a.get("href"):
-            self.links.append(a["href"])
-        elif tag == "img" and a.get("src"):
-            self.spans.append(("media", None, a["src"], len(self.spans)))
+        # the first of duplicated attributes wins
+        self.out.append((START, tag, dict(reversed(attrs))))
 
     def handle_endtag(self, tag):
-        if tag in _SKIP_TEXT_IN and self._skip_depth > 0:
-            self._skip_depth -= 1
+        self.out.append((END, tag, None))
 
     def handle_data(self, data):
-        if self._skip_depth:
-            return
-        text = " ".join(data.split())
-        if text:
-            self.spans.append(("text", text, None, len(self.spans)))
+        self.out.append((TEXT, None, data))
+
+
+def tokens(html: str) -> list[tuple]:
+    """One page as ``(kind, tag, value)`` tuples in document order:
+    ``(START, tag, attrs dict)``, ``(END, tag, None)`` and ``(TEXT,
+    None, text)``. A self-closing tag is a START then an END; text
+    still buffered at the end of the page is flushed (the parser is
+    closed); character references are decoded."""
+    p = _Tokenizer()
+    p.feed(html or "")
+    p.close()
+    return p.out
+
+
+def map_pages(
+    pages: DataFrame,
+    per_page: Callable[..., Iterable[tuple]],
+    schema: str,
+    html_col: str = "html",
+    url_col: str = "url",
+    extra_col: str | None = None,
+) -> DataFrame:
+    """Apply ``per_page(url, html[, extra])`` to every page in one
+    ``mapInPandas`` pass. ``per_page`` returns the page's output rows
+    (any number of tuples in ``schema`` order); ``extra_col`` names an
+    optional third input column passed as ``extra``."""
+    names = T.StructType.fromDDL(schema).names
+    in_cols = [url_col, html_col] + ([extra_col] if extra_col else [])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [row for args in zip(*(pdf[c] for c in in_cols)) for row in per_page(*args)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return pages.mapInPandas(run, schema)
 
 
 def parse_page(html: str) -> tuple[list[str], list[tuple]]:
-    p = _PageParser()
-    p.feed(html or "")
-    p.close()
+    links: list[str] = []
+    spans: list[tuple] = []
     # dedup media keep-first (reference set() at pipelines.py:127-131,
-    # made deterministic), renumber offsets to stay dense
+    # made deterministic); offsets stay dense
     seen: set[str] = set()
-    spans = []
-    for kind, text, ref, _ in p.spans:
-        if kind == "media":
-            if ref in seen:
-                continue
-            seen.add(ref)
-        spans.append((kind, text, ref, len(spans)))
-    return p.links, spans
+    skip = 0
+    for kind, tag, val in tokens(html):
+        if kind == TEXT:
+            text = "" if skip else " ".join(val.split())
+            if text:
+                spans.append(("text", text, None, len(spans)))
+        elif kind == START:
+            if tag in _SKIP_TEXT_IN:
+                skip += 1
+            if tag == "a" and val.get("href"):
+                links.append(val["href"])
+            elif tag == "img" and val.get("src") and val["src"] not in seen:
+                seen.add(val["src"])
+                spans.append(("media", None, val["src"], len(spans)))
+        elif tag in _SKIP_TEXT_IN and skip:
+            skip -= 1
+    return links, spans
 
 
 def parse_html_pages(pages: DataFrame, html_col: str = "html", url_col: str = "url") -> DataFrame:
     """(url, html) -> (url, out_links, spans) via mapInPandas."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                links, spans = parse_page(html)
-                rows.append((url, links, spans))
-            yield pd.DataFrame(rows, columns=["url", "out_links", "spans"])
-
-    return pages.mapInPandas(run, PARSED_SCHEMA)
+    return map_pages(
+        pages, lambda url, html: [(url, *parse_page(html))], PARSED_SCHEMA, html_col, url_col
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -104,80 +135,56 @@ def parse_html_pages(pages: DataFrame, html_col: str = "html", url_col: str = "u
 _CANDIDATE_TAGS = {"div", "article", "section", "main", "td"}
 
 
-class _MainContentParser(HTMLParser):
-    """Single-pass streaming density scorer (Readability-family rule,
+def extract_main_text(html: str) -> str:
+    """Main content of one page: text of the best-scoring candidate
+    block, anchor text excluded, whitespace normalized; '' when the
+    page has no candidate blocks.
+
+    Single-pass streaming density scorer (Readability-family rule,
     Arc90 readability / trafilatura lineage — public heuristics): every
     open candidate block accumulates the length of descendant text,
     split into plain chars vs anchor chars; at close, score =
     plain_len - link_len. Best score wins; ties go to the EARLIEST
     opened block (deterministic). No DOM is built — one stack walk per
-    page, so the per-row cost is a strict subset of the span parse.
+    page.
     """
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self._skip = 0
-        self._a_depth = 0
-        # open candidate blocks: [plain_len, link_len, texts, open_order]
-        self._open: list[list] = []
-        self._order = 0
-        self.best: tuple | None = None  # (score, order, text)
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_TEXT_IN:
-            self._skip += 1
-        if tag == "a":
-            self._a_depth += 1
-        if tag in _CANDIDATE_TAGS:
-            self._open.append([0, 0, [], self._order])
-            self._order += 1
-
-    def handle_endtag(self, tag):
-        if tag in _SKIP_TEXT_IN and self._skip > 0:
-            self._skip -= 1
-        if tag == "a" and self._a_depth > 0:
-            self._a_depth -= 1
-        if tag in _CANDIDATE_TAGS and self._open:
-            self._finalize(self._open.pop())
-
-    def handle_data(self, data):
-        if self._skip or not self._open:
-            return
-        text = " ".join(data.split())
-        if not text:
-            return
-        for entry in self._open:
-            if self._a_depth:
-                entry[1] += len(text)
-            else:
-                entry[0] += len(text)
-                entry[2].append(text)
-
-    def _finalize(self, entry) -> None:
-        plain, link, texts, order = entry
-        cand = (plain - link, order, " ".join(texts))
-        if (
-            self.best is None
-            or cand[0] > self.best[0]
-            or (cand[0] == self.best[0] and order < self.best[1])
-        ):
-            self.best = cand
-
-    def result(self) -> str:
-        # unclosed candidates (malformed HTML) still count
-        while self._open:
-            self._finalize(self._open.pop())
-        return self.best[2] if self.best is not None else ""
-
-
-def extract_main_text(html: str) -> str:
-    """Main content of one page: text of the best-scoring candidate
-    block, anchor text excluded, whitespace normalized; '' when the
-    page has no candidate blocks."""
-    p = _MainContentParser()
-    p.feed(html or "")
-    p.close()
-    return p.result()
+    skip = a_depth = 0
+    # open candidate blocks: [plain_len, link_len, texts, open_order]
+    open_: list[list] = []
+    closed: list[tuple] = []  # (score, -open_order, texts)
+    n_opened = 0
+    for kind, tag, val in tokens(html):
+        if kind == TEXT:
+            text = " ".join(val.split()) if open_ and not skip else ""
+            if not text:
+                continue
+            for entry in open_:
+                if a_depth:
+                    entry[1] += len(text)
+                else:
+                    entry[0] += len(text)
+                    entry[2].append(text)
+        elif kind == START:
+            if tag in _SKIP_TEXT_IN:
+                skip += 1
+            if tag == "a":
+                a_depth += 1
+            if tag in _CANDIDATE_TAGS:
+                open_.append([0, 0, [], n_opened])
+                n_opened += 1
+        else:
+            if tag in _SKIP_TEXT_IN and skip:
+                skip -= 1
+            if tag == "a" and a_depth:
+                a_depth -= 1
+            if tag in _CANDIDATE_TAGS and open_:
+                plain, link, texts, order = open_.pop()
+                closed.append((plain - link, -order, texts))
+    # unclosed candidates (malformed HTML) still count
+    closed += [(plain - link, -order, texts) for plain, link, texts, order in open_]
+    if not closed:
+        return ""
+    return " ".join(max(closed, key=lambda c: c[:2])[2])
 
 
 def main_content_pages(
@@ -185,19 +192,14 @@ def main_content_pages(
 ) -> DataFrame:
     """(url, html) -> (url, main_text) via mapInPandas — the boilerplate
     -removal stage of a training-data pipeline (nav/footer/link farms
-    dropped, article body kept). Same batch shape as parse_html_pages:
-    one Arrow crossing, partitions independent."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "url": pdf[url_col],
-                    "main_text": [extract_main_text(h) for h in pdf[html_col]],
-                }
-            )
-
-    return pages.mapInPandas(run, "url string, main_text string")
+    dropped, article body kept)."""
+    return map_pages(
+        pages,
+        lambda url, html: [(url, extract_main_text(html))],
+        "url string, main_text string",
+        html_col,
+        url_col,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -211,8 +213,9 @@ def main_content_pages(
 _CLICKABLE_TYPES = {"submit", "image", "button", "reset"}
 
 
-class _FormParser(HTMLParser):
-    """Collect (action, method, fields) of the form_index-th <form>.
+def _form_fields(html: str, form_index: int) -> tuple[str | None, str | None, list]:
+    """(action, method, fields) of the ``form_index``-th <form>; action
+    is None when the page has no such form.
 
     Field semantics follow Scrapy's ``FormRequest.from_response`` /
     lxml ``form_values()`` (public behavior): named <input> except
@@ -220,73 +223,55 @@ class _FormParser(HTMLParser):
     defaulting to 'on'), <textarea> text, <select> selected option
     (first option when none is marked selected — the browser default
     Scrapy inherits from lxml)."""
-
-    def __init__(self, form_index: int = 0):
-        super().__init__(convert_charrefs=True)
-        self.form_index = form_index
-        self._form_no = -1
-        self._in_target = False
-        self.action: str | None = None
-        self.method: str | None = None
-        self.fields: list[tuple[str, str]] = []
-        self._select_name: str | None = None
-        self._select_options: list[tuple[str, bool]] = []  # (value, selected)
-        self._textarea_name: str | None = None
-        self._textarea_chunks: list[str] | None = None
-
-    def handle_starttag(self, tag, attrs):
-        a = dict(attrs)
-        if tag == "form":
-            self._form_no += 1
-            if self._form_no == self.form_index:
-                self._in_target = True
-                self.action = a.get("action") or ""
-                self.method = (a.get("method") or "GET").upper()
-            return
-        if not self._in_target:
-            return
-        if tag == "input":
-            name = a.get("name")
-            if not name:
-                return
-            itype = (a.get("type") or "text").lower()
-            if itype in _CLICKABLE_TYPES:
-                return
-            if itype in ("checkbox", "radio") and "checked" not in a:
-                return
-            default = "on" if itype in ("checkbox", "radio") else ""
-            self.fields.append((name, a.get("value") or default))
-        elif tag == "select":
-            self._select_name = a.get("name")
-            self._select_options = []
-        elif tag == "option" and self._select_name is not None:
-            self._select_options.append(
-                (a.get("value") if a.get("value") is not None else "", "selected" in a)
-            )
-        elif tag == "textarea":
-            self._textarea_name = a.get("name")
-            self._textarea_chunks = []
-
-    def handle_data(self, data):
-        if self._textarea_chunks is not None:
-            self._textarea_chunks.append(data)
-
-    def handle_endtag(self, tag):
-        if tag == "form" and self._in_target:
-            self._in_target = False
-        elif tag == "select" and self._in_target and self._select_name:
-            chosen = next((v for v, sel in self._select_options if sel), None)
-            if chosen is None and self._select_options:
-                chosen = self._select_options[0][0]
+    form_no = -1
+    in_target = False
+    action = method = None
+    fields: list[tuple[str, str]] = []
+    select_name = None
+    select_options: list[tuple[str, bool]] = []  # (value, selected)
+    textarea_name = None
+    textarea_chunks: list[str] | None = None
+    for kind, tag, a in tokens(html):
+        if kind == TEXT:
+            if textarea_chunks is not None:
+                textarea_chunks.append(a)
+        elif kind == START:
+            if tag == "form":
+                form_no += 1
+                if form_no == form_index:
+                    in_target = True
+                    action = a.get("action") or ""
+                    method = (a.get("method") or "GET").upper()
+            elif not in_target:
+                continue
+            elif tag == "input":
+                name, itype = a.get("name"), (a.get("type") or "text").lower()
+                box = itype in ("checkbox", "radio")
+                if name and itype not in _CLICKABLE_TYPES and (not box or "checked" in a):
+                    fields.append((name, a.get("value") or ("on" if box else "")))
+            elif tag == "select":
+                select_name = a.get("name")
+                select_options = []
+            elif tag == "option" and select_name is not None:
+                value = a.get("value")
+                select_options.append(("" if value is None else value, "selected" in a))
+            elif tag == "textarea":
+                textarea_name = a.get("name")
+                textarea_chunks = []
+        elif tag == "form" and in_target:
+            in_target = False
+        elif tag == "select" and in_target and select_name:
+            chosen = next((v for v, sel in select_options if sel), None)
+            if chosen is None and select_options:
+                chosen = select_options[0][0]
             if chosen is not None:
-                self.fields.append((self._select_name, chosen))
-            self._select_name = None
-        elif tag == "textarea" and self._in_target and self._textarea_name:
-            self.fields.append(
-                (self._textarea_name, "".join(self._textarea_chunks or []))
-            )
-            self._textarea_name = None
-            self._textarea_chunks = None
+                fields.append((select_name, chosen))
+            select_name = None
+        elif tag == "textarea" and in_target and textarea_name:
+            fields.append((textarea_name, "".join(textarea_chunks or [])))
+            textarea_name = None
+            textarea_chunks = None
+    return action, method, fields
 
 
 def form_request(
@@ -308,15 +293,13 @@ def form_request(
     against the page URL (empty action = the page URL itself)."""
     from urllib.parse import urlencode, urljoin
 
-    p = _FormParser(form_index)
-    p.feed(html or "")
-    p.close()
-    if p.action is None:
+    action, method, fields = _form_fields(html, form_index)
+    if action is None:
         return None
     ov = dict(overrides or {})
     out: list[tuple[str, str]] = []
     replaced: set[str] = set()
-    for name, value in p.fields:
+    for name, value in fields:
         if name in ov:
             if name in replaced:
                 continue  # collapse duplicates of an overridden field
@@ -327,8 +310,8 @@ def form_request(
     for name, value in ov.items():
         if name not in replaced:
             out.append((name, str(value)))
-    action = urljoin(page_url or "", p.action) if p.action else (page_url or "")
-    return action, p.method or "GET", urlencode(out)
+    action = urljoin(page_url or "", action) if action else (page_url or "")
+    return action, method, urlencode(out)
 
 
 def form_requests(
@@ -346,24 +329,19 @@ def form_requests(
     straight onto frontier columns: action->url, method->method,
     body->body (the frontier fingerprint already covers method+body,
     functions/urls.py)."""
-
     per_row = isinstance(overrides, str)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            ovs = pdf[overrides] if per_row else None
-            for i, (url, html) in enumerate(zip(pdf[url_col], pdf[html_col])):
-                ov = dict(ovs.iloc[i] or {}) if per_row else overrides
-                got = form_request(html, url, ov, form_index)
-                if got is not None:
-                    rows.append((url, got[0], got[1], got[2]))
-            yield pd.DataFrame(
-                rows, columns=["url", "action", "method", "body"]
-            )
+    def per_page(url, html, ov=overrides):  # per row: ov is the column's value
+        got = form_request(html, url, ov, form_index)
+        return [] if got is None else [(url, *got)]
 
-    return pages.mapInPandas(
-        run, "url string, action string, method string, body string"
+    return map_pages(
+        pages,
+        per_page,
+        "url string, action string, method string, body string",
+        html_col,
+        url_col,
+        overrides if per_row else None,
     )
 
 
@@ -379,37 +357,23 @@ _META_NOINDEX = {"noindex", "none"}
 _META_NOFOLLOW = {"nofollow", "none"}
 
 
-class _DirectivesParser(HTMLParser):
-    """One streaming pass collecting (href, rel-nofollow) anchor pairs
-    and the page-level meta-robots flags. rel is a space-separated
-    token list (``rel="nofollow ugc sponsored"`` is still nofollow)."""
-
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.links: list[tuple[str, bool]] = []
-        self.noindex = False
-        self.nofollow = False
-
-    def handle_starttag(self, tag, attrs):
-        a = dict(attrs)
-        if tag == "a" and a.get("href"):
-            rel = (a.get("rel") or "").lower().split()
-            self.links.append((a["href"], "nofollow" in rel))
-        elif tag == "meta" and (a.get("name") or "").lower() == "robots":
-            toks = {
-                t.strip().lower()
-                for t in (a.get("content") or "").split(",")
-            }
-            self.noindex = self.noindex or bool(toks & _META_NOINDEX)
-            self.nofollow = self.nofollow or bool(toks & _META_NOFOLLOW)
-
-
 def parse_link_directives(html: str) -> tuple[list[tuple[str, bool]], bool, bool]:
-    """(links [(href, rel_nofollow)], page_noindex, page_nofollow)."""
-    p = _DirectivesParser()
-    p.feed(html or "")
-    p.close()
-    return p.links, p.noindex, p.nofollow
+    """(links [(href, rel_nofollow)], page_noindex, page_nofollow).
+
+    rel is a space-separated token list (``rel="nofollow ugc
+    sponsored"`` is still nofollow)."""
+    links: list[tuple[str, bool]] = []
+    noindex = nofollow = False
+    for kind, tag, a in tokens(html):
+        if kind != START:
+            continue
+        if tag == "a" and a.get("href"):
+            links.append((a["href"], "nofollow" in (a.get("rel") or "").lower().split()))
+        elif tag == "meta" and (a.get("name") or "").lower() == "robots":
+            toks = {t.strip().lower() for t in (a.get("content") or "").split(",")}
+            noindex = noindex or bool(toks & _META_NOINDEX)
+            nofollow = nofollow or bool(toks & _META_NOFOLLOW)
+    return links, noindex, nofollow
 
 
 def link_directives_pages(
@@ -423,24 +387,18 @@ def link_directives_pages(
     frontier admission: empty when the page is meta-nofollow, otherwise
     out_links minus rel="nofollow" anchors. ``noindex`` is the page's
     document-sink gate (drop from the corpus, still crawl through).
-    Same batch shape as parse_html_pages: one Arrow crossing.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, html in zip(pdf[url_col], pdf[html_col]):
-                links, noindex, nofollow = parse_link_directives(html)
-                out = [h for h, _ in links]
-                follow = [] if nofollow else [h for h, nf in links if not nf]
-                rows.append((url, out, follow, noindex, nofollow))
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "out_links", "follow_links", "noindex", "nofollow"],
-            )
+    def per_page(url, html):
+        links, noindex, nofollow = parse_link_directives(html)
+        follow = [] if nofollow else [h for h, nf in links if not nf]
+        return [(url, [h for h, _ in links], follow, noindex, nofollow)]
 
-    return pages.mapInPandas(
-        run,
+    return map_pages(
+        pages,
+        per_page,
         "url string, out_links array<string>, follow_links array<string>, "
         "noindex boolean, nofollow boolean",
+        html_col,
+        url_col,
     )

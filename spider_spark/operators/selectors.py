@@ -1,10 +1,12 @@
-"""CSS / XPath selector subset over the stdlib HTML parser.
+"""CSS / XPath selector subset over the package's one HTML tokenizer.
 
 The reference extracts with lxml selectors (``response.xpath(...)`` —
 3,035 spiders; ``response.css(...)`` — 896, e.g. ``der_immo_tip.py:
 32-47``). lxml is not in this container, so this module implements the
-selector SUBSET those spiders actually use over a minimal DOM built
-with ``html.parser``:
+selector SUBSET those spiders actually use over a minimal DOM that
+:func:`parse_tree` builds from ``htmlparse.tokens`` (so a duplicated
+attribute keeps its first value and a truncated page keeps its
+trailing text, as with every other extractor):
 
 * CSS: descendant combination by whitespace, the ``>`` child (spaced
   or unspaced — 52 spiders write ``ul>li``), ``+`` adjacent-sibling
@@ -76,12 +78,13 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
 
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .htmlparse import START, TEXT, tokens
 
 #: HTML void elements — start tags that never receive an end tag
 VOID_TAGS = {
@@ -150,39 +153,25 @@ class _Node:
         return out
 
 
-class _TreeBuilder(HTMLParser):
-    def __init__(self):
-        super().__init__(convert_charrefs=True)
-        self.root = _Node("#root", {})
-        self._stack = [self.root]
-
-    def handle_starttag(self, tag, attrs):
-        node = _Node(tag, dict(attrs), parent=self._stack[-1])
-        self._stack[-1].content.append(node)
-        if tag not in VOID_TAGS:
-            self._stack.append(node)
-
-    def handle_startendtag(self, tag, attrs):
-        self._stack[-1].content.append(
-            _Node(tag, dict(attrs), parent=self._stack[-1])
-        )
-
-    def handle_endtag(self, tag):
-        # close the nearest open tag of this name (tolerates misnesting)
-        for i in range(len(self._stack) - 1, 0, -1):
-            if self._stack[i].tag == tag:
-                del self._stack[i:]
-                break
-
-    def handle_data(self, data):
-        if data.strip():
-            self._stack[-1].content.append(data)
-
-
 def parse_tree(html: str) -> _Node:
-    p = _TreeBuilder()
-    p.feed(html or "")
-    return p.root
+    root = _Node("#root", {})
+    stack = [root]
+    for kind, tag, val in tokens(html):
+        if kind == TEXT:
+            if val.strip():
+                stack[-1].content.append(val)
+        elif kind == START:
+            node = _Node(tag, val, parent=stack[-1])
+            stack[-1].content.append(node)
+            if tag not in VOID_TAGS:
+                stack.append(node)
+        else:
+            # close the nearest open tag of this name (tolerates misnesting)
+            for i in range(len(stack) - 1, 0, -1):
+                if stack[i].tag == tag:
+                    del stack[i:]
+                    break
+    return root
 
 
 # ---------------------------------------------------------------------------

@@ -85,11 +85,10 @@ class CrawlConfig:
     #: default: plain crawls skip the (empty) per-wave revalidation
     #: write entirely.
     conditional_get: bool = False
-    #: "exact" anti-join | "bloom" | "cuckoo" filter; ``bloom_capacity``
-    #: sizes the Bloom and the cuckoo filter alike, ``bloom_fpr`` only Bloom
+    #: "exact" anti-join | "bloom" | "cuckoo" filter; both filters hold
+    #: 2**20 fingerprints per bucket (Bloom at a 1e-6 false-positive
+    #: rate), so ``n_buckets`` is the sizing lever
     seen_backend: str = "exact"
-    bloom_capacity: int = 1 << 20
-    bloom_fpr: float = 1e-6
     #: compact ``url_seen`` every N committed waves (None = never).
     #: The exact seen-backend re-reads url_seen every wave, so without
     #: compaction a long crawl reads hundreds of snapshot dirs ×
@@ -141,9 +140,9 @@ class CrawlEngine:
         #: exact anti-join against ``url_seen``
         backend = self.cfg.seen_backend
         if backend == "bloom":
-            self.seen_filter = D.BloomSpec(self.cfg.bloom_capacity, self.cfg.bloom_fpr)
+            self.seen_filter = D.BloomSpec(1 << 20, 1e-6)
         elif backend == "cuckoo":
-            self.seen_filter = CuckooSpec(self.cfg.bloom_capacity)
+            self.seen_filter = CuckooSpec(1 << 20)
         elif backend == "exact":
             self.seen_filter = None
         else:
@@ -292,7 +291,7 @@ class CrawlEngine:
                     pending.select("fingerprint"), on="fingerprint", how="left_anti"
                 )
                 writes["frontier"] = pending.unionByName(fresh.select(*pending.columns))
-                record = self._commit(wave, writes, admitted, t0, record["next_seq_base"])
+                record = self._commit(wave, writes, t0, record["next_seq_base"])
                 pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
                 wave += 1
         else:
@@ -312,7 +311,7 @@ class CrawlEngine:
                 seeds = expand_feed_seeds(seeds, self.feeds)
             admitted, writes = self._admit(_seed_candidates(seeds, cfg.crawl_id, 0, 0), 0)
             writes["frontier"] = admitted.drop("crawl_delay_s")
-            record = self._commit(0, writes, admitted, t0, 0)
+            record = self._commit(0, writes, t0, 0)
             pending = self.store.read_table("frontier", "latest", schema=schemas.FRONTIER)
             wave = 1
 
@@ -491,7 +490,7 @@ class CrawlEngine:
                 .agg(*bucket_aggs)
                 .selectExpr("crawl_id", f"{wave} AS wave", "host_bucket", "fetched", "retried"),
             }
-            record = self._commit(wave, writes, admitted, t0, record["next_seq_base"])
+            record = self._commit(wave, writes, t0, record["next_seq_base"])
             if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
                 self.store.compact("url_seen", cfg.compact_partitions)
 
@@ -522,9 +521,7 @@ class CrawlEngine:
             wave += 1
         return totals
 
-    def _commit(
-        self, wave: int, writes: dict, admitted: DataFrame, t0: float, next_base: int
-    ) -> dict:
+    def _commit(self, wave: int, writes: dict, t0: float, next_base: int) -> dict:
         """Write one wave's tables and commit it with its record — the
         one commit path of seeding, injection and the crawl loop.
 
@@ -533,8 +530,7 @@ class CrawlEngine:
         inputs, each a scan, a narrow step and the write, submitted at
         once from driver threads so Spark schedules them in one pool
         and their fixed per-job latencies overlap; a write
-        that hangs shows up here, in its future. The count of the
-        admitted checkpoint runs in the same pool. Once all are written,
+        that hangs shows up here, in its future. Once all are written,
         the wave's counters are read back from the staged files'
         parquet footers (:meth:`SnapshotStore.wave_stats`) — files that
         are already complete cannot race the queries that wrote them.
@@ -542,9 +538,10 @@ class CrawlEngine:
         a wave is durable iff all of its writes are, and its counters
         are durable with it.
 
-        Returns the record: ``candidates`` (admitted rows),
-        ``docs_emitted`` (documents rows: the parse-ok detail pages with
-        spans), ``fetched`` (the sum of the per-bucket metrics rows),
+        Returns the record: ``candidates`` (url_seen rows: every row the
+        wave admitted but the ``dont_filter`` ones, which the seen set
+        does not record), ``docs_emitted`` (documents rows: the parse-ok
+        detail pages with spans), ``fetched`` (the sum of the per-bucket metrics rows),
         ``pending`` (frontier rows), ``wall_ms`` (``t0`` to just before
         the manifest swap, so it counts the writes) and
         ``next_seq_base``: ``assign_seq`` numbers rows strictly above
@@ -552,8 +549,7 @@ class CrawlEngine:
         seq.
         """
         writes = {t: df for t, df in writes.items() if df is not None}
-        with ThreadPoolExecutor(max_workers=len(writes) + 1) as pool:
-            candidates = pool.submit(admitted.count)
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
             futures = [pool.submit(self.store.write_wave, t, wave, df) for t, df in writes.items()]
             for fut in futures:
                 fut.result()
@@ -563,7 +559,7 @@ class CrawlEngine:
         if "metrics" in writes:  # at most n_buckets rows
             fetched = self.store.wave_stats("metrics", wave, "fetched", "sum")[1] or 0
         record = {
-            "candidates": candidates.result(),
+            "candidates": self.store.wave_stats("url_seen", wave)[0],
             "docs_emitted": docs,
             "fetched": fetched,
             "pending": pending,

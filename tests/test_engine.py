@@ -1451,7 +1451,8 @@ def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monke
     the assign_seq range sort. And the driver builds a loop wave's plan
     in at most 600 main-thread py4j round trips: the operators write
     their wave-invariant expressions as SQL text, and the engine builds
-    its own once per crawl."""
+    its own once per crawl. The commit runs no count job: the record's
+    counters come from the written files' footers."""
     import threading
 
     import py4j.clientserver as CS
@@ -1467,19 +1468,30 @@ def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monke
     main = threading.main_thread()
     n_calls = [0]
     after_commit = []  # main-thread calls so far, after each wave commit
+    in_commit, commit_counts = [False], []  # DataFrame.count calls inside _commit
     send, commit = CS.ClientServerConnection.send_command, CrawlEngine._commit
+    DF = type(spark.range(0))  # the session's DataFrame class
+    count = DF.count
 
     def counting_send(self, *args, **kwargs):
         n_calls[0] += threading.current_thread() is main
         return send(self, *args, **kwargs)
 
     def marking_commit(self, *args, **kwargs):
+        in_commit[0] = True
         out = commit(self, *args, **kwargs)
+        in_commit[0] = False
         after_commit.append(n_calls[0])
         return out
 
+    def recording_count(self):
+        if in_commit[0]:
+            commit_counts.append(len(after_commit))  # the committing wave
+        return count(self)
+
     monkeypatch.setattr(CS.ClientServerConnection, "send_command", counting_send)
     monkeypatch.setattr(CrawlEngine, "_commit", marking_commit)
+    monkeypatch.setattr(DF, "count", recording_count)
     spec = WebSpec(seed=7, n_hosts=3, pages_per_host=2, details_per_page=3)
     store = PlanRecordingStore(spark, str(tmp_path / "store"))
     eng = CrawlEngine(
@@ -1501,6 +1513,7 @@ def test_wave_writes_scan_checkpoints_with_few_py4j_calls(spark, tmp_path, monke
     per_wave = [b - a for a, b in zip(after_commit[1:], after_commit[2:])]
     assert len(per_wave) == 2
     assert max(per_wave) <= 600, per_wave
+    assert commit_counts == [], f"waves whose commit counted a DataFrame: {commit_counts}"
 
 
 def test_crawl_to_warc_cdx_replay_end_to_end(spark, tmp_path):

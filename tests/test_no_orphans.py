@@ -67,3 +67,25 @@ def test_every_public_name_has_a_caller():
     unexplained = [o for o in orphans if o.split()[-1] not in KEPT]
     assert not unexplained, "no caller outside tests:\n" + "\n".join(unexplained)
     assert set(KEPT) <= {node.name for _, node in defs}, "stale KEPT entry"
+
+
+def test_one_html_tokenizer():
+    """``htmlparse.tokens`` is the package's one HTML tokenizer: one
+    ``HTMLParser`` subclass, and only ``operators/htmlparse.py`` imports
+    ``html.parser``. Every other extractor loops over its tokens."""
+    subclasses, importers = [], set()
+    for p, src in _sources().items():
+        rel = p.relative_to(ROOT)
+        if rel.parts[0] != "spider_spark":
+            continue
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ClassDef) and any(
+                getattr(b, "id", getattr(b, "attr", None)) == "HTMLParser" for b in node.bases
+            ):
+                subclasses.append(f"{rel}:{node.name}")
+            elif (isinstance(node, ast.ImportFrom) and node.module == "html.parser") or (
+                isinstance(node, ast.Import) and any(a.name == "html.parser" for a in node.names)
+            ):
+                importers.add(rel.as_posix())
+    assert len(subclasses) == 1, subclasses
+    assert importers == {"spider_spark/operators/htmlparse.py"}, importers

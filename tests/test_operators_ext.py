@@ -202,6 +202,24 @@ def test_parse_page_pure():
     assert [s[3] for s in spans] == list(range(len(spans)))
 
 
+def test_duplicate_attribute_first_wins():
+    """Every extractor reads the first of a duplicated attribute: the
+    HTML5 tokenizer drops the later one as a parse error, and so does
+    libxml2, the parser under lxml and parsel."""
+    from spider_spark.operators.anchortext import parse_anchors
+    from spider_spark.operators.htmlparse import form_request, parse_link_directives
+    from spider_spark.operators.selectors import select_html
+
+    page = '<a href="/first" href="/second">x</a><img src="/a.jpg" src="/b.jpg">'
+    assert parse_page(page) == (["/first"], [("text", "x", None, 0), ("media", None, "/a.jpg", 1)])
+    assert parse_link_directives(page) == ([("/first", False)], False, False)
+    assert parse_anchors(page) == [("/first", "x")]
+    assert select_html(page, "a::attr(href)") == ["/first"]
+    assert select_html(page, "img::attr(src)") == ["/a.jpg"]
+    form = '<form action="/f"><input name="q" value="1" value="2"></form>'
+    assert form_request(form, "http://h/") == ("http://h/f", "GET", "q=1")
+
+
 def test_parse_html_pages_df(spark):
     df = spark.createDataFrame([("http://h/p1", HTML), ("http://h/p2", "")], "url string, html string")
     out = {r["url"]: r for r in parse_html_pages(df).collect()}
@@ -589,6 +607,8 @@ def test_selector_engine_unit():
     # misnested / void tags tolerated; ::text yields one result per
     # TEXT NODE (parsel semantics — <br> splits them)
     assert select_html("<p>a<br>b</p>", "p::text") == ["a", "b"]
+    # a truncated page keeps its trailing text, as in every extractor
+    assert select_html("<div>a</div><div>b &am", "//div/text()", lang="xpath") == ["a", "b &am"]
 
 
 def test_selector_predicates_and_axes():
