@@ -50,11 +50,16 @@ trailing text, as with every other extractor):
   ``substring-before(<path>, "s")`` pair (352 spiders — usually nested
   to slice coordinates out of inline-script literals).
 
-Everything compiles to the same step matcher; evaluation is one
-iterative pass per page inside a pandas UDF — Arrow batch in,
-``array<string>`` out.  All DOM walks use explicit stacks (no
-recursion), so adversarially deep-nested HTML degrades gracefully
-instead of raising RecursionError inside a Spark task.
+Each mechanism has one implementation. ``_scan`` is the only
+quote- and bracket-aware walk over a selector string (splitting unions,
+CSS combinators, predicate bodies and outer-function arguments are
+loops over it). ``_walk`` is the only DOM walk: an explicit-stack
+generator over text strings and elements in document order, so
+adversarially deep-nested HTML never raises RecursionError inside a
+Spark task. ``_axis_content`` is the only axis: element steps keep its
+elements and ``text()`` steps its text nodes. CSS and XPath both
+compile to ``_Branch`` (steps + extraction mode), evaluated once per
+page inside a pandas UDF — Arrow batch in, ``array<string>`` out.
 
 Extraction semantics mirror parsel/Scrapy observably:
 
@@ -72,6 +77,11 @@ Extraction semantics mirror parsel/Scrapy observably:
   their intent); union results are per-branch document order,
   concatenated in branch order (branches in the reference are layout
   fallbacks — at most one usually matches a given page).
+* node-set rules kept as in lxml: ``normalize-space(text())`` reads
+  the FIRST direct text node only (XPath 1.0 converts a node-set to the
+  string-value of its first node; ``normalize-space()`` reads the whole
+  string-value), positions start at 1 so ``[0]`` selects nothing, and
+  ``parent::text()`` is empty (an element's parent is never text).
 """
 
 from __future__ import annotations
@@ -101,56 +111,31 @@ class _Node:
     #: document-ordered mix of text strings and child _Nodes
     content: list = field(default_factory=list)
 
-    @property
-    def children(self) -> list:
-        return [c for c in self.content if isinstance(c, _Node)]
-
     def all_text(self) -> str:
-        """Normalized concatenation of every descendant text node
-        (iterative pre-order walk — no recursion)."""
-        parts: list[str] = []
-        stack = [iter(self.content)]
-        while stack:
-            try:
-                c = next(stack[-1])
-            except StopIteration:
-                stack.pop()
-                continue
-            if isinstance(c, str):
-                parts.append(c)
-            else:
-                stack.append(iter(c.content))
-        return " ".join(" ".join(parts).split())
+        """Normalized concatenation of every descendant text node."""
+        return " ".join(_texts(_walk(self.content)))
 
     def direct_text(self) -> str:
-        return " ".join(
-            " ".join(c for c in self.content if isinstance(c, str)).split()
-        )
+        return " ".join(_texts(self.content))
 
-    def text_nodes(self, deep: bool) -> list[str]:
-        """Normalized individual text nodes (direct, or all descendants)."""
-        out: list[str] = []
-        if not deep:
-            for c in self.content:
-                if isinstance(c, str):
-                    t = " ".join(c.split())
-                    if t:
-                        out.append(t)
-            return out
-        stack = [iter(self.content)]
-        while stack:
-            try:
-                c = next(stack[-1])
-            except StopIteration:
-                stack.pop()
-                continue
-            if isinstance(c, str):
-                t = " ".join(c.split())
-                if t:
-                    out.append(t)
-            else:
+
+def _walk(content: list):
+    """Every text string and ``_Node`` below ``content``, in document
+    order (iterative pre-order walk — no recursion)."""
+    stack = [iter(content)]
+    while stack:
+        for c in stack[-1]:
+            yield c
+            if isinstance(c, _Node):
                 stack.append(iter(c.content))
-        return out
+                break
+        else:
+            stack.pop()
+
+
+def _texts(items) -> list[str]:
+    """The normalized, non-blank text nodes among ``items``."""
+    return [t for t in (_norm(c) for c in items if isinstance(c, str)) if t]
 
 
 def parse_tree(html: str) -> _Node:
@@ -284,7 +269,7 @@ class _TextEq:
     def eval(self, subject) -> bool:
         if isinstance(subject, str):
             return _norm(subject) == self.value
-        return any(t == self.value for t in subject.text_nodes(deep=False))
+        return self.value in _texts(subject.content)
 
 
 @dataclass(frozen=True)
@@ -294,17 +279,25 @@ class _HasText:
     def eval(self, subject) -> bool:
         if isinstance(subject, str):
             return bool(subject.strip())
-        return bool(subject.text_nodes(deep=False))
+        return bool(_texts(subject.content))
 
 
 @dataclass(frozen=True)
 class _NormSpace:
-    """``normalize-space()`` (truthy) / ``normalize-space()='v'``."""
+    """``normalize-space()`` (truthy) / ``normalize-space()='v'``; with
+    ``first_text``, ``normalize-space(text())``: the node-set ``text()``
+    converts to its FIRST direct text node (XPath 1.0)."""
 
     value: str | None = None
+    first_text: bool = False
 
     def eval(self, subject) -> bool:
-        s = _norm(_strval(subject))
+        if not self.first_text:
+            s = _norm(_strval(subject))
+        elif isinstance(subject, str):
+            s = ""  # a text or attribute node has no text() children
+        else:
+            s = (_texts(subject.content) or [""])[0]
         return bool(s) if self.value is None else s == self.value
 
 
@@ -322,18 +315,14 @@ class _SelfTag:
 class _ExistsPath:
     """Relative-path existence: ``[span[...]]`` / ``[./a]`` / ``[.//img]``."""
 
-    steps: tuple
-    mode: str | None
-    attr: str | None
+    branch: _Branch
 
     def eval(self, subject) -> bool:
         if isinstance(subject, str):
             return False
-        selected = _select(subject, list(self.steps))
-        if self.mode == "attr":
-            return any(
-                not isinstance(n, str) and self.attr in n.attrs for n in selected
-            )
+        selected = _select(subject, self.branch.steps)
+        if self.branch.mode == "attr":
+            return any(self.branch.attr in n.attrs for n in selected)
         return bool(selected)
 
 
@@ -404,37 +393,25 @@ class _Step:
         for c in self.classes:
             if c not in node_classes:
                 return False
-        if self.nth_child is not None:
-            parent = node.parent
-            if parent is None:
-                return False
-            elems = [c for c in parent.content if isinstance(c, _Node)]
-            try:
-                pos = elems.index(node) + 1
-            except ValueError:
-                return False
-            want = len(elems) if self.nth_child == -1 else self.nth_child
-            if pos != want:
-                return False
-        if self.nth_of_type is not None:
-            parent = node.parent
-            if parent is None:
-                return False
-            same = [
-                c for c in parent.content
-                if isinstance(c, _Node) and c.tag == node.tag
-            ]
-            try:
-                pos = same.index(node) + 1
-            except ValueError:
-                return False
-            want = len(same) if self.nth_of_type == -1 else self.nth_of_type
-            if pos != want:
-                return False
-        return True
+        if self.nth_child is not None and not _nth(node, self.nth_child, None):
+            return False
+        return self.nth_of_type is None or _nth(node, self.nth_of_type, node.tag)
 
 
-#: a compiled single path: element steps + extraction mode
+def _nth(node: _Node, want: int, tag: str | None) -> bool:
+    """Is ``node`` the ``want``-th (``-1`` = last) element child of its
+    parent, counting only ``tag`` children when ``tag`` is set?"""
+    if node.parent is None:
+        return False
+    sibs = [
+        c for c in node.parent.content
+        if isinstance(c, _Node) and (tag is None or c.tag == tag)
+    ]
+    return sibs.index(node) + 1 == (len(sibs) if want == -1 else want)
+
+
+#: a compiled single path (what ``compile_css`` / ``compile_xpath``
+#: return): steps + extraction mode
 @dataclass(frozen=True)
 class _Branch:
     steps: tuple
@@ -462,6 +439,55 @@ class _Compiled:
 @dataclass(frozen=True)
 class _ConcatCompiled:
     args: tuple
+
+
+# ---------------------------------------------------------------------------
+# selector-string scanning: the one quote- and bracket-aware walk
+# ---------------------------------------------------------------------------
+
+_XP_LITERAL = re.compile(r"\"([^\"]*)\"|'([^']*)'")
+
+
+def _lit(m: re.Match) -> str:
+    return m.group(1) if m.group(1) is not None else m.group(2)
+
+
+def _scan(src: str, pos: int = 0):
+    """Yield ``(i, ch, depth)`` for every character of ``src`` from
+    ``pos`` on that lies outside a string literal; ``depth`` counts the
+    ``(``/``[`` still open after ``ch``. An unterminated literal raises
+    ``ValueError``."""
+    depth, n = 0, len(src)
+    while pos < n:
+        ch = src[pos]
+        if ch in "\"'":
+            m = _XP_LITERAL.match(src, pos)
+            if not m:
+                raise ValueError(f"unterminated literal in {src!r}")
+            pos = m.end()
+            continue
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        yield pos, ch, depth
+        pos += 1
+
+
+def _split_top(src: str, sep: str) -> list[str]:
+    """Split ``src`` at its depth-0 ``sep`` characters; parts are stripped."""
+    cuts = [i for i, ch, depth in _scan(src) if depth == 0 and ch == sep]
+    bounds = zip([-1, *cuts], [*cuts, len(src)])
+    return [src[a + 1:b].strip() for a, b in bounds]
+
+
+def _balanced(s: str) -> bool:
+    """True if parens/brackets balance (so the outer fn really wraps s)."""
+    depth = 0
+    for _, _, depth in _scan(s):
+        if depth < 0:
+            return False
+    return depth == 0
 
 
 # ---------------------------------------------------------------------------
@@ -551,41 +577,27 @@ def _split_css(sel: str) -> list[tuple[str, str]]:
     splits a compound; combinators bind spaced or unspaced (52 spiders
     write ``ul>li``, 46 write ``i.fa-phone + a``)."""
     out: list[tuple[str, str]] = []
-    comb = ""
-    i, n, start, depth = 0, len(sel), 0, 0
-    while i < n:
-        ch = sel[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(sel, i)
-            if not m:
-                raise ValueError(f"unterminated literal in css {sel!r}")
-            i = m.end()
+    comb, start = "", 0  # start: first character after the last combinator
+    for i, ch, depth in _scan(sel):
+        if depth or ch not in " \t>+~":
             continue
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif depth == 0 and ch in " \t>+~":
-            if start == i:
+        if i > start or not out:  # a combinator run begins
+            if i == start:
                 raise ValueError(f"dangling combinator in css {sel!r}")
             out.append((comb, sel[start:i]))
             comb = " "
-            while i < n and sel[i] in " \t>+~":
-                if sel[i] in ">+~":
-                    comb = sel[i]
-                i += 1
-            start = i
-            continue
-        i += 1
-    if start < n:
+        if ch in ">+~":
+            comb = ch
+        start = i + 1
+    if start < len(sel):
         out.append((comb, sel[start:]))
     elif comb != " " or not out:
         raise ValueError(f"dangling combinator in css {sel!r}")
     return out
 
 
-def compile_css(selector: str) -> tuple[list[_Step], str | None, str | None]:
-    """-> (steps, extract_mode, attr_name); mode in {None, 'text', 'attr'}."""
+def compile_css(selector: str) -> _Branch:
+    """One CSS selector (no comma union) -> ``_Branch``."""
     sel = selector.strip()
     mode, attr, deep_text = None, None, False
     m = re.search(r"::(text|attr\(([\w-]+)\))$", sel)
@@ -605,7 +617,7 @@ def compile_css(selector: str) -> tuple[list[_Step], str | None, str | None]:
     if mode == "text":
         steps.append(_Step(axis="descendant" if deep_text else "child",
                            is_text=True))
-    return steps, mode, attr
+    return _Branch(tuple(steps), mode, attr)
 
 
 # ---------------------------------------------------------------------------
@@ -628,11 +640,8 @@ _XP_AXIS = re.compile(
     r"|following|preceding|parent)::"
 )
 _XP_TEST = re.compile(r"@[\w-]+|text\(\)|\.\.|\*|[a-zA-Z][\w-]*")
-_XP_LITERAL = re.compile(r"\"([^\"]*)\"|'([^']*)'")
-
-
-def _lit(m: re.Match) -> str:
-    return m.group(1) if m.group(1) is not None else m.group(2)
+_XP_NAME = re.compile(r"[\w-]+")
+_XP_TAG = re.compile(r"[a-zA-Z][\w-]*")
 
 
 class _PredParser:
@@ -667,6 +676,13 @@ class _PredParser:
                 f"expected {token!r} at {self.src[self.pos:]!r} in predicate"
             )
 
+    def _match(self, pattern: re.Pattern, what: str) -> str:
+        m = pattern.match(self.src, self.pos)
+        if not m:
+            raise ValueError(f"unsupported {what} at {self.src[self.pos:]!r}")
+        self.pos = m.end()
+        return m.group()
+
     def parse(self):
         expr = self.or_expr()
         self._ws()
@@ -679,13 +695,13 @@ class _PredParser:
         # ``|`` inside a predicate is a node-set union; as a boolean it
         # is truthy iff either side is non-empty — i.e. ``or``
         # (``[self::h1 | self::h2]``, ``[./a | ./b]`` reference shapes)
-        while self._eat(" or ") or self._eat("or ") or self._eat("|"):
+        while self._eat("or ") or self._eat("|"):
             parts.append(self.and_expr())
         return parts[0] if len(parts) == 1 else _Or(tuple(parts))
 
     def and_expr(self):
         parts = [self.unary()]
-        while self._eat(" and ") or self._eat("and "):
+        while self._eat("and "):
             parts.append(self.unary())
         return parts[0] if len(parts) == 1 else _And(tuple(parts))
 
@@ -710,20 +726,13 @@ class _PredParser:
             sub = self._literal()
             self._expect(")")
             return arg(sub)
-        if self._eat("normalize-space()"):
-            if self._eat("="):
-                return _NormSpace(self._literal())
-            return _NormSpace(None)
-        if self._eat("normalize-space(text())"):
-            if self._eat("="):
-                return _NormSpace(self._literal())
-            return _NormSpace(None)
+        for call, first_text in (("normalize-space()", False),
+                                 ("normalize-space(text())", True)):
+            if self._eat(call):
+                value = self._literal() if self._eat("=") else None
+                return _NormSpace(value, first_text)
         if self._eat("self::"):
-            m = re.compile(r"[a-zA-Z][\w-]*").match(self.src, self.pos)
-            if not m:
-                raise ValueError(f"bad self:: test at {src[self.pos:]!r}")
-            self.pos = m.end()
-            expr = _SelfTag(m.group())
+            expr = _SelfTag(self._match(_XP_TAG, "self:: test"))
             # self::span[@class='bold'] — trailing predicates AND onto
             # the same subject (the not(self::tag[...]) reference shape)
             while self.pos < len(self.src) and self.src[self.pos] == "[":
@@ -743,10 +752,8 @@ class _PredParser:
             return _StringEq(self._literal())
         if self._eat(". ="):
             return _StringEq(self._literal())
-        if src.startswith("@", self.pos):
-            m = re.compile(r"@([\w-]+)").match(src, self.pos)
-            self.pos = m.end()
-            name = m.group(1)
+        if self._eat("@"):
+            name = self._match(_XP_NAME, "attribute test")
             if self._eat("["):  # @href[contains(.,'mailto')]
                 inner = self.or_expr()
                 self._expect("]")
@@ -755,19 +762,14 @@ class _PredParser:
                 return _AttrTest(name, self._literal())
             return _AttrTest(name, None)
         # relative path existence: ./x, .//x, x[...], x/y
-        if src.startswith((".//", "./"), self.pos) or re.compile(
-            r"[a-zA-Z][\w-]*"
-        ).match(src, self.pos):
-            path = self._scan_path()
-            return _exists_path(path)
+        if src.startswith((".//", "./"), self.pos) or _XP_TAG.match(src, self.pos):
+            return _exists_path(self._scan_path())
         raise ValueError(f"unsupported predicate atom at {src[i:]!r}")
 
     def _contains_arg(self):
         self._ws()
         if self._eat("@"):
-            m = re.compile(r"[\w-]+").match(self.src, self.pos)
-            self.pos = m.end()
-            name = m.group()
+            name = self._match(_XP_NAME, "attribute test")
             return lambda sub: _ContainsAttr(name, sub)
         if self._eat("text()"):
             return _ContainsText
@@ -780,30 +782,16 @@ class _PredParser:
         )
 
     def _scan_path(self) -> str:
-        """Consume a relative path up to a depth-0 boolean delimiter."""
+        """Consume a relative path up to a depth-0 boolean delimiter or
+        the bracket that closes the enclosing group."""
         src, start = self.src, self.pos
-        depth = 0
-        while self.pos < len(src):
-            ch = src[self.pos]
-            if ch in "\"'":
-                m = _XP_LITERAL.match(src, self.pos)
-                if not m:
-                    raise ValueError(f"unterminated literal in {src!r}")
-                self.pos = m.end()
-                continue
-            if ch in "[(":
-                depth += 1
-            elif ch in "])":
-                if depth == 0:
-                    break
-                depth -= 1
-            elif depth == 0 and src.startswith(" and ", self.pos):
+        self.pos = len(src)
+        for i, ch, depth in _scan(src, start):
+            if depth < 0 or depth == 0 and (
+                ch == "|" or src.startswith((" and ", " or "), i)
+            ):
+                self.pos = i
                 break
-            elif depth == 0 and src.startswith(" or ", self.pos):
-                break
-            elif depth == 0 and ch == "|":
-                break
-            self.pos += 1
         return src[start:self.pos]
 
 
@@ -816,8 +804,7 @@ def _exists_path(path: str) -> _ExistsPath:
         p = p[1:]  # './a' -> '/a'
     elif not p.startswith("/"):
         p = "/" + p  # 'span[...]' -> '/span[...]'
-    steps, mode, attr = compile_xpath(p)
-    return _ExistsPath(tuple(steps), mode, attr)
+    return _ExistsPath(compile_xpath(p))
 
 
 def _parse_pred_group(body: str) -> tuple:
@@ -831,37 +818,17 @@ def _parse_pred_group(body: str) -> tuple:
 
 
 def _scan_pred_body(src: str, pos: int) -> tuple[str, int]:
-    """From '[' at src[pos], return (body, end_pos_after_bracket) —
-    bracket/paren aware, quote aware."""
-    assert src[pos] == "["
-    depth = 0
-    i = pos
-    while i < len(src):
-        ch = src[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(src, i)
-            if not m:
-                raise ValueError(f"unterminated literal in {src!r}")
-            i = m.end()
-            continue
-        if ch == "[":
-            depth += 1
-        elif ch == "]":
-            depth -= 1
-            if depth == 0:
+    """From '[' at src[pos], return (body, end_pos_after_bracket)."""
+    for i, ch, depth in _scan(src, pos):
+        if depth == 0:
+            if ch == "]":
                 return src[pos + 1:i], i + 1
-        i += 1
+            break
     raise ValueError(f"unbalanced predicate bracket in {src!r}")
 
 
-def compile_xpath(xpath: str) -> tuple[list[_Step], str | None, str | None]:
-    """Compile ONE path (no union / outer function) -> (steps, mode, attr).
-
-    Terminal-attribute value predicates (``@href[...]``) are attached to
-    the final compiled object by ``compile_selector``; this function
-    stores them on the returned steps list via the ``_attr_pred``
-    attribute for backward compatibility of the triple shape.
-    """
+def compile_xpath(xpath: str) -> _Branch:
+    """Compile ONE path (no union / outer function) -> ``_Branch``."""
     src = xpath.strip()
     pos = 0
     steps: list[_Step] = []
@@ -915,37 +882,7 @@ def compile_xpath(xpath: str) -> tuple[list[_Step], str | None, str | None]:
             raise ValueError(f"text() must be terminal: {xpath!r}")
     if not steps:
         raise ValueError(f"empty xpath: {xpath!r}")
-    # smuggle the attr predicate out without changing the public triple
-    steps = list(steps)
-    if attr_pred is not None:
-        steps[-1]._attr_pred = attr_pred  # type: ignore[attr-defined]
-    return steps, mode, attr
-
-
-def _split_union(src: str) -> list[str]:
-    """Split a selector on top-level ``|`` (quote / bracket / paren aware)."""
-    parts: list[str] = []
-    depth = 0
-    i = 0
-    start = 0
-    while i < len(src):
-        ch = src[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(src, i)
-            if not m:
-                raise ValueError(f"unterminated literal in {src!r}")
-            i = m.end()
-            continue
-        if ch in "[(":
-            depth += 1
-        elif ch in "])":
-            depth -= 1
-        elif ch == "|" and depth == 0:
-            parts.append(src[start:i])
-            start = i + 1
-        i += 1
-    parts.append(src[start:])
-    return [p.strip() for p in parts if p.strip()]
+    return _Branch(tuple(steps), mode, attr, attr_pred)
 
 
 _OUTER_FN = re.compile(
@@ -953,118 +890,40 @@ _OUTER_FN = re.compile(
 )
 
 
-def _split_outer_args(s: str) -> tuple[str, str] | None:
-    """Split ``<path> , <literal>`` at the top-level comma; None if the
-    tail is not a bare string literal (then s isn't a 2-arg call)."""
-    depth, i = 0, 0
-    while i < len(s):
-        ch = s[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(s, i)
-            if not m:
-                return None
-            i = m.end()
-            continue
-        if ch in "[(":
-            depth += 1
-        elif ch in "])":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            m = _XP_LITERAL.match(s[i + 1 :].strip())
-            if not m or m.end() != len(s[i + 1 :].strip()):
-                return None
-            return s[:i].strip(), _lit(m)
-        i += 1
-    return None
-
-
-def _split_top_commas(s: str) -> list[str]:
-    """Split on depth-0 commas (quote / bracket / paren aware)."""
-    parts: list[str] = []
-    depth, i, start = 0, 0, 0
-    while i < len(s):
-        ch = s[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(s, i)
-            if not m:
-                raise ValueError(f"unterminated literal in {s!r}")
-            i = m.end()
-            continue
-        if ch in "[(":
-            depth += 1
-        elif ch in "])":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-        i += 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts]
-
-
 def compile_selector(selector: str, lang: str = "css") -> _Compiled:
     """Full compiler: union + outer functions -> ``_Compiled``."""
     sel = selector.strip()
+    if lang != "xpath":  # 'a, b' union — 58 spiders
+        return _Compiled(tuple(compile_css(p) for p in _split_top(sel, ",")))
+    if sel.startswith("concat(") and sel.endswith(")") and _balanced(
+        sel[len("concat("):-1]
+    ):
+        args: list[tuple] = []
+        for a in _split_top(sel[len("concat("):-1], ","):
+            m = _XP_LITERAL.fullmatch(a)
+            args.append(
+                ("lit", _lit(m)) if m else ("path", compile_selector(a, "xpath"))
+            )
+        return _ConcatCompiled(tuple(args))
     outer: list[tuple] = []
-    if lang == "xpath":
-        if sel.startswith("concat(") and sel.endswith(")") and _balanced(
-            sel[len("concat("):-1]
-        ):
-            args: list[tuple] = []
-            for a in _split_top_commas(sel[len("concat("):-1]):
-                m = _XP_LITERAL.match(a)
-                if m and m.end() == len(a):
-                    args.append(("lit", _lit(m)))
-                else:
-                    args.append(("path", compile_selector(a, "xpath")))
-            return _ConcatCompiled(tuple(args))
-        while True:
-            m = _OUTER_FN.match(sel)
-            if not (m and _balanced(m.group(2))):
+    while True:
+        m = _OUTER_FN.match(sel)
+        if not (m and _balanced(m.group(2))):
+            break
+        fn, inner = m.group(1), m.group(2).strip()
+        if fn in ("substring-after", "substring-before"):
+            # exactly ``<path>, <one bare literal>``
+            parts = _split_top(inner, ",")
+            lit = _XP_LITERAL.fullmatch(parts[-1])
+            if len(parts) != 2 or not lit:
                 break
-            fn, inner = m.group(1), m.group(2).strip()
-            if fn in ("substring-after", "substring-before"):
-                split = _split_outer_args(inner)
-                if split is None:
-                    break
-                inner, lit = split
-                outer.append((fn, lit))
-            else:
-                outer.append((fn,))
-            sel = inner
-        branches = []
-        for part in _split_union(sel):
-            steps, mode, attr = compile_xpath(part)
-            attr_pred = getattr(steps[-1], "_attr_pred", None)
-            branches.append(_Branch(tuple(steps), mode, attr, attr_pred))
-        return _Compiled(tuple(branches), tuple(outer))
-    branches = []
-    for part in _split_top_commas(sel):  # 'a, b' union — 58 spiders
-        steps, mode, attr = compile_css(part)
-        branches.append(_Branch(tuple(steps), mode, attr))
-    return _Compiled(tuple(branches))
-
-
-def _balanced(s: str) -> bool:
-    """True if parens/brackets balance (so the outer fn really wraps s)."""
-    depth = 0
-    i = 0
-    while i < len(s):
-        ch = s[i]
-        if ch in "\"'":
-            m = _XP_LITERAL.match(s, i)
-            if not m:
-                return False
-            i = m.end()
-            continue
-        if ch in "[(":
-            depth += 1
-        elif ch in "])":
-            depth -= 1
-            if depth < 0:
-                return False
-        i += 1
-    return depth == 0
+            inner = parts[0]
+            outer.append((fn, _lit(lit)))
+        else:
+            outer.append((fn,))
+        sel = inner
+    branches = (compile_xpath(p) for p in _split_top(sel, "|") if p)
+    return _Compiled(tuple(branches), tuple(outer))
 
 
 # ---------------------------------------------------------------------------
@@ -1072,150 +931,70 @@ def _balanced(s: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
-def _descendants(node: _Node) -> list[_Node]:
-    """All element descendants in document order (iterative)."""
-    out: list[_Node] = []
-    stack = [iter(node.content)]
-    while stack:
-        try:
-            c = next(stack[-1])
-        except StopIteration:
-            stack.pop()
-            continue
-        if isinstance(c, _Node):
-            out.append(c)
-            stack.append(iter(c.content))
-    return out
-
-
-def _axis_elements(ctx: _Node, axis: str) -> list[_Node]:
+def _axis_content(ctx: _Node, axis: str) -> list:
+    """Text strings and ``_Node``s along ``axis`` from ``ctx``, in axis
+    order: the reverse axes (``preceding-sibling``, ``preceding``) run
+    nearest first, so positional predicates count backwards, like lxml."""
     if axis == "child":
-        return ctx.children
+        return ctx.content
     if axis == "descendant":
-        return _descendants(ctx)
+        return list(_walk(ctx.content))
     if axis == "parent":
         return [ctx.parent] if ctx.parent is not None else []
     if axis in ("following", "preceding"):
         # document-order closure: every ancestor level contributes its
         # sibling subtrees. For ``following`` the nearest level's
         # subtrees come FIRST in document order (they start right after
-        # ctx's subtree ends); for ``preceding`` (a reverse axis —
-        # nearest node first) the nearest level's preceding siblings are
-        # the LATEST in document order, so level-by-level nearest-first
-        # with each level reversed yields axis order directly.
-        out: list[_Node] = []
+        # ctx's subtree ends); for ``preceding`` the nearest level's
+        # preceding siblings are the LATEST in document order, so
+        # level-by-level nearest-first with each level reversed yields
+        # axis order directly.
+        out: list = []
         node = ctx
         while node.parent is not None:
-            parent = node.parent
-            sibs = [c for c in parent.content if isinstance(c, _Node)]
-            i = sibs.index(node)
+            content = node.parent.content
+            i = content.index(node)
             if axis == "following":
-                for s in sibs[i + 1:]:
-                    out.append(s)
-                    out.extend(_descendants(s))
+                out.extend(_walk(content[i + 1:]))
             else:
-                level: list[_Node] = []
-                for s in sibs[:i]:
-                    level.append(s)
-                    level.extend(_descendants(s))
-                out.extend(level[::-1])
-            node = parent
+                out.extend(list(_walk(content[:i]))[::-1])
+            node = node.parent
         return out
-    parent = ctx.parent
-    if parent is None:
+    if ctx.parent is None:
         return []
-    sibs = [c for c in parent.content if isinstance(c, _Node)]
-    try:
-        i = sibs.index(ctx)
-    except ValueError:
-        return []
+    content = ctx.parent.content
+    i = content.index(ctx)
     if axis == "following-sibling":
-        return sibs[i + 1:]
+        return content[i + 1:]
     if axis == "adjacent-sibling":  # CSS '+': the NEXT element sibling
-        return sibs[i + 1:i + 2]
+        return [c for c in content[i + 1:] if isinstance(c, _Node)][:1]
     if axis == "preceding-sibling":
-        # axis order is reverse document order (nearest sibling first) —
-        # positional predicates count backwards, like lxml
-        return sibs[:i][::-1]
+        return content[:i][::-1]
     raise ValueError(f"unknown axis: {axis}")
 
 
-def _axis_text_nodes(ctx: _Node, axis: str) -> list[str]:
-    """Normalized text nodes along the axis (for text() steps)."""
-    if axis == "child":
-        return ctx.text_nodes(deep=False)
-    if axis == "descendant":
-        return ctx.text_nodes(deep=True)
-    if axis in ("following", "preceding"):
-        out: list[str] = []
-        node = ctx
-        while node.parent is not None:
-            parent = node.parent
-            i = parent.content.index(node)
-            tail = (
-                parent.content[i + 1:]
-                if axis == "following"
-                else parent.content[:i][::-1]
-            )
-            level: list[str] = []
-            for c in tail:
-                if isinstance(c, str):
-                    t = " ".join(c.split())
-                    if t:
-                        level.append(t)
-                else:
-                    texts = c.text_nodes(deep=True)
-                    level.extend(texts if axis == "following" else texts[::-1])
-            out.extend(level)
-            node = parent
-        return out
-    parent = ctx.parent
-    if parent is None:
-        return []
-    try:
-        i = parent.content.index(ctx)
-    except ValueError:
-        return []
-    if axis == "following-sibling":
-        tail = parent.content[i + 1:]
-    else:  # preceding-sibling (reverse axis order)
-        tail = parent.content[:i][::-1]
-    out = []
-    for c in tail:
-        if isinstance(c, str):
-            t = " ".join(c.split())
-            if t:
-                out.append(t)
-    return out
+def _nth_item(items: list, position: int) -> list:
+    """XPath ``[n]`` over one ordered group: positions start at 1 (so
+    ``[0]`` selects nothing, as in lxml); ``-1`` is ``last()``."""
+    if position == -1:
+        return items[-1:]
+    return items[position - 1:position] if position > 0 else []
 
 
 def _apply_position(matched: list, position: int, by_parent: bool) -> list:
     """Positional predicate over already-matched candidates.
 
-    ``by_parent=True`` (child/descendant axes): XPath positions count
-    within each parent's matching children (``//p[2]`` = every p that is
-    the 2nd p child of ITS parent). Sibling axes count along the axis.
+    ``by_parent=True`` (element steps on the child/descendant axes):
+    XPath positions count within each parent's matching children
+    (``//p[2]`` = every p that is the 2nd p child of ITS parent). Other
+    steps count along the axis.
     """
-    if not by_parent or (matched and isinstance(matched[0], str)):
-        if position == -1:
-            return matched[-1:] if matched else []
-        return [matched[position - 1]] if len(matched) >= position else []
+    if not by_parent:
+        return _nth_item(matched, position)
     groups: dict[int, list[_Node]] = {}
-    order: list[int] = []
     for n in matched:
-        key = id(n.parent)
-        if key not in groups:
-            groups[key] = []
-            order.append(key)
-        groups[key].append(n)
-    out = []
-    for key in order:
-        g = groups[key]
-        if position == -1:
-            out.append(g[-1])
-        elif len(g) >= position:
-            out.append(g[position - 1])
-    return out
+        groups.setdefault(id(n.parent), []).append(n)
+    return [n for g in groups.values() for n in _nth_item(g, position)]
 
 
 def _parent_set(ctx: _Node, axis: str) -> list[_Node]:
@@ -1224,15 +1003,10 @@ def _parent_set(ctx: _Node, axis: str) -> list[_Node]:
     ``/..`` = parent of ctx; ``//..`` = parents of descendant-or-self
     (deduped, document order)."""
     if axis != "descendant":
-        return [ctx.parent] if ctx.parent is not None else []
-    out: list[_Node] = []
-    seen: set[int] = set()
-    for n in [ctx] + _descendants(ctx):
-        p = n.parent
-        if p is not None and id(p) not in seen:
-            seen.add(id(p))
-            out.append(p)
-    return out
+        return _axis_content(ctx, "parent")
+    nodes = [ctx, *(c for c in _walk(ctx.content) if isinstance(c, _Node))]
+    parents = {id(n.parent): n.parent for n in nodes if n.parent is not None}
+    return list(parents.values())
 
 
 def _run_preds(candidates: list, step: _Step, by_parent: bool) -> list:
@@ -1247,37 +1021,31 @@ def _run_preds(candidates: list, step: _Step, by_parent: bool) -> list:
     return candidates
 
 
-def _select(root: _Node, steps: list[_Step]) -> list:
-    """Evaluate element steps; a terminal text() step returns strings."""
-    current: list[_Node] = [root]
+def _select(root: _Node, steps: tuple) -> list:
+    """Evaluate the steps; a terminal text() step returns strings."""
+    current: list = [root]
     for step in steps:
-        if step.is_text:
-            texts: list[str] = []
-            for ctx in current:
-                nodes = _axis_text_nodes(ctx, step.axis)
-                nodes = _run_preds(nodes, step, by_parent=False)
-                if step.axis in ("preceding-sibling", "preceding"):
-                    nodes.reverse()  # results in document order (lxml)
-                texts.extend(nodes)
-            return texts
-        nxt: list[_Node] = []
+        nxt: list = []
         seen: set[int] = set()
-        by_parent = step.axis in ("child", "descendant")
+        by_parent = step.axis in ("child", "descendant") and not step.is_text
         for ctx in current:
             if step.is_parent:
-                matched = [
-                    n for n in _parent_set(ctx, step.axis) if step.matches(n)
-                ]
+                items = [n for n in _parent_set(ctx, step.axis) if step.matches(n)]
+            elif step.is_text:
+                items = _texts(_axis_content(ctx, step.axis))
             else:
-                matched = [
-                    n for n in _axis_elements(ctx, step.axis) if step.matches(n)
+                items = [
+                    n for n in _axis_content(ctx, step.axis)
+                    if isinstance(n, _Node) and step.matches(n)
                 ]
-            matched = _run_preds(matched, step, by_parent)
+            items = _run_preds(items, step, by_parent)
             if step.axis in ("preceding-sibling", "preceding"):
-                # axis order is reversed for position counting; emit the
-                # surviving nodes back in document order (lxml nodesets)
-                matched = matched[::-1]
-            for n in matched:
+                # back from axis order to document order (lxml node-sets)
+                items = items[::-1]
+            if step.is_text:  # text nodes are never deduplicated
+                nxt.extend(items)
+                continue
+            for n in items:
                 if id(n) not in seen:
                     seen.add(id(n))
                     nxt.append(n)
@@ -1285,17 +1053,14 @@ def _select(root: _Node, steps: list[_Step]) -> list:
     return current
 
 
-def _extract(selected: list, mode: str | None, attr: str | None,
-             attr_pred=None) -> list[str]:
-    if selected and isinstance(selected[0], str):
-        return selected  # already text nodes from a text() step
-    if mode == "attr":
-        vals = [n.attrs[attr] for n in selected if attr in n.attrs]
-        if attr_pred is not None:
-            vals = [v for v in vals if attr_pred.eval(v)]
+def _extract(selected: list, branch: _Branch) -> list[str]:
+    if branch.mode == "text":
+        return selected  # text nodes from the terminal text() step
+    if branch.mode == "attr":
+        vals = [n.attrs[branch.attr] for n in selected if branch.attr in n.attrs]
+        if branch.attr_pred is not None:
+            vals = [v for v in vals if branch.attr_pred.eval(v)]
         return vals
-    if mode == "text":  # text() step matched nothing
-        return []
     return [n.all_text() for n in selected]
 
 
@@ -1311,8 +1076,7 @@ def _run_compiled(root: _Node, compiled) -> list[str]:
         return ["".join(pieces)]
     out: list[str] = []
     for b in compiled.branches:
-        out.extend(_extract(_select(root, list(b.steps)), b.mode, b.attr,
-                            b.attr_pred))
+        out.extend(_extract(_select(root, b.steps), b))
     # outer string-function chain, applied innermost-first (compile
     # order is outermost-first). String conversion per XPath: the FIRST
     # node's string-value; '' when the node-set is empty.

@@ -653,6 +653,13 @@ def test_selector_predicates_and_axes():
     # per-parent positional semantics: //span[last()] = last span of EACH parent
     assert x("//span[last()]/text()") == ["c"]
     assert x("//ul//text()") == ["Surface habitable", "72", "m2", "Balcon : oui"]
+    # XPath positions start at 1: [0] selects nothing, as in lxml
+    assert x("//li[0]/text()") == []
+    assert x("//li/text()[0]") == []
+    assert x("//dt/following-sibling::dd[0]/text()") == []
+    assert select_html(
+        "<ul><li>a</li><li>b</li><li>c</li></ul>", "//li[0]/text()", lang="xpath"
+    ) == []
     c = lambda sel: select_html(html, sel, lang="css")
     assert c("div.row span:nth-child(2)::text") == ["b"]
     assert c("li:contains('Balcon')::text") == ["Balcon : oui"]
@@ -687,6 +694,14 @@ def test_selector_predicates_wave2():
     assert x("//td[.='Kaution']/following-sibling::td/text()") == ["900"]
     # normalize-space() as predicate (whitespace-padded cell) and outer fn
     assert x("//td[normalize-space()='Etage']/following-sibling::td/text()") == ["2"]
+    # normalize-space(text()) converts the node-set text() to its FIRST
+    # direct text node (XPath 1.0, as lxml); normalize-space() reads all
+    row = "<tr><td>Zimmer <b>x</b></td><td>3</td></tr>"
+    sib = "/following-sibling::td/text()"
+    assert select_html(row, "//td[normalize-space(text())='Zimmer']" + sib,
+                       lang="xpath") == ["3"]
+    assert select_html(row, "//td[normalize-space()='Zimmer x']" + sib,
+                       lang="xpath") == ["3"]
     assert x("normalize-space(//div[@class='det']/span)") == ["Price : 1 200 EUR"]
     assert x("count(//li)") == ["3.0"]
     # boolean or / and
@@ -699,10 +714,18 @@ def test_selector_predicates_wave2():
     # parent axis, both spellings
     assert x("//a[@href='/cur']/parent::li/@class") == ["active"]
     assert x("//ul/li/..//a/@href") == ["/cur", "/n1", "/n2"]
+    # an element's parent is never a text node
+    nested = "<div>pre<p>x</p><span>mid<b>y</b></span></div>"
+    assert select_html(nested, "//b/parent::text()", lang="xpath") == []
+    assert select_html(nested, "//b/parent::*/text()", lang="xpath") == ["mid"]
     # child-path existence predicate
     assert x("//li[./a[contains(@href,'n1')]]/a/text()") == ["N1"]
     # @attr[...] nested predicate
     assert x("//a[@href[contains(.,'mailto')]]/text()") == ["mail"]
+    # @* is outside the subset: spider config gets a ValueError
+    for sel in ("//a[@*='x']", "//a[contains(@*,'x')]"):
+        with pytest.raises(ValueError):
+            x(sel)
     # following-sibling::text() after strong key (key-value div idiom)
     assert x("//strong[.='Rooms']/following-sibling::text()[1]") == ["3"]
 

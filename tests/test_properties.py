@@ -148,3 +148,57 @@ def test_resolve_fast_path_covers_crawl_shapes():
         "http://h0.example/detail/d2",
         "http://h1.example:80/detail/d3#f",
     ]
+
+
+# ---------------------------------------------------------------------------
+# selector axes over random well-nested pages (pure Python, no Spark)
+# ---------------------------------------------------------------------------
+
+_tag = st.sampled_from(["div", "p", "span", "b", "li"])
+_text = st.sampled_from(["", "a", "b c", "  "])
+_element = st.recursive(
+    st.tuples(_tag, st.just([])),
+    lambda inner: st.tuples(_tag, st.lists(st.one_of(inner, _text), max_size=4)),
+    max_leaves=20,
+)
+
+
+def _render(items, ancestors, out, model):
+    """Append the HTML of ``items`` to ``out``; element ``k`` (in
+    document order) gets ``id="k"`` and ``model[k]`` its ancestor ids."""
+    for item in items:
+        if isinstance(item, str):
+            out.append(item)
+            continue
+        tag, kids = item
+        k = len(model)
+        model.append(ancestors)
+        out.append(f'<{tag} id="{k}">')
+        _render(kids, ancestors + [k], out, model)
+        out.append(f"</{tag}>")
+
+
+@given(st.lists(st.one_of(_element, _text), min_size=1, max_size=4))
+@settings(max_examples=60, deadline=None)
+def test_selector_axes_partition_the_tree(items):
+    """XPath's axis-partition rule: for every element, following::,
+    preceding::, descendant::, self and its ancestors hold every element
+    exactly once; the closure axes return document order."""
+    from spider_spark.operators.selectors import select_html
+
+    out: list[str] = []
+    ancestors: list[list[int]] = []
+    _render(items, [], out, ancestors)
+    html = "".join(out)
+    everything = list(range(len(ancestors)))
+    for k in everything:
+
+        def ids(axis: str) -> list[int]:
+            sel = f"//*[@id='{k}']/{axis}*/@id"
+            return [int(i) for i in select_html(html, sel, lang="xpath")]
+
+        following, preceding = ids("following::"), ids("preceding::")
+        assert following == sorted(following)
+        assert preceding == sorted(preceding)
+        parts = following + preceding + ids("/") + [k] + ancestors[k]
+        assert sorted(parts) == everything
