@@ -325,18 +325,11 @@ def query_param_count_col(url: Column) -> Column:
     ).cast("int")
 
 
-def is_trap_col(
-    url: Column,
-    max_depth: int = TRAP_MAX_PATH_DEPTH,
-    max_repeat: int = TRAP_MAX_SEG_REPEAT,
-    max_params: int = TRAP_MAX_QUERY_PARAMS,
-    max_len: int = TRAP_MAX_URL_LEN,
-) -> Column:
-    """True when any fence signal fires. Thresholds are per-call so a
-    deployment can tighten them per host class; defaults above."""
+def is_trap_col(url: Column) -> Column:
+    """True when any fence signal crosses its ``TRAP_MAX_*`` threshold."""
     return (
-        (path_depth_col(url) > F.lit(max_depth))
-        | (max_segment_repeat_col(url) >= F.lit(max_repeat))
-        | (query_param_count_col(url) > F.lit(max_params))
-        | (F.length(url) > F.lit(max_len))
+        (path_depth_col(url) > F.lit(TRAP_MAX_PATH_DEPTH))
+        | (max_segment_repeat_col(url) >= F.lit(TRAP_MAX_SEG_REPEAT))
+        | (query_param_count_col(url) > F.lit(TRAP_MAX_QUERY_PARAMS))
+        | (F.length(url) > F.lit(TRAP_MAX_URL_LEN))
     )

@@ -28,11 +28,9 @@ Two admission paths, same contract:
   DROP urls, so the FPR budget is part of the API and tests
   cross-validate vs dedup_exact.
 
-The filter layout is a spec object with ``empty()``,
+The filter layout is :class:`BloomSpec`, with ``empty()``,
 ``contains(filter_bytes, fingerprints)`` and ``insert(filter_bytes,
-fingerprints)``: :class:`BloomSpec` here, or
-:class:`~spider_spark.operators.cuckoo.CuckooSpec` (deletable). The
-cogroup and the fold are the same for both; only those kernels differ.
+fingerprints)``; the cogroup and the fold call only those kernels.
 
 Intra-batch dedup keeps the FIRST occurrence by ``discovered_seq``
 (Scrapy admits whichever request reaches the scheduler first; our
@@ -86,23 +84,23 @@ def dedup_exact(candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# filter path: one admission cogroup and one fold for every filter layout
+# filter path: one admission cogroup and one fold over Bloom buckets
 # ---------------------------------------------------------------------------
 
 
-def _hex_u64(fingerprints, start: int, width: int = 16) -> np.ndarray:
-    """``width`` (<= 16) hex chars starting at ``start`` -> uint64, fully
-    vectorized (one ASCII buffer view + ``width`` shift-or steps; ~30x
+def _hex_u64(fingerprints, start: int) -> np.ndarray:
+    """16 hex chars starting at ``start`` -> uint64, fully
+    vectorized (one ASCII buffer view + 16 shift-or steps; ~30x
     the per-row ``int(fp[a:b], 16)`` loop that dominated the insert
     stage at 10^6 fingerprints/bucket). Assumes uniform-length
     lowercase hex."""
     joined = "".join(fingerprints)
     n = len(fingerprints)
     a = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).reshape(n, -1)
-    seg = a[:, start : start + width]
+    seg = a[:, start : start + 16]
     vals = np.where(seg >= 97, seg - 87, seg - 48).astype(np.uint64)
     out = np.zeros(n, dtype=np.uint64)
-    for i in range(width):
+    for i in range(16):
         out = (out << np.uint64(4)) | vals[:, i]
     return out
 
@@ -157,8 +155,7 @@ def dedup_filter(candidates: DataFrame, filters: DataFrame, spec) -> DataFrame:
     ----------
     candidates : frontier-shaped rows (already intra-batch deduped)
     filters    : rows (crawl_id, host_bucket, filter_bytes) — current state
-    spec       : the filter layout (:class:`BloomSpec` or
-                 :class:`~spider_spark.operators.cuckoo.CuckooSpec`)
+    spec       : the bucket filter layout, a :class:`BloomSpec`
 
     Returns the admitted rows: ``dont_filter`` rows, and the rest whose
     fingerprint the bucket's filter does not contain. Fold them into
@@ -192,7 +189,8 @@ def dedup_filter(candidates: DataFrame, filters: DataFrame, spec) -> DataFrame:
 
 
 def updated_filters(admitted: DataFrame, filters: DataFrame, spec, wave: int) -> DataFrame:
-    """Fold the admitted (recorded) fingerprints into the bucket filters."""
+    """Fold the admitted (recorded) fingerprints into the bucket filters
+    of ``spec``, a :class:`BloomSpec`."""
     empty = spec.empty()
 
     def fold(key, adm, filt):

@@ -116,7 +116,7 @@ def host_graph(frontier: DataFrame, drop_self: bool = True) -> DataFrame:
     """Host-level link graph from the crawl's own frontier lineage.
 
     Every frontier row carries ``parent_seq`` (the ``discovered_seq`` of
-    the request whose page linked to it — ``operators/spans.extract_links_raw``),
+    the request whose page linked to it — ``operators/spans.extract_candidates_raw``),
     so a self-join reconstructs (parent host -> child host) edges with
     no extra state kept during the crawl. Seeds (``parent_seq = 0``)
     have no parent and contribute no edge. ``drop_self`` removes

@@ -268,7 +268,7 @@ class _TextEq:
 
     def eval(self, subject) -> bool:
         if isinstance(subject, str):
-            return _norm(subject) == self.value
+            return False  # a text or attribute node has no text() children
         return self.value in _texts(subject.content)
 
 
@@ -278,7 +278,7 @@ class _HasText:
 
     def eval(self, subject) -> bool:
         if isinstance(subject, str):
-            return bool(subject.strip())
+            return False  # a text or attribute node has no text() children
         return bool(_texts(subject.content))
 
 
@@ -322,7 +322,7 @@ class _ExistsPath:
             return False
         selected = _select(subject, self.branch.steps)
         if self.branch.mode == "attr":
-            return any(self.branch.attr in n.attrs for n in selected)
+            return bool(_extract(selected, self.branch))
         return bool(selected)
 
 

@@ -174,36 +174,6 @@ def merge_document_fragments(raw: DataFrame) -> DataFrame:
     return plain.select(out_cols).unionByName(merged.select(out_cols))
 
 
-def extract_links_raw(fetched_ok: DataFrame) -> DataFrame:
-    """Pages with out_links -> PRE-RESOLUTION child request rows
-    (``base_url``/``href`` instead of an absolute ``url`` — pure JVM,
-    no UDF; :func:`resolve_candidates` applies the one vectorized
-    resolve pass).
-
-    Children inherit source/meta/priority from the parent (the
-    reference threads these via ``meta=`` — ``aands_org_uk.py:30-49``).
-    Children of a DETAIL page additionally carry the parent's effective
-    doc_id in meta, so their spans merge back into the parent's
-    document (multi-page item assembly, ``15walmer.py:112``).
-    """
-    return (
-        fetched_ok.filter(_HAS_LINKS)
-        .selectExpr(
-            "crawl_id",
-            "url AS base_url",
-            "source",
-            f"{_CHILD_META} AS meta",
-            "priority",
-            "discovered_seq AS parent_seq",
-            "posexplode(out_links) AS (link_pos, href)",
-            "'GET' AS method",
-            "CAST(NULL AS STRING) AS body",
-            "false AS dont_filter",
-        )
-        .selectExpr(*_RAW_LINK_COLS, "link_pos")
-    )
-
-
 def resolve_candidates(raw: DataFrame) -> DataFrame:
     """(base_url, href) candidate rows -> absolute-URL request rows.
 
@@ -228,14 +198,27 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
 
 
 def extract_candidates_raw(
-    fetched: DataFrame, max_times: int = schemas.REDIRECT_MAX_TIMES
+    fetched: DataFrame,
+    max_times: int = schemas.REDIRECT_MAX_TIMES,
+    follow_redirects: bool = True,
 ) -> DataFrame:
     """Links AND redirect targets from ONE scan of the fetched wave —
-    no union (requires a ``location`` column; use
-    :func:`extract_links_raw` otherwise).
+    no union. The rows are PRE-RESOLUTION child requests (``base_url``/
+    ``href`` instead of an absolute ``url`` — pure JVM, no UDF;
+    :func:`resolve_candidates` applies the one vectorized resolve pass).
 
-    A parse-ok page yields the rows :func:`extract_links_raw` gives. The
-    redirect side is the RedirectMiddleware analog (Scrapy 2.3 defaults
+    A parse-ok page with out_links yields one row per link. Children
+    inherit source/meta/priority from the parent (the reference threads
+    these via ``meta=`` — ``aands_org_uk.py:30-49``); children of a
+    DETAIL page also carry the parent's effective doc_id in meta, so
+    their spans merge back into the parent's document (multi-page item
+    assembly, ``15walmer.py:112``).
+
+    With ``follow_redirects=False`` the redirect predicate is the
+    literal ``false``: Catalyst folds every redirect ``CASE`` away and
+    the plan reads no ``location``, so a web without redirects pays
+    nothing for them. Otherwise the redirect side is the
+    RedirectMiddleware analog (Scrapy 2.3 defaults
     — implicit in all 3,788 reference spiders; ``aryes_be.py:80`` opts
     out per-request with ``meta={'dont_redirect': True}``): 3xx
     responses with a Location become NEW frontier candidates in link
@@ -283,6 +266,8 @@ def extract_candidates_raw(
         f"(status IN ({codes}) AND location IS NOT NULL AND NOT ({parse_ok})"
         f" AND lower(coalesce(element_at({base_meta}, 'dont_redirect'), ''))"
         f" IN ('', '0', 'false') AND {times} < {max_times})"
+        if follow_redirects
+        else "false"
     )
     # redirect-side meta: hop counter + '|'-joined trail
     trail = f"element_at({base_meta}, 'redirect_urls')"

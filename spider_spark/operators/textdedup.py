@@ -15,8 +15,8 @@ The scale-path toolbox a 100 TB training-data pipeline needs:
   computed relationally (explode over bit positions) so the same
   formula runs in DuckDB for the oracle; near-dup = small Hamming
   distance between signatures.
-* :func:`embedding_neardup_pairs` — cosine over an LSH-style bucket
-  (see operators/ann.py) or brute-force for verification.
+* embedding near-duplicates live in :mod:`spider_spark.operators.ann`
+  (``embedding_neardup_pairs``: cosine over LSH-style buckets).
 
 All hashing is md5-based (not xxhash) purely so the DuckDB oracle can
 reproduce values bit-for-bit; a production pipeline would hash with

@@ -55,7 +55,6 @@ from ..operators import autothrottle as AT
 from ..operators import dedup as D
 from ..operators import politeness as P
 from ..operators import spans as S
-from ..operators.cuckoo import CuckooSpec
 from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
 
@@ -85,16 +84,16 @@ class CrawlConfig:
     #: default: plain crawls skip the (empty) per-wave revalidation
     #: write entirely.
     conditional_get: bool = False
-    #: "exact" anti-join | "bloom" | "cuckoo" filter; both filters hold
-    #: 2**20 fingerprints per bucket (Bloom at a 1e-6 false-positive
-    #: rate), so ``n_buckets`` is the sizing lever
+    #: "exact" anti-join | "bloom" filter; the Bloom filter holds
+    #: 2**20 fingerprints per bucket at a 1e-6 false-positive rate, so
+    #: ``n_buckets`` is the sizing lever
     seen_backend: str = "exact"
     #: compact ``url_seen`` every N committed waves (None = never).
     #: The exact seen-backend re-reads url_seen every wave, so without
     #: compaction a long crawl reads hundreds of snapshot dirs ×
     #: shuffle-partitions small files per wave — the Iceberg small-file
-    #: problem the store's compact() exists for. Bloom/cuckoo backends
-    #: fold state into one filter blob and don't need this.
+    #: problem the store's compact() exists for. The Bloom backend
+    #: folds state into one filter blob and does not need this.
     compact_every: int | None = None
     #: file count for compacted rewrites (None = keep partitioning)
     compact_partitions: int | None = None
@@ -141,12 +140,10 @@ class CrawlEngine:
         backend = self.cfg.seen_backend
         if backend == "bloom":
             self.seen_filter = D.BloomSpec(1 << 20, 1e-6)
-        elif backend == "cuckoo":
-            self.seen_filter = CuckooSpec(1 << 20)
         elif backend == "exact":
             self.seen_filter = None
         else:
-            raise ValueError(f"seen_backend must be exact, bloom or cuckoo: {backend!r}")
+            raise ValueError(f"seen_backend must be exact or bloom: {backend!r}")
         self.web = canonical_web(web_pages).persist()
         self.policy = host_policy
         self.store = store
@@ -204,7 +201,7 @@ class CrawlEngine:
         Returns ``(admitted, writes)``: ``admitted`` is an eager local
         checkpoint (admission runs once, whatever reads it), and
         ``writes`` holds the wave's seen-set tables (``url_seen``, plus
-        ``url_seen_filters`` for the Bloom/cuckoo backends) for
+        ``url_seen_filters`` for the Bloom backend) for
         :meth:`_commit` to write beside the wave's other tables.
         """
         if self.dust_rules is not None:
@@ -317,13 +314,13 @@ class CrawlEngine:
 
         totals = {"fetched": 0, "docs": 0, "waves": 0}
         # static redirect gate: a web with no (3xx, Location) row can
-        # never produce a redirect, so skip building the redirect arm
-        # of the candidate plan entirely — the arm costs real per-wave
-        # scheduling overhead even when it matches zero rows (its
-        # expressions ride every evaluation of the candidates subtree;
-        # measured round 4). One early-exit job over the web dim at
-        # crawl start, never per wave.
-        follow_redirects = "location" in self.web.columns and bool(
+        # never produce a redirect, so the candidate scan's redirect
+        # predicate becomes the literal false and its arm folds away —
+        # the arm costs real per-wave scheduling overhead even when it
+        # matches zero rows (its expressions ride every evaluation of
+        # the candidates subtree; measured round 4). One early-exit job
+        # over the web dim at crawl start, never per wave.
+        follow_redirects = bool(
             self.web.filter(
                 F.col("location").isNotNull()
                 & F.col("status").isin(schemas.REDIRECT_HTTP_CODES)
@@ -392,27 +389,13 @@ class CrawlEngine:
             retry = fetched.filter(retry_due).select(*retry_row)
 
             docs = S.extract_documents(ok)
-            if follow_redirects:
-                # 3xx follow (RedirectMiddleware analog) FUSED into the
-                # link-extraction scan: a 3xx row explodes its Location
-                # where a parsed page explodes out_links, so the wave
-                # plan has no union and exactly one resolve-UDF node.
-                # (Round-4 regression, measured and fixed: a
-                # links ∪ redirects union made every AQE evaluation of
-                # the candidate plan materialize extra shuffle query
-                # stages — +10 jobs/+46 stages per wave, ~3.5 s/wave of
-                # scheduling overhead even with ZERO redirect rows.)
-                # Targets skip LinkExtractor rules AND the offsite
-                # filter (link_pos < 0 is the redirect marker) — in
-                # Scrapy 2.3 (the reference's version) redirects happen
-                # in a downloader middleware, below the spider-level
-                # OffsiteMiddleware; the downloader-side offsite check
-                # post-dates the reference. They DO pass the dupe
-                # filter via the shared _admit below — which is also
-                # what terminates redirect loops.
-                raw_links = S.extract_candidates_raw(fetched, self.cfg.redirect_max_times)
-            else:
-                raw_links = S.extract_links_raw(ok)
+            # links and 3xx targets from one scan (no union: it cost +10
+            # jobs/+46 stages per wave). Targets (link_pos < 0) skip the
+            # link rules and the offsite filter, as Scrapy 2.3's
+            # downloader-level RedirectMiddleware does, but pass _admit.
+            raw_links = S.extract_candidates_raw(
+                fetched, self.cfg.redirect_max_times, follow_redirects
+            )
             # numbered before the resolve UDF, so the range sort's
             # sampling job re-runs only the JVM explode; a link the
             # filters below drop leaves a gap in the seqs

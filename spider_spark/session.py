@@ -9,8 +9,10 @@ bit-for-bit against the DuckDB oracle.
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import os
+import shutil
 import tempfile
 import zipfile
 from pathlib import Path
@@ -104,9 +106,12 @@ def ship_package(spark: SparkSession) -> None:
 
 def package_zip(pkg_dir: Path) -> Path:
     """Zip of the ``.py`` files under ``pkg_dir`` as package
-    ``spider_spark``, in the temp dir and named by a digest of their
-    paths and bytes, so a zip left in the temp dir by an earlier process
-    is reused only if it holds the same code."""
+    ``spider_spark``, named by a digest of their paths and bytes, so a
+    session never ships another tree's code under the same name.
+
+    The zip goes into a fresh temp directory that is removed when this
+    process exits, not sooner: Spark's file server may serve the path
+    to an executor's first fetch at any time."""
     files = [
         (str(Path("spider_spark") / py.relative_to(pkg_dir)), py.read_bytes())
         for py in sorted(pkg_dir.rglob("*.py"))
@@ -114,11 +119,10 @@ def package_zip(pkg_dir: Path) -> Path:
     digest = hashlib.sha1()
     for name, data in files:
         digest.update(b"%d:%s%d:%s" % (len(name), name.encode(), len(data), data))
-    zpath = Path(tempfile.gettempdir()) / f"spider_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
-    if not zpath.exists():
-        part = zpath.with_name(f"{zpath.name}.{os.getpid()}.part")
-        with zipfile.ZipFile(part, "w") as zf:
-            for name, data in files:
-                zf.writestr(name, data)
-        os.replace(part, zpath)  # atomic: a concurrent session never ships a half zip
+    zdir = tempfile.mkdtemp(prefix="spider_spark_pyfiles_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = Path(zdir) / f"spider_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
+    with zipfile.ZipFile(zpath, "w") as zf:
+        for name, data in files:
+            zf.writestr(name, data)
     return zpath

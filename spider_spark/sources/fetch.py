@@ -75,9 +75,15 @@ def with_proxy(dispatch: DataFrame, spiders_dim: DataFrame) -> DataFrame:
 
 
 def canonical_web(web_pages: DataFrame) -> DataFrame:
-    """Key the synthetic web by canonical URL (cache this — reused every wave)."""
+    """Key the synthetic web by canonical URL (cache this — reused every wave).
+
+    A web without a ``location`` column has no redirects and gets a NULL
+    one, so the fetched rows always carry the column the candidate scan
+    names."""
     from ..functions.urls import canonicalize_udf
 
+    if "location" not in web_pages.columns:
+        web_pages = web_pages.withColumn("location", F.lit(None).cast("string"))
     return web_pages.withColumn("canonical_url", canonicalize_udf(F.col("url"))).drop("url", "host")
 
 

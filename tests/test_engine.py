@@ -8,11 +8,14 @@ order).
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from spider_spark import schemas
+from spider_spark.operators.dedup import _hex_u64
 from spider_spark.plans.engine import CrawlConfig, CrawlEngine
 from spider_spark.storage.catalog import SnapshotStore
 from spider_spark.synth import WebSpec, host_policy_df, seeds_df, web_df
@@ -352,7 +355,7 @@ def check_seen_filters(eng, store) -> dict:
 def test_unknown_seen_backend_raises(spark, tmp_path):
     spec = WebSpec(seed=11, n_hosts=2, pages_per_host=1, details_per_page=1)
     store = SnapshotStore(spark, str(tmp_path / "store"))
-    for backend in ("Bloom", "anti-join", ""):
+    for backend in ("Bloom", "anti-join", "", "cuckoo"):
         with pytest.raises(ValueError, match="seen_backend"):
             CrawlEngine(
                 spark,
@@ -361,6 +364,17 @@ def test_unknown_seen_backend_raises(spark, tmp_path):
                 store,
                 CrawlConfig(seen_backend=backend),
             )
+
+
+def test_hex_decoder_matches_int_parse():
+    """The vectorized decoder behind the Bloom bit positions against the
+    per-row ``int(fp[a:b], 16)`` it replaces."""
+    sha1 = [hashlib.sha1(f"{i}".encode()).hexdigest() for i in range(300)]
+    md5 = [hashlib.md5(f"{i}".encode()).hexdigest() for i in range(300)]
+    for f in (sha1, md5):
+        for start in (0, 16):
+            want = [int(fp[start : start + 16], 16) for fp in f]
+            assert _hex_u64(f, start).tolist() == want
 
 
 def test_bloom_path_equals_exact_path(spark, tmp_path, reference_crawl):
@@ -1083,6 +1097,16 @@ def test_fetch_synthetic_not_modified_drops_body(spark):
         assert (stale["status"], stale["spans"], stale["out_links"]) == (
             200, p["spans"], p["out_links"]
         )
+
+
+def test_web_without_location_gets_a_null_one(spark):
+    """The candidate scan names ``location`` on both arms, so a web
+    table without the column (no redirects) gets a NULL one."""
+    from spider_spark.sources.fetch import canonical_web
+
+    spec = WebSpec(seed=7, n_hosts=1, pages_per_host=1, details_per_page=2)
+    web = canonical_web(web_df(spark, spec).drop("location"))
+    assert web.filter("location IS NOT NULL").count() == 0
 
 
 def test_trap_filter_preserves_clean_crawl(spark, tmp_path, reference_crawl):

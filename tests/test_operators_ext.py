@@ -660,6 +660,15 @@ def test_selector_predicates_and_axes():
     assert select_html(
         "<ul><li>a</li><li>b</li><li>c</li></ul>", "//li[0]/text()", lang="xpath"
     ) == []
+    # a terminal attribute's value predicate decides existence
+    links = '<ul><li><a href="/x">a</a></li><li><a href="mailto:z">b</a></li></ul>'
+    assert select_html(
+        links, "//li[a/@href[contains(.,'mailto')]]/a/text()", lang="xpath"
+    ) == ["b"]
+    # a text node has no text() children; its string-value still compares
+    assert select_html("<p>x</p>", "//p/text()[text()='x']", lang="xpath") == []
+    assert select_html("<p>x</p>", "//p/text()[text()]", lang="xpath") == []
+    assert select_html("<p>x</p>", "//p/text()[.='x']", lang="xpath") == ["x"]
     c = lambda sel: select_html(html, sel, lang="css")
     assert c("div.row span:nth-child(2)::text") == ["b"]
     assert c("li:contains('Balcon')::text") == ["Balcon : oui"]

@@ -153,44 +153,47 @@ def test_embedding_neardup_bucketed_no_cartesian(spark):
 
 
 def test_extract_links_single_arrow_stage(spark):
-    """Both link paths of the engine (links only, and links fused with
-    redirect targets) run exactly ONE Python/Arrow stage (the resolve
-    UDF, itself vectorized with a urljoin fallback only for residue
-    hrefs) — a regression adding per-row Python here multiplies the
-    parse stage cost at 10^10 links."""
-    from pyspark.sql import functions as F
-
-    from spider_spark.operators.spans import (
-        extract_candidates_raw,
-        extract_links_raw,
-        resolve_candidates,
-    )
+    """Both arms of the engine's one candidate scan (links only, and
+    links fused with redirect targets) run exactly ONE Python/Arrow
+    stage (the resolve UDF, itself vectorized with a urljoin fallback
+    only for residue hrefs) — a regression adding per-row Python here
+    multiplies the parse stage cost at 10^10 links. Without redirects
+    the redirect predicate is the literal false and Catalyst folds the
+    redirect arm out of the plan."""
+    from spider_spark.operators.spans import extract_candidates_raw, resolve_candidates
 
     schema = (
         "crawl_id string, url string, canonical_url string, source string, "
         "meta map<string,string>, priority int, discovered_seq long, "
-        "out_links array<string>, is_listing_page boolean, status int"
+        "out_links array<string>, is_listing_page boolean, status int, "
+        "method string, body string, dont_filter boolean, location string"
     )
     pages = [
         ("c", "http://h/list?page=1", "http://h/list?page=1", "s", {"k": "v"},
-         0, 1, ["/a", "b", "http://x/c"], True, 200),
+         0, 1, ["/a", "b", "http://x/c"], True, 200, "GET", None, False, None),
         # detail page with a continuation link: the meta doc_id
         # threading must stay pure-JVM (no extra Python stage)
         ("c", "http://h/detail/1", "http://h/detail/1", "s", {"k": "v"},
-         0, 2, ["/detail/1/p2"], False, 200),
+         0, 2, ["/detail/1/p2"], False, 200, "GET", None, False, None),
     ]
     fetched = spark.createDataFrame(pages, schema)
-    # the fused path also reads the request columns and a 3xx row's Location
     with_redirect = spark.createDataFrame(
-        [p + ("GET", None, False, None) for p in pages]
+        pages
         + [("c", "http://h/go/1", "http://h/go/1", "s", {}, 0, 3, [], False, 302,
             "GET", None, False, "/detail/1")],
-        schema + ", method string, body string, dont_filter boolean, location string",
+        schema,
     )
+    links_only = extract_candidates_raw(fetched, follow_redirects=False)
     for out in (
-        resolve_candidates(extract_links_raw(fetched)),
-        resolve_candidates(extract_candidates_raw(with_redirect)),
+        resolve_candidates(links_only),
+        resolve_candidates(extract_candidates_raw(with_redirect, follow_redirects=True)),
     ):
         plan = physical(out)
         assert plan.count("ArrowEvalPython") + plan.count("BatchEvalPython") == 1
         assert "BatchEvalPython" not in plan  # never row-at-a-time Python
+    # above the scan, the links-only plan never reads a Location and
+    # keeps only the child-meta CASE of the link arm
+    above_scan = [ln for ln in optimized(links_only).splitlines() if "LogicalRDD" not in ln]
+    assert not any("location" in ln for ln in above_scan)
+    cases = sum(ln.count("CASE WHEN") for ln in above_scan)
+    assert cases == sum(ln.count("CASE WHEN is_listing_page") for ln in above_scan) == 1

@@ -4,10 +4,13 @@
 from __future__ import annotations
 
 import importlib
+import os
+import subprocess
 import sys
 import tempfile
 import zipfile
 import zipimport
+from pathlib import Path
 
 import spider_spark  # noqa: F401  (installs the lazy zip refresh on Python < 3.13)
 from spider_spark.session import package_zip
@@ -50,8 +53,7 @@ def test_invalidate_caches_rereads_a_zip_only_when_it_changed(tmp_path, monkeypa
 
 
 def test_package_zip_is_named_by_its_sources(tmp_path, monkeypatch):
-    """A zip left by an earlier process is reused only if it holds the
-    same code."""
+    """Two source trees never share a zip name; one tree keeps its name."""
     (tmp_path / "tmp").mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
     trees = []
@@ -61,6 +63,29 @@ def test_package_zip_is_named_by_its_sources(tmp_path, monkeypatch):
         (pkg / "__init__.py").write_text(body)
         trees.append(pkg)
     first, second = (package_zip(pkg) for pkg in trees)
-    assert first != second
-    assert package_zip(trees[0]) == first
+    assert first.name != second.name
+    assert package_zip(trees[0]).name == first.name
     assert zipfile.ZipFile(second).read("spider_spark/__init__.py") == b"X = 2\n"
+
+
+def test_package_zip_is_removed_when_its_process_exits(tmp_path):
+    """The shipped zip lives as long as the process that built it."""
+    child_tmp = tmp_path / "tmp"
+    child_tmp.mkdir()
+    repo = Path(__file__).resolve().parents[1]
+    code = (
+        "from pathlib import Path; import spider_spark; "
+        "from spider_spark.session import package_zip; "
+        "z = package_zip(Path(spider_spark.__file__).parent); "
+        "assert z.is_file(); print(z)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo,
+        env={**os.environ, "TMPDIR": str(child_tmp)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert Path(out.strip()).is_relative_to(child_tmp)
+    assert not list(child_tmp.rglob("spider_spark_pyfiles_*"))

@@ -41,7 +41,7 @@ def main(argv=None):
     ap.add_argument("--policy")
     ap.add_argument("--store", default="/tmp/spider_spark_store")
     ap.add_argument("--crawl-id", default="crawl-0")
-    ap.add_argument("--backend", choices=["exact", "bloom", "cuckoo"], default="bloom")
+    ap.add_argument("--backend", choices=["exact", "bloom"], default="bloom")
     ap.add_argument("--buckets", type=int, default=1024)
     ap.add_argument("--max-waves", type=int, default=64)
     ap.add_argument("--wave-seconds", type=float, default=1.0)
