@@ -1957,7 +1957,9 @@ def q_crawl_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     wave loop has no single-query SQL form, so its oracle is a
     GOLDEN-FILE parquet of the pure-Python golden model's expected rows
     (tools/gen_crawl_oracle.py; freshness pinned by
-    tests/test_engine.py::test_crawl_oracle_fixture_is_fresh)."""
+    tests/test_engine.py::test_crawl_oracle_fixture_is_fresh). The
+    rows are checkpointed before the store's temp dir is removed."""
+    import shutil
     import tempfile
 
     from spider_spark.plans.engine import CrawlConfig, CrawlEngine
@@ -1971,25 +1973,33 @@ def q_crawl_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=42, n_hosts=3, pages_per_host=1, details_per_page=3,
         redirect_rate=0.34,
     )
-    store = SnapshotStore(spark, tempfile.mkdtemp(prefix="entry_crawl_"))
+    root = tempfile.mkdtemp(prefix="entry_crawl_")
     eng = CrawlEngine(
         spark,
         web_df(spark, spec),
         host_policy_df(spark, spec),
-        store,
+        SnapshotStore(spark, root),
         # generous wave budget => fewer waves => fewer fixed-overhead
         # Spark jobs in the driver's correctness pass
         CrawlConfig(crawl_id="entry", n_buckets=8, max_waves=30, wave_seconds=4.0),
     )
-    eng.run(seeds_df(spark, spec))
-    docs = eng.documents()
-    return docs.select("doc_id", F.explode("spans").alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.media_ref").alias("media_ref"),
-        F.col("s.offset").alias("offset"),
-    )
+    try:
+        eng.run(seeds_df(spark, spec))
+        docs = eng.documents()
+        return (
+            docs.select("doc_id", F.explode("spans").alias("s"))
+            .select(
+                "doc_id",
+                F.col("s.kind").alias("kind"),
+                F.col("s.text").alias("text"),
+                F.col("s.media_ref").alias("media_ref"),
+                F.col("s.offset").alias("offset"),
+            )
+            .localCheckpoint()
+        )
+    finally:
+        eng.close()
+        shutil.rmtree(root, ignore_errors=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:

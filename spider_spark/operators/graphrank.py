@@ -112,34 +112,6 @@ def pagerank(
     return ranks
 
 
-def host_graph(frontier: DataFrame, drop_self: bool = True) -> DataFrame:
-    """Host-level link graph from the crawl's own frontier lineage.
-
-    Every frontier row carries ``parent_seq`` (the ``discovered_seq`` of
-    the request whose page linked to it — ``operators/spans.extract_candidates_raw``),
-    so a self-join reconstructs (parent host -> child host) edges with
-    no extra state kept during the crawl. Seeds (``parent_seq = 0``)
-    have no parent and contribute no edge. ``drop_self`` removes
-    intra-host edges (they dominate raw counts but say nothing about
-    cross-host authority — the signal :func:`pagerank` wants).
-
-    Scale shape: one equi-join on ``parent_seq``/``discovered_seq``
-    (both sides hash-partition on the key) + a distinct on the host
-    pair — the output is host x host, orders of magnitude smaller than
-    the frontier itself.
-    """
-    child = frontier.filter(F.col("parent_seq") > 0).select(
-        "parent_seq", F.col("host").alias("dst")
-    )
-    parent = frontier.select(
-        F.col("discovered_seq").alias("parent_seq"), F.col("host").alias("src")
-    )
-    edges = child.join(parent, "parent_seq").select("src", "dst").distinct()
-    if drop_self:
-        edges = edges.filter(F.col("src") != F.col("dst"))
-    return edges
-
-
 def rank_priorities(
     ranks: DataFrame, n_levels: int = 100, node_col: str = "node"
 ) -> DataFrame:

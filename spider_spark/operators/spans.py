@@ -299,67 +299,48 @@ def extract_candidates_raw(
     )
 
 
-def apply_link_rules(
-    links: DataFrame, rules: DataFrame | None, bypass=None
-) -> DataFrame:
-    """LinkExtractor ``allow``/``deny`` filter (``a_venue_be.py:7``;
-    59 CrawlSpider spiders): per-source regexes applied to the ABSOLUTE
-    resolved URL — NULL allow passes everything, a deny match drops.
+def site_filter(links: DataFrame, sites: DataFrame | None, bypass: str) -> DataFrame:
+    """The per-site link filter: LinkExtractor ``allow``/``deny``
+    (``a_venue_be.py:7``; 59 CrawlSpider spiders) and OffsiteMiddleware
+    ``allowed_domains`` (1,249 reference spiders, e.g.
+    ``allowed_domains = ['2a-immo.fr']``) over the resolved ABSOLUTE
+    URL. ``sites`` is the spiders dim's narrow view
+    ``(source, link_allow, link_deny, allowed_domains)``; ``None``
+    filters nothing.
 
-    The rules dim is tiny (one row per site) and broadcast; the regex
-    runs JVM-side (``regexp_like`` with a column pattern — patterns
-    repeat per source, so at 10^10 links the cost is one compiled-regex
-    match per row, no Python).
+    * A NULL ``link_allow`` passes everything; a ``link_deny`` match
+      drops the link.
+    * The host (``lower(parse_url(url, 'HOST'))``) is on-site when it
+      EQUALS a domain or is a SUBDOMAIN of one (``endswith('.' +
+      domain)``; Scrapy ``url_is_from_any_domain``). An empty or NULL
+      ``allowed_domains`` passes every host.
+    * A ``dont_filter`` request bypasses the offsite check only.
+    * A source without a row passes.
+    * ``bypass`` (SQL text) passes a row past both checks; the engine
+      passes its redirect targets (``link_pos < 0``), as Scrapy 2.3's
+      downloader-level RedirectMiddleware does.
+
+    Scale shape: the dim is tiny (one row per site) and broadcast, and
+    the predicate is one JVM filter: ``regexp_like`` with a column
+    pattern and one ``exists`` over a tiny array per row (no Python, no
+    shuffle).
     """
-    if rules is None:
+    if sites is None:
         return links
-    joined = links.join(F.broadcast(rules), "source", "left")
+    host = "lower(parse_url(url, 'HOST'))"
     keep = (
-        F.col("link_allow").isNull()
-        | F.regexp_like(F.col("url"), F.col("link_allow"))
-    ) & (
-        F.col("link_deny").isNull()
-        | ~F.regexp_like(F.col("url"), F.col("link_deny"))
+        f"({bypass}) OR ("
+        "(link_allow IS NULL OR regexp_like(url, link_allow))"
+        " AND (link_deny IS NULL OR NOT regexp_like(url, link_deny))"
+        " AND (allowed_domains IS NULL OR size(allowed_domains) = 0"
+        " OR coalesce(dont_filter, false)"
+        f" OR exists(allowed_domains, d -> {host} = d OR endswith({host}, concat('.', d)))))"
     )
-    if bypass is not None:
-        keep = keep | bypass
-    return joined.filter(keep).drop("link_allow", "link_deny")
-
-
-def offsite_filter(
-    links: DataFrame, rules: DataFrame | None, bypass=None
-) -> DataFrame:
-    """OffsiteMiddleware analog: drop child links whose host is not one
-    of the spider's ``allowed_domains`` (1,249 reference spiders set it,
-    e.g. ``allowed_domains = ['2a-immo.fr']``). Scrapy semantics
-    (``scrapy.utils.url.url_is_from_any_domain``): the request host
-    passes when it EQUALS a domain or is a SUBDOMAIN of one
-    (``host.endswith('.' + domain)``), case-insensitive; a
-    ``dont_filter`` request bypasses the check; a spider with no
-    allowed_domains filters nothing.
-
-    Scale shape mirrors :func:`apply_link_rules`: the per-site dim is
-    broadcast and the match is one JVM ``exists`` over a tiny array per
-    row (``parse_url`` host extraction + suffix compare — whole-stage
-    codegen, no Python, no shuffle).
-    """
-    if rules is None:
-        return links
-    host = F.lower(F.expr("parse_url(url, 'HOST')"))
-    joined = links.join(F.broadcast(rules), "source", "left")
-    no_rule = F.col("allowed_domains").isNull() | (F.size("allowed_domains") == 0)
-    on_site = F.exists(
-        F.col("allowed_domains"),
-        lambda d: (host == d) | host.endswith(F.concat(F.lit("."), d)),
+    return (
+        links.join(F.broadcast(sites), "source", "left")
+        .filter(keep)
+        .drop("link_allow", "link_deny", "allowed_domains")
     )
-    skip = (
-        F.coalesce(F.col("dont_filter"), F.lit(False))
-        if "dont_filter" in links.columns
-        else F.lit(False)
-    )
-    if bypass is not None:
-        skip = skip | bypass
-    return joined.filter(no_rule | skip | on_site).drop("allowed_domains")
 
 
 def assign_seq(df: DataFrame, order_cols: list, base: int) -> DataFrame:
@@ -372,7 +353,7 @@ def assign_seq(df: DataFrame, order_cols: list, base: int) -> DataFrame:
     10^10 rows. ``base`` keeps later waves strictly after earlier ones.
 
     Seqs are sparse: partitions leave jumps, and the engine numbers a
-    wave's links before its link-rule, offsite and trap filters, so a
+    wave's links before its site and trap filters, so a
     link dropped after numbering leaves a gap. The scheduler and the
     golden checks need only the order, never dense ranks. The range
     shuffle samples its input with an extra job, so number rows before

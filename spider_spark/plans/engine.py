@@ -66,7 +66,6 @@ class CrawlConfig:
     crawl_id: str = "crawl-0"
     n_buckets: int = 64
     wave_seconds: float = 1.0
-    n_salts: int = 8
     max_waves: int = 64
     obey_robots: bool = False  # reference: ROBOTSTXT_OBEY=False (settings.py:21)
     autothrottle: bool = False  # adaptive delay (settings.py:74-78); off = static policy
@@ -124,13 +123,8 @@ class CrawlEngine:
         host_policy: DataFrame,
         store: SnapshotStore,
         config: CrawlConfig | None = None,
-        sitemaps: DataFrame | None = None,
-        feeds: DataFrame | None = None,
-        link_rules: DataFrame | None = None,
-        offsite_rules: DataFrame | None = None,
+        spiders: DataFrame | None = None,
         host_ranks: DataFrame | None = None,
-        robots_texts: DataFrame | None = None,
-        status_rules: DataFrame | None = None,
         dust_rules: DataFrame | None = None,
     ):
         self.spark = spark
@@ -147,44 +141,30 @@ class CrawlEngine:
         self.web = canonical_web(web_pages).persist()
         self.policy = host_policy
         self.store = store
-        self.sitemaps = sitemaps  # optional sitemaps(url, xml) table
-        #: optional feeds(url, xml) table — RSS/Atom seed expansion
-        #: (sources/feeds.py), same pre-wave-0 stage as sitemaps
-        self.feeds = feeds
-        #: optional LinkExtractor allow/deny dim (source, link_allow,
-        #: link_deny) — sources/registry.link_rules_df
-        self.link_rules = link_rules
-        #: optional OffsiteMiddleware dim (source, allowed_domains) —
-        #: sources/registry.offsite_rules_df (1,249 reference spiders)
-        self.offsite_rules = offsite_rules
-        #: optional handle_httpstatus_list dim (source,
-        #: handle_httpstatus array<int>) — sources/registry
-        #: .status_rules_df (17 reference spiders,
-        #: alexandergreens_co_uk.py:31): listed statuses reach parse
-        #: and never retry
-        self.status_rules = status_rules
+        #: optional spiders dim (``sources/registry.spiders_dim_df``,
+        #: PAPER §1.1: a spider is a config row). Two narrow views are
+        #: projected once, so no wave joins the whole dim: the
+        #: handle_httpstatus_list statuses for the parse gate (17
+        #: reference spiders, alexandergreens_co_uk.py:31 [401]) and the
+        #: LinkExtractor / OffsiteMiddleware rules for
+        #: :func:`~spider_spark.operators.spans.site_filter`.
+        self.status_rules = self.site_rules = None
+        if spiders is not None:
+            self.status_rules = spiders.select("source", "handle_httpstatus")
+            self.site_rules = spiders.select(
+                "source", "link_allow", "link_deny", "allowed_domains"
+            )
         #: optional DUST rewrite dim (kind, scope, arg, support) —
         #: operators/dust.mine_rules output; applied to every candidate
         #: URL before identity/dedup so known aliases collapse onto
         #: their canonical form and never cost a fetch
         self.dust_rules = dust_rules
         #: optional link-authority dim (host, priority) — typically
-        #: graphrank.rank_priorities over graphrank.host_graph of a
-        #: PREVIOUS crawl's frontier (Cho et al. WWW'98 "crawl by URL
-        #: ordering"). Ranked hosts get their rank as the dispatch
+        #: graphrank.rank_priorities over graphrank.pagerank of a
+        #: PREVIOUS crawl's :meth:`link_graph` (Cho et al. WWW'98 "crawl
+        #: by URL ordering"). Ranked hosts get their rank as the dispatch
         #: priority; unranked hosts keep the request's static priority.
         self.host_ranks = host_ranks
-        if robots_texts is not None:
-            # raw robots.txt bodies (host, robots_txt) -> parsed rules
-            # overlaid onto the policy dim: the host's own Crawl-delay
-            # and Disallow prefixes replace the static configuration
-            # (operators/robots, RFC 9309 subset). Parsed once here —
-            # it's a host dim, not per-URL work.
-            from ..operators import robots as R
-
-            self.policy = R.merge_into_policy(
-                self.policy, R.parse_robots_texts(robots_texts)
-            )
 
     def close(self) -> None:
         """Release the canonical-web cache. Engines are cheap to build
@@ -293,19 +273,6 @@ class CrawlEngine:
                 wave += 1
         else:
             t0 = time.monotonic()
-            if self.sitemaps is not None:
-                # pre-wave-0 sitemap expansion (SitemapSpider analog,
-                # athimmo_be.py:18-26): *.xml seeds -> one seed per <loc>
-                from ..sources.sitemap import expand_sitemap_seeds
-
-                seeds = expand_sitemap_seeds(seeds, self.sitemaps)
-            if self.feeds is not None:
-                # pre-wave-0 feed expansion (RSS/Atom discovery channel,
-                # sources/feeds.py) — runs after sitemaps so a sitemap
-                # <loc> naming a feed expands too
-                from ..sources.feeds import expand_feed_seeds
-
-                seeds = expand_feed_seeds(seeds, self.feeds)
             admitted, writes = self._admit(_seed_candidates(seeds, cfg.crawl_id, 0, 0), 0)
             writes["frontier"] = admitted.drop("crawl_delay_s")
             record = self._commit(0, writes, t0, 0)
@@ -349,7 +316,6 @@ class CrawlEngine:
         bumped = {"attempt": F.col("attempt") + 1, "dont_filter": F.lit(True)}
         retry_row = [bumped.get(c, F.col(c)).alias(c) for c in FRONTIER_COLS]
         link_order = [F.asc("parent_seq"), F.asc("link_pos")]
-        is_redirect = F.col("link_pos") < 0
         bucket_aggs = [
             F.count("*").alias("fetched"),
             F.sum(
@@ -364,8 +330,9 @@ class CrawlEngine:
             # the robots fence drops rows from the frontier for good, so
             # it filters pending once, here, for dispatch and deferral
             pending = P.robots_filter(pending, self.policy, cfg.obey_robots)
+            # the salted top-k is exact for any salt count
             dispatch = P.schedule_wave(
-                pending, self.policy, wave_seconds=cfg.wave_seconds, n_salts=cfg.n_salts
+                pending, self.policy, wave_seconds=cfg.wave_seconds, n_salts=8
             )
             fetched = fetch_synthetic(dispatch.withColumn("wave", F.lit(wave)), self.web)
             if self.status_rules is not None:
@@ -391,8 +358,8 @@ class CrawlEngine:
             docs = S.extract_documents(ok)
             # links and 3xx targets from one scan (no union: it cost +10
             # jobs/+46 stages per wave). Targets (link_pos < 0) skip the
-            # link rules and the offsite filter, as Scrapy 2.3's
-            # downloader-level RedirectMiddleware does, but pass _admit.
+            # site filter, as Scrapy 2.3's downloader-level
+            # RedirectMiddleware does, but pass _admit.
             raw_links = S.extract_candidates_raw(
                 fetched, self.cfg.redirect_max_times, follow_redirects
             )
@@ -402,12 +369,7 @@ class CrawlEngine:
             new_links = S.resolve_candidates(
                 S.assign_seq(raw_links, link_order, record["next_seq_base"])
             )
-            new_links = S.apply_link_rules(
-                new_links, self.link_rules, bypass=is_redirect
-            )
-            new_links = S.offsite_filter(
-                new_links, self.offsite_rules, bypass=is_redirect
-            )
+            new_links = S.site_filter(new_links, self.site_rules, bypass="link_pos < 0")
             if cfg.trap_filter:
                 # A fenced link consumes a seq number but never reaches
                 # dedup, politeness or seen-set state. The resolved

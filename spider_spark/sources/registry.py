@@ -42,6 +42,12 @@ SPIDERS_DIM = T.StructType(
         # resolved child URL; NULL allow = allow everything
         T.StructField("link_allow", T.StringType(), True),
         T.StructField("link_deny", T.StringType(), True),
+        # OffsiteMiddleware analog, lowercased: child links off these
+        # domains are dropped; empty = no restriction
+        T.StructField("allowed_domains", T.ArrayType(T.StringType()), True),
+        # handle_httpstatus_list analog: non-200 statuses that still
+        # reach parse and never retry; empty = 200 only
+        T.StructField("handle_httpstatus", T.ArrayType(T.IntegerType()), True),
         T.StructField("seeds", T.ArrayType(T.StringType()), False),
     ]
 )
@@ -67,8 +73,9 @@ class SiteSpec:
     #: filtering).
     allowed_domains: list[str] = field(default_factory=list)
     #: SitemapSpider analog (athimmo_be.py:18-26): sitemap URLs become
-    #: seed rows and are expanded pre-wave-0 by
-    #: sources.sitemap.expand_sitemap_seeds (they match *.xml)
+    #: seed rows, which the caller expands with
+    #: sources.sitemap.expand_sitemap_seeds (they match *.xml) before
+    #: CrawlEngine.run
     sitemap_urls: list[str] = field(default_factory=list)
     #: ``handle_httpstatus_list`` analog (17 reference spiders declare
     #: non-200 statuses whose responses still reach parse —
@@ -148,45 +155,18 @@ register(
 
 
 def spiders_dim_df(spark: SparkSession, registry: dict[str, SiteSpec] | None = None) -> DataFrame:
+    """The spiders dim, one row per site: the engine's ``spiders``
+    input (``CrawlEngine(spiders=...)``)."""
     reg = registry if registry is not None else REGISTRY
     rows = [
         (
             s.source, s.country, s.locale, s.thousand_separator, s.scale_separator,
-            s.download_delay_s, s.proxy_country, s.link_allow, s.link_deny, s.seeds,
+            s.download_delay_s, s.proxy_country, s.link_allow, s.link_deny,
+            [d.lower() for d in s.allowed_domains], list(s.handle_httpstatus_list), s.seeds,
         )
         for s in reg.values()
     ]
     return spark.createDataFrame(rows, SPIDERS_DIM)
-
-
-def link_rules_df(spark: SparkSession, registry: dict[str, SiteSpec] | None = None) -> DataFrame:
-    """Per-source LinkExtractor allow/deny dim for
-    ``operators.spans.apply_link_rules`` (broadcast at the link stage)."""
-    reg = registry if registry is not None else REGISTRY
-    rows = [(s.source, s.link_allow, s.link_deny) for s in reg.values()]
-    return spark.createDataFrame(
-        rows, "source string, link_allow string, link_deny string"
-    )
-
-
-def status_rules_df(spark: SparkSession, registry: dict[str, SiteSpec] | None = None) -> DataFrame:
-    """Per-source ``handle_httpstatus_list`` dim for the engine's parse
-    gate (broadcast; one row per source, empty array = 200-only)."""
-    reg = registry if registry is not None else REGISTRY
-    rows = [(s.source, list(s.handle_httpstatus_list)) for s in reg.values()]
-    return spark.createDataFrame(
-        rows, "source string, handle_httpstatus array<int>"
-    )
-
-
-def offsite_rules_df(spark: SparkSession, registry: dict[str, SiteSpec] | None = None) -> DataFrame:
-    """Per-source ``allowed_domains`` dim for
-    ``operators.spans.offsite_filter`` (OffsiteMiddleware analog;
-    ``allowed_domains`` appears on 1,249 reference spiders). One row per
-    source; empty array = no restriction."""
-    reg = registry if registry is not None else REGISTRY
-    rows = [(s.source, [d.lower() for d in s.allowed_domains]) for s in reg.values()]
-    return spark.createDataFrame(rows, "source string, allowed_domains array<string>")
 
 
 def seeds_from_registry(spark: SparkSession, registry: dict[str, SiteSpec] | None = None) -> DataFrame:

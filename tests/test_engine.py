@@ -22,6 +22,8 @@ from spider_spark.synth import WebSpec, host_policy_df, seeds_df, web_df
 from tests.golden_model import GoldenCrawl
 
 SPEC = WebSpec(seed=42, n_hosts=5, pages_per_host=3, details_per_page=4, hot_host_factor=4)
+#: the spiders dim's narrow view that spans.site_filter reads
+SITE_RULES = "source string, link_allow string, link_deny string, allowed_domains array<string>"
 
 
 def run_engine(spark, tmp_path, spec=SPEC, **cfg_kw):
@@ -129,43 +131,43 @@ def test_multipage_items_merged(engine_run):
 def test_link_extractor_allow_deny(spark, tmp_path):
     """LinkExtractor allow/deny (a_venue_be.py:7, 59 spiders): unit
     filter semantics + engine-level deny pruning the frontier."""
-    from spider_spark.operators.spans import apply_link_rules
-    from spider_spark.sources.registry import link_rules_df
+    from spider_spark.operators.spans import site_filter
+    from spider_spark.sources.registry import SiteSpec, spiders_dim_df
 
     links = spark.createDataFrame(
         [
-            ("s1", "http://h/detail/1"),
-            ("s1", "http://h/missing/2"),
-            ("s2", "http://h/detail/3"),
-            ("s2", "http://h/other/4"),
-            ("s3", "http://h/x"),
+            ("s1", "http://h/detail/1", False),
+            ("s1", "http://h/missing/2", False),
+            ("s2", "http://h/detail/3", False),
+            ("s2", "http://h/other/4", False),
+            ("s3", "http://h/x", False),
         ],
-        "source string, url string",
+        "source string, url string, dont_filter boolean",
     )
     rules = spark.createDataFrame(
-        [("s1", None, "/missing/"), ("s2", "/detail/", None)],
-        "source string, link_allow string, link_deny string",
+        [("s1", None, "/missing/", None), ("s2", "/detail/", None, None)],
+        SITE_RULES,
     )
-    out = {(r["source"], r["url"]) for r in apply_link_rules(links, rules).collect()}
+    out = {(r["source"], r["url"]) for r in site_filter(links, rules, "false").collect()}
     assert out == {
         ("s1", "http://h/detail/1"),
         ("s2", "http://h/detail/3"),
         ("s3", "http://h/x"),  # no rules row -> pass through
     }
     # registry dim shape
-    assert link_rules_df(spark).columns == ["source", "link_allow", "link_deny"]
+    assert {"source", "link_allow", "link_deny"} <= set(spiders_dim_df(spark).columns)
 
     # engine-level: a deny rule keeps dead links out of the frontier
     spec = WebSpec(seed=7, n_hosts=3, pages_per_host=2, details_per_page=2,
                    dead_link_rate=1.0, retry_rate=0.0)
-    deny = spark.createDataFrame(
-        [(f"spider_{h.split('.')[0]}", None, "/missing/") for h in spec.hosts],
-        "source string, link_allow string, link_deny string",
-    )
+    deny = spiders_dim_df(spark, {
+        src: SiteSpec(source=src, seeds=[], link_deny="/missing/")
+        for src in (f"spider_{h.split('.')[0]}" for h in spec.hosts)
+    })
     cfg = CrawlConfig(crawl_id="lr", n_buckets=8, wave_seconds=1.0, max_waves=40)
     s1 = SnapshotStore(spark, str(tmp_path / "with_rules"))
     e1 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec),
-                     s1, cfg, link_rules=deny)
+                     s1, cfg, spiders=deny)
     e1.run(seeds_df(spark, spec))
     s2 = SnapshotStore(spark, str(tmp_path / "no_rules"))
     e2 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec), s2, cfg)
@@ -218,8 +220,8 @@ def test_offsite_filter(spark, tmp_path):
     spiders): unit semantics (exact host / subdomain / port / case /
     dont_filter bypass / empty = pass-all) + engine-level pruning of
     cross-host links."""
-    from spider_spark.operators.spans import offsite_filter
-    from spider_spark.sources.registry import offsite_rules_df
+    from spider_spark.operators.spans import site_filter
+    from spider_spark.sources.registry import spiders_dim_df
 
     links = spark.createDataFrame(
         [
@@ -236,10 +238,10 @@ def test_offsite_filter(spark, tmp_path):
         "source string, url string, dont_filter boolean",
     )
     rules = spark.createDataFrame(
-        [("s1", ["allowed.fr"]), ("s2", [])],
-        "source string, allowed_domains array<string>",
+        [("s1", None, None, ["allowed.fr"]), ("s2", None, None, [])],
+        SITE_RULES,
     )
-    out = {r["url"] for r in offsite_filter(links, rules).collect()}
+    out = {r["url"] for r in site_filter(links, rules, "false").collect()}
     assert out == {
         "http://allowed.fr/a",
         "http://sub.allowed.fr/b",
@@ -253,7 +255,7 @@ def test_offsite_filter(spark, tmp_path):
     from spider_spark.sources.registry import REGISTRY, SiteSpec
 
     reg = {"sx": SiteSpec(source="sx", seeds=[], allowed_domains=["MiXeD.Example"])}
-    dim = offsite_rules_df(spark, reg).collect()
+    dim = spiders_dim_df(spark, reg).collect()
     assert dim[0]["allowed_domains"] == ["mixed.example"]
     assert REGISTRY  # untouched default registry still present
 
@@ -265,14 +267,12 @@ def test_offsite_filter(spark, tmp_path):
                    cross_host_rate=1.0, retry_rate=0.0)
     h0 = spec.hosts[0]
     one_seed = seeds_df(spark, spec).filter(F.lower(F.col("url")).contains(h0))
-    own_host = spark.createDataFrame(
-        [(f"spider_{h0.split('.')[0]}", [h0])],
-        "source string, allowed_domains array<string>",
-    )
+    src0 = f"spider_{h0.split('.')[0]}"
+    own_host = spiders_dim_df(spark, {src0: SiteSpec(source=src0, seeds=[], allowed_domains=[h0])})
     cfg = CrawlConfig(crawl_id="os", n_buckets=8, wave_seconds=1.0, max_waves=40)
     s1 = SnapshotStore(spark, str(tmp_path / "offsite"))
     e1 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec),
-                     s1, cfg, offsite_rules=own_host)
+                     s1, cfg, spiders=own_host)
     e1.run(one_seed)
     s2 = SnapshotStore(spark, str(tmp_path / "open"))
     e2 = CrawlEngine(spark, web_df(spark, spec), host_policy_df(spark, spec), s2, cfg)
@@ -283,6 +283,39 @@ def test_offsite_filter(spark, tmp_path):
     assert h1 == {h0}
     assert len(h2) > 1
     assert e1.url_seen().count() < e2.url_seen().count()
+
+
+def test_site_filter_merged_predicates(spark):
+    """spans.site_filter applies the allow/deny rules and the offsite
+    check in one predicate: on a source with both a deny rule and
+    allowed_domains each check drops its own URL, a bypass row
+    (redirect target, link_pos < 0) skips both, and dont_filter skips
+    the offsite check only."""
+    from spider_spark.operators.spans import site_filter
+
+    links = spark.createDataFrame(
+        [
+            ("s1", "http://a.fr/ok", False, 0),          # passes both
+            ("s1", "http://a.fr/private/1", False, 1),   # deny -> drop
+            ("s1", "http://b.fr/page", False, 2),        # offsite -> drop
+            ("s1", "http://b.fr/private/2", False, -1),  # redirect target
+            ("s1", "http://b.fr/x", True, 3),            # dont_filter: offsite skipped
+            ("s1", "http://a.fr/private/3", True, 4),    # dont_filter: deny still drops
+            ("s2", "http://c.fr/y", False, 0),           # NULL allowed_domains
+        ],
+        "source string, url string, dont_filter boolean, link_pos int",
+    )
+    rules = spark.createDataFrame(
+        [("s1", None, "/private/", ["a.fr"]), ("s2", None, None, None)], SITE_RULES
+    )
+    out = site_filter(links, rules, bypass="link_pos < 0")
+    assert out.columns == links.columns
+    assert {r["url"] for r in out.collect()} == {
+        "http://a.fr/ok",
+        "http://b.fr/private/2",
+        "http://b.fr/x",
+        "http://c.fr/y",
+    }
 
 
 def test_resume_from_checkpoint(spark, tmp_path):
@@ -460,6 +493,7 @@ def test_sitemap_crawl_matches_start_urls_crawl(spark, tmp_path):
     produce the same document set as the equivalent start_urls crawl
     (retry_rate=0 so both reach every page)."""
     from spider_spark.plans.engine import CrawlConfig, CrawlEngine
+    from spider_spark.sources.sitemap import expand_sitemap_seeds
     from spider_spark.storage.catalog import SnapshotStore
     from spider_spark.synth import (
         WebSpec, host_policy_df, seeds_df, sitemap_seeds_df, sitemaps_df, web_df,
@@ -468,20 +502,21 @@ def test_sitemap_crawl_matches_start_urls_crawl(spark, tmp_path):
     spec = WebSpec(seed=7, n_hosts=3, pages_per_host=2, details_per_page=3,
                    retry_rate=0.0, dead_link_rate=0.0)
 
-    def run(seeds, sitemaps, tag):
+    def run(seeds, tag):
         eng = CrawlEngine(
             spark,
             web_df(spark, spec),
             host_policy_df(spark, spec),
             SnapshotStore(spark, str(tmp_path / tag)),
             CrawlConfig(crawl_id=tag, n_buckets=8, max_waves=20, wave_seconds=4.0),
-            sitemaps=sitemaps,
         )
         eng.run(seeds)
         return {r["doc_id"] for r in eng.documents().select("doc_id").collect()}
 
-    via_start = run(seeds_df(spark, spec), None, "start")
-    via_sitemap = run(sitemap_seeds_df(spark, spec), sitemaps_df(spark, spec), "map")
+    via_start = run(seeds_df(spark, spec), "start")
+    via_sitemap = run(
+        expand_sitemap_seeds(sitemap_seeds_df(spark, spec), sitemaps_df(spark, spec)), "map"
+    )
     assert via_start == via_sitemap
     assert len(via_start) > 0
 
@@ -511,6 +546,26 @@ def test_crawl_oracle_fixture_is_fresh():
         zip(t["doc_id"], t["kind"], t["text"], t["media_ref"], t["offset"])
     )
     assert committed == expected
+
+
+def test_crawl_end_to_end_query_removes_its_store(spark, tmp_path, monkeypatch):
+    """The contract's crawl_end_to_end query returns the golden rows
+    and leaves no ``entry_crawl_*`` store behind in the temp dir."""
+    import tempfile
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as E
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cols = ["doc_id", "kind", "text", "media_ref", "offset"]
+    got = [tuple(r) for r in E.q_crawl_end_to_end(spark, "").select(*cols).collect()]
+    fixture = Path(__file__).resolve().parents[1] / "fixtures" / "crawl_expected.parquet"
+    t = pq.read_table(fixture).to_pydict()
+    want = list(zip(*(t[c] for c in cols)))
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert not list(tmp_path.glob("entry_crawl_*"))
 
 
 def test_snapshot_compaction_preserves_reads(spark, tmp_path):
@@ -683,10 +738,13 @@ def test_host_ranks_boost_dispatch_order(spark, tmp_path):
 
 
 def test_robots_texts_equal_static_rules(spark, tmp_path):
-    """Feeding raw robots.txt bodies (CrawlEngine(robots_texts=...))
-    must produce the same crawl as the statically configured disallow
-    rules it encodes: parse -> merge_into_policy -> robots_filter is
-    the same decision surface."""
+    """Feeding raw robots.txt bodies (a policy from
+    merge_into_policy(policy, parse_robots_texts(texts))) must produce
+    the same crawl as the statically configured disallow rules it
+    encodes: parse -> merge_into_policy -> robots_filter is the same
+    decision surface."""
+    from spider_spark.operators.robots import merge_into_policy, parse_robots_texts
+
     spec = WebSpec(seed=5, n_hosts=4, pages_per_host=2, details_per_page=2)
     pol = host_policy_df(spark, spec)
     cfg = dict(crawl_id="t", n_buckets=8, max_waves=30, obey_robots=True)
@@ -711,8 +769,8 @@ def test_robots_texts_equal_static_rules(spark, tmp_path):
     )
     store_b = SnapshotStore(spark, str(tmp_path / "b"))
     eng_b = CrawlEngine(
-        spark, web_df(spark, spec), stripped, store_b, CrawlConfig(**cfg),
-        robots_texts=texts,
+        spark, web_df(spark, spec), merge_into_policy(stripped, parse_robots_texts(texts)),
+        store_b, CrawlConfig(**cfg),
     )
     tb = eng_b.run(seeds_df(spark, spec))
 
@@ -748,7 +806,7 @@ def test_handle_httpstatus_list(spark, tmp_path):
         ],
         schemas.SEEDS,
     )
-    from spider_spark.sources.registry import SiteSpec, status_rules_df
+    from spider_spark.sources.registry import SiteSpec, spiders_dim_df
 
     reg = {
         "s_allow": SiteSpec(
@@ -759,7 +817,7 @@ def test_handle_httpstatus_list(spark, tmp_path):
     store = SnapshotStore(spark, str(tmp_path / "hs"))
     cfg = CrawlConfig(crawl_id="t", n_buckets=4, max_waves=8, retry_times=2)
     eng = CrawlEngine(
-        spark, web, policy, store, cfg, status_rules=status_rules_df(spark, reg)
+        spark, web, policy, store, cfg, spiders=spiders_dim_df(spark, reg)
     )
     eng.run(seeds)
     docs = eng.documents().select("source").collect()

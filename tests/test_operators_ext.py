@@ -264,12 +264,24 @@ def test_engine_autothrottle_adapts(spark, tmp_path):
 
 
 def test_registry_dim_and_seeds(spark):
-    from spider_spark.sources.registry import REGISTRY, seeds_from_registry, spiders_dim_df
+    from spider_spark.sources.registry import (
+        REGISTRY, SiteSpec, seeds_from_registry, spiders_dim_df,
+    )
 
     dim = spiders_dim_df(spark)
     assert dim.count() == len(REGISTRY) >= 3
     uk = dim.filter(F.col("source") == "example_uk").collect()[0]
     assert uk["thousand_separator"] == "," and uk["download_delay_s"] == 1.0
+    # the per-site rules the engine reads from the one dim
+    assert {
+        "link_allow", "link_deny", "allowed_domains", "handle_httpstatus"
+    } <= set(dim.columns)
+    assert uk["allowed_domains"] == [] and uk["handle_httpstatus"] == []
+    site = SiteSpec(source="sx", seeds=[], allowed_domains=["MiXeD.Example"],
+                    handle_httpstatus_list=[401, 500])
+    row = spiders_dim_df(spark, {"sx": site}).collect()[0]
+    assert row["allowed_domains"] == ["mixed.example"]
+    assert row["handle_httpstatus"] == [401, 500]
     seeds = seeds_from_registry(spark)
     assert seeds.count() >= 3
     row = seeds.filter(F.col("source") == "example_de").collect()[0]
@@ -955,8 +967,8 @@ def test_proxy_routing(spark):
 
     dim = spark.createDataFrame(
         [
-            ("site_de", "de", "de", ".", ",", None, "de", None, None, ["http://x/"]),
-            ("site_us", "us", "en", ",", ".", None, None, None, None, ["http://y/"]),
+            ("site_de", "de", "de", ".", ",", None, "de", None, None, [], [], ["http://x/"]),
+            ("site_us", "us", "en", ",", ".", None, None, None, None, [], [], ["http://y/"]),
         ],
         SPIDERS_DIM,
     )
@@ -1330,29 +1342,6 @@ def test_change_rate_schedule_vectors(spark):
     # due set at t=5 days: u1 (due day 4 + ~1.1d), u3 (due at 1 h) are due
     due = {r["url"] for r in RV.due_urls(RV.change_rate_schedule(hist), 5.2 * day).collect()}
     assert "u3" in due and "u2" not in due
-
-
-def test_host_graph_from_frontier_lineage(spark):
-    """graphrank.host_graph: (parent_seq -> discovered_seq) self-join
-    reconstructs host edges; seeds contribute none; self-edges drop by
-    default."""
-    from spider_spark.operators import graphrank as GR
-
-    rows = [
-        (1, 0, "a.com"),  # seed
-        (2, 1, "a.com"),  # intra-host (self edge)
-        (3, 1, "b.com"),  # a -> b
-        (4, 3, "c.com"),  # b -> c
-    ]
-    fr = spark.createDataFrame(
-        rows, "discovered_seq long, parent_seq long, host string"
-    )
-    got = {(r["src"], r["dst"]) for r in GR.host_graph(fr).collect()}
-    assert got == {("a.com", "b.com"), ("b.com", "c.com")}
-    with_self = {
-        (r["src"], r["dst"]) for r in GR.host_graph(fr, drop_self=False).collect()
-    }
-    assert ("a.com", "a.com") in with_self and got <= with_self
 
 
 def test_extract_main_text_vectors():
