@@ -269,8 +269,10 @@ def with_url_identity(df, n_buckets: int, url_col: str = "url"):
 # saves a Bloom probe, a seen-set row, and a politeness-window slot.
 #
 # All signals are pure JVM regex/HOF column expressions over the
-# canonical URL (whole-stage codegen; no Python, no shuffle) so the
-# fence is free at admission time.
+# canonical URL (whole-stage codegen; no Python, no shuffle), so a
+# caller can fence its candidates for free. The engine applies no
+# fence (the reference's finite listing sites need none); the
+# ``url_canonicalize`` contract query reports the signals.
 # ---------------------------------------------------------------------------
 
 #: Fence thresholds (Heritrix-shaped defaults): TooManyPathSegments

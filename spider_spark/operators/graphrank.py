@@ -1,15 +1,14 @@
-"""Link-graph PageRank for frontier prioritization.
+"""Link-graph ranking: PageRank, OPIC, HITS and TrustRank.
 
-Production crawlers order their frontier by link authority — the
-original use PageRank was designed for (Page et al. 1999; Cho,
-Garcia-Molina & Page, "Efficient crawling through URL ordering",
-WWW'98). The reference fleet has no equivalent (each Scrapy spider
-crawls its own site with FIFO/priority ordering, SURVEY.md §2.2), but
-a 10^10-URL frontier needs a global importance signal to spend its
-politeness budget well; this module supplies it and
-:func:`rank_priorities` converts ranks into the engine's integer
-``priority`` column (``operators/politeness.DISPATCH_ORDER`` sorts on
-it DESC).
+Production crawlers score link authority with these (Page et al.
+1999; Cho, Garcia-Molina & Page, "Efficient crawling through URL
+ordering", WWW'98). The reference fleet has no equivalent: each Scrapy
+spider crawls its own site with FIFO/priority ordering, and its
+politeness is per domain (SURVEY.md §2.2). The engine reproduces that
+as a top-k within each host against the host's own budget, so a
+per-host authority score cannot decide which hosts go first, and the
+engine takes none. The ranks here are outputs over a caller's edge
+table (the ``pagerank`` contract query).
 
 Scale shape (per power iteration):
 
@@ -32,7 +31,7 @@ unroll the iterations as plain SQL.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -112,28 +111,6 @@ def pagerank(
     return ranks
 
 
-def rank_priorities(
-    ranks: DataFrame, n_levels: int = 100, node_col: str = "node"
-) -> DataFrame:
-    """Map ranks to the engine's integer ``priority`` column:
-    ``ntile(n_levels)`` ascending by (rank, node), so the top-ranked
-    slice gets priority ``n_levels`` and the engine's
-    (priority DESC, discovered_seq ASC) dispatch order crawls
-    authoritative hosts first. Node is the window tie-break, making the
-    assignment deterministic under equal ranks.
-
-    The window is global but runs over the NODE dim (hosts, not URLs —
-    ~10^6-10^7 rows at a 10^10-URL frontier), and ntile needs only a
-    sort, no per-row Python. For a URL-level ranking swap ntile for a
-    fixed quantile cut from ``approxQuantile`` to avoid the single
-    sort partition.
-    """
-    w = Window.orderBy(F.asc("rank"), F.asc(node_col))
-    return ranks.select(
-        node_col, "rank", F.ntile(n_levels).over(w).alias("priority")
-    )
-
-
 def opic(
     edges: DataFrame,
     src: str = "src",
@@ -150,9 +127,7 @@ def opic(
     cash is redistributed uniformly — the paper's virtual-node edge
     back to everyone). After ``t`` rounds the importance estimate is
     ``(history + cash) / (t + 1)``, which sums to 1 and converges to
-    the damping-1 PageRank fixpoint. The crawl engine consumes it
-    through :func:`rank_priorities` exactly like :func:`pagerank`
-    (``CrawlEngine(host_ranks=...)``).
+    the damping-1 PageRank fixpoint.
 
     Scale shape per round — identical to :func:`pagerank`: one
     ``cash ⋈ edges`` equi-join on ``src`` + one map-side-combinable
@@ -291,8 +266,8 @@ def trustrank(
     the teleport restricted to a TRUSTED seed set, so authority flows
     outward from vetted pages and link farms — which PageRank rewards
     because they interlink densely — receive only what trusted regions
-    actually link to. The crawl-side use: frontier prioritization that
-    a spam network cannot inflate (pair with :func:`rank_priorities`).
+    actually link to. The crawl-side use: an authority score that a
+    spam network cannot inflate.
 
     ``seeds`` is a one-column (node) DataFrame — the paper's manually
     reviewed high-trust sites. The static trust vector is uniform over

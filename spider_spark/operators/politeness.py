@@ -5,8 +5,9 @@ Reference semantics being reproduced (observable contract, SURVEY.md §2.2):
 * per-host dispatch budget per wave:
   ``budget(host) = min(max_concurrency, floor(wave_seconds / crawl_delay))``
   with defaults from ``python_spiders/settings.py:24,31,76-78``
-  (CONCURRENT_REQUESTS_PER_DOMAIN=16, AutoThrottle delay 0.1–2 s) and
-  per-spider DOWNLOAD_DELAY overrides (``95bis_com.py:28``);
+  (CONCURRENT_REQUESTS_PER_DOMAIN=16, AutoThrottle delay 0.1–2 s); a
+  per-spider DOWNLOAD_DELAY override (``95bis_com.py:28``) is expressed
+  by the caller as its hosts' ``crawl_delay_s`` in the policy dim;
 * within a host, dispatch order is (priority DESC, discovered_seq ASC) —
   Scrapy pops highest priority first; our deterministic discovery
   sequence is the tie-break (the reference's in-process LIFO is not

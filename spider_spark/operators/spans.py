@@ -197,11 +197,7 @@ def resolve_candidates(raw: DataFrame) -> DataFrame:
     )
 
 
-def extract_candidates_raw(
-    fetched: DataFrame,
-    max_times: int = schemas.REDIRECT_MAX_TIMES,
-    follow_redirects: bool = True,
-) -> DataFrame:
+def extract_candidates_raw(fetched: DataFrame, follow_redirects: bool = True) -> DataFrame:
     """Links AND redirect targets from ONE scan of the fetched wave —
     no union. The rows are PRE-RESOLUTION child requests (``base_url``/
     ``href`` instead of an absolute ``url`` — pure JVM, no UDF;
@@ -265,7 +261,7 @@ def extract_candidates_raw(
     is_redir = (
         f"(status IN ({codes}) AND location IS NOT NULL AND NOT ({parse_ok})"
         f" AND lower(coalesce(element_at({base_meta}, 'dont_redirect'), ''))"
-        f" IN ('', '0', 'false') AND {times} < {max_times})"
+        f" IN ('', '0', 'false') AND {times} < {schemas.REDIRECT_MAX_TIMES})"
         if follow_redirects
         else "false"
     )

@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import schemas
-from ..functions.urls import is_trap_col, with_url_identity
+from ..functions.urls import with_url_identity
 from ..operators import autothrottle as AT
 from ..operators import dedup as D
 from ..operators import politeness as P
@@ -59,6 +59,10 @@ from ..sources.fetch import canonical_web, fetch_synthetic
 from ..storage.catalog import SnapshotStore
 
 FRONTIER_COLS = [f.name for f in schemas.FRONTIER.fields]
+#: the exact seen-set backend folds ``url_seen`` into one base dir after
+#: every COMPACT_EVERY-th committed wave, so its anti-join reads at most
+#: this many snapshot dirs however long the crawl runs
+COMPACT_EVERY = 16
 
 
 @dataclass
@@ -70,10 +74,6 @@ class CrawlConfig:
     obey_robots: bool = False  # reference: ROBOTSTXT_OBEY=False (settings.py:21)
     autothrottle: bool = False  # adaptive delay (settings.py:74-78); off = static policy
     retry_times: int = schemas.RETRY_TIMES
-    #: RedirectMiddleware chain cap (Scrapy REDIRECT_MAX_TIMES default);
-    #: redirect following itself has no off switch, matching Scrapy —
-    #: per-request opt-out is meta={'dont_redirect': true}
-    redirect_max_times: int = schemas.REDIRECT_MAX_TIMES
     #: conditional-GET recrawls: recrawl_candidates sends the stored
     #: content validator as meta['if_none_match']; unchanged pages come
     #: back 304 (no body, no re-parse, no document row) and land in a
@@ -87,30 +87,6 @@ class CrawlConfig:
     #: 2**20 fingerprints per bucket at a 1e-6 false-positive rate, so
     #: ``n_buckets`` is the sizing lever
     seen_backend: str = "exact"
-    #: compact ``url_seen`` every N committed waves (None = never).
-    #: The exact seen-backend re-reads url_seen every wave, so without
-    #: compaction a long crawl reads hundreds of snapshot dirs ×
-    #: shuffle-partitions small files per wave — the Iceberg small-file
-    #: problem the store's compact() exists for. The Bloom backend
-    #: folds state into one filter blob and does not need this.
-    compact_every: int | None = None
-    #: file count for compacted rewrites (None = keep partitioning)
-    compact_partitions: int | None = None
-    #: record host->host link-graph edges per wave into a ``links``
-    #: table (every out-link, INCLUDING links back to already-seen
-    #: pages — the frontier lineage only keeps the discovery spanning
-    #: tree). Input to graphrank.pagerank for priority-ordered
-    #: recrawls. Costs one small aggregation job per wave; off by
-    #: default.
-    record_links: bool = False
-    #: drop trap-shaped out-links (path depth / pathological segment
-    #: repetition / query-param count / URL length — Mercator WWW'99,
-    #: IRLbot WWW'08, Heritrix decide-rule defaults; thresholds in
-    #: ``functions.urls``) BEFORE they cost a Bloom probe, a seen-set
-    #: row, or a politeness slot (a fenced link still consumes a seq
-    #: number). Pure JVM fence at admission; off by default (the
-    #: reference's finite listing sites need none).
-    trap_filter: bool = False
 
 
 class CrawlEngine:
@@ -122,13 +98,11 @@ class CrawlEngine:
         web_pages: DataFrame,
         host_policy: DataFrame,
         store: SnapshotStore,
-        config: CrawlConfig | None = None,
+        config: CrawlConfig,
         spiders: DataFrame | None = None,
-        host_ranks: DataFrame | None = None,
-        dust_rules: DataFrame | None = None,
     ):
         self.spark = spark
-        self.cfg = config or CrawlConfig()
+        self.cfg = config
         #: the seen-set filter layout, chosen once per engine; None is the
         #: exact anti-join against ``url_seen``
         backend = self.cfg.seen_backend
@@ -154,17 +128,6 @@ class CrawlEngine:
             self.site_rules = spiders.select(
                 "source", "link_allow", "link_deny", "allowed_domains"
             )
-        #: optional DUST rewrite dim (kind, scope, arg, support) —
-        #: operators/dust.mine_rules output; applied to every candidate
-        #: URL before identity/dedup so known aliases collapse onto
-        #: their canonical form and never cost a fetch
-        self.dust_rules = dust_rules
-        #: optional link-authority dim (host, priority) — typically
-        #: graphrank.rank_priorities over graphrank.pagerank of a
-        #: PREVIOUS crawl's :meth:`link_graph` (Cho et al. WWW'98 "crawl
-        #: by URL ordering"). Ranked hosts get their rank as the dispatch
-        #: priority; unranked hosts keep the request's static priority.
-        self.host_ranks = host_ranks
 
     def close(self) -> None:
         """Release the canonical-web cache. Engines are cheap to build
@@ -184,37 +147,7 @@ class CrawlEngine:
         ``url_seen_filters`` for the Bloom backend) for
         :meth:`_commit` to write beside the wave's other tables.
         """
-        if self.dust_rules is not None:
-            # collapse known URL aliases (DUST, operators/dust.py) onto
-            # their canonical form BEFORE identity/fingerprinting, so an
-            # alias of an already-seen page dedups instead of fetching
-            from ..operators.dust import apply_rules
-
-            candidates = (
-                apply_rules(candidates, self.dust_rules)
-                .withColumn("url", F.col("dust_url"))
-                .drop("dust_url")
-            )
-        cand = with_url_identity(candidates, self.cfg.n_buckets)
-        if self.host_ranks is not None:
-            # broadcast dim (one row per host): ranked hosts override the
-            # request's static priority so the politeness top-k spends
-            # the per-wave budget on authoritative hosts first
-            ranks = self.host_ranks.select(
-                F.col("host").alias("_rank_host"),
-                F.col("priority").cast("int").alias("_rank_priority"),
-            )
-            cand = (
-                cand.join(
-                    F.broadcast(ranks), cand["host"] == F.col("_rank_host"), "left"
-                )
-                .withColumn(
-                    "priority",
-                    F.coalesce(F.col("_rank_priority"), F.col("priority")),
-                )
-                .drop("_rank_host", "_rank_priority")
-            )
-        cand = D.dedup_intra_batch(cand)
+        cand = D.dedup_intra_batch(with_url_identity(candidates, self.cfg.n_buckets))
         writes = {}
         if self.seen_filter is not None:
             filters = self.store.read_table(
@@ -339,7 +272,7 @@ class CrawlEngine:
                 fetched = fetched.join(
                     F.broadcast(self.status_rules), on="source", how="left"
                 )
-            # checkpointed: the documents, frontier, metrics (and links /
+            # checkpointed: the documents, frontier, metrics (and
             # revalidations) writes all read the fetched rows, and each
             # plans over a scan of them instead of the schedule and fetch
             fetched = (
@@ -360,51 +293,18 @@ class CrawlEngine:
             # jobs/+46 stages per wave). Targets (link_pos < 0) skip the
             # site filter, as Scrapy 2.3's downloader-level
             # RedirectMiddleware does, but pass _admit.
-            raw_links = S.extract_candidates_raw(
-                fetched, self.cfg.redirect_max_times, follow_redirects
-            )
+            raw_links = S.extract_candidates_raw(fetched, follow_redirects)
             # numbered before the resolve UDF, so the range sort's
-            # sampling job re-runs only the JVM explode; a link the
-            # filters below drop leaves a gap in the seqs
+            # sampling job re-runs only the JVM explode; a link the site
+            # filter drops leaves a gap in the seqs
             new_links = S.resolve_candidates(
                 S.assign_seq(raw_links, link_order, record["next_seq_base"])
             )
-            new_links = S.site_filter(new_links, self.site_rules, bypass="link_pos < 0")
-            if cfg.trap_filter:
-                # A fenced link consumes a seq number but never reaches
-                # dedup, politeness or seen-set state. The resolved
-                # absolute URL carries the same depth/repeat/param/length
-                # signals as its canonical form.
-                new_links = new_links.filter(~is_trap_col(F.col("url")))
-            new_links = new_links.drop("link_pos").withColumn("wave", F.lit(wave))
-            link_edges = None
-            if cfg.record_links:
-                # host-level edges from ALL out-links this wave (pre-
-                # dedup): dst host parses JVM-side from the absolute
-                # resolved URL; src host joins from the fetched page.
-                # Aggregated per (src, dst) before writing — host x host
-                # is tiny next to the link volume.
-                link_edges = (
-                    new_links.select(
-                        "parent_seq",
-                        F.lower(
-                            F.parse_url(F.col("url"), F.lit("HOST"))
-                        ).alias("dst_host"),
-                    )
-                    .filter(F.col("dst_host").isNotNull())
-                    .join(
-                        fetched.select(
-                            F.col("discovered_seq").alias("parent_seq"),
-                            F.col("host").alias("src_host"),
-                        ),
-                        "parent_seq",
-                    )
-                    .groupBy("src_host", "dst_host")
-                    .agg(F.count("*").alias("n"))
-                    .select(
-                        F.lit(wave).alias("wave"), "src_host", "dst_host", "n"
-                    )
-                )
+            new_links = (
+                S.site_filter(new_links, self.site_rules, bypass="link_pos < 0")
+                .drop("link_pos")
+                .withColumn("wave", F.lit(wave))
+            )
             admitted, seen_writes = self._admit(new_links, wave)
             reval = None
             if cfg.conditional_get:
@@ -427,7 +327,6 @@ class CrawlEngine:
                 "frontier": deferred.unionByName(admitted.selectExpr(*FRONTIER_COLS))
                 .unionByName(retry),
                 **seen_writes,
-                "links": link_edges,
                 "revalidations": reval,
                 # the per-bucket rows, one aggregate over the fetched
                 # checkpoint
@@ -436,8 +335,6 @@ class CrawlEngine:
                 .selectExpr("crawl_id", f"{wave} AS wave", "host_bucket", "fetched", "retried"),
             }
             record = self._commit(wave, writes, t0, record["next_seq_base"])
-            if cfg.compact_every and wave > 0 and wave % cfg.compact_every == 0:
-                self.store.compact("url_seen", cfg.compact_partitions)
 
             if cfg.autothrottle:
                 # fold this wave's latency into the policy dim (per-host
@@ -481,7 +378,9 @@ class CrawlEngine:
         are already complete cannot race the queries that wrote them.
         The manifest commit comes last and holds the wave's record, so
         a wave is durable iff all of its writes are, and its counters
-        are durable with it.
+        are durable with it. After every :data:`COMPACT_EVERY`-th wave
+        the exact backend compacts ``url_seen``, the table its anti-join
+        re-reads each wave (the Bloom backend never re-reads it).
 
         Returns the record: ``candidates`` (url_seen rows: every row the
         wave admitted but the ``dont_filter`` ones, which the seen set
@@ -512,6 +411,8 @@ class CrawlEngine:
         }
         record["wall_ms"] = int((time.monotonic() - t0) * 1000)
         self.store.commit_wave(wave, record)
+        if self.seen_filter is None and wave and wave % COMPACT_EVERY == 0:
+            self.store.compact("url_seen")
         return record
 
     # -- outputs ------------------------------------------------------------
@@ -716,18 +617,6 @@ class CrawlEngine:
 
     def metrics(self) -> DataFrame:
         return self.store.read_table("metrics", "append", schema=schemas.METRICS)
-
-    def link_graph(self) -> DataFrame:
-        """Committed host-level link-graph edges (requires
-        ``CrawlConfig.record_links``): (src, dst) distinct host pairs,
-        self-edges dropped — feed straight into graphrank.pagerank,
-        then rank_priorities -> the NEXT crawl's ``host_ranks`` dim."""
-        raw = self.store.read_table("links", "append", schema=schemas.LINKS)
-        return (
-            raw.select(F.col("src_host").alias("src"), F.col("dst_host").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
 
 
 def _seed_candidates(seeds: DataFrame, crawl_id: str, wave: int, base: int) -> DataFrame:

@@ -149,19 +149,6 @@ METRICS = T.StructType(
     ]
 )
 
-#: Host-level link-graph edges (opt-in ``CrawlConfig.record_links``):
-#: every out-link seen this wave, INCLUDING links to already-seen pages
-#: — the discovery tree (frontier lineage) misses those, and PageRank
-#: over hosts needs the full graph, not the spanning tree.
-LINKS = T.StructType(
-    [
-        T.StructField("wave", T.IntegerType(), False),
-        T.StructField("src_host", T.StringType(), False),
-        T.StructField("dst_host", T.StringType(), False),
-        T.StructField("n", T.LongType(), False),
-    ]
-)
-
 #: Reference politeness envelope (python_spiders/settings.py:24,31,76-78,98-99)
 DEFAULT_MAX_CONCURRENCY = 16  # CONCURRENT_REQUESTS_PER_DOMAIN
 DEFAULT_CRAWL_DELAY_S = 0.1  # AUTOTHROTTLE_START_DELAY

@@ -8,7 +8,9 @@ politeness overrides, property-type mappings) plus parse callbacks
 
 * one row in the **spiders dimension table** (broadcast everywhere the
   per-site config is needed — separators for numeric parsing, currency
-  resolution, politeness overrides), and
+  resolution, link and offsite rules; a DOWNLOAD_DELAY override such as
+  ``95bis_com.py:28`` is its hosts' ``crawl_delay_s`` in the host
+  policy, not a spiders column), and
 * a list of :class:`~spider_spark.functions.itemclear.FieldSpec`
   recipes — the declarative ``populate_item`` — compiled to one
   projection by ``apply_specs``.
@@ -35,7 +37,6 @@ SPIDERS_DIM = T.StructType(
         T.StructField("locale", T.StringType(), True),
         T.StructField("thousand_separator", T.StringType(), False),
         T.StructField("scale_separator", T.StringType(), False),
-        T.StructField("download_delay_s", T.DoubleType(), True),  # custom_settings override
         T.StructField("proxy_country", T.StringType(), True),  # PROXY_ON analog; no-op here
         # LinkExtractor(allow=..., deny=...) analog (CrawlSpider rules,
         # a_venue_be.py:7; 59 spiders): regexes applied to the ABSOLUTE
@@ -61,7 +62,6 @@ class SiteSpec:
     locale: str | None = None
     thousand_separator: str = "."
     scale_separator: str = ","
-    download_delay_s: float | None = None
     proxy_country: str | None = None
     #: LinkExtractor allow/deny regex (None = no constraint)
     link_allow: str | None = None
@@ -124,7 +124,6 @@ register(
         locale="en",
         thousand_separator=",",
         scale_separator=".",
-        download_delay_s=1.0,  # DOWNLOAD_DELAY override shape (95bis_com.py:28)
         fields=[
             FieldSpec(
                 "rent", "rent_raw", get_num=True,
@@ -161,7 +160,7 @@ def spiders_dim_df(spark: SparkSession, registry: dict[str, SiteSpec] | None = N
     rows = [
         (
             s.source, s.country, s.locale, s.thousand_separator, s.scale_separator,
-            s.download_delay_s, s.proxy_country, s.link_allow, s.link_deny,
+            s.proxy_country, s.link_allow, s.link_deny,
             [d.lower() for d in s.allowed_domains], list(s.handle_httpstatus_list), s.seeds,
         )
         for s in reg.values()

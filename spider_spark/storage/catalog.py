@@ -33,7 +33,8 @@ exact backend) would otherwise accumulate hundreds of snapshot dirs ×
 ``shuffle.partitions`` small parquet files — the classic Iceberg
 small-file problem. ``compact`` rewrites the current read set into one
 ``base=NNNN`` dir and swaps the manifest pointer; reads union the base
-with wave dirs committed after it. The rewrite is crash-safe the same
+with wave dirs committed after it. The engine compacts ``url_seen``
+after every 16th wave (``plans/engine.COMPACT_EVERY``). The rewrite is crash-safe the same
 way commits are: the base dir is staged first, the atomic manifest
 swap makes it visible, and superseded dirs are deleted only after the
 swap (a crash between swap and delete leaves unreferenced garbage,
@@ -53,7 +54,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
-APPEND_TABLES = ("documents", "url_seen", "metrics", "links")
+APPEND_TABLES = ("documents", "url_seen", "metrics")
 
 
 class SnapshotStore:
@@ -172,13 +173,11 @@ class SnapshotStore:
         return reader.parquet(*dirs)
 
     # -- compaction ---------------------------------------------------------
-    def compact(self, table: str, target_partitions: int | None = None) -> int:
+    def compact(self, table: str) -> int:
         """Rewrite ``table``'s read set into one base dir (Iceberg
-        ``rewrite_data_files`` analog). Returns the number of dirs
-        folded (0 = nothing to do). ``target_partitions`` coalesces the
-        rewrite to that many files — size it so files land near the
-        128 MB parquet sweet spot at the target scale; ``None`` keeps
-        the source partitioning."""
+        ``rewrite_data_files`` analog), keeping the source
+        partitioning. Returns the number of dirs folded (0 = nothing to
+        do)."""
         if table not in APPEND_TABLES:
             raise ValueError(f"compact only applies to append tables: {table}")
         old_dirs = self._read_dirs(table, "append")
@@ -187,8 +186,6 @@ class SnapshotStore:
         waves = self.committed_waves()
         upto = waves[-1]
         df = self.spark.read.parquet(*old_dirs)
-        if target_partitions:
-            df = df.repartition(target_partitions)
         base_name = f"base={upto:04d}"
         base_dir = os.path.join(self.root, table, base_name)
         df.write.mode("overwrite").parquet(base_dir)  # staged, not visible

@@ -9,6 +9,10 @@ strings (docstrings) do not count: a name that only prose mentions has
 no caller. Ordinary string literals do count, because SQL text names
 functions. Code that only its own tests call is deleted, not kept; the
 exceptions are listed in ``KEPT`` with the reason each one stays.
+
+Knobs are held to the same rule: a ``CrawlConfig`` field or an optional
+``CrawlEngine`` parameter that no non-test caller sets is deleted, or
+listed in ``KEPT_KNOBS`` with its reason.
 """
 
 from __future__ import annotations
@@ -37,10 +41,15 @@ KEPT = {
     "sitemap_seeds_df": "synthetic seeds matching sitemaps_df",
     "expand_sitemap_seeds": "sitemap seed expansion the caller runs before CrawlEngine.run",
     "expand_feed_seeds": "RSS/Atom seed expansion the caller runs before CrawlEngine.run",
-    "rank_priorities": "pagerank ranks -> the engine's host_ranks dim (Cho et al. WWW'98)",
     "fetch_http": "the production HTTP fetch backend beside fetch_synthetic",
     "write_warc": "WARC/1.1 archive export of fetched responses",
     "cdx_index": "CDX index over write_warc's shards (byte-exact seeks)",
+}
+
+KEPT_KNOBS = {
+    "spiders": "Spider = config row: the engine's per-site rules dim (PAPER §1.1)",
+    "conditional_get": "gates the per-wave revalidations write of a conditional recrawl; "
+    "nothing the engine already observes can gate it without an extra Spark job",
 }
 
 
@@ -112,3 +121,32 @@ def test_one_html_tokenizer():
                 importers.add(rel.as_posix())
     assert len(subclasses) == 1, subclasses
     assert importers == {"spider_spark/operators/htmlparse.py"}, importers
+
+
+def test_every_knob_has_a_caller():
+    """Every ``CrawlConfig`` field and every optional
+    ``CrawlEngine.__init__`` parameter is passed by keyword somewhere in
+    non-test code outside ``plans/engine.py``, or is in ``KEPT_KNOBS``."""
+    engine = ROOT / "spider_spark" / "plans" / "engine.py"
+    sources = _sources()
+    knobs = set()
+    for node in ast.parse(sources[engine]).body:
+        if isinstance(node, ast.ClassDef) and node.name == "CrawlConfig":
+            knobs |= {f.target.id for f in node.body if isinstance(f, ast.AnnAssign)}
+        elif isinstance(node, ast.ClassDef) and node.name == "CrawlEngine":
+            init = next(f for f in node.body if getattr(f, "name", None) == "__init__")
+            args = init.args
+            knobs |= {a.arg for a in args.args[len(args.args) - len(args.defaults):]}
+            knobs |= {a.arg for a, d in zip(args.kwonlyargs, args.kw_defaults) if d}
+    assert "crawl_id" in knobs and "spiders" in knobs, knobs
+    set_by_callers = {
+        node.arg
+        for p, src in sources.items()
+        if p != engine
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.keyword)
+    }
+    unset = sorted(knobs - set_by_callers - set(KEPT_KNOBS))
+    assert not unset, f"knobs no caller sets: {unset}"
+    stale = sorted(k for k in KEPT_KNOBS if k not in knobs or k in set_by_callers)
+    assert not stale, f"stale KEPT_KNOBS entries: {stale}"
